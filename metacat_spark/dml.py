@@ -24,7 +24,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-from .catalog import Catalog
+from .catalog import Catalog, resident
 from .validation import (CATEGORY_COLUMNS, DEFAULT_CATEGORIES,
                          category_of, validate_metadata)
 
@@ -101,18 +101,6 @@ def _load_categories(catalog: Catalog) -> dict:
             "definitions": json.loads(r["definitions"] or "{}"),
         }
     return out
-
-
-def _truncate(df: DataFrame) -> DataFrame:
-    """Resident-service lineage hygiene: every mutation layers plan
-    nodes onto the catalog DataFrames, so an unbounded mutation history
-    makes each later query re-plan and re-execute the whole chain
-    (planning time grows per mutation; a long-lived service eventually
-    chokes on plan metadata alone). A lazy localCheckpoint caps the
-    lineage at one mutation deep — materialized on first use, cached
-    after. Production backs mutations with Delta/Iceberg appends where
-    the question doesn't arise; this is the in-memory equivalent."""
-    return df.localCheckpoint(eager=False)
 
 
 def _locked(fn):
@@ -246,7 +234,7 @@ class DML:
         ids_unique invariant across the assignment, which otherwise
         auto-invalidates it (Catalog.__setattr__)."""
         prev = self.cat.ids_unique
-        self.cat.files = _truncate(df)
+        self.cat.files = resident(df)
         self.cat.ids_unique = prev
 
     # ------------------------------------------------------- validation
@@ -385,7 +373,7 @@ class DML:
                        edges, ["parent_id", "child_id"])
                    .join(self.cat.parent_child,
                          ["parent_id", "child_id"], "left_anti"))
-            self.cat.parent_child = _truncate(
+            self.cat.parent_child = resident(
                 self.cat.parent_child.unionByName(add))
             self._journal("upsert", "parent_child", add)
         if dataset:
@@ -446,7 +434,7 @@ class DML:
         add = add.join(existing.select("file_id"), "file_id", "left_anti")
         n = add.count()
         if n:
-            self.cat.files_datasets = _truncate(
+            self.cat.files_datasets = resident(
                 self.cat.files_datasets.unionByName(add))
             self._journal("upsert", "files_datasets", add)
         return n
@@ -466,7 +454,7 @@ class DML:
             # remove_files with an empty body (review r8)
             return
         fd = self.cat.files_datasets
-        self.cat.files_datasets = _truncate(fd.where(~(
+        self.cat.files_datasets = resident(fd.where(~(
             (F.col("dataset_namespace") == ns)
             & (F.col("dataset_name") == name)
             & F.col("file_id").isin(file_ids))))
@@ -550,7 +538,7 @@ class DML:
                    .select("parent_id", "child_id")
                    .join(pc, ["parent_id", "child_id"], "left_anti"))
             pc = pc.unionByName(add)
-        self.cat.parent_child = _truncate(pc)
+        self.cat.parent_child = resident(pc)
         # journal AFTER the assignment — the flush-on-exception
         # contract requires "op buffered ⇒ mutation applied" (r8).
         # The delete keys enumerate distributed from the pre-filter
@@ -684,9 +672,9 @@ class DML:
         pc_before = self.cat.parent_child
         # row removal cannot introduce a duplicate id
         self._set_files(files.where(F.col("id") != fid))
-        self.cat.files_datasets = _truncate(
+        self.cat.files_datasets = resident(
             fd_before.where(F.col("file_id") != fid))
-        self.cat.parent_child = _truncate(
+        self.cat.parent_child = resident(
             pc_before.where(
                 (F.col("parent_id") != fid)
                 & (F.col("child_id") != fid)))
@@ -765,7 +753,7 @@ class DML:
                 ds = ds.withColumn(colname,
                                    F.when(hit, F.lit(val))
                                     .otherwise(F.col(colname)))
-        self.cat.datasets = _truncate(ds)
+        self.cat.datasets = resident(ds)
         self._journal("snapshot", "datasets", self.cat.datasets)
         if frozen is not None:
             (self.frozen.add if frozen else
@@ -802,7 +790,7 @@ class DML:
             if c not in row.columns:
                 row = row.withColumn(
                     c, F.lit(None).cast(ds.schema[c].dataType))
-        self.cat.datasets = _truncate(
+        self.cat.datasets = resident(
             ds.unionByName(row.select(*ds.columns)))
         self._journal("snapshot", "datasets", self.cat.datasets)
         if frozen:
@@ -823,17 +811,17 @@ class DML:
         hit = ((F.col("namespace") == ns) & (F.col("name") == name))
         if self.cat.datasets.where(hit).first() is None:
             raise DMLError(f"dataset {ns}:{name} not found")
-        self.cat.datasets = _truncate(self.cat.datasets.where(~hit))
+        self.cat.datasets = resident(self.cat.datasets.where(~hit))
         self.dataset_requirements.pop((ns, name), None)
         self.frozen.discard((ns, name))
         self.monotonic.discard((ns, name))
         fd_before = self.cat.files_datasets
-        self.cat.files_datasets = _truncate(
+        self.cat.files_datasets = resident(
             fd_before.where(~(
                 (F.col("dataset_namespace") == ns)
                 & (F.col("dataset_name") == name))))
         dpc = self.cat.datasets_parent_child
-        self.cat.datasets_parent_child = _truncate(dpc.where(~(
+        self.cat.datasets_parent_child = resident(dpc.where(~(
             ((F.col("parent_namespace") == ns)
              & (F.col("parent_name") == name))
             | ((F.col("child_namespace") == ns)
@@ -868,7 +856,7 @@ class DML:
             dpc.columns)
         edge = edge.join(dpc, dpc.columns, "left_anti")
         if edge.count():
-            self.cat.datasets_parent_child = _truncate(dpc.unionByName(edge))
+            self.cat.datasets_parent_child = resident(dpc.unionByName(edge))
             self._journal("snapshot", "datasets_parent_child",
                           self.cat.datasets_parent_child)
 
@@ -900,7 +888,7 @@ class DML:
             if c not in row.columns:
                 row = row.withColumn(
                     c, F.lit(None).cast(qt.schema[c].dataType))
-        self.cat.queries_tbl = _truncate(
+        self.cat.queries_tbl = resident(
             qt.unionByName(row.select(*qt.columns)))
         self._journal("snapshot", "queries_tbl", self.cat.queries_tbl)
 
@@ -923,7 +911,7 @@ class DML:
         row = self.cat.spark.createDataFrame(
             [(path, restricted, json.dumps(definitions or {}),
               owner_user, description, creator)], CATEGORY_COLUMNS)
-        self.cat.parameter_categories = _truncate(pc.unionByName(row))
+        self.cat.parameter_categories = resident(pc.unionByName(row))
         self._journal("snapshot", "parameter_categories",
                       self.cat.parameter_categories)
         self.categories[path] = {
@@ -939,7 +927,7 @@ class DML:
             raise DMLError(f"namespace {name!r} already exists")
         row = self.cat.spark.createDataFrame([(name, owner)],
                                              self.cat.namespaces.columns)
-        self.cat.namespaces = _truncate(
+        self.cat.namespaces = resident(
             self.cat.namespaces.unionByName(row))
         self._journal("snapshot", "namespaces", self.cat.namespaces)
 
@@ -965,7 +953,7 @@ class DML:
             if c not in row.columns:
                 row = row.withColumn(c,
                                      F.lit(None).cast(ds.schema[c].dataType))
-        self.cat.datasets = _truncate(
+        self.cat.datasets = resident(
             ds.unionByName(row.select(*ds.columns)))
         self._journal("snapshot", "datasets", self.cat.datasets)
         # add the result BEFORE arming the flag caches (a frozen
@@ -999,7 +987,7 @@ class DML:
         # execution between count() and the union's first action)
         add = add.localCheckpoint()
         n = add.count()
-        self.cat.files_datasets = _truncate(
+        self.cat.files_datasets = resident(
             self.cat.files_datasets.unionByName(add))
         self._journal("upsert", "files_datasets", add)
         return n

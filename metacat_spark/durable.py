@@ -42,8 +42,10 @@ Restore (``DurableStore.attach``) rebuilds each journaled table as::
 where "latest" is one ``row_number`` window over the journal ordered
 by commit sequence (latest op per key wins) — ONE window over the
 journal (small relative to the catalog between compactions) and one
-anti join against the base; the base itself stays the pruned bucketed
-scan it was. ``compact()`` folds base+journal into a fresh snapshot
+anti join against the base, run once: the restored table is resident
+(``catalog.resident``), like every table a mutation produces, so
+requests read the cached result rather than re-running the window.
+``compact()`` folds base+journal into a fresh snapshot
 and truncates the log, bounding both restore cost and the
 merge-on-read overlay.
 
@@ -69,6 +71,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .catalog import resident
 
 # latest-wins journal key per journaled table (the reference's PKs,
 # schema.sql:45-104)
@@ -466,8 +470,9 @@ class DurableStore:
     def attach(self, catalog) -> None:
         """Overlay the committed state onto a freshly built catalog
         (fixtures/warehouse base): journaled tables get base+journal
-        reconstruction, snapshot tables are replaced outright. Temp
-        views are re-registered so SQL surfaces see the same state.
+        reconstruction, snapshot tables are replaced outright, and each
+        table so restored is made resident. Temp views are
+        re-registered so SQL surfaces see the same state.
 
         Time-travel attaches preflight-check that every referenced
         data directory still exists: ``compact()`` deletes superseded
@@ -494,6 +499,8 @@ class DurableStore:
             else:
                 new = self.spark.read.parquet(
                     f"{self.root}/{entry['snapshot']}")
+            # resident: the journal window runs once, not per request
+            new = resident(new)
             setattr(catalog, table, new)
             new.createOrReplaceTempView(f"mc_{table}")
         # journal upserts can't be proven duplicate-free here; let the

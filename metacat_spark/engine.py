@@ -273,13 +273,12 @@ class Engine:
         BFQs an id+predicate-pruned files scan. The retired filter is
         NOT applied here — the enclosing final files scan applies it
         once (exact for all-BFQ trees; see translate note). Duplicate
-        ids from overlapping selectors are tolerated: union dedups,
-        semi/anti preserve sets, and the final semi-join emits each
-        file row once."""
+        ids from overlapping selectors are tolerated without a dedup:
+        semi/anti joins preserve sets, and the final semi-join emits
+        each file row once."""
         if isinstance(node, UnionOp):
             parts = [self._bfq_ids(ch) for ch in node.children]
-            return reduce(DataFrame.unionByName, parts) \
-                .dropDuplicates(["id"])
+            return reduce(DataFrame.unionByName, parts)
         if isinstance(node, JoinOp):
             parts = [self._bfq_ids(ch) for ch in node.children]
             out = parts[0]

@@ -1,5 +1,6 @@
 import os
 import sys
+import warnings
 
 import duckdb
 import pytest
@@ -52,13 +53,41 @@ def _slow_tier() -> set:
         return set()
 
 
+def _stale_tier_entries(tier: set, items) -> list:
+    """Tier entries of a collected file that match no test in it: the
+    module no longer defines the function, or the function's collected
+    parametrizations do not include the entry's. A renamed slow test
+    would otherwise silently run in tier 1."""
+    nodeids = {item.nodeid for item in items}
+    modules = {}
+    for item in items:
+        if getattr(item, "module", None) is not None:
+            modules.setdefault(item.nodeid.split("::", 1)[0], item.module)
+    stale = []
+    for entry in sorted(tier - nodeids):
+        path, _, name = entry.partition("::")
+        if path not in modules:
+            continue
+        func = name.split("[", 1)[0]
+        obj = modules[path]
+        for part in func.split("::"):
+            obj = getattr(obj, part, None)
+        if obj is None or any(n.startswith(f"{path}::{func}[")
+                              for n in nodeids):
+            stale.append(entry)
+    return stale
+
+
 def pytest_collection_modifyitems(config, items):
+    tier = _slow_tier()
+    for entry in _stale_tier_entries(tier, items):
+        warnings.warn(pytest.PytestWarning(
+            f"slow_tier.txt entry matches no collected test: {entry}"))
     if (config.getoption("--runslow")
             or os.environ.get("SPARK_GRAFT_RUNSLOW") == "1"):
         return
     skip = pytest.mark.skip(
         reason="slow tier: run with --runslow / SPARK_GRAFT_RUNSLOW=1")
-    tier = _slow_tier()
     for item in items:
         if "slow" in item.keywords or item.nodeid in tier:
             item.add_marker(skip)

@@ -47,6 +47,23 @@ def _state(cat):
     return out
 
 
+def test_restored_journal_is_resident(spark, tmp_path):
+    """A restart replays the journal window once: the restored files
+    table is a resident leaf, so no request re-runs that window."""
+    root = str(tmp_path / "cat")
+    cat1 = from_tpch(spark, SF_DIR)
+    fid = cat1.files.select("id").first()["id"]
+    dml1 = DML(cat1, store=DurableStore(spark, root))
+    dml1.update_file_metadata(fid, {"core.run": 1})
+    dml1.update_file_metadata(fid, {"core.run": 2})
+    cat2, _, store2 = _restart(spark, root)
+    assert store2.manifest["commit"] >= 2
+    plan = cat2.files._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    got = cat2.files.where(F.col("id") == fid).first()
+    assert json.loads(got["metadata"])["core.run"] == 2
+
+
 def test_restart_finds_declared_files(spark, tmp_path):
     """The VERDICT r7 done-criterion: declare → restart → the MQL
     query finds the file; retire/update/move/named-query survive

@@ -4,6 +4,11 @@ Each test runs an MQL query through the Spark engine and the
 hand-translated SQL through DuckDB over the same parquet, comparing
 file-id sets (file sets are unordered — SURVEY §5)."""
 
+import re
+
+import pytest
+
+from metacat_spark.catalog import from_tpch
 from metacat_spark.fixtures import oracle_query
 
 from conftest import duck_ids, ids_of
@@ -83,18 +88,54 @@ def test_set_op_fast_path_matches_legacy(engine):
         "union(files from dune:low_0, files from dune:low_1) "
         "- files from dune:low_2",
     ]
-    saved = getattr(engine.cat, "_ids_unique", None)
+    saved = engine.cat.ids_unique
     try:
         results = {}
         for forced in (False, True):
-            engine.cat._ids_unique = forced
+            engine.cat.ids_unique = forced
             results[forced] = [sorted(set(ids_of(engine.query(q))))
                                for q in queries]
             results[forced].append(sorted(set(ids_of(
                 engine.query(queries[0], include_retired=True)))))
         assert results[True] == results[False]
     finally:
-        engine.cat._ids_unique = saved
+        engine.cat.ids_unique = saved
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_fixture_tables_are_resident(catalog):
+    """from_tpch's derived tables are computed once and cached: each
+    plans as a scan of its resident rows, never the raw parquet."""
+    for name in ("files", "files_datasets", "parent_child"):
+        plan = _plan(getattr(catalog, name))
+        assert "Scan ExistingRDD" in plan and "FileScan" not in plan, \
+            f"{name}: {plan}"
+
+
+def test_unreadable_raw_table_raises(spark, tmp_path):
+    """Absent raw tables are skipped by an existence check; one that
+    exists but cannot be read fails the build instead of vanishing."""
+    (tmp_path / "region.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="region.parquet"):
+        from_tpch(spark, str(tmp_path))
+
+
+def test_bfq_union_ids_not_deduplicated(engine):
+    """The set-algebra path's final semi-join emits each file once, so
+    the id-set union needs no aggregation on id."""
+    saved = engine.cat.ids_unique
+    try:
+        engine.cat.ids_unique = True
+        plan = _plan(engine.query(
+            "union(files from mc:flag_r, files from dune:urgent_0 "
+            "where core.run > 100)"))
+    finally:
+        engine.cat.ids_unique = saved
+    assert "LeftSemi" in plan
+    assert not re.search(r"HashAggregate\(keys=\[id#", plan), plan
 
 
 def test_join_where_equivalence(engine):

@@ -190,16 +190,16 @@ def _set_trees(depth=2):
 def test_set_op_fast_path_property(mql, engine):
     """Random set-algebra trees: the id-set fast path must select the
     same id SET as the multiplicity-exact row-level path."""
-    saved = getattr(engine.cat, "_ids_unique", None)
+    saved = engine.cat.ids_unique
     try:
         out = {}
         for forced in (True, False):
-            engine.cat._ids_unique = forced
+            engine.cat.ids_unique = forced
             out[forced] = sorted({
                 r["id"] for r in engine.query(mql).select("id").collect()})
         assert out[True] == out[False], mql
     finally:
-        engine.cat._ids_unique = saved
+        engine.cat.ids_unique = saved
 
 
 @settings(max_examples=40, deadline=None,

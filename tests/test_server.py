@@ -3,6 +3,7 @@
 json-seq streaming, summaries, error contract, file lookup."""
 
 import json
+import re
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -107,7 +108,10 @@ def test_explain_endpoint(served):
                 query="files from dune:urgent_0 where core.run > 5",
                 explain="yes").read().decode()
     assert "MQL AST" in text and "Spark plan" in text
-    assert "PushedFilters" in text
+    # the fixture catalog's files are resident: the predicate filters
+    # the cached rows instead of pushing down into a parquet scan
+    assert "Scan ExistingRDD" in text
+    assert re.search(r"m_core_run#\d+ > 5", text), text
 
 
 def test_bad_mql_is_400(served):
