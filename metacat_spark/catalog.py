@@ -15,6 +15,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import fixtures as FX
 from .schema import DATASET_META, FILE_META, QUERY_META, MetaSchema
@@ -91,8 +92,8 @@ def from_dataframes(spark: SparkSession, files: DataFrame,
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     def _empty(cols: list[str]):
-        return spark.createDataFrame([], ", ".join(
-            f"{c} string" for c in cols))
+        return local_rows(spark, [], T.StructType(
+            [T.StructField(c, T.StringType()) for c in cols]))
 
     cat = Catalog(
         spark, files, files_datasets,
@@ -235,6 +236,41 @@ def resident(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
+def append(table: DataFrame, delta: DataFrame) -> DataFrame:
+    """``table`` plus ``delta``'s rows, resident and at ``table``'s
+    partition count. A plain union adds the delta's partitions to every
+    later version, and each extra partition is one more task per scan
+    and one more job per ``toLocalIterator`` read."""
+    n = table.rdd.getNumPartitions()
+    return resident(table.unionByName(delta).coalesce(max(1, n)))
+
+
+def local_rows(spark: SparkSession, rows: list,
+               schema: "T.StructType | list[str]") -> DataFrame:
+    """Rows held by the driver (a fixture's literal table, a request's
+    delta) as an Arrow-built LocalRelation: the rows travel inside the
+    plan, so a query over them alone runs no Spark job and no Python
+    worker re-pickles them, unlike ``createDataFrame(list)``'s RDD.
+    ``schema`` is a StructType (every field made nullable) or column
+    names whose types Arrow infers from the values. In a distributed
+    plan the relation splits into min(rows, cores) partitions."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, T.StructType):
+        schema = T.StructType([T.StructField(f.name, f.dataType)
+                               for f in schema.fields])
+        arrow = to_arrow_schema(schema)
+        table = pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], type=f.type)
+             for i, f in enumerate(arrow)], schema=arrow)
+    else:
+        table = pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows]) for i in range(len(schema))],
+            names=list(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def _suffix(sf_dir: str) -> str:
     return sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
 
@@ -288,20 +324,19 @@ def _fixture_catalog(spark: SparkSession, raw: dict, files: DataFrame,
                      parent_child: DataFrame) -> Catalog:
     """The catalog over the given big three plus the fixtures' small
     literal tables, every table registered as an ``mc_*`` temp view."""
-    datasets = spark.createDataFrame(FX.DATASET_ROWS, FX.DATASET_COLUMNS)
+    datasets = local_rows(spark, FX.DATASET_ROWS, FX.DATASET_COLUMNS)
     datasets = (datasets
                 .withColumn("created_timestamp",
                             F.lit("2023-01-15 00:00:00").cast("timestamp"))
                 .withColumn("metadata", _meta_json_column(DATASET_META)))
-    ds_pc = spark.createDataFrame(FX.DS_EDGE_ROWS, FX.DS_EDGE_COLUMNS)
-    namespaces = spark.createDataFrame(FX.NAMESPACE_ROWS, FX.NAMESPACE_COLUMNS)
-    queries_tbl = spark.createDataFrame(FX.QUERY_ROWS, FX.QUERY_COLUMNS)
+    ds_pc = local_rows(spark, FX.DS_EDGE_ROWS, FX.DS_EDGE_COLUMNS)
+    namespaces = local_rows(spark, FX.NAMESPACE_ROWS, FX.NAMESPACE_COLUMNS)
+    queries_tbl = local_rows(spark, FX.QUERY_ROWS, FX.QUERY_COLUMNS)
     queries_tbl = queries_tbl.withColumn(
         "metadata", _meta_json_column(QUERY_META))
 
     from .validation import CATEGORY_COLUMNS, category_rows
-    param_cats = spark.createDataFrame(category_rows(),
-                                       CATEGORY_COLUMNS)
+    param_cats = local_rows(spark, category_rows(), CATEGORY_COLUMNS)
     cat = Catalog(spark, files, files_datasets, parent_child, datasets,
                   ds_pc, namespaces, queries_tbl, raw=raw,
                   parameter_categories=param_cats)

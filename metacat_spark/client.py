@@ -18,7 +18,7 @@ from typing import Iterator, Optional
 from pyspark.sql import SparkSession
 
 from .catalog import Catalog, from_tpch
-from .dml import DML
+from .dml import DML, point_row
 from .engine import Engine
 
 
@@ -153,8 +153,9 @@ class MetaCatSparkClient:
                  did: Optional[str] = None,
                  with_metadata: bool = True) -> Optional[dict]:
         """Full file record (webapi get_file, data_handler.py file
-        GET): direct bucketed-table lookup — one pruned bucket, not an
-        MQL query — returning every attribute incl. checksums."""
+        GET): direct bucketed-table lookup — one pruned bucket and one
+        Spark job, not an MQL query — returning every attribute incl.
+        checksums."""
         from pyspark.sql import functions as F
         files = self.catalog.files
         if fid is not None:
@@ -168,7 +169,7 @@ class MetaCatSparkClient:
                 "created_timestamp", "retired", "checksums"]
         if with_metadata:
             cols.append("metadata")
-        row = files.where(hit).select(*cols).first()
+        row = point_row(files.where(hit).select(*cols))
         return None if row is None else self._row_to_dict(row)
 
     def get_files(self, specs: list[dict], with_metadata: bool = True,

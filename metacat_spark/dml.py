@@ -14,19 +14,29 @@ survive a restart like the reference's PostgreSQL rows do — see
 durable.py for the log model and docs/DIVERGENCES.md §9 for the
 contract. Bulk declare is a single DataFrame union (the
 COPY-equivalent, dbobjects2.py:525-557), never a row-at-a-time loop.
+A request's own rows (declared files, membership and edge adds, new
+datasets) are built on the driver as one local relation and appended
+at the target table's partition count (``catalog.append``); query
+results (``add_to``/``save_as``) stay distributed.
 """
 
 from __future__ import annotations
 
 import json
+from datetime import datetime, timezone
 from typing import Optional
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .catalog import Catalog, resident
-from .validation import (CATEGORY_COLUMNS, DEFAULT_CATEGORIES,
-                         category_of, validate_metadata)
+from .catalog import Catalog, append, local_rows, resident
+from .validation import (DEFAULT_CATEGORIES, category_of,
+                         validate_metadata)
+
+
+_EDGE_COLUMNS = ("parent_id", "child_id")
+_MEMBER_COLUMNS = ("file_id", "dataset_namespace", "dataset_name")
 
 
 class DMLError(Exception):
@@ -71,6 +81,14 @@ def _apply_meta_patch(df: DataFrame, meta_schema, hit, new_meta: dict
         out = out.withColumn(
             mk.column, F.when(hit, newv).otherwise(F.col(mk.column)))
     return out
+
+
+def point_row(df: DataFrame) -> Optional[Row]:
+    """The row of a key-filtered ``df`` holding at most one, in one
+    Spark job: ``first()`` is ``take(1)``, which scans partitions in
+    growing rounds, so a hit past the first partition costs more jobs."""
+    rows = df.collect()
+    return rows[0] if rows else None
 
 
 class ValidationFailed(DMLError):
@@ -227,12 +245,47 @@ class DML:
             if r["monotonic"]:
                 self.monotonic.add((r["namespace"], r["name"]))
 
+    def _has_dataset(self, ns: str, name: str) -> bool:
+        return point_row(self.cat.datasets.where(
+            (F.col("namespace") == ns) & (F.col("name") == name))
+            .select("name")) is not None
+
+    def _rows(self, rows: list, schema: T.StructType) -> DataFrame:
+        """A request's rows as one single-partition local relation, so
+        its journal segment is one parquet file."""
+        return local_rows(self.cat.spark, rows, schema).coalesce(1)
+
+    def _row_like(self, table: DataFrame, **values) -> DataFrame:
+        """One row shaped like ``table``; columns not given are null."""
+        return self._rows([tuple(values.get(c) for c in table.columns)],
+                          table.schema)
+
+    def _append(self, name: str, delta: DataFrame) -> None:
+        """Add ``delta`` to journaled table ``name`` and journal it as
+        an upsert. Only declare_files appends to files, after enforcing
+        the PK, so the ids_unique invariant carries over."""
+        prev = self.cat.ids_unique
+        setattr(self.cat, name, append(getattr(self.cat, name), delta))
+        self.cat.ids_unique = prev
+        self._journal("upsert", name, delta)
+
+    def _new_edges(self, pc: DataFrame, edges: list) -> list:
+        """The (parent_id, child_id) ``edges`` not yet in ``pc``, in
+        request order without repeats: one pruned probe of the requested
+        children (the PK makes a re-added edge a no-op)."""
+        edges = list(dict.fromkeys(edges))
+        if not edges:
+            return []
+        have = {tuple(r) for r in pc
+                .where(F.col("child_id").isin(sorted({c for _, c in edges})))
+                .select(*_EDGE_COLUMNS).collect()}
+        return [e for e in edges if e not in have]
+
     def _set_files(self, df) -> None:
         """Replace cat.files for a mutation that cannot introduce a
-        duplicate id (point patches never add rows; declare_files
-        enforces the PK before appending): carries the catalog's
-        ids_unique invariant across the assignment, which otherwise
-        auto-invalidates it (Catalog.__setattr__)."""
+        duplicate id (point patches and deletes never add rows): carries
+        the catalog's ids_unique invariant across the assignment, which
+        otherwise auto-invalidates it (Catalog.__setattr__)."""
         prev = self.cat.ids_unique
         self.cat.files = resident(df)
         self.cat.ids_unique = prev
@@ -290,9 +343,7 @@ class DML:
             dns, dname = dataset
             if (dns, dname) in self.frozen:
                 raise DMLError(f"dataset {dns}:{dname} is frozen")
-            if self.cat.datasets.where(
-                    (F.col("namespace") == dns)
-                    & (F.col("name") == dname)).first() is None:
+            if not self._has_dataset(dns, dname):
                 raise DMLError(f"dataset {dns}:{dname} not found")
         # parent-id FK check BEFORE any mutation (review r8): the
         # old post-append check left the appended file rows in
@@ -304,6 +355,15 @@ class DML:
         self._check_fids_exist(out_of_batch, "parent")
         reqs = (self.dataset_requirements.get(dataset)
                 if dataset else None)
+        files = self.cat.files
+        # the reference schema defaults created_timestamp to now()
+        # (schema.sql files table): one driver timestamp per batch, so
+        # the appended rows and their journal segment agree by
+        # construction; NULL would drop every newly declared file from
+        # created_timestamp predicates
+        now = datetime.now(timezone.utc)
+        schema = T.StructType([f for f in files.schema.fields
+                               if f.name != "metadata_v"])
         prepared = []
         for r in rows:
             meta = r.get("metadata", {})
@@ -312,70 +372,36 @@ class DML:
                 id=r["id"], namespace=r["namespace"], name=r["name"],
                 size=int(r.get("size", 0)),
                 creator=r.get("creator", "unknown"),
+                created_timestamp=now,
                 metadata=json.dumps(meta), retired=False,
                 checksums=({k: str(v) for k, v
                             in r["checksums"].items()}
                            if r.get("checksums") else None))
             # shred the hot keys at ingest (the engine's predicates are
-            # shredded-first; JSON is the fallback for cold keys);
-            # every row carries every shredded field so the Rows are
-            # schema-uniform
+            # shredded-first; JSON is the fallback for cold keys); a
+            # key whose column the files table lacks stays in the JSON
             for mk in self.cat.file_meta.by_key.values():
                 v = meta.get(mk.key)
                 if v is not None and mk.mtype == "float" \
                         and isinstance(v, int):
                     v = float(v)
                 base[mk.column] = v
-            prepared.append(base)
-        from pyspark.sql import types as T
-        files_schema = {f.name: f for f in self.cat.files.schema.fields}
-        field_names = list(prepared[0].keys())
-        schema = T.StructType([
-            T.StructField(c, files_schema[c].dataType, nullable=True)
-            if c in files_schema
-            else T.StructField(c, T.StringType()) for c in field_names])
-        new = self.cat.spark.createDataFrame(
-            [tuple(p[c] for c in field_names) for p in prepared], schema)
-        # align to the files schema; unknown shredded columns stay null
-        files = self.cat.files
-        for c in files.columns:
-            if c not in new.columns:
-                if c == "created_timestamp":
-                    # reference schema defaults now() (schema.sql
-                    # files table); NULL here would drop every newly
-                    # declared file from created_timestamp predicates
-                    new = new.withColumn(
-                        c, F.current_timestamp()
-                            .cast(files.schema[c].dataType))
-                elif c == "metadata_v":
-                    # variant-mode catalogs: keep the VariantType
-                    # column in lockstep with the JSON (review r6)
-                    new = new.withColumn(
-                        c, F.parse_json(F.col("metadata")))
-                else:
-                    new = new.withColumn(
-                        c, F.lit(None).cast(files.schema[c].dataType))
-        new = new.select(*files.columns)
-        if self._store is not None:
-            # pin the batch (current_timestamp is non-deterministic):
-            # the union below and the journal segment must carry the
-            # SAME created_timestamp values
-            new = new.localCheckpoint()
-        self._set_files(files.unionByName(new))
-        self._journal("upsert", "files", new)
+            prepared.append(tuple(base.get(c) for c in schema.names))
+        new = self._rows(prepared, schema)
+        if "metadata_v" in files.columns:
+            # variant-mode catalogs: keep the VariantType column in
+            # lockstep with the JSON
+            new = new.withColumn("metadata_v",
+                                 F.parse_json(F.col("metadata")))
+        self._append("files", new.select(*files.columns))
         # provenance edges declared inline (data_handler declare
-        # accepts parents per file); FK-checked against the post-append
-        # files so intra-batch references resolve
-        edges = [(p, r["id"]) for r in rows
-                 for p in (r.get("parents") or [])]
+        # accepts parents per file), FK-checked above
+        edges = self._new_edges(self.cat.parent_child,
+                                [(p, r["id"]) for r in rows
+                                 for p in (r.get("parents") or [])])
         if edges:
-            add = (self.cat.spark.createDataFrame(
-                       edges, ["parent_id", "child_id"])
-                   .join(self.cat.parent_child,
-                         ["parent_id", "child_id"], "left_anti"))
-            self.cat.parent_child = resident(
-                self.cat.parent_child.unionByName(add))
-            self._journal("upsert", "parent_child", add)
+            self._append("parent_child", self._rows(
+                edges, self.cat.parent_child.select(*_EDGE_COLUMNS).schema))
         if dataset:
             self.add_files_to_dataset([r["id"] for r in rows], *dataset,
                                       _skip_exist_check=True)
@@ -391,53 +417,47 @@ class DML:
         refuse removals."""
         if (ns, name) in self.frozen:
             raise DMLError(f"dataset {ns}:{name} is frozen")
+        want = list(dict.fromkeys(file_ids))
         if not _skip_exist_check:
             # dataset and file ids must exist (FK semantics,
             # schema.sql:96-104)
-            if self.cat.datasets.where(
-                    (F.col("namespace") == ns)
-                    & (F.col("name") == name)).first() is None:
+            if not self._has_dataset(ns, name):
                 raise DMLError(f"dataset {ns}:{name} not found")
-            found = {r["id"] for r in self.cat.files
-                     .where(F.col("id").isin(file_ids))
-                     .select("id").collect()}
-            missing = set(file_ids) - found
+            reqs = self.dataset_requirements.get((ns, name))
+            found = {r["id"]: r for r in self.cat.files
+                     .where(F.col("id").isin(want))
+                     .select("id", *(["metadata"] if reqs else []))
+                     .collect()}
+            missing = set(want) - set(found)
             if missing:
                 raise DMLError(f"file id(s) not found: "
                                f"{sorted(missing)[:5]}")
-            reqs = self.dataset_requirements.get((ns, name))
             if reqs:
                 # dataset-level metadata requirements
                 # (dbobjects2.py:1577-1597): every file joining the
                 # dataset must satisfy them. The declare path
                 # validates per-row before the append and skips this.
-                metas = {r["id"]: json.loads(r["metadata"] or "{}")
-                         for r in self.cat.files
-                         .where(F.col("id").isin(file_ids))
-                         .select("id", "metadata").collect()}
                 errs = []
-                for fid in sorted(set(file_ids)):
+                for fid in sorted(want):
                     errs.extend(
                         (f"{fid}:{k}", msg) for k, msg in
-                        validate_metadata(reqs, False,
-                                          metas.get(fid, {})))
+                        validate_metadata(reqs, False, json.loads(
+                            found[fid]["metadata"] or "{}")))
                 if errs:
                     raise ValidationFailed(errs)
-        add = self.cat.spark.createDataFrame(
-            [(fid, ns, name) for fid in set(file_ids)],
-            ["file_id", "dataset_namespace", "dataset_name"])
         # PK (file_id, dataset) — adding an already-member file is a
-        # no-op, so anti-join the batch against existing membership
-        existing = self.cat.files_datasets.where(
+        # no-op: one pruned probe of the requested ids, the rest of the
+        # batch is decided on the driver
+        fd = self.cat.files_datasets
+        members = {r["file_id"] for r in fd.where(
             (F.col("dataset_namespace") == ns)
-            & (F.col("dataset_name") == name))
-        add = add.join(existing.select("file_id"), "file_id", "left_anti")
-        n = add.count()
-        if n:
-            self.cat.files_datasets = resident(
-                self.cat.files_datasets.unionByName(add))
-            self._journal("upsert", "files_datasets", add)
-        return n
+            & (F.col("dataset_name") == name)
+            & F.col("file_id").isin(want)).select("file_id").collect()}
+        add = [(fid, ns, name) for fid in want if fid not in members]
+        if add:
+            self._append("files_datasets", self._rows(
+                add, fd.select(*_MEMBER_COLUMNS).schema))
+        return len(add)
 
     @_locked
     def remove_files_from_dataset(self, file_ids: list[str], ns: str,
@@ -463,12 +483,9 @@ class DML:
             # table scan); non-member keys journal harmless no-ops.
             # Built only in durable mode — _journal's args evaluate
             # eagerly (review r8)
-            self._journal("delete", "files_datasets",
-                          self.cat.spark.createDataFrame(
-                              [(fid, ns, name)
-                               for fid in set(file_ids)],
-                              ["file_id", "dataset_namespace",
-                               "dataset_name"]))
+            self._journal("delete", "files_datasets", self._rows(
+                [(fid, ns, name) for fid in dict.fromkeys(file_ids)],
+                fd.select(*_MEMBER_COLUMNS).schema))
 
     # ------------------------------------------------------------ update
     @_locked
@@ -488,8 +505,8 @@ class DML:
             raise DMLError(f"bad mode {mode!r}")
         self.validate(metadata)
         files = self.cat.files
-        row = files.where(F.col("id") == file_id) \
-                   .select("metadata").first()
+        row = point_row(files.where(F.col("id") == file_id)
+                        .select("metadata"))
         if row is None:
             # replace mode too: the reference 404s on an unknown fid —
             # a silent zero-row patch is not a success (review r6)
@@ -521,35 +538,29 @@ class DML:
                    as_parents: bool, replace: bool) -> None:
         """Add (or replace) provenance edges touching ``file_id``.
         FK semantics: every referenced id must exist (schema.sql:67-73
-        REFERENCES files(id)); added edges are anti-joined against the
-        existing edge set so re-adding is a no-op, like the PK."""
+        REFERENCES files(id)); an edge already present is not added
+        again, like the PK."""
         self._check_fids_exist(other_ids,
                                "parent" if as_parents else "child")
         pc = self.cat.parent_child
-        me, other = (("child_id", "parent_id") if as_parents
-                     else ("parent_id", "child_id"))
-        add = None
-        pc0 = pc
+        me = "child_id" if as_parents else "parent_id"
         if replace:
-            pc = pc.where(F.col(me) != file_id)
-        if other_ids:
-            rows = [(file_id, o) for o in other_ids]
-            add = (self.cat.spark.createDataFrame(rows, [me, other])
-                   .select("parent_id", "child_id")
-                   .join(pc, ["parent_id", "child_id"], "left_anti"))
-            pc = pc.unionByName(add)
-        self.cat.parent_child = resident(pc)
-        # journal AFTER the assignment — the flush-on-exception
-        # contract requires "op buffered ⇒ mutation applied" (r8).
-        # The delete keys enumerate distributed from the pre-filter
-        # edge table (a point lookup, no driver rows); delete seq <
-        # upsert seq, so a replaced-and-re-added edge lands present.
-        if replace:
+            self.cat.parent_child = resident(pc.where(F.col(me) != file_id))
+            # journal AFTER the assignment — the flush-on-exception
+            # contract requires "op buffered ⇒ mutation applied".
+            # The delete keys enumerate distributed from the pre-filter
+            # edge table (a point lookup, no driver rows); delete seq <
+            # upsert seq, so a replaced-and-re-added edge lands present.
             self._journal("delete", "parent_child",
-                          pc0.where(F.col(me) == file_id)
-                          .select("parent_id", "child_id"))
-        if add is not None:
-            self._journal("upsert", "parent_child", add)
+                          pc.where(F.col(me) == file_id)
+                          .select(*_EDGE_COLUMNS))
+        edges = self._new_edges(
+            self.cat.parent_child,
+            [(o, file_id) if as_parents else (file_id, o)
+             for o in other_ids])
+        if edges:
+            self._append("parent_child",
+                         self._rows(edges, pc.select(*_EDGE_COLUMNS).schema))
 
     @_locked
     def update_file(self, file_id: str,
@@ -568,8 +579,8 @@ class DML:
         bucketed-row patch; checksum merge is driver-side on the one
         target row, preserving the reference's dict-update semantics."""
         files = self.cat.files
-        row = files.where(F.col("id") == file_id) \
-                   .select("id", "checksums").first()
+        row = point_row(files.where(F.col("id") == file_id)
+                        .select("id", "checksums"))
         if row is None:
             raise DMLError(f"file {file_id!r} not found")
         # ALL validations before ANY patch (review r8): a metadata
@@ -629,7 +640,7 @@ class DML:
         retire audit columns)."""
         files = self.cat.files
         hit = F.col("id") == file_id
-        if files.where(hit).first() is None:
+        if point_row(files.where(hit).select("id")) is None:
             raise DMLError(f"file {file_id!r} not found")
         retired_by = (F.lit(None).cast("string") if unretire
                       else F.lit(by))
@@ -664,7 +675,7 @@ class DML:
                    & (F.col("name") == name))
         else:
             raise DMLError("need fid or namespace+name")
-        row = files.where(hit).select("id").first()
+        row = point_row(files.where(hit).select("id"))
         if row is None:
             raise DMLError("file not found")
         fid = row["id"]
@@ -680,19 +691,16 @@ class DML:
                 & (F.col("child_id") != fid)))
         if self._store is not None:
             # cascade deletes journal the affected KEYS, enumerated
-            # distributed from the pre-delete tables (point lookups);
-            # guarded so memory mode never pays the createDataFrame
-            self._journal("delete", "files",
-                          self.cat.spark.createDataFrame([(fid,)],
-                                                         ["id"]))
+            # distributed from the pre-delete tables (point lookups)
+            self._journal("delete", "files", self._rows(
+                [(fid,)], files.select("id").schema))
             self._journal("delete", "files_datasets",
                           fd_before.where(F.col("file_id") == fid)
-                          .select("file_id", "dataset_namespace",
-                                  "dataset_name"))
+                          .select(*_MEMBER_COLUMNS))
             self._journal("delete", "parent_child",
                           pc_before.where((F.col("parent_id") == fid)
                                           | (F.col("child_id") == fid))
-                          .select("parent_id", "child_id"))
+                          .select(*_EDGE_COLUMNS))
         return fid
 
     @_locked
@@ -727,7 +735,7 @@ class DML:
         (webapi.py:429-472) and flag toggles."""
         ds = self.cat.datasets
         hit = (F.col("namespace") == ns) & (F.col("name") == name)
-        if ds.where(hit).first() is None:
+        if not self._has_dataset(ns, name):
             # flag/metadata updates on a missing dataset must 404, not
             # no-op (and a silent frozen=True would poison the flag
             # cache with a phantom entry — review r6)
@@ -740,7 +748,7 @@ class DML:
             else:
                 # driver-side type-preserving merge (see
                 # update_file_metadata)
-                row = ds.where(hit).select("metadata").first()
+                row = point_row(ds.where(hit).select("metadata"))
                 if row is None:
                     raise DMLError(f"dataset {ns}:{name} not found")
                 new_meta = json.loads(row["metadata"] or "{}")
@@ -772,26 +780,16 @@ class DML:
         """Create an empty dataset (webapi.py:380-427; the reference's
         `metacat dataset create`). PK (namespace, name) — duplicates
         are an error, not an upsert."""
-        existing = self.cat.datasets.where(
-            (F.col("namespace") == ns) & (F.col("name") == name)).count()
-        if existing:
+        if self._has_dataset(ns, name):
             raise AlreadyExists(f"dataset {ns}:{name} already exists")
         # dataset metadata is uncategorized (dotless keys in the
         # reference fixture) — file-category validation doesn't apply
-        row = self.cat.spark.createDataFrame(
-            [(ns, name, frozen, monotonic, creator, description)],
-            ["namespace", "name", "frozen", "monotonic", "creator",
-             "description"])
-        row = row.withColumn("created_timestamp", F.current_timestamp()) \
-                 .withColumn("metadata",
-                             F.lit(json.dumps(metadata or {})))
-        ds = self.cat.datasets
-        for c in ds.columns:
-            if c not in row.columns:
-                row = row.withColumn(
-                    c, F.lit(None).cast(ds.schema[c].dataType))
-        self.cat.datasets = resident(
-            ds.unionByName(row.select(*ds.columns)))
+        self.cat.datasets = append(self.cat.datasets, self._row_like(
+            self.cat.datasets, namespace=ns, name=name, frozen=frozen,
+            monotonic=monotonic, creator=creator,
+            description=description,
+            created_timestamp=datetime.now(timezone.utc),
+            metadata=json.dumps(metadata or {})))
         self._journal("snapshot", "datasets", self.cat.datasets)
         if frozen:
             self.frozen.add((ns, name))
@@ -809,7 +807,7 @@ class DML:
         files themselves are untouched — a dataset is a named set, not
         an owner."""
         hit = ((F.col("namespace") == ns) & (F.col("name") == name))
-        if self.cat.datasets.where(hit).first() is None:
+        if not self._has_dataset(ns, name):
             raise DMLError(f"dataset {ns}:{name} not found")
         self.cat.datasets = resident(self.cat.datasets.where(~hit))
         self.dataset_requirements.pop((ns, name), None)
@@ -835,8 +833,7 @@ class DML:
                       fd_before.where(
                           (F.col("dataset_namespace") == ns)
                           & (F.col("dataset_name") == name))
-                      .select("file_id", "dataset_namespace",
-                              "dataset_name"))
+                      .select(*_MEMBER_COLUMNS))
 
     @_locked
     def add_subset(self, parent_ns: str, parent_name: str,
@@ -846,17 +843,18 @@ class DML:
         exist; re-adding an existing edge is a no-op (PK)."""
         for ns, name in ((parent_ns, parent_name),
                          (child_ns, child_name)):
-            if self.cat.datasets.where(
-                    (F.col("namespace") == ns)
-                    & (F.col("name") == name)).first() is None:
+            if not self._has_dataset(ns, name):
                 raise DMLError(f"dataset {ns}:{name} not found")
         dpc = self.cat.datasets_parent_child
-        edge = self.cat.spark.createDataFrame(
-            [(parent_ns, parent_name, child_ns, child_name)],
-            dpc.columns)
-        edge = edge.join(dpc, dpc.columns, "left_anti")
-        if edge.count():
-            self.cat.datasets_parent_child = resident(dpc.unionByName(edge))
+        edge = dict(parent_namespace=parent_ns, parent_name=parent_name,
+                    child_namespace=child_ns, child_name=child_name)
+        hit = ((F.col("parent_namespace") == parent_ns)
+               & (F.col("parent_name") == parent_name)
+               & (F.col("child_namespace") == child_ns)
+               & (F.col("child_name") == child_name))
+        if point_row(dpc.where(hit)) is None:
+            self.cat.datasets_parent_child = append(
+                dpc, self._row_like(dpc, **edge))
             self._journal("snapshot", "datasets_parent_child",
                           self.cat.datasets_parent_child)
 
@@ -873,23 +871,17 @@ class DML:
         data_handler.py:1425-1460); without it a duplicate is a PK
         error."""
         qt = self.cat.queries_tbl
-        existing = qt.where((F.col("namespace") == ns)
-                            & (F.col("name") == name)).count()
-        if existing:
+        if point_row(qt.where((F.col("namespace") == ns)
+                              & (F.col("name") == name))
+                     .select("name")) is not None:
             if not update:
                 raise AlreadyExists(f"named query {ns}:{name} "
                                     f"already exists")
             qt = qt.where(~((F.col("namespace") == ns)
                             & (F.col("name") == name)))
-        row = self.cat.spark.createDataFrame(
-            [(ns, name, source, creator, description)],
-            ["namespace", "name", "source", "creator", "description"])
-        for c in qt.columns:
-            if c not in row.columns:
-                row = row.withColumn(
-                    c, F.lit(None).cast(qt.schema[c].dataType))
-        self.cat.queries_tbl = resident(
-            qt.unionByName(row.select(*qt.columns)))
+        self.cat.queries_tbl = append(qt, self._row_like(
+            qt, namespace=ns, name=name, source=source, creator=creator,
+            description=description))
         self._journal("snapshot", "queries_tbl", self.cat.queries_tbl)
 
     @_locked
@@ -906,12 +898,14 @@ class DML:
         pc = self.cat.parameter_categories
         if pc is None:
             raise DMLError("catalog has no parameter_categories table")
-        if pc.where(F.col("path") == path).count():
+        if point_row(pc.where(F.col("path") == path)
+                     .select("path")) is not None:
             raise AlreadyExists(f"category {path!r} already exists")
-        row = self.cat.spark.createDataFrame(
-            [(path, restricted, json.dumps(definitions or {}),
-              owner_user, description, creator)], CATEGORY_COLUMNS)
-        self.cat.parameter_categories = resident(pc.unionByName(row))
+        self.cat.parameter_categories = append(pc, self._row_like(
+            pc, path=path, restricted=restricted,
+            definitions=json.dumps(definitions or {}),
+            owner_user=owner_user, description=description,
+            creator=creator))
         self._journal("snapshot", "parameter_categories",
                       self.cat.parameter_categories)
         self.categories[path] = {
@@ -921,14 +915,11 @@ class DML:
 
     @_locked
     def create_namespace(self, name: str, owner: str = "admin") -> None:
-        existing = self.cat.namespaces.where(
-            F.col("name") == name).count()
-        if existing:
+        if point_row(self.cat.namespaces.where(F.col("name") == name)
+                     .select("name")) is not None:
             raise DMLError(f"namespace {name!r} already exists")
-        row = self.cat.spark.createDataFrame([(name, owner)],
-                                             self.cat.namespaces.columns)
-        self.cat.namespaces = resident(
-            self.cat.namespaces.unionByName(row))
+        self.cat.namespaces = append(self.cat.namespaces, self._row_like(
+            self.cat.namespaces, name=name, owner_user=owner))
         self._journal("snapshot", "namespaces", self.cat.namespaces)
 
     # ------------------------------------------------------------- sinks
@@ -937,24 +928,13 @@ class DML:
                 frozen: bool = False, monotonic: bool = False) -> int:
         """Materialize a query result as a NEW dataset
         (data_handler.py:1306-1337)."""
-        existing = self.cat.datasets.where(
-            (F.col("namespace") == ns) & (F.col("name") == name)).count()
-        if existing:
+        if self._has_dataset(ns, name):
             raise DMLError(f"dataset {ns}:{name} already exists")
-        row = self.cat.spark.createDataFrame(
-            [(ns, name, frozen, monotonic, "engine",
-              f"saved query result {ns}:{name}")],
-            ["namespace", "name", "frozen", "monotonic", "creator",
-             "description"])
-        row = row.withColumn("created_timestamp", F.current_timestamp()) \
-                 .withColumn("metadata", F.lit("{}"))
-        ds = self.cat.datasets
-        for c in ds.columns:
-            if c not in row.columns:
-                row = row.withColumn(c,
-                                     F.lit(None).cast(ds.schema[c].dataType))
-        self.cat.datasets = resident(
-            ds.unionByName(row.select(*ds.columns)))
+        self.cat.datasets = append(self.cat.datasets, self._row_like(
+            self.cat.datasets, namespace=ns, name=name, frozen=frozen,
+            monotonic=monotonic, creator="engine",
+            description=f"saved query result {ns}:{name}",
+            created_timestamp=datetime.now(timezone.utc), metadata="{}"))
         self._journal("snapshot", "datasets", self.cat.datasets)
         # add the result BEFORE arming the flag caches (a frozen
         # save_as still receives its own files), then keep the caches

@@ -93,6 +93,22 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def spark_jobs(spark, fn) -> list:
+    """Run ``fn`` in a fresh job group; the stage count of each Spark
+    job it ran, in order (one stage per job = no Exchange)."""
+    import uuid
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    return [len(tracker.getJobInfo(j).stageIds)
+            for j in sorted(tracker.getJobIdsForGroup(group))]
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("metacat_spark_tests", cpus=8)

@@ -100,3 +100,25 @@ def test_client_update_file(client):
     client.update_file(fid, size=123456, checksums={"sha1": "ab"})
     got = client.get_file(fid=fid)
     assert got["size"] == 123456 and got["checksums"]["sha1"] == "ab"
+
+
+def test_get_file_is_one_job(spark):
+    """A point lookup collects its at most one row in one Spark job,
+    even when the hit sits in the last partition (``first()`` scans
+    partitions in growing rounds)."""
+    from pyspark.sql import functions as F
+
+    from metacat_spark.catalog import from_tpch, resident
+    from conftest import spark_jobs
+    cat = from_tpch(spark, SF_DIR)
+    cat.files = resident(cat.files.repartitionByRange(4, "id"))
+    assert cat.files.rdd.getNumPartitions() == 4
+    last = cat.files.agg(F.max("id")).first()[0]
+    client = MetaCatSparkClient(spark, catalog=cat)
+    try:
+        got = []
+        jobs = spark_jobs(spark, lambda: got.append(client.get_file(last)))
+    finally:
+        client._pool.shutdown(wait=True)
+    assert got[0]["id"] == last
+    assert len(jobs) == 1, jobs

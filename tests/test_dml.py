@@ -448,3 +448,101 @@ def test_declared_files_get_created_timestamp(fresh):
     row = dml.cat.files.where(F.col("id") == "ts-r6") \
         .select("created_timestamp").first()
     assert row["created_timestamp"] is not None
+
+
+# ------------------------------------------------------ request-sized writes
+
+_BIG_THREE = ("files", "files_datasets", "parent_child")
+
+
+@pytest.fixture(scope="module")
+def cycled(spark):
+    """An in-memory catalog after 5 declare / add / edge cycles, with
+    each big table's partition count from before the first write."""
+    from metacat_spark.client import MetaCatSparkClient
+    cat = from_tpch(spark, SF_DIR)
+    start = {t: getattr(cat, t).rdd.getNumPartitions() for t in _BIG_THREE}
+    client = MetaCatSparkClient(spark, catalog=cat)
+    dml = client.dml
+    parent = cat.files.select("id").first()["id"]
+    for c in range(5):
+        dml.declare_files(
+            [{"id": f"cy{c}-{k}", "namespace": "dune",
+              "name": f"cy{c}_{k}.dat", "metadata": {"core.run": k},
+              "parents": [parent] if k == 0 else []} for k in range(6)],
+            dataset=("dune", "urgent_2"))
+        dml.add_files_to_dataset([f"cy{c}-1"], "dune", "urgent_3")
+        dml.update_file(f"cy{c}-2", parents=[parent])
+    yield cat, start, client
+    client._pool.shutdown(wait=True)
+
+
+def test_appends_keep_partition_count(cycled):
+    """Every union of a request's rows into a big table keeps the
+    table at the partition count it started with (a plain union added
+    the delta's partitions on each write)."""
+    cat, start, _ = cycled
+    assert {t: getattr(cat, t).rdd.getNumPartitions()
+            for t in _BIG_THREE} == start
+    assert cat.files.where(F.col("id").startswith("cy")).count() == 30
+    assert cat.parent_child.where(
+        F.col("child_id").startswith("cy")).count() == 10
+
+
+def test_streamed_read_back_after_writes_is_one_job(spark, cycled):
+    """A json-seq read-back streams one partition per job: after the
+    cycles it still runs a single job."""
+    from conftest import spark_jobs
+    cat, _, client = cycled
+    cat.files.count()           # computes the resident version
+    got = []
+    jobs = spark_jobs(spark, lambda: got.extend(client.query_iter(
+        "fids cy4-1, cy0-3", with_metadata=True)))
+    assert sorted(r["id"] for r in got) == ["cy0-3", "cy4-1"]
+    assert len(jobs) == 1, jobs
+
+
+def test_membership_add_is_one_probe_per_table(spark):
+    """An in-memory membership add reads the files and membership rows
+    of exactly the requested ids, one single-stage job each: the
+    already-member check runs on the driver, with no anti-join."""
+    from conftest import spark_jobs
+    cat = from_tpch(spark, SF_DIR)
+    dml = DML(cat)
+    fid = cat.files.select("id").first()["id"]
+    cat.files_datasets.count()
+    added = []
+    jobs = spark_jobs(spark, lambda: added.append(
+        dml.add_files_to_dataset([fid], "dune", "urgent_3")))
+    assert added == [1]
+    assert len(jobs) <= 2 and all(n == 1 for n in jobs), jobs
+
+
+def test_driver_rows_plan_as_local_relations(spark, tmp_path):
+    """The fixture's literal tables and the rows a declare or a
+    membership add journals are local relations, not RDDs of pickled
+    Python rows."""
+    from metacat_spark.durable import DurableStore
+    cat = from_tpch(spark, SF_DIR)
+    store = DurableStore(spark, str(tmp_path / "durable"))
+    journaled = []
+    commit = store.commit
+
+    def recording_commit(ops, dml_meta=None):
+        journaled.extend(ops)
+        commit(ops, dml_meta=dml_meta)
+    store.commit = recording_commit
+    dml = DML(cat, store=store)
+    dml.declare_files([{"id": f"lr-{k}", "namespace": "test",
+                        "name": f"lr{k}.dat", "metadata": {"core.run": k}}
+                       for k in range(5)], dataset=("dune", "urgent_2"))
+    dml.add_files_to_dataset(["lr-1"], "dune", "urgent_3")
+    tables = [getattr(cat, t) for t in (
+        "datasets", "datasets_parent_child", "namespaces", "queries_tbl",
+        "parameter_categories")]
+    deltas = [df for kind, _, df in journaled if kind == "upsert"]
+    assert [t for _, t, _ in journaled] == \
+        ["files", "files_datasets", "files_datasets"]
+    for df in tables + deltas:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan

@@ -606,3 +606,55 @@ def test_compact_checkpoints_and_retires_manifests(spark, tmp_path):
                F.col("id").startswith("ck-")).collect()}
     assert got == {"ck-0": True, "ck-1": False,
                    "ck-2": True, "ck-3": True}
+
+
+def test_declared_created_timestamp_survives_restart(spark, tmp_path):
+    """A declared file's created_timestamp is taken once on the
+    driver, so the restored file shows the value the live session
+    showed."""
+    root = str(tmp_path / "cat")
+    cat1 = from_tpch(spark, SF_DIR)
+    dml1 = DML(cat1, store=DurableStore(spark, root))
+    dml1.declare_files([{"id": f"ct-{k}", "namespace": "test",
+                         "name": f"ct{k}.dat"} for k in range(3)])
+
+    def stamps(cat):
+        return {r["id"]: r["created_timestamp"] for r in cat.files
+                .where(F.col("id").startswith("ct-"))
+                .select("id", "created_timestamp").collect()}
+    live = stamps(cat1)
+    assert len(live) == 3 and None not in live.values()
+    assert len(set(live.values())) == 1     # one timestamp per batch
+    cat2, _, _ = _restart(spark, root)
+    assert stamps(cat2) == live
+
+
+def test_declare_segments_are_one_file(spark, tmp_path):
+    """A 20-file declare into a dataset journals its files and
+    membership rows as one parquet file per segment."""
+    root = str(tmp_path / "cat")
+    cat = from_tpch(spark, SF_DIR)
+    store = DurableStore(spark, root)
+    DML(cat, store=store).declare_files(
+        [{"id": f"sg-{k:02d}", "namespace": "test", "name": f"sg{k}.dat",
+          "metadata": {"core.run": k}} for k in range(20)],
+        dataset=("dune", "urgent_2"))
+    tables = store.manifest["tables"]
+    for table in ("files", "files_datasets"):
+        [seg] = tables[table]["segments"]
+        parts = [n for n in os.listdir(f"{root}/{seg['path']}")
+                 if n.endswith(".parquet")]
+        assert len(parts) == 1, (table, parts)
+
+
+def test_readding_a_member_journals_nothing(spark, tmp_path):
+    """Re-adding a member is a no-op: it returns 0 and commits
+    nothing."""
+    cat = from_tpch(spark, SF_DIR)
+    store = DurableStore(spark, str(tmp_path / "cat"))
+    dml = DML(cat, store=store)
+    fid = cat.files.select("id").first()["id"]
+    assert dml.add_files_to_dataset([fid], "dune", "urgent_3") == 1
+    at = store.manifest["commit"]
+    assert dml.add_files_to_dataset([fid, fid], "dune", "urgent_3") == 0
+    assert store.manifest["commit"] == at
