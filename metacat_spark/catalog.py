@@ -2,15 +2,20 @@
 
 Holds the metacat-shaped DataFrames (files, datasets, files_datasets,
 parent_child, datasets_parent_child, namespaces, queries_tbl) and their
-metadata schemas. ``from_tpch`` derives all of them from the driver's
-TPC-H-ish parquet testdata via the fixtures mapping and keeps the three
-big derived tables resident; ``from_materialized`` serves those three
-from bucketed warehouse tables instead.
+metadata schemas, as one immutable ``CatalogState`` that writers swap
+once per mutation and requests pin once per request. ``from_tpch``
+derives the tables from TPC-H-shaped parquet testdata via the
+fixtures mapping and keeps the three big derived tables resident;
+``from_materialized`` serves those three from bucketed warehouse
+tables instead.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import threading
+from contextlib import contextmanager
+from contextvars import ContextVar
+from dataclasses import dataclass, field, fields, replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,9 +29,17 @@ RAW_TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]
 
 
-@dataclass
-class Catalog:
-    spark: SparkSession
+@dataclass(frozen=True, eq=False)
+class CatalogState:
+    """One published version of the catalog's tables. ``version``
+    counts publishes: 0 for a new catalog, +1 for each published
+    mutation, and the manifest's commit number after a durable
+    attach. ``ids_unique`` is the file-id uniqueness invariant behind
+    the engine's set-algebra fast path: True/False once known, None
+    = unknown (probed on first use). The reference holds it by PK
+    construction (schema.sql:45-63); warehouse ingest records it as a
+    table property and DML carries it across its writes."""
+    version: int
     files: DataFrame
     files_datasets: DataFrame
     parent_child: DataFrame
@@ -34,37 +47,121 @@ class Catalog:
     datasets_parent_child: DataFrame
     namespaces: DataFrame
     queries_tbl: DataFrame
+    # reference parameter_categories table (schema.sql:162-176); DML
+    # loads validation rules from here. None = DEFAULT_CATEGORIES.
+    parameter_categories: Optional[DataFrame] = None
+    ids_unique: Optional[bool] = None
+
+
+class _Draft:
+    """A writer's view: the state it opened from plus the tables it
+    has replaced so far."""
+
+    def __init__(self, base: CatalogState):
+        self.base, self.tables = base, {}
+
+    def __getattr__(self, name):
+        return self.tables.get(name, getattr(self.base, name))
+
+
+# the state each catalog's reads see in this context — a request's pin
+# or a writer's draft — keyed by id(catalog)
+_PINS: ContextVar[dict] = ContextVar("metacat_catalog_pins", default={})
+
+
+@dataclass(eq=False)
+class Catalog:
+    """The engine's table registry: fixed configuration (session,
+    metadata schemas, raw tables) plus the ``published`` state.
+
+    Reading a table (``cat.files``, ...) sees the state pinned in the
+    current context, else the published one. A request pins once
+    (``pin``) so every table it reads comes from one version, even
+    while a writer publishes beside it. Writers run in ``write``
+    blocks and replace tables with ``stage``; the outermost block
+    publishes them as one new version. ``publish`` swaps in tables
+    directly (a durable attach, an ad-hoc replacement)."""
+    spark: SparkSession
+    published: CatalogState
     file_meta: MetaSchema = field(default_factory=lambda: FILE_META)
     dataset_meta: MetaSchema = field(default_factory=lambda: DATASET_META)
     query_meta: MetaSchema = field(default_factory=lambda: QUERY_META)
     raw: dict = field(default_factory=dict)
-    # reference parameter_categories table (schema.sql:162-176); DML
-    # loads validation rules from here. None = DEFAULT_CATEGORIES.
-    parameter_categories: Optional[DataFrame] = None
     # when set, file predicates resolve through this native
     # VariantType column instead of shredded columns / JSON-string
     # fallback (the variant warehouse mode; see materialize_tables)
     file_variant_column: Optional[str] = None
-    # id-uniqueness invariant for the engine's set-algebra id-set fast
-    # path: True/False once known, None = unknown (probe on first use).
-    # The reference holds it by PK construction (schema.sql:45-63); we
-    # record it at warehouse ingest (table property) and maintain it
-    # through DML. ANY assignment to .files resets it to None —
-    # invariant-preserving mutators restore it explicitly, so an ingest
-    # path that forgets can only cause a re-probe, never a wrong
-    # fast-path answer.
-    ids_unique: Optional[bool] = None
+    _lock: threading.RLock = field(default_factory=threading.RLock)
 
-    def __setattr__(self, name, value):
-        if name == "files" and "ids_unique" in self.__dict__:
-            object.__setattr__(self, "ids_unique", None)
-        object.__setattr__(self, name, value)
+    def current(self) -> CatalogState:
+        """The state reads see here: this context's pin or draft, else
+        the published state."""
+        return _PINS.get().get(id(self), self.published)
+
+    @contextmanager
+    def pin(self):
+        """Read one state for the whole block. Nested pins (and a
+        writer's draft) keep the state already pinned."""
+        pins = _PINS.get()
+        state = pins.get(id(self), self.published)
+        token = _PINS.set({**pins, id(self): state})
+        try:
+            yield state
+        finally:
+            _PINS.reset(token)
+
+    @contextmanager
+    def write(self):
+        """One mutation, serialised against every other writer on this
+        catalog; yields whether this is the outermost block. Reads in
+        the block see a draft of the published state and ``stage``
+        replaces its tables. The outermost block publishes the draft
+        once as it exits, also when it raised: a composite mutation
+        that failed partway keeps what it applied. Nested blocks
+        share the outer draft."""
+        with self._lock:
+            if isinstance(_PINS.get().get(id(self)), _Draft):
+                yield False
+                return
+            draft = _Draft(self.published)
+            token = _PINS.set({**_PINS.get(), id(self): draft})
+            try:
+                yield True
+            finally:
+                _PINS.reset(token)
+                # ids_unique carries over: no DML write adds a duplicate
+                # file id (declare_files enforces the PK)
+                self.publish(ids_unique=draft.ids_unique, **draft.tables)
+
+    def stage(self, **tables: DataFrame) -> None:
+        """Replace tables on the draft of the enclosing ``write``
+        (outside one there is no draft to stage on, and this raises)."""
+        _PINS.get()[id(self)].tables.update(tables)
+
+    def publish(self, version: Optional[int] = None, **changes) -> None:
+        """Publish the current state with ``changes`` (tables and/or
+        ``ids_unique``) as the next version, or as ``version``. A
+        replaced ``files`` table makes ``ids_unique`` unknown unless
+        it is given. Changes that replace nothing publish nothing."""
+        with self._lock:
+            cur = self.published
+            if "files" in changes:
+                changes.setdefault("ids_unique", None)
+            if all(getattr(cur, k) is v for k, v in changes.items()):
+                return
+            version = cur.version + 1 if version is None else version
+            self.published = replace(cur, version=version, **changes)
 
     def named_query_source(self, namespace: str, name: str) -> Optional[str]:
         rows = (self.queries_tbl
                 .where((F.col("namespace") == namespace) & (F.col("name") == name))
                 .select("source").limit(1).collect())
         return rows[0][0] if rows else None
+
+
+for _f in fields(CatalogState):  # cat.files, cat.version, ...
+    setattr(Catalog, _f.name, property(
+        lambda self, _name=_f.name: getattr(self.current(), _name)))
 
 
 def _meta_json_column(schema: MetaSchema) -> F.Column:
@@ -95,8 +192,8 @@ def from_dataframes(spark: SparkSession, files: DataFrame,
         return local_rows(spark, [], T.StructType(
             [T.StructField(c, T.StringType()) for c in cols]))
 
-    cat = Catalog(
-        spark, files, files_datasets,
+    return Catalog(spark, CatalogState(
+        0, files, files_datasets,
         parent_child if parent_child is not None
         else _empty(["parent_id", "child_id"]),
         datasets if datasets is not None
@@ -118,11 +215,8 @@ def from_dataframes(spark: SparkSession, files: DataFrame,
             .withColumn("owner_user", F.lit(None).cast("string")),
         queries_tbl if queries_tbl is not None
         else _empty(["namespace", "name", "source", "creator",
-                     "description", "metadata"]),
-    )
-    if file_meta is not None:
-        cat.file_meta = file_meta
-    return cat
+                     "description", "metadata"])),
+        file_meta=FILE_META if file_meta is None else file_meta)
 
 
 def materialize_tables(spark: SparkSession, sf_dir: str,
@@ -201,15 +295,16 @@ def from_materialized(spark: SparkSession, sf_dir: str,
     suffix = _suffix(sf_dir)
     files = spark.table(f"mcw_files_var_{suffix}" if variant
                         else f"mcw_files_{suffix}")
+    # invariant recorded at ingest — the engine's set-algebra fast
+    # path needs no first-query probe over the files table
     cat = _fixture_catalog(spark, _read_raw(spark, sf_dir), files,
                            spark.table(f"mcw_fd_{suffix}"),
-                           spark.table(f"mcw_pc_{suffix}"))
+                           spark.table(f"mcw_pc_{suffix}"),
+                           _ids_unique_property(spark,
+                                                f"mcw_files_{suffix}"))
     if variant:
         cat.file_meta = MetaSchema([])
         cat.file_variant_column = "metadata_v"
-    # invariant recorded at ingest — the engine's set-algebra fast
-    # path needs no first-query probe over the files table
-    cat.ids_unique = _ids_unique_property(spark, f"mcw_files_{suffix}")
     return cat
 
 
@@ -320,10 +415,10 @@ def _derived_tables(
 
 
 def _fixture_catalog(spark: SparkSession, raw: dict, files: DataFrame,
-                     files_datasets: DataFrame,
-                     parent_child: DataFrame) -> Catalog:
+                     files_datasets: DataFrame, parent_child: DataFrame,
+                     ids_unique: Optional[bool] = None) -> Catalog:
     """The catalog over the given big three plus the fixtures' small
-    literal tables, every table registered as an ``mc_*`` temp view."""
+    literal tables."""
     datasets = local_rows(spark, FX.DATASET_ROWS, FX.DATASET_COLUMNS)
     datasets = (datasets
                 .withColumn("created_timestamp",
@@ -337,11 +432,6 @@ def _fixture_catalog(spark: SparkSession, raw: dict, files: DataFrame,
 
     from .validation import CATEGORY_COLUMNS, category_rows
     param_cats = local_rows(spark, category_rows(), CATEGORY_COLUMNS)
-    cat = Catalog(spark, files, files_datasets, parent_child, datasets,
-                  ds_pc, namespaces, queries_tbl, raw=raw,
-                  parameter_categories=param_cats)
-    for name in ("files", "files_datasets", "parent_child", "datasets",
-                 "datasets_parent_child", "namespaces", "queries_tbl",
-                 "parameter_categories"):
-        getattr(cat, name).createOrReplaceTempView(f"mc_{name}")
-    return cat
+    return Catalog(spark, CatalogState(
+        0, files, files_datasets, parent_child, datasets, ds_pc,
+        namespaces, queries_tbl, param_cats, ids_unique), raw=raw)

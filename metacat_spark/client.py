@@ -19,7 +19,10 @@ from pyspark.sql import SparkSession
 
 from .catalog import Catalog, from_tpch
 from .dml import DML, point_row
-from .engine import Engine
+from .engine import FILE_OUTPUT_COLUMNS, Engine
+
+# a full file record: the query projection's columns plus checksums
+_RECORD_COLUMNS = FILE_OUTPUT_COLUMNS + ["checksums"]
 
 
 class MetaCatSparkClient:
@@ -69,22 +72,15 @@ class MetaCatSparkClient:
         to DML internals; the reference pays the same double cost
         (query then add_files round-trips), and the DML path is not
         a hot path here."""
-        df = self.engine.query(mql, with_meta=with_metadata,
-                               with_provenance=with_provenance,
-                               summary=summary,
-                               include_retired=include_retired_files,
-                               default_namespace=namespace,
-                               after_id=after_id, page_size=page_size)
-        if save_as or add_to:
-            fs = self.engine.file_set(
-                mql, include_retired=include_retired_files,
-                default_namespace=namespace)
-            if save_as:
-                ns, name = self._split_did(save_as, "save_as")
-                self.dml.save_as(fs, ns, name)
-            if add_to:
-                ns, name = self._split_did(add_to, "add_to")
-                self.dml.add_to(fs, ns, name)
+        with self.catalog.pin():
+            df = self.engine.query(mql, with_meta=with_metadata,
+                                   with_provenance=with_provenance,
+                                   summary=summary,
+                                   include_retired=include_retired_files,
+                                   default_namespace=namespace,
+                                   after_id=after_id, page_size=page_size)
+            self._materialize(mql, save_as, add_to, include_retired_files,
+                              namespace)
         return [self._row_to_dict(r) for r in df.collect()]
 
     def query_iter(self, mql: str, **kw) -> Iterator[dict]:
@@ -93,29 +89,36 @@ class MetaCatSparkClient:
         same summary/save_as/add_to keywords as query() — silently
         dropping them would stream a full row dump where the caller
         asked for a count, and lose materialization without a signal
-        (review r6)."""
-        if kw.get("save_as") or kw.get("add_to"):
-            fs = self.engine.file_set(
-                mql,
+        (review r6). The plan is built on one pinned catalog state, and
+        the stream keeps reading that plan whatever publishes later."""
+        with self.catalog.pin():
+            df = self.engine.query(
+                mql, with_meta=kw.get("with_metadata", False),
+                with_provenance=kw.get("with_provenance", False),
+                summary=kw.get("summary"),
                 include_retired=kw.get("include_retired_files", False),
-                default_namespace=kw.get("namespace"))
-            if kw.get("save_as"):
-                ns, name = self._split_did(kw["save_as"], "save_as")
-                self.dml.save_as(fs, ns, name)
-            if kw.get("add_to"):
-                ns, name = self._split_did(kw["add_to"], "add_to")
-                self.dml.add_to(fs, ns, name)
-        df = self.engine.query(mql, with_meta=kw.get("with_metadata", False),
-                               with_provenance=kw.get(
-                                   "with_provenance", False),
-                               summary=kw.get("summary"),
-                               include_retired=kw.get(
-                                   "include_retired_files", False),
-                               default_namespace=kw.get("namespace"),
-                               after_id=kw.get("after_id"),
-                               page_size=kw.get("page_size"))
+                default_namespace=kw.get("namespace"),
+                after_id=kw.get("after_id"),
+                page_size=kw.get("page_size"))
+            self._materialize(mql, kw.get("save_as"), kw.get("add_to"),
+                              kw.get("include_retired_files", False),
+                              kw.get("namespace"))
         for r in df.toLocalIterator():
             yield self._row_to_dict(r)
+
+    def _materialize(self, mql: str, save_as: Optional[str],
+                     add_to: Optional[str], include_retired: bool,
+                     namespace: Optional[str]) -> None:
+        """The save_as/add_to sinks of query() and query_iter(): the
+        pinned file set, written to the dataset named "ns:name"."""
+        if not (save_as or add_to):
+            return
+        fs = self.engine.file_set(mql, include_retired=include_retired,
+                                  default_namespace=namespace)
+        if save_as:
+            self.dml.save_as(fs, *self._split_did(save_as, "save_as"))
+        if add_to:
+            self.dml.add_to(fs, *self._split_did(add_to, "add_to"))
 
     def stream_json_seq(self, mql: str, fp, **kw) -> int:
         """Write the result as RFC 7464 json-seq (RS + JSON + LF per
@@ -165,10 +168,7 @@ class MetaCatSparkClient:
             hit = (F.col("namespace") == ns) & (F.col("name") == name)
         else:
             raise ValueError("need fid or did")
-        cols = ["id", "namespace", "name", "size", "creator",
-                "created_timestamp", "retired", "checksums"]
-        if with_metadata:
-            cols.append("metadata")
+        cols = _RECORD_COLUMNS + (["metadata"] if with_metadata else [])
         row = point_row(files.where(hit).select(*cols))
         return None if row is None else self._row_to_dict(row)
 
@@ -184,25 +184,16 @@ class MetaCatSparkClient:
         dids = [f"{s['namespace']}:{s['name']}" for s in specs
                 if not s.get("fid") and s.get("namespace")
                 and s.get("name")]
-        files = self.catalog.files
         hit = F.lit(False)
         if fids:
             hit = hit | F.col("id").isin(fids)
         if dids:
             hit = hit | F.concat_ws(":", "namespace", "name").isin(dids)
-        cols = ["id", "namespace", "name", "size", "creator",
-                "created_timestamp", "retired", "checksums"]
-        if with_metadata:
-            cols.append("metadata")
-        out = files.where(hit).select(*cols)
-        if with_provenance:
-            pc = self.catalog.parent_child
-            parents = (pc.groupBy(F.col("child_id").alias("id"))
-                       .agg(F.collect_list("parent_id").alias("parents")))
-            children = (pc.groupBy(F.col("parent_id").alias("id"))
-                        .agg(F.collect_list("child_id").alias("children")))
-            out = (out.join(parents, "id", "left")
-                   .join(children, "id", "left"))
+        cols = _RECORD_COLUMNS + (["metadata"] if with_metadata else [])
+        with self.catalog.pin():
+            out = self.catalog.files.where(hit).select(*cols)
+            if with_provenance:
+                out = self.engine.with_provenance(out)
         return [self._row_to_dict(r) for r in out.collect()]
 
     def list_datasets(self, pattern: str = "*:*") -> list[dict]:

@@ -7,9 +7,10 @@ metadata-requirement validation and frozen/monotonic enforcement
 (data_handler.py:424-548), and the query sinks save_as/add_to
 (data_handler.py:1306-1370).
 
-Mutations produce NEW DataFrames swapped into the Catalog (session
-state). With a ``durable.DurableStore`` (r8), every mutation ALSO
-appends its row-level delta to a parquet commit log, so writes
+Mutations stage NEW DataFrames on a draft of the Catalog's state,
+published once per mutation (``Catalog.write``), so a request never
+sees half of one. With a ``durable.DurableStore`` (r8), every mutation
+ALSO appends its row-level delta to a parquet commit log, so writes
 survive a restart like the reference's PostgreSQL rows do — see
 durable.py for the log model and docs/DIVERGENCES.md §9 for the
 contract. Bulk declare is a single DataFrame union (the
@@ -122,21 +123,21 @@ def _load_categories(catalog: Catalog) -> dict:
 
 
 def _locked(fn):
-    """Serialize catalog mutations: the threaded HTTP server runs one
-    thread per request, and every mutator is a read-modify-write of
-    catalog DataFrame references (read cat.files → transform →
-    assign) — two concurrent declares would silently drop one
-    thread's rows without this (review r6). RLock because composite
-    mutations nest (save_as → add_to, declare_files →
-    add_files_to_dataset).
+    """Run a mutator as one ``Catalog.write`` block: writers on the
+    catalog are serialized (every mutator is a read-modify-write of
+    catalog tables — two concurrent declares would silently drop one
+    thread's rows otherwise, review r6), the mutator reads and stages
+    tables on one draft, and the outermost exit publishes it as one
+    catalog version. Composite mutations nest (declare_files →
+    add_files_to_dataset) and share the outer draft.
 
     Durable mode (r8): the wrapper is also the commit boundary —
     journal ops buffered by the mutator (and any nested mutators)
     flush as ONE DurableStore commit when the OUTERMOST mutation
     returns. A raising mutation ALSO flushes whatever it buffered:
     the journaling invariant is "op buffered ⇒ its session mutation
-    is already applied" (every _journal call sits directly after its
-    assignment), so flushing keeps the commit log equal to session
+    is already applied" (every _journal call sits directly after the
+    stage it records), so flushing keeps the commit log equal to session
     state even when a composite mutator fails partway (review r8 —
     the original discard-on-raise policy silently diverged: the
     session kept the partial mutation while the log lost it, and a
@@ -146,39 +147,14 @@ def _locked(fn):
 
     @functools.wraps(fn)
     def wrapper(self, *a, **k):
-        def flush():
-            if self._depth == 1 and self._pending:
-                ops, self._pending = self._pending, []
-                if self._store is not None:
-                    try:
-                        self._store.commit(ops,
-                                           dml_meta=self._dml_meta())
-                    except BaseException as e:
-                        # re-buffer so a LATER successful mutation's
-                        # flush carries these ops — without this the
-                        # session keeps the mutation but the log
-                        # loses it permanently (a retry then hits
-                        # AlreadyExists while the log stays behind
-                        # until restart; ADVICE r8)
-                        self._pending = ops + self._pending
-                        if hasattr(e, "add_note"):
-                            e.add_note(
-                                "durable commit failed; the ops are "
-                                "re-buffered and will flush with the "
-                                "next successful mutation — or "
-                                "re-attach the catalog to roll the "
-                                "session back to the last commit")
-                        raise
-
-        with self._lock:
-            self._depth += 1
+        with self.cat.write() as outermost:
+            if not outermost:
+                return fn(self, *a, **k)
             try:
                 out = fn(self, *a, **k)
-                flush()              # commit failures surface here
-                return out
-            except BaseException as orig:
+            except BaseException:
                 try:
-                    flush()          # keep log == session state
+                    self._flush()    # keep log == session state
                 except Exception:
                     # an additional commit failure must not mask the
                     # mutation's own exception; the log is now behind
@@ -186,9 +162,9 @@ def _locked(fn):
                     # same window as any commit-write failure —
                     # docs/DIVERGENCES.md §9's write-behind contract)
                     pass
-                raise orig
-            finally:
-                self._depth -= 1
+                raise
+            self._flush()            # commit failures surface here
+            return out
     return wrapper
 
 
@@ -202,10 +178,7 @@ class DML:
         The store does NOT attach committed state to the catalog here;
         call store.attach(catalog) before constructing the DML when
         restoring (client/CLI/server do)."""
-        import threading
-        self._lock = threading.RLock()
         self._store = store
-        self._depth = 0
         self._pending: list = []
         self.cat = catalog
         self.categories = (_load_categories(catalog)
@@ -216,7 +189,6 @@ class DML:
         if store is not None:
             self.dataset_requirements.update(
                 store.dataset_requirements())
-        self.refresh()
 
     def _journal(self, kind: str, table: str, df: DataFrame) -> None:
         """Buffer one journal op (no-op without a store); flushed as a
@@ -224,31 +196,47 @@ class DML:
         if self._store is not None:
             self._pending.append((kind, table, df))
 
+    def _flush(self) -> None:
+        """Commit the buffered journal ops as ONE durable commit."""
+        if not self._pending:
+            return
+        ops, self._pending = self._pending, []
+        try:
+            self._store.commit(ops, dml_meta=self._dml_meta())
+        except BaseException as e:
+            # re-buffer so a LATER successful mutation's flush carries
+            # these ops — without this the session keeps the mutation
+            # but the log loses it permanently (a retry then hits
+            # AlreadyExists while the log stays behind until restart;
+            # ADVICE r8)
+            self._pending = ops + self._pending
+            if hasattr(e, "add_note"):
+                e.add_note("durable commit failed; the ops are "
+                           "re-buffered and will flush with the next "
+                           "successful mutation — or re-attach the "
+                           "catalog to roll the session back to the "
+                           "last commit")
+            raise
+
     def _dml_meta(self) -> dict:
         return {"dataset_requirements": {
             f"{ns}\t{name}": reqs for (ns, name), reqs
             in self.dataset_requirements.items()}}
 
-    def refresh(self) -> None:
-        """(Re)load the dataset-level flag caches from the catalog.
-        This instance keeps its own caches in sync with its own
-        mutations (update_dataset below); call this when ANOTHER
-        session may have flipped frozen/monotonic — e.g. once per
-        request batch in a long-lived service. Catalog-sized collect
-        (datasets are few), never per-file."""
-        self.frozen: set[tuple[str, str]] = set()
-        self.monotonic: set[tuple[str, str]] = set()
-        for r in self.cat.datasets.select("namespace", "name", "frozen",
-                                          "monotonic").collect():
-            if r["frozen"]:
-                self.frozen.add((r["namespace"], r["name"]))
-            if r["monotonic"]:
-                self.monotonic.add((r["namespace"], r["name"]))
-
-    def _has_dataset(self, ns: str, name: str) -> bool:
+    def _dataset(self, ns: str, name: str) -> Optional[Row]:
+        """The dataset's (frozen, monotonic) flags; None if it does
+        not exist. One probe both checks existence and reads policy."""
         return point_row(self.cat.datasets.where(
             (F.col("namespace") == ns) & (F.col("name") == name))
-            .select("name")) is not None
+            .select("frozen", "monotonic"))
+
+    def _check_writable(self, ns: str, name: str) -> None:
+        """Raise unless the dataset exists and is not frozen."""
+        ds = self._dataset(ns, name)
+        if ds is None:
+            raise DMLError(f"dataset {ns}:{name} not found")
+        if ds["frozen"]:
+            raise DMLError(f"dataset {ns}:{name} is frozen")
 
     def _rows(self, rows: list, schema: T.StructType) -> DataFrame:
         """A request's rows as one single-partition local relation, so
@@ -264,9 +252,7 @@ class DML:
         """Add ``delta`` to journaled table ``name`` and journal it as
         an upsert. Only declare_files appends to files, after enforcing
         the PK, so the ids_unique invariant carries over."""
-        prev = self.cat.ids_unique
-        setattr(self.cat, name, append(getattr(self.cat, name), delta))
-        self.cat.ids_unique = prev
+        self.cat.stage(**{name: append(getattr(self.cat, name), delta)})
         self._journal("upsert", name, delta)
 
     def _new_edges(self, pc: DataFrame, edges: list) -> list:
@@ -280,15 +266,6 @@ class DML:
                 .where(F.col("child_id").isin(sorted({c for _, c in edges})))
                 .select(*_EDGE_COLUMNS).collect()}
         return [e for e in edges if e not in have]
-
-    def _set_files(self, df) -> None:
-        """Replace cat.files for a mutation that cannot introduce a
-        duplicate id (point patches and deletes never add rows): carries
-        the catalog's ids_unique invariant across the assignment, which
-        otherwise auto-invalidates it (Catalog.__setattr__)."""
-        prev = self.cat.ids_unique
-        self.cat.files = resident(df)
-        self.cat.ids_unique = prev
 
     # ------------------------------------------------------- validation
     def validate(self, metadata: dict,
@@ -340,11 +317,7 @@ class DML:
             # into a missing/frozen dataset must fail atomically, not
             # after the file rows and edges were already appended
             # (review r6)
-            dns, dname = dataset
-            if (dns, dname) in self.frozen:
-                raise DMLError(f"dataset {dns}:{dname} is frozen")
-            if not self._has_dataset(dns, dname):
-                raise DMLError(f"dataset {dns}:{dname} not found")
+            self._check_writable(*dataset)
         # parent-id FK check BEFORE any mutation (review r8): the
         # old post-append check left the appended file rows in
         # session state when a parent was missing. Intra-batch
@@ -414,15 +387,13 @@ class DML:
                              _skip_exist_check: bool = False) -> int:
         """Membership append with frozen enforcement
         (data_handler.py:424-548). Monotonic datasets accept adds but
-        refuse removals."""
-        if (ns, name) in self.frozen:
-            raise DMLError(f"dataset {ns}:{name} is frozen")
+        refuse removals. declare_files, which checked the dataset
+        itself, skips the existence checks."""
         want = list(dict.fromkeys(file_ids))
         if not _skip_exist_check:
             # dataset and file ids must exist (FK semantics,
             # schema.sql:96-104)
-            if not self._has_dataset(ns, name):
-                raise DMLError(f"dataset {ns}:{name} not found")
+            self._check_writable(ns, name)
             reqs = self.dataset_requirements.get((ns, name))
             found = {r["id"]: r for r in self.cat.files
                      .where(F.col("id").isin(want))
@@ -462,9 +433,10 @@ class DML:
     @_locked
     def remove_files_from_dataset(self, file_ids: list[str], ns: str,
                                   name: str) -> None:
-        if (ns, name) in self.frozen:
+        frozen, monotonic = self._dataset(ns, name) or (False, False)
+        if frozen:
             raise DMLError(f"dataset {ns}:{name} is frozen")
-        if (ns, name) in self.monotonic:
+        if monotonic:
             raise DMLError(f"dataset {ns}:{name} is monotonic; "
                            f"files cannot be removed")
         if not file_ids:
@@ -474,10 +446,10 @@ class DML:
             # remove_files with an empty body (review r8)
             return
         fd = self.cat.files_datasets
-        self.cat.files_datasets = resident(fd.where(~(
+        self.cat.stage(files_datasets=resident(fd.where(~(
             (F.col("dataset_namespace") == ns)
             & (F.col("dataset_name") == name)
-            & F.col("file_id").isin(file_ids))))
+            & F.col("file_id").isin(file_ids)))))
         if self._store is not None:
             # delete keys enumerate from the request itself (never a
             # table scan); non-member keys journal harmless no-ops.
@@ -516,10 +488,10 @@ class DML:
         else:
             new_meta = json.loads(row["metadata"] or "{}")
             new_meta.update(metadata)
-        self._set_files(_apply_meta_patch(
+        self.cat.stage(files=resident(_apply_meta_patch(
             files, self.cat.file_meta, F.col("id") == file_id,
-            new_meta))
-        # journal the PATCHED row from the assigned (checkpointed)
+            new_meta)))
+        # journal the PATCHED row from the staged (checkpointed)
         # DataFrame: the segment write is its first action, so memory
         # and log see the same materialization
         self._journal("upsert", "files",
@@ -536,17 +508,16 @@ class DML:
 
     def _set_edges(self, file_id: str, other_ids: list[str],
                    as_parents: bool, replace: bool) -> None:
-        """Add (or replace) provenance edges touching ``file_id``.
-        FK semantics: every referenced id must exist (schema.sql:67-73
-        REFERENCES files(id)); an edge already present is not added
-        again, like the PK."""
-        self._check_fids_exist(other_ids,
-                               "parent" if as_parents else "child")
+        """Add (or replace) provenance edges touching ``file_id``; an
+        edge already present is not added again, like the PK. The
+        caller has checked that every referenced id exists (FK
+        semantics, schema.sql:67-73 REFERENCES files(id))."""
         pc = self.cat.parent_child
         me = "child_id" if as_parents else "parent_id"
         if replace:
-            self.cat.parent_child = resident(pc.where(F.col(me) != file_id))
-            # journal AFTER the assignment — the flush-on-exception
+            self.cat.stage(parent_child=resident(
+                pc.where(F.col(me) != file_id)))
+            # journal AFTER staging — the flush-on-exception
             # contract requires "op buffered ⇒ mutation applied".
             # The delete keys enumerate distributed from the pre-filter
             # edge table (a point lookup, no driver rows); delete seq <
@@ -619,7 +590,7 @@ class DML:
                         "updated_timestamp",
                         F.when(hit, F.current_timestamp())
                          .otherwise(F.col("updated_timestamp"))))
-            self._set_files(files)
+            self.cat.stage(files=resident(files))
             self._journal("upsert", "files", self.cat.files.where(hit))
         if metadata is not None:
             self.update_file_metadata(
@@ -646,7 +617,7 @@ class DML:
                       else F.lit(by))
         retired_ts = (F.lit(None).cast("timestamp") if unretire
                       else F.current_timestamp())
-        self._set_files(
+        self.cat.stage(files=resident(
             files.withColumn("retired",
                              F.when(hit, F.lit(not unretire))
                               .otherwise(F.col("retired")))
@@ -655,7 +626,7 @@ class DML:
                               .otherwise(F.col("retired_by")))
                  .withColumn("retired_timestamp",
                              F.when(hit, retired_ts)
-                              .otherwise(F.col("retired_timestamp"))))
+                              .otherwise(F.col("retired_timestamp")))))
         self._journal("upsert", "files", self.cat.files.where(hit))
 
     @_locked
@@ -681,14 +652,13 @@ class DML:
         fid = row["id"]
         fd_before = self.cat.files_datasets
         pc_before = self.cat.parent_child
-        # row removal cannot introduce a duplicate id
-        self._set_files(files.where(F.col("id") != fid))
-        self.cat.files_datasets = resident(
-            fd_before.where(F.col("file_id") != fid))
-        self.cat.parent_child = resident(
-            pc_before.where(
+        self.cat.stage(
+            files=resident(files.where(F.col("id") != fid)),
+            files_datasets=resident(
+                fd_before.where(F.col("file_id") != fid)),
+            parent_child=resident(pc_before.where(
                 (F.col("parent_id") != fid)
-                & (F.col("child_id") != fid)))
+                & (F.col("child_id") != fid))))
         if self._store is not None:
             # cascade deletes journal the affected KEYS, enumerated
             # distributed from the pre-delete tables (point lookups)
@@ -712,7 +682,7 @@ class DML:
         self._check_fids_exist(file_ids, "move")
         files = self.cat.files
         hit = F.col("id").isin(file_ids)
-        self._set_files(
+        self.cat.stage(files=resident(
             files.withColumn("namespace",
                              F.when(hit, F.lit(to_namespace))
                               .otherwise(F.col("namespace")))
@@ -721,7 +691,7 @@ class DML:
                               .otherwise(F.col("updated_by")))
                  .withColumn("updated_timestamp",
                              F.when(hit, F.current_timestamp())
-                              .otherwise(F.col("updated_timestamp"))))
+                              .otherwise(F.col("updated_timestamp")))))
         self._journal("upsert", "files", self.cat.files.where(hit))
 
     @_locked
@@ -735,10 +705,10 @@ class DML:
         (webapi.py:429-472) and flag toggles."""
         ds = self.cat.datasets
         hit = (F.col("namespace") == ns) & (F.col("name") == name)
-        if not self._has_dataset(ns, name):
+        row = point_row(ds.where(hit).select("metadata"))
+        if row is None:
             # flag/metadata updates on a missing dataset must 404, not
-            # no-op (and a silent frozen=True would poison the flag
-            # cache with a phantom entry — review r6)
+            # no-op (review r6)
             raise DMLError(f"dataset {ns}:{name} not found")
         if metadata is not None:
             if mode not in ("update", "replace"):
@@ -748,9 +718,6 @@ class DML:
             else:
                 # driver-side type-preserving merge (see
                 # update_file_metadata)
-                row = point_row(ds.where(hit).select("metadata"))
-                if row is None:
-                    raise DMLError(f"dataset {ns}:{name} not found")
                 new_meta = json.loads(row["metadata"] or "{}")
                 new_meta.update(metadata)
             ds = _apply_meta_patch(ds, self.cat.dataset_meta, hit,
@@ -761,14 +728,8 @@ class DML:
                 ds = ds.withColumn(colname,
                                    F.when(hit, F.lit(val))
                                     .otherwise(F.col(colname)))
-        self.cat.datasets = resident(ds)
+        self.cat.stage(datasets=resident(ds))
         self._journal("snapshot", "datasets", self.cat.datasets)
-        if frozen is not None:
-            (self.frozen.add if frozen else
-             self.frozen.discard)((ns, name))
-        if monotonic is not None:
-            (self.monotonic.add if monotonic else
-             self.monotonic.discard)((ns, name))
 
     @_locked
     def create_dataset(self, ns: str, name: str, description: str = "",
@@ -780,25 +741,22 @@ class DML:
         """Create an empty dataset (webapi.py:380-427; the reference's
         `metacat dataset create`). PK (namespace, name) — duplicates
         are an error, not an upsert."""
-        if self._has_dataset(ns, name):
+        if self._dataset(ns, name) is not None:
             raise AlreadyExists(f"dataset {ns}:{name} already exists")
         # dataset metadata is uncategorized (dotless keys in the
         # reference fixture) — file-category validation doesn't apply
-        self.cat.datasets = append(self.cat.datasets, self._row_like(
+        self.cat.stage(datasets=append(self.cat.datasets, self._row_like(
             self.cat.datasets, namespace=ns, name=name, frozen=frozen,
             monotonic=monotonic, creator=creator,
             description=description,
             created_timestamp=datetime.now(timezone.utc),
-            metadata=json.dumps(metadata or {})))
+            metadata=json.dumps(metadata or {}))))
         self._journal("snapshot", "datasets", self.cat.datasets)
-        if frozen:
-            self.frozen.add((ns, name))
-        if monotonic:
-            self.monotonic.add((ns, name))
         if file_meta_requirements:
             # enforced on add_files_to_dataset / declare-into-dataset
-            # (this-instance cache, like the frozen/monotonic flags)
-            self.dataset_requirements[(ns, name)] =                 file_meta_requirements
+            # (this-instance cache)
+            self.dataset_requirements[(ns, name)] = \
+                file_meta_requirements
 
     @_locked
     def remove_dataset(self, ns: str, name: str) -> None:
@@ -807,25 +765,21 @@ class DML:
         files themselves are untouched — a dataset is a named set, not
         an owner."""
         hit = ((F.col("namespace") == ns) & (F.col("name") == name))
-        if not self._has_dataset(ns, name):
+        if self._dataset(ns, name) is None:
             raise DMLError(f"dataset {ns}:{name} not found")
-        self.cat.datasets = resident(self.cat.datasets.where(~hit))
         self.dataset_requirements.pop((ns, name), None)
-        self.frozen.discard((ns, name))
-        self.monotonic.discard((ns, name))
         fd_before = self.cat.files_datasets
-        self.cat.files_datasets = resident(
-            fd_before.where(~(
-                (F.col("dataset_namespace") == ns)
-                & (F.col("dataset_name") == name))))
         dpc = self.cat.datasets_parent_child
-        self.cat.datasets_parent_child = resident(dpc.where(~(
-            ((F.col("parent_namespace") == ns)
-             & (F.col("parent_name") == name))
-            | ((F.col("child_namespace") == ns)
-               & (F.col("child_name") == name)))))
-        self.frozen.discard((ns, name))
-        self.monotonic.discard((ns, name))
+        self.cat.stage(
+            datasets=resident(self.cat.datasets.where(~hit)),
+            files_datasets=resident(fd_before.where(~(
+                (F.col("dataset_namespace") == ns)
+                & (F.col("dataset_name") == name)))),
+            datasets_parent_child=resident(dpc.where(~(
+                ((F.col("parent_namespace") == ns)
+                 & (F.col("parent_name") == name))
+                | ((F.col("child_namespace") == ns)
+                   & (F.col("child_name") == name))))))
         self._journal("snapshot", "datasets", self.cat.datasets)
         self._journal("snapshot", "datasets_parent_child",
                       self.cat.datasets_parent_child)
@@ -843,7 +797,7 @@ class DML:
         exist; re-adding an existing edge is a no-op (PK)."""
         for ns, name in ((parent_ns, parent_name),
                          (child_ns, child_name)):
-            if not self._has_dataset(ns, name):
+            if self._dataset(ns, name) is None:
                 raise DMLError(f"dataset {ns}:{name} not found")
         dpc = self.cat.datasets_parent_child
         edge = dict(parent_namespace=parent_ns, parent_name=parent_name,
@@ -853,8 +807,8 @@ class DML:
                & (F.col("child_namespace") == child_ns)
                & (F.col("child_name") == child_name))
         if point_row(dpc.where(hit)) is None:
-            self.cat.datasets_parent_child = append(
-                dpc, self._row_like(dpc, **edge))
+            self.cat.stage(datasets_parent_child=append(
+                dpc, self._row_like(dpc, **edge)))
             self._journal("snapshot", "datasets_parent_child",
                           self.cat.datasets_parent_child)
 
@@ -879,9 +833,9 @@ class DML:
                                     f"already exists")
             qt = qt.where(~((F.col("namespace") == ns)
                             & (F.col("name") == name)))
-        self.cat.queries_tbl = append(qt, self._row_like(
+        self.cat.stage(queries_tbl=append(qt, self._row_like(
             qt, namespace=ns, name=name, source=source, creator=creator,
-            description=description))
+            description=description)))
         self._journal("snapshot", "queries_tbl", self.cat.queries_tbl)
 
     @_locked
@@ -901,11 +855,11 @@ class DML:
         if point_row(pc.where(F.col("path") == path)
                      .select("path")) is not None:
             raise AlreadyExists(f"category {path!r} already exists")
-        self.cat.parameter_categories = append(pc, self._row_like(
+        self.cat.stage(parameter_categories=append(pc, self._row_like(
             pc, path=path, restricted=restricted,
             definitions=json.dumps(definitions or {}),
             owner_user=owner_user, description=description,
-            creator=creator))
+            creator=creator)))
         self._journal("snapshot", "parameter_categories",
                       self.cat.parameter_categories)
         self.categories[path] = {
@@ -918,8 +872,8 @@ class DML:
         if point_row(self.cat.namespaces.where(F.col("name") == name)
                      .select("name")) is not None:
             raise DMLError(f"namespace {name!r} already exists")
-        self.cat.namespaces = append(self.cat.namespaces, self._row_like(
-            self.cat.namespaces, name=name, owner_user=owner))
+        self.cat.stage(namespaces=append(self.cat.namespaces, self._row_like(
+            self.cat.namespaces, name=name, owner_user=owner)))
         self._journal("snapshot", "namespaces", self.cat.namespaces)
 
     # ------------------------------------------------------------- sinks
@@ -928,31 +882,28 @@ class DML:
                 frozen: bool = False, monotonic: bool = False) -> int:
         """Materialize a query result as a NEW dataset
         (data_handler.py:1306-1337)."""
-        if self._has_dataset(ns, name):
+        if self._dataset(ns, name) is not None:
             raise DMLError(f"dataset {ns}:{name} already exists")
-        self.cat.datasets = append(self.cat.datasets, self._row_like(
+        self.cat.stage(datasets=append(self.cat.datasets, self._row_like(
             self.cat.datasets, namespace=ns, name=name, frozen=frozen,
             monotonic=monotonic, creator="engine",
             description=f"saved query result {ns}:{name}",
-            created_timestamp=datetime.now(timezone.utc), metadata="{}"))
+            created_timestamp=datetime.now(timezone.utc), metadata="{}")))
         self._journal("snapshot", "datasets", self.cat.datasets)
-        # add the result BEFORE arming the flag caches (a frozen
-        # save_as still receives its own files), then keep the caches
-        # in sync like create_dataset does (review r6)
-        n = self.add_to(result, ns, name)
-        if frozen:
-            self.frozen.add((ns, name))
-        if monotonic:
-            self.monotonic.add((ns, name))
-        return n
+        # a frozen save_as still receives its own files
+        return self._add_result(result, ns, name)
 
     @_locked
     def add_to(self, result: DataFrame, ns: str, name: str) -> int:
         """Append a query result's files to an existing dataset
         (data_handler.py:1368-1370) — distributed append, no driver
         loop."""
-        if (ns, name) in self.frozen:
+        frozen, _ = self._dataset(ns, name) or (False, False)
+        if frozen:
             raise DMLError(f"dataset {ns}:{name} is frozen")
+        return self._add_result(result, ns, name)
+
+    def _add_result(self, result: DataFrame, ns: str, name: str) -> int:
         add = result.select(
             F.col("id").alias("file_id"),
             F.lit(ns).alias("dataset_namespace"),
@@ -967,7 +918,7 @@ class DML:
         # execution between count() and the union's first action)
         add = add.localCheckpoint()
         n = add.count()
-        self.cat.files_datasets = resident(
-            self.cat.files_datasets.unionByName(add))
+        self.cat.stage(files_datasets=resident(
+            self.cat.files_datasets.unionByName(add)))
         self._journal("upsert", "files_datasets", add)
         return n

@@ -471,8 +471,8 @@ class DurableStore:
         """Overlay the committed state onto a freshly built catalog
         (fixtures/warehouse base): journaled tables get base+journal
         reconstruction, snapshot tables are replaced outright, and each
-        table so restored is made resident. Temp views are
-        re-registered so SQL surfaces see the same state.
+        table so restored is made resident. The restored tables publish
+        as one catalog version numbered by the manifest's commit.
 
         Time-travel attaches preflight-check that every referenced
         data directory still exists: ``compact()`` deletes superseded
@@ -492,20 +492,19 @@ class DurableStore:
                     f"commit {self.at}'s data was removed by a later "
                     f"compact (missing: {missing[:3]}); time travel "
                     f"reaches back only to the last compaction")
+        tables = {}
         for table, entry in (self.manifest.get("tables") or {}).items():
-            base = getattr(catalog, table)
             if table in TABLE_KEYS:
-                new = self._replay(base, table, entry)
+                new = self._replay(getattr(catalog, table), table, entry)
             else:
                 new = self.spark.read.parquet(
                     f"{self.root}/{entry['snapshot']}")
             # resident: the journal window runs once, not per request
-            new = resident(new)
-            setattr(catalog, table, new)
-            new.createOrReplaceTempView(f"mc_{table}")
-        # journal upserts can't be proven duplicate-free here; let the
-        # engine's set-algebra fast path re-probe on first use
-        catalog.ids_unique = None
+            tables[table] = resident(new)
+        # a restored files table has ids_unique unknown: journal upserts
+        # can't be proven duplicate-free here, so the engine's
+        # set-algebra fast path re-probes on first use
+        catalog.publish(version=self.manifest["commit"], **tables)
 
     def history(self) -> list[dict]:
         """One row per parseable commit (oldest first): the commit

@@ -85,40 +85,42 @@ class Engine:
         for reference parity. Page through by passing the last row's
         id back as the next ``after_id``.
         """
-        top = parse(text, default_namespace=default_namespace)
-        if summary and not isinstance(top, FileQuery):
-            # summaries are defined over FILE sets (the reference's
-            # data_handler summary surface); silently returning raw
-            # dataset rows made /data/query?summary=count serve a
-            # dataset record as "the count" (review r6)
-            raise QueryError("summary= applies to file queries only")
-        if isinstance(top, FileQuery):
-            df = self._translate_fq(top.tree, include_retired,
-                                    _named_stack=())
-            if summary:
-                return self._summary(df, summary)
-            out = self._project_files(df, with_meta, with_provenance)
-            if after_id is not None or page_size is not None:
-                if after_id is not None:
-                    out = out.where(F.col("id") > after_id)
-                out = out.orderBy("id")
-                if page_size is not None:
-                    out = out.limit(int(page_size))
-            return out
-        if isinstance(top, DatasetQuery):
-            df = self._translate_dataset_query(top)
-            cols = ["namespace", "name", "frozen", "monotonic", "creator",
-                    "description", "created_timestamp"]
-            if with_meta:
-                cols.append("metadata")
-            return df.select(*cols)
-        if isinstance(top, QueryQuery):
-            df = self._translate_query_query(top)
-            cols = ["namespace", "name", "source", "creator", "description"]
-            if with_meta:
-                cols.append("metadata")
-            return df.select(*cols)
-        raise QueryError(f"unsupported query {top!r}")
+        with self.cat.pin():  # every table read from one state
+            top = parse(text, default_namespace=default_namespace)
+            if summary and not isinstance(top, FileQuery):
+                # summaries are defined over FILE sets (the reference's
+                # data_handler summary surface); silently returning raw
+                # dataset rows made /data/query?summary=count serve a
+                # dataset record as "the count" (review r6)
+                raise QueryError("summary= applies to file queries only")
+            if isinstance(top, FileQuery):
+                df = self._translate_fq(top.tree, include_retired,
+                                        _named_stack=())
+                if summary:
+                    return self._summary(df, summary)
+                out = self._project_files(df, with_meta, with_provenance)
+                if after_id is not None or page_size is not None:
+                    if after_id is not None:
+                        out = out.where(F.col("id") > after_id)
+                    out = out.orderBy("id")
+                    if page_size is not None:
+                        out = out.limit(int(page_size))
+                return out
+            if isinstance(top, DatasetQuery):
+                df = self._translate_dataset_query(top)
+                cols = ["namespace", "name", "frozen", "monotonic", "creator",
+                        "description", "created_timestamp"]
+                if with_meta:
+                    cols.append("metadata")
+                return df.select(*cols)
+            if isinstance(top, QueryQuery):
+                df = self._translate_query_query(top)
+                cols = ["namespace", "name", "source", "creator",
+                        "description"]
+                if with_meta:
+                    cols.append("metadata")
+                return df.select(*cols)
+            raise QueryError(f"unsupported query {top!r}")
 
     def explain(self, text: str, **kw) -> str:
         """MQL AST + Spark physical plan (parity with `metacat query -x`,
@@ -243,17 +245,18 @@ class Engine:
     def _file_ids_unique(self) -> bool:
         """File-id uniqueness for the set-algebra fast path. Known
         catalogs carry the invariant with them (recorded at warehouse
-        ingest as a table property; maintained by DML, whose declare
-        path enforces the PK and whose patch paths never add rows) —
-        no job runs here. The groupBy probe remains only as a fallback
-        for ad-hoc from_dataframes catalogs, cached until something
-        reassigns cat.files (which auto-invalidates the cache)."""
-        cached = self.cat.ids_unique
-        if cached is None:
-            cached = (self.cat.files.groupBy("id").count()
-                      .where(F.col("count") > 1).isEmpty())
-            self.cat.ids_unique = cached
-        return cached
+        ingest as a table property; carried by DML, whose declare path
+        enforces the PK and whose patch paths never add rows) — no job
+        runs here. The groupBy probe remains only as a fallback for
+        states whose files table came from elsewhere (an ad-hoc
+        from_dataframes catalog, a durable restore); its answer is a
+        fact about that state's tables, so it is kept on the state."""
+        state = self.cat.current()
+        if state.ids_unique is None:
+            object.__setattr__(state, "ids_unique", (
+                state.files.groupBy("id").count()
+                .where(F.col("count") > 1).isEmpty()))
+        return state.ids_unique
 
     def _all_bfq(self, node) -> bool:
         """True iff every leaf of a set-op tree is a BasicFileQuery
@@ -579,15 +582,18 @@ class Engine:
         if with_meta and "metadata" in df.columns:
             cols.append("metadata")
         out = df.select(*cols)
-        if with_provenance:
-            pc = self.cat.parent_child
-            parents = (pc.groupBy(F.col("child_id").alias("id"))
-                       .agg(F.collect_list("parent_id").alias("parents")))
-            children = (pc.groupBy(F.col("parent_id").alias("id"))
-                        .agg(F.collect_list("child_id").alias("children")))
-            out = (out.join(parents, "id", "left")
-                   .join(children, "id", "left"))
-        return out
+        return self.with_provenance(out) if with_provenance else out
+
+    def with_provenance(self, files: DataFrame) -> DataFrame:
+        """``files`` plus each file's ``parents`` and ``children`` id
+        lists (null when it has none)."""
+        pc = self.cat.parent_child
+        parents = (pc.groupBy(F.col("child_id").alias("id"))
+                   .agg(F.collect_list("parent_id").alias("parents")))
+        children = (pc.groupBy(F.col("parent_id").alias("id"))
+                    .agg(F.collect_list("child_id").alias("children")))
+        return (files.join(parents, "id", "left")
+                .join(children, "id", "left"))
 
     # --------------------------------------------------- aggregation API
     # count over a COLUMN counts non-null values (SQL count(col));
@@ -746,4 +752,5 @@ class Engine:
         top = parse(text, default_namespace=default_namespace)
         if not isinstance(top, FileQuery):
             raise QueryError("file_set() requires a file query")
-        return self._translate_fq(top.tree, include_retired, ())
+        with self.cat.pin():
+            return self._translate_fq(top.tree, include_retired, ())

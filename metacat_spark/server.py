@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import threading
+from contextlib import nullcontext
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Optional
 from urllib.parse import parse_qs, urlparse
@@ -38,6 +39,9 @@ from urllib.parse import parse_qs, urlparse
 from .client import MetaCatSparkClient
 
 _YES = ("yes", "true", "1")
+# the catalog version a reply read: the request's pinned state, or for
+# a write the published state after it
+VERSION_HEADER = "X-MetaCat-Catalog-Version"
 
 # /data/corpus and /data/events default row cap: without it an
 # unbounded corpus op streams an entire table through one HTTP
@@ -118,14 +122,23 @@ def make_handler(client: MetaCatSparkClient,
                      "/data/create_named_query"}
 
         def _route(self, body: bytes):
+            """A read pins one catalog state for the whole request, so
+            every table it reads comes from one version. A write runs
+            unpinned: it drafts from the latest published state, and
+            its reply reports a version that includes it."""
             url = urlparse(self.path)
-            params = parse_qs(url.query)
             self._streaming = False
             # safe-method discipline: a crawler/prefetcher following a
             # GET link must never mutate the catalog (review r6)
             if url.path in self._MUTATING and self.command != "POST":
                 return self._send(405, "text/plain",
                                   f"{url.path} requires POST")
+            with (nullcontext() if url.path in self._MUTATING
+                  else client.catalog.pin()):
+                return self._dispatch(url, body)
+
+        def _dispatch(self, url, body: bytes):
+            params = parse_qs(url.query)
             try:
                 if url.path == "/data/query":
                     return self._query(params, body)
@@ -288,6 +301,7 @@ def make_handler(client: MetaCatSparkClient,
             first = next(it, sentinel)
             self.send_response(200)
             self.send_header("Content-Type", "application/json-seq")
+            self.send_header(VERSION_HEADER, str(client.catalog.version))
             self.end_headers()
             self._streaming = True
             if first is sentinel:
@@ -809,6 +823,7 @@ def make_handler(client: MetaCatSparkClient,
             self.send_response(code)
             self.send_header("Content-Type", ctype)
             self.send_header("Content-Length", str(len(data)))
+            self.send_header(VERSION_HEADER, str(client.catalog.version))
             self.end_headers()
             self.wfile.write(data)
 

@@ -10,11 +10,14 @@ from pyspark.sql import SparkSession
 def get_spark(app: str = "metacat_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None,
               ui: bool = False) -> SparkSession:
-    """``ui=True`` enables the local Spark UI — off by default (it
-    costs a listener + an HTTP server per session); measurement
-    probes that read stage metrics from the REST API turn it on."""
+    """``cpus`` defaults to ``SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on (what ``nproc`` reports). ``ui=True`` enables
+    the local Spark UI — off by default (it costs a listener + an HTTP
+    server per session); measurement probes that read stage metrics
+    from the REST API turn it on."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     b = (SparkSession.builder

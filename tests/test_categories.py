@@ -36,8 +36,8 @@ def test_custom_table_rows_drive_validation(cat, spark):
         "astro.ra": {"type": "float", "min": 0.0, "max": 360.0},
         "astro.dec": {"type": "float", "min": -90.0, "max": 90.0},
     }), "admin", "", "admin")]
-    cat.parameter_categories = spark.createDataFrame(
-        rows, CATEGORY_COLUMNS)
+    cat.publish(parameter_categories=spark.createDataFrame(
+        rows, CATEGORY_COLUMNS))
     dml = DML(cat)
     assert set(dml.categories) == {"astro"}
     dml.validate({"astro.ra": 10.5, "astro.dec": -45.0})

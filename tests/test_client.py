@@ -111,7 +111,7 @@ def test_get_file_is_one_job(spark):
     from metacat_spark.catalog import from_tpch, resident
     from conftest import spark_jobs
     cat = from_tpch(spark, SF_DIR)
-    cat.files = resident(cat.files.repartitionByRange(4, "id"))
+    cat.publish(files=resident(cat.files.repartitionByRange(4, "id")))
     assert cat.files.rdd.getNumPartitions() == 4
     last = cat.files.agg(F.max("id")).first()[0]
     client = MetaCatSparkClient(spark, catalog=cat)

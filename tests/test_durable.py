@@ -180,7 +180,6 @@ def test_restart_edge_replace_and_dataset_flags(spark, tmp_path):
     parents = [r["parent_id"] for r in cat2.parent_child.where(
         F.col("child_id") == "pe-2").collect()]
     assert parents == ["pe-1"]
-    assert ("dune", "frozen_ds") in dml2.frozen
     with pytest.raises(DMLError):
         dml2.add_files_to_dataset(["pe-0"], "dune", "frozen_ds")
     assert cat2.datasets.where(F.col("name") == "gone_ds").count() == 0

@@ -92,14 +92,14 @@ def test_set_op_fast_path_matches_legacy(engine):
     try:
         results = {}
         for forced in (False, True):
-            engine.cat.ids_unique = forced
+            engine.cat.publish(ids_unique=forced)
             results[forced] = [sorted(set(ids_of(engine.query(q))))
                                for q in queries]
             results[forced].append(sorted(set(ids_of(
                 engine.query(queries[0], include_retired=True)))))
         assert results[True] == results[False]
     finally:
-        engine.cat.ids_unique = saved
+        engine.cat.publish(ids_unique=saved)
 
 
 def _plan(df) -> str:
@@ -128,12 +128,12 @@ def test_bfq_union_ids_not_deduplicated(engine):
     the id-set union needs no aggregation on id."""
     saved = engine.cat.ids_unique
     try:
-        engine.cat.ids_unique = True
+        engine.cat.publish(ids_unique=True)
         plan = _plan(engine.query(
             "union(files from mc:flag_r, files from dune:urgent_0 "
             "where core.run > 100)"))
     finally:
-        engine.cat.ids_unique = saved
+        engine.cat.publish(ids_unique=saved)
     assert "LeftSemi" in plan
     assert not re.search(r"HashAggregate\(keys=\[id#", plan), plan
 
@@ -341,7 +341,7 @@ def test_glob_underscore_is_literal(engine, spark):
     trap = engine.cat.datasets.limit(1).withColumn(
         "name", F.lit("urgentX0")).withColumn(
         "namespace", F.lit("dune"))
-    cat.datasets = engine.cat.datasets.unionByName(trap)
+    cat.publish(datasets=engine.cat.datasets.unionByName(trap))
     eng2 = Engine(cat)
     names = {r["name"] for r in eng2.query(
         "datasets matching dune:urgent_*").select("name").collect()}

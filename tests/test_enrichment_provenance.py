@@ -80,12 +80,12 @@ def test_named_query_cycle_detection(engine):
         cat.queries_tbl.columns[:7])
     extra = extra.withColumn("metadata", F.lit("{}"))
     old = cat.queries_tbl
-    cat.queries_tbl = old.unionByName(extra.select(*old.columns))
+    cat.publish(queries_tbl=old.unionByName(extra.select(*old.columns)))
     try:
         with pytest.raises(Exception, match="cycle"):
             engine.query("files selected by test:loop_a").count()
     finally:
-        cat.queries_tbl = old
+        cat.publish(queries_tbl=old)
 
 
 def test_cli_smoke(capsys):

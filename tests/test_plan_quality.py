@@ -75,26 +75,24 @@ def test_ids_unique_invariant_carried_not_probed(spark, mat_engine):
     """The materialized catalog carries the id-uniqueness invariant
     from its table property (recorded once at ingest) — a set-op query
     must NOT run a groupBy-count probe over the whole files table
-    first. Any direct reassignment of cat.files invalidates the flag
-    (round-3 advisor note), so a table swap can only cause a re-probe,
-    never a stale fast-path answer."""
+    first. Publishing a new files table outside DML makes the flag
+    unknown (round-3 advisor note), so a table swap can only cause a
+    re-probe, never a stale fast-path answer."""
+    from conftest import spark_jobs
     cat = mat_engine.cat
     assert cat.ids_unique is not None  # known before any query runs
     # the gate only launches the probe job when the flag is unknown —
-    # with it known, the call must not touch the files DataFrame
-    cat_files = cat.__dict__["files"]
-    object.__setattr__(cat, "files", None)  # any probe would crash
+    # with it known, the call must run no Spark job
+    flags = []
+    assert spark_jobs(
+        spark, lambda: flags.append(mat_engine._file_ids_unique())) == []
+    assert flags == [cat.ids_unique]
+    prev, files = cat.ids_unique, cat.files
     try:
-        flag = mat_engine._file_ids_unique()
-    finally:
-        object.__setattr__(cat, "files", cat_files)
-    assert flag is cat.ids_unique
-    prev = cat.ids_unique
-    try:
-        cat.files = cat.files
+        cat.publish(files=files.select("*"))
         assert cat.ids_unique is None
     finally:
-        cat.ids_unique = prev
+        cat.publish(files=files, ids_unique=prev)
 
 
 def test_dml_mutations_preserve_ids_unique(spark):
@@ -103,7 +101,7 @@ def test_dml_mutations_preserve_ids_unique(spark):
     from metacat_spark.catalog import from_tpch
     from metacat_spark.dml import DML
     cat = from_tpch(spark, SF_DIR)
-    cat.ids_unique = True  # pretend recorded at ingest
+    cat.publish(ids_unique=True)  # pretend recorded at ingest
     dml = DML(cat)
     dml.declare_files([{"id": "plan_q_f1", "namespace": "dune",
                         "name": "plan_q_f1.dat", "size": 1}])

@@ -194,12 +194,12 @@ def test_set_op_fast_path_property(mql, engine):
     try:
         out = {}
         for forced in (True, False):
-            engine.cat.ids_unique = forced
+            engine.cat.publish(ids_unique=forced)
             out[forced] = sorted({
                 r["id"] for r in engine.query(mql).select("id").collect()})
         assert out[True] == out[False], mql
     finally:
-        engine.cat.ids_unique = saved
+        engine.cat.publish(ids_unique=saved)
 
 
 @settings(max_examples=40, deadline=None,

@@ -37,7 +37,7 @@ def variant_engine(engine):
     files_v = cat.files.withColumn("metadata_v", F.parse_json("metadata"))
     eng = copy.copy(engine)
     eng.cat = copy.copy(cat)
-    eng.cat.files = files_v
+    eng.cat.publish(files=files_v)
     eng.file_pred = PredicateCompiler(MetaSchema([]), FILE_ATTRIBUTES,
                                       json_column=None,
                                       variant_column="metadata_v")
@@ -89,8 +89,8 @@ def test_variant_dml_metadata_stays_fresh(spark):
 
     cat = from_tpch(spark, _SF)
     cat = copy.copy(cat)
-    cat.files = cat.files.withColumn(
-        "metadata_v", F.parse_json("metadata"))
+    cat.publish(files=cat.files.withColumn(
+        "metadata_v", F.parse_json("metadata")))
     eng = Engine(cat)
     eng.file_pred = PredicateCompiler(MetaSchema([]), FILE_ATTRIBUTES,
                                       json_column=None,
@@ -133,8 +133,8 @@ def test_variant_key_values_summary_hostile_keys(spark):
         "file_id string, dataset_namespace string, "
         "dataset_name string")
     cat = from_dataframes(spark, files, fd, file_meta=MetaSchema([]))
-    cat.files = cat.files.withColumn(
-        "metadata_v", F.parse_json("metadata"))
+    cat.publish(files=cat.files.withColumn(
+        "metadata_v", F.parse_json("metadata")))
     cat.file_variant_column = "metadata_v"
     eng = Engine(cat)
     rows = {r["key"]: (r["vtype"], r["value"])

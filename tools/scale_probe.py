@@ -38,11 +38,11 @@ def _replicate(df: DataFrame, n: int, id_cols: list[str]) -> DataFrame:
 
 def build_engine(spark, mult: int) -> Engine:
     cat = from_tpch(spark, SF_DIR)
-    cat.files = _replicate(cat.files, mult, ["id"])
-    cat.files_datasets = _replicate(cat.files_datasets, mult,
-                                    ["file_id"])
-    cat.parent_child = _replicate(cat.parent_child, mult,
-                                  ["parent_id", "child_id"])
+    cat.publish(
+        files=_replicate(cat.files, mult, ["id"]),
+        files_datasets=_replicate(cat.files_datasets, mult, ["file_id"]),
+        parent_child=_replicate(cat.parent_child, mult,
+                                ["parent_id", "child_id"]))
     return Engine(cat)
 
 
