@@ -28,6 +28,14 @@ from .schema import DATASET_META, FILE_META, QUERY_META, MetaSchema
 RAW_TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]
 
+# the file-keyed tables and the key each is laid out on: every
+# membership, provenance and set-algebra join meets on file id. The
+# warehouse buckets and sorts each table on its key
+# (``materialize_tables``); the resident tables are hash-partitioned
+# and sorted on it (``resident``).
+FILE_KEYS = {"files": "id", "files_datasets": "file_id",
+             "parent_child": "child_id"}
+
 
 @dataclass(frozen=True, eq=False)
 class CatalogState:
@@ -91,6 +99,9 @@ class Catalog:
     # VariantType column instead of shredded columns / JSON-string
     # fallback (the variant warehouse mode; see materialize_tables)
     file_variant_column: Optional[str] = None
+    # n: the partition count every laid-out file-keyed table has (see
+    # ``resident``); a warehouse catalog's is its bucket count
+    partitions: int = 1
     _lock: threading.RLock = field(default_factory=threading.RLock)
 
     def current(self) -> CatalogState:
@@ -151,6 +162,25 @@ class Catalog:
                 return
             version = cur.version + 1 if version is None else version
             self.published = replace(cur, version=version, **changes)
+
+    def resident(self, name: str, df: DataFrame,
+                 derived: bool = False) -> DataFrame:
+        """``df`` made resident as table ``name``: a file-keyed table
+        laid out on its key in ``partitions`` partitions (see
+        ``resident``). ``derived``: ``df`` is a filter or patch of the
+        table ``name`` reads now, so its rows keep that table's layout
+        and are not moved again."""
+        key = FILE_KEYS.get(name)
+        if key is None:
+            return resident(df)
+        return resident(df, key, self.partitions,
+                        getattr(self, name) if derived else None)
+
+    def append(self, name: str, delta: DataFrame) -> DataFrame:
+        """Table ``name`` plus ``delta``'s rows, resident (see
+        ``append``)."""
+        return append(getattr(self, name), delta, FILE_KEYS.get(name),
+                      self.partitions)
 
     def named_query_source(self, namespace: str, name: str) -> Optional[str]:
         rows = (self.queries_tbl
@@ -216,7 +246,8 @@ def from_dataframes(spark: SparkSession, files: DataFrame,
         queries_tbl if queries_tbl is not None
         else _empty(["namespace", "name", "source", "creator",
                      "description", "metadata"])),
-        file_meta=FILE_META if file_meta is None else file_meta)
+        file_meta=FILE_META if file_meta is None else file_meta,
+        partitions=_partitions_for(files))
 
 
 def materialize_tables(spark: SparkSession, sf_dir: str,
@@ -235,18 +266,15 @@ def materialize_tables(spark: SparkSession, sf_dir: str,
     alternative a deployment with unpredictable metadata keys would
     pick. Predicate-cost trade-off measured in docs/SCALING.md."""
     _read_raw(spark, sf_dir)
-    files, files_datasets, parent_child = _derived_tables(spark)
+    derived = dict(zip(FILE_KEYS, _derived_tables(spark)))
     suffix = _suffix(sf_dir)
-    specs = [
-        (files, f"mcw_files_{suffix}", "id"),
-        (files_datasets, f"mcw_fd_{suffix}", "file_id"),
-        (parent_child, f"mcw_pc_{suffix}", "child_id"),
-    ]
+    specs = [(df, f"{_WAREHOUSE[name]}_{suffix}", FILE_KEYS[name])
+             for name, df in derived.items()]
     if variant:
         shredded = [mk.column for mk in FILE_META.by_key.values()]
-        files_v = (files.drop(*shredded)
+        files_v = (derived["files"].drop(*shredded)
                    .withColumn("metadata_v", F.parse_json("metadata")))
-        specs.append((files_v, f"mcw_files_var_{suffix}", "id"))
+        specs.append((files_v, f"mcw_files_var_{suffix}", FILE_KEYS["files"]))
     for df, table, key in specs:
         if not spark.catalog.tableExists(table):
             # the default in-memory catalog forgets tables between
@@ -264,6 +292,8 @@ def materialize_tables(spark: SparkSession, sf_dir: str,
     _ensure_ids_unique_property(spark, f"mcw_files_{suffix}")
 
 
+_WAREHOUSE = {"files": "mcw_files", "files_datasets": "mcw_fd",
+              "parent_child": "mcw_pc"}
 _IDS_UNIQUE_PROP = "metacat.ids_unique"
 
 
@@ -285,6 +315,13 @@ def _ensure_ids_unique_property(spark: SparkSession, table: str) -> bool:
     return known
 
 
+def _bucket_count(spark: SparkSession, table: str) -> int:
+    """A bucketed warehouse table's bucket count; metadata-only."""
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    return next(int(r["data_type"]) for r in rows
+                if r["col_name"] == "Num Buckets")
+
+
 def from_materialized(spark: SparkSession, sf_dir: str,
                       variant: bool = False) -> Catalog:
     """Catalog over the bucketed warehouse tables (ingest must have
@@ -296,12 +333,15 @@ def from_materialized(spark: SparkSession, sf_dir: str,
     files = spark.table(f"mcw_files_var_{suffix}" if variant
                         else f"mcw_files_{suffix}")
     # invariant recorded at ingest — the engine's set-algebra fast
-    # path needs no first-query probe over the files table
+    # path needs no first-query probe over the files table. A table a
+    # write replaces is laid out at the bucket count, so it stays
+    # co-partitioned with the bucketed tables the write left alone.
     cat = _fixture_catalog(spark, _read_raw(spark, sf_dir), files,
                            spark.table(f"mcw_fd_{suffix}"),
                            spark.table(f"mcw_pc_{suffix}"),
                            _ids_unique_property(spark,
-                                                f"mcw_files_{suffix}"))
+                                                f"mcw_files_{suffix}"),
+                           _bucket_count(spark, f"mcw_files_{suffix}"))
     if variant:
         cat.file_meta = MetaSchema([])
         cat.file_variant_column = "metadata_v"
@@ -310,14 +350,34 @@ def from_materialized(spark: SparkSession, sf_dir: str,
 
 def from_tpch(spark: SparkSession, sf_dir: str) -> Catalog:
     """Catalog over the raw testdata, its three derived tables resident
-    (see ``resident``): the first query computes them, later ones read
-    the cached rows instead of re-deriving them from parquet."""
+    and laid out on their file-id keys (see ``resident``): the first
+    query computes them, later ones read the cached rows instead of
+    re-deriving them from parquet."""
     raw = _read_raw(spark, sf_dir)
-    derived = map(resident, _derived_tables(spark))
-    return _fixture_catalog(spark, raw, *derived)
+    derived = dict(zip(FILE_KEYS, _derived_tables(spark)))
+    n = _partitions_for(derived["files"])
+    return _fixture_catalog(
+        spark, raw, *(resident(df, FILE_KEYS[name], n)
+                      for name, df in derived.items()), partitions=n)
 
 
-def resident(df: DataFrame) -> DataFrame:
+def _partitions_for(files: DataFrame) -> int:
+    """A catalog's layout partition count: one per advisory partition
+    size (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) of the
+    files plan's size estimate, at least 1 and at most
+    ``spark.sql.shuffle.partitions`` (what a shuffle on the key would
+    use; it also bounds a plan with no estimate). Every streamed read
+    runs one job per partition, so a small catalog keeps one."""
+    spark = files.sparkSession
+    target = _sql_conf(spark, "ADVISORY_PARTITION_SIZE_IN_BYTES")
+    size = int(files._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+    return max(1, min(-(-size // target),
+                      _sql_conf(spark, "SHUFFLE_PARTITIONS")))
+
+
+def resident(df: DataFrame, key: Optional[str] = None, n: int = 1,
+             like: Optional[DataFrame] = None) -> DataFrame:
     """Make ``df`` a lazy localCheckpoint: an RDD leaf computed by the
     first query that touches it and cached after, so later queries
     neither re-derive nor re-analyze its lineage. Every catalog version
@@ -325,19 +385,119 @@ def resident(df: DataFrame) -> DataFrame:
     each DML mutation's result (otherwise mutation history would pile
     plan nodes onto every later query) and each table a durable restore
     replays. The cost is executor memory for the rows (spilling to
-    local disk under pressure) and the loss of any scan layout:
-    warehouse tables stay plain scans to keep their bucketing and
-    pushdown until a mutation replaces them."""
-    return df.localCheckpoint(eager=False)
+    local disk under pressure).
+
+    With ``key`` the table gets the warehouse's layout in memory: rows
+    hash-partitioned on ``key`` into ``n`` partitions (Spark's Murmur3,
+    as ``repartition`` and ``bucketBy`` place them) and sorted by it
+    within each. The checkpoint declares that layout, so joins on the
+    key between such tables (and bucketed ones of ``n`` buckets) plan
+    with no Exchange and no Sort: a membership, set-algebra or count
+    read is one Spark job. ``like``: a table whose partitions ``df``'s
+    rows follow (``df`` is a filter or patch of it); if it is laid out
+    the same way, the rows are not moved again. Warehouse tables stay
+    plain scans, to keep their bucketing and pushdown, until a mutation
+    replaces them."""
+    if key is not None and _layout(like) != (key, n):
+        df = _place(df, key, n)
+    checkpoint = df.localCheckpoint(eager=False)
+    return checkpoint if key is None else _declare(checkpoint, key, n)
 
 
-def append(table: DataFrame, delta: DataFrame) -> DataFrame:
-    """``table`` plus ``delta``'s rows, resident and at ``table``'s
+def append(table: DataFrame, delta: DataFrame, key: Optional[str] = None,
+           n: int = 1) -> DataFrame:
+    """``table`` plus ``delta``'s rows, resident; with ``key``, laid out
+    on it in ``n`` partitions (see ``resident``), else at ``table``'s
     partition count. A plain union adds the delta's partitions to every
     later version, and each extra partition is one more task per scan
-    and one more job per ``toLocalIterator`` read."""
-    n = table.rdd.getNumPartitions()
-    return resident(table.unionByName(delta).coalesce(max(1, n)))
+    and one more job per ``toLocalIterator`` read. A laid-out table is
+    not shuffled again: only the delta is placed, partition by
+    partition beside the table's rows, and each partition re-sorted."""
+    if key is None:
+        n = table.rdd.getNumPartitions()
+        return resident(table.unionByName(delta).coalesce(max(1, n)))
+    if _layout(table) != (key, n) or (n > 1 and not _sql_conf(
+            table.sparkSession, "UNION_OUTPUT_PARTITIONING")):
+        return resident(table.unionByName(delta), key, n)
+    if n == 1:
+        both = table.unionByName(delta).coalesce(1)
+    else:
+        # co-partitioned union inputs union partition by partition
+        both = table.unionByName(delta.repartition(n, key))
+    return resident(both.sortWithinPartitions(key), key, n, like=table)
+
+
+def _place(df: DataFrame, key: str, n: int) -> DataFrame:
+    """``df``'s rows hash-partitioned on ``key`` into ``n`` partitions
+    and sorted by it within each; one partition needs no shuffle."""
+    placed = df.coalesce(1) if n == 1 else df.repartition(n, key)
+    return placed.sortWithinPartitions(key)
+
+
+def _sql_conf(spark: SparkSession, entry: str):
+    """The session's value of the SQLConf entry named ``entry``."""
+    return spark._jsparkSession.sessionState().conf().getConf(
+        getattr(_jvm_class(spark, "org.apache.spark.sql.internal.SQLConf"),
+                entry)())
+
+
+def _jvm_class(spark: SparkSession, name: str):
+    """The JVM class ``name``, looked up in one gateway call (walking
+    ``spark._jvm.org.apache...`` costs one call per name part)."""
+    from py4j.java_gateway import JavaClass
+    return JavaClass(name, spark.sparkContext._gateway._gateway_client)
+
+
+def _declare(checkpoint: DataFrame, key: str, n: int) -> DataFrame:
+    """``checkpoint`` (a fresh localCheckpoint whose rows are laid out)
+    declaring ``HashPartitioning(key, n)`` and ascending
+    ``key`` order on its LogicalRDD. Under AQE the checkpoint records
+    no partitioning of its own (the adaptive plan declares none), and
+    ``repartition(1, key)`` reports SinglePartition, which a join
+    cannot reuse; so the layout is built here from the key alone,
+    without planning the input. The declared table drops the size
+    estimate its input plan had, so Catalyst never broadcasts it: read
+    in place beside a co-partitioned table it costs no job of its own,
+    and a broadcast costs one."""
+    spark = checkpoint.sparkSession
+    seq = spark._jvm.PythonUtils.toSeq
+
+    def scala(name: str):
+        return _jvm_class(spark, "org.apache.spark.sql." + name)
+
+    def singleton(name: str):
+        return getattr(scala(f"catalyst.expressions.{name}$"), "MODULE$")
+
+    rel = checkpoint._jdf.queryExecution().analyzed()
+    out = rel.output()
+    attr = next(a for a in (out.apply(i) for i in range(out.size()))
+                if a.name() == key)
+    partitioning = scala("catalyst.plans.physical.HashPartitioning")(
+        seq([attr]), n)
+    order = scala("catalyst.expressions.SortOrder")(
+        attr, singleton("Ascending"), singleton("NullsFirst"), seq([]))
+    args = rel.otherCopyArgs()
+    laid_out = rel.copy(out, rel.rdd(), partitioning, seq([order]),
+                        rel.isStreaming(), rel.stream(), args.apply(0),
+                        _jvm_class(spark, "scala.Option").empty(),
+                        args.apply(2))
+    return DataFrame(scala("classic.Dataset").ofRows(
+        spark._jsparkSession, laid_out), spark)
+
+
+def _layout(df: Optional[DataFrame]) -> Optional[tuple[str, int]]:
+    """(key, n) of a table ``resident`` laid out, else None; reads the
+    analyzed plan only."""
+    if df is None:
+        return None
+    rel = df._jdf.queryExecution().analyzed()
+    if rel.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    part = rel.outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
+        return None
+    return part.expressions().apply(0).name(), part.numPartitions()
+
 
 
 def local_rows(spark: SparkSession, rows: list,
@@ -416,7 +576,8 @@ def _derived_tables(
 
 def _fixture_catalog(spark: SparkSession, raw: dict, files: DataFrame,
                      files_datasets: DataFrame, parent_child: DataFrame,
-                     ids_unique: Optional[bool] = None) -> Catalog:
+                     ids_unique: Optional[bool] = None,
+                     partitions: int = 1) -> Catalog:
     """The catalog over the given big three plus the fixtures' small
     literal tables."""
     datasets = local_rows(spark, FX.DATASET_ROWS, FX.DATASET_COLUMNS)
@@ -434,4 +595,5 @@ def _fixture_catalog(spark: SparkSession, raw: dict, files: DataFrame,
     param_cats = local_rows(spark, category_rows(), CATEGORY_COLUMNS)
     return Catalog(spark, CatalogState(
         0, files, files_datasets, parent_child, datasets, ds_pc,
-        namespaces, queries_tbl, param_cats, ids_unique), raw=raw)
+        namespaces, queries_tbl, param_cats, ids_unique), raw=raw,
+        partitions=partitions)

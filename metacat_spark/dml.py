@@ -17,8 +17,10 @@ contract. Bulk declare is a single DataFrame union (the
 COPY-equivalent, dbobjects2.py:525-557), never a row-at-a-time loop.
 A request's own rows (declared files, membership and edge adds, new
 datasets) are built on the driver as one local relation and appended
-at the target table's partition count (``catalog.append``); query
-results (``add_to``/``save_as``) stay distributed.
+to the target table (``Catalog.append``); query results
+(``add_to``/``save_as``) stay distributed. Filters and patches of a
+table keep its layout (``Catalog.resident``): no write moves the rows
+it did not add.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .catalog import Catalog, append, local_rows, resident
+from .catalog import Catalog, append, local_rows
 from .validation import (DEFAULT_CATEGORIES, category_of,
                          validate_metadata)
 
@@ -252,8 +254,15 @@ class DML:
         """Add ``delta`` to journaled table ``name`` and journal it as
         an upsert. Only declare_files appends to files, after enforcing
         the PK, so the ids_unique invariant carries over."""
-        self.cat.stage(**{name: append(getattr(self.cat, name), delta)})
+        self.cat.stage(**{name: self.cat.append(name, delta)})
         self._journal("upsert", name, delta)
+
+    def _restage(self, **tables: DataFrame) -> None:
+        """Stage filtered or patched versions of the current tables,
+        resident; a laid-out file-keyed table keeps its layout without
+        moving a row (``Catalog.resident``)."""
+        self.cat.stage(**{name: self.cat.resident(name, df, derived=True)
+                          for name, df in tables.items()})
 
     def _new_edges(self, pc: DataFrame, edges: list) -> list:
         """The (parent_id, child_id) ``edges`` not yet in ``pc``, in
@@ -446,10 +455,10 @@ class DML:
             # remove_files with an empty body (review r8)
             return
         fd = self.cat.files_datasets
-        self.cat.stage(files_datasets=resident(fd.where(~(
+        self._restage(files_datasets=fd.where(~(
             (F.col("dataset_namespace") == ns)
             & (F.col("dataset_name") == name)
-            & F.col("file_id").isin(file_ids)))))
+            & F.col("file_id").isin(file_ids))))
         if self._store is not None:
             # delete keys enumerate from the request itself (never a
             # table scan); non-member keys journal harmless no-ops.
@@ -488,9 +497,9 @@ class DML:
         else:
             new_meta = json.loads(row["metadata"] or "{}")
             new_meta.update(metadata)
-        self.cat.stage(files=resident(_apply_meta_patch(
+        self._restage(files=_apply_meta_patch(
             files, self.cat.file_meta, F.col("id") == file_id,
-            new_meta)))
+            new_meta))
         # journal the PATCHED row from the staged (checkpointed)
         # DataFrame: the segment write is its first action, so memory
         # and log see the same materialization
@@ -515,8 +524,7 @@ class DML:
         pc = self.cat.parent_child
         me = "child_id" if as_parents else "parent_id"
         if replace:
-            self.cat.stage(parent_child=resident(
-                pc.where(F.col(me) != file_id)))
+            self._restage(parent_child=pc.where(F.col(me) != file_id))
             # journal AFTER staging — the flush-on-exception
             # contract requires "op buffered ⇒ mutation applied".
             # The delete keys enumerate distributed from the pre-filter
@@ -590,7 +598,7 @@ class DML:
                         "updated_timestamp",
                         F.when(hit, F.current_timestamp())
                          .otherwise(F.col("updated_timestamp"))))
-            self.cat.stage(files=resident(files))
+            self._restage(files=files)
             self._journal("upsert", "files", self.cat.files.where(hit))
         if metadata is not None:
             self.update_file_metadata(
@@ -617,7 +625,7 @@ class DML:
                       else F.lit(by))
         retired_ts = (F.lit(None).cast("timestamp") if unretire
                       else F.current_timestamp())
-        self.cat.stage(files=resident(
+        self._restage(files=(
             files.withColumn("retired",
                              F.when(hit, F.lit(not unretire))
                               .otherwise(F.col("retired")))
@@ -652,13 +660,12 @@ class DML:
         fid = row["id"]
         fd_before = self.cat.files_datasets
         pc_before = self.cat.parent_child
-        self.cat.stage(
-            files=resident(files.where(F.col("id") != fid)),
-            files_datasets=resident(
-                fd_before.where(F.col("file_id") != fid)),
-            parent_child=resident(pc_before.where(
+        self._restage(
+            files=files.where(F.col("id") != fid),
+            files_datasets=fd_before.where(F.col("file_id") != fid),
+            parent_child=pc_before.where(
                 (F.col("parent_id") != fid)
-                & (F.col("child_id") != fid))))
+                & (F.col("child_id") != fid)))
         if self._store is not None:
             # cascade deletes journal the affected KEYS, enumerated
             # distributed from the pre-delete tables (point lookups)
@@ -682,7 +689,7 @@ class DML:
         self._check_fids_exist(file_ids, "move")
         files = self.cat.files
         hit = F.col("id").isin(file_ids)
-        self.cat.stage(files=resident(
+        self._restage(files=(
             files.withColumn("namespace",
                              F.when(hit, F.lit(to_namespace))
                               .otherwise(F.col("namespace")))
@@ -728,7 +735,7 @@ class DML:
                 ds = ds.withColumn(colname,
                                    F.when(hit, F.lit(val))
                                     .otherwise(F.col(colname)))
-        self.cat.stage(datasets=resident(ds))
+        self._restage(datasets=ds)
         self._journal("snapshot", "datasets", self.cat.datasets)
 
     @_locked
@@ -770,16 +777,16 @@ class DML:
         self.dataset_requirements.pop((ns, name), None)
         fd_before = self.cat.files_datasets
         dpc = self.cat.datasets_parent_child
-        self.cat.stage(
-            datasets=resident(self.cat.datasets.where(~hit)),
-            files_datasets=resident(fd_before.where(~(
+        self._restage(
+            datasets=self.cat.datasets.where(~hit),
+            files_datasets=fd_before.where(~(
                 (F.col("dataset_namespace") == ns)
-                & (F.col("dataset_name") == name)))),
-            datasets_parent_child=resident(dpc.where(~(
+                & (F.col("dataset_name") == name))),
+            datasets_parent_child=dpc.where(~(
                 ((F.col("parent_namespace") == ns)
                  & (F.col("parent_name") == name))
                 | ((F.col("child_namespace") == ns)
-                   & (F.col("child_name") == name))))))
+                   & (F.col("child_name") == name)))))
         self._journal("snapshot", "datasets", self.cat.datasets)
         self._journal("snapshot", "datasets_parent_child",
                       self.cat.datasets_parent_child)
@@ -918,7 +925,6 @@ class DML:
         # execution between count() and the union's first action)
         add = add.localCheckpoint()
         n = add.count()
-        self.cat.stage(files_datasets=resident(
-            self.cat.files_datasets.unionByName(add)))
+        self.cat.stage(files_datasets=self.cat.append("files_datasets", add))
         self._journal("upsert", "files_datasets", add)
         return n

@@ -43,8 +43,9 @@ where "latest" is one ``row_number`` window over the journal ordered
 by commit sequence (latest op per key wins) — ONE window over the
 journal (small relative to the catalog between compactions) and one
 anti join against the base, run once: the restored table is resident
-(``catalog.resident``), like every table a mutation produces, so
-requests read the cached result rather than re-running the window.
+and laid out on its file-id key (``Catalog.resident``), like every
+table a mutation produces, so requests read the cached result rather
+than re-running the window.
 ``compact()`` folds base+journal into a fresh snapshot
 and truncates the log, bounding both restore cost and the
 merge-on-read overlay.
@@ -71,8 +72,6 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from .catalog import resident
 
 # latest-wins journal key per journaled table (the reference's PKs,
 # schema.sql:45-104)
@@ -471,7 +470,8 @@ class DurableStore:
         """Overlay the committed state onto a freshly built catalog
         (fixtures/warehouse base): journaled tables get base+journal
         reconstruction, snapshot tables are replaced outright, and each
-        table so restored is made resident. The restored tables publish
+        table so restored is made resident (the journaled ones laid out
+        on their file-id keys again). The restored tables publish
         as one catalog version numbered by the manifest's commit.
 
         Time-travel attaches preflight-check that every referenced
@@ -500,7 +500,7 @@ class DurableStore:
                 new = self.spark.read.parquet(
                     f"{self.root}/{entry['snapshot']}")
             # resident: the journal window runs once, not per request
-            tables[table] = resident(new)
+            tables[table] = catalog.resident(table, new)
         # a restored files table has ids_unique unknown: journal upserts
         # can't be proven duplicate-free here, so the engine's
         # set-algebra fast path re-probes on first use

@@ -108,10 +108,10 @@ def test_get_file_is_one_job(spark):
     partitions in growing rounds)."""
     from pyspark.sql import functions as F
 
-    from metacat_spark.catalog import from_tpch, resident
+    from metacat_spark.catalog import from_tpch
     from conftest import spark_jobs
     cat = from_tpch(spark, SF_DIR)
-    cat.publish(files=resident(cat.files.repartitionByRange(4, "id")))
+    cat.publish(files=cat.files.repartitionByRange(4, "id").localCheckpoint())
     assert cat.files.rdd.getNumPartitions() == 4
     last = cat.files.agg(F.max("id")).first()[0]
     client = MetaCatSparkClient(spark, catalog=cat)

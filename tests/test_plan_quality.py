@@ -62,6 +62,24 @@ def test_membership_join_is_shuffle_free(mat_engine):
     assert "hashpartitioning" not in plan, "membership join shuffled"
 
 
+def test_membership_join_stays_shuffle_free_after_a_write(spark):
+    """A declare replaces files and files_datasets with resident tables
+    laid out at the bucket count, co-partitioned with the bucketed
+    parent_child it left alone: the membership semi-join still adds no
+    hash shuffle (a fresh catalog, so mat_engine stays unwritten). The
+    formatted plan names the resident scans' declared hashpartitioning,
+    so this reads the one-line plan, where an Exchange prints with its
+    partitioning."""
+    from metacat_spark.dml import DML
+    cat = from_materialized(spark, SF_DIR)
+    DML(cat).declare_files([{"id": "pq-write-0", "namespace": "dune",
+                             "name": "pq0.dat"}], dataset=("test", "all"))
+    df = Engine(cat).query("files from dune:urgent_0")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan
+    assert "Exchange hashpartitioning" not in plan, plan
+
+
 def test_dataset_selector_broadcast(mat_engine):
     """The resolved dataset list (tiny) must broadcast into the
     membership filter, never shuffle the big side."""

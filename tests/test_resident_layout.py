@@ -1,0 +1,178 @@
+"""Resident layout: the file-keyed resident tables (``files`` on id,
+``files_datasets`` on file_id, ``parent_child`` on child_id) are
+hash-partitioned and sorted on their key, declared on the checkpoint,
+so served membership, predicate+limit, page, count and set-algebra
+reads plan with no Exchange and run as one Spark job — on the fixture
+catalog, after DML writes and after a durable restart."""
+
+import re
+
+import pytest
+from pyspark.sql import functions as F
+
+from conftest import SF_DIR, spark_jobs
+
+from metacat_spark.catalog import from_materialized, from_tpch
+from metacat_spark.client import MetaCatSparkClient
+from metacat_spark.dml import DML
+from metacat_spark.durable import DurableStore
+from metacat_spark.engine import Engine
+
+D, D2, D3 = "dune:urgent_0", "dune:urgent_1", "mc:flag_r"
+FILE_KEYS = {"files": "id", "files_datasets": "file_id",
+             "parent_child": "child_id"}
+
+# the served read shapes: (mql, query options)
+READS = {
+    "membership": (f"files from {D}", {}),
+    "pred": (f"files from {D} where core.run > 100 limit 10", {}),
+    "page": (f"files from {D}", {"after_id": "f0", "page_size": 100}),
+    "count": (f"files from {D} where core.run > 100", {"summary": "count"}),
+    "setop": (f"union(files from {D}, files from {D2}) - files from {D3}",
+              {}),
+}
+
+
+def _layout(df):
+    """(key, n) of the hash partitioning ``df``'s physical plan reports."""
+    part = (df._jdf.queryExecution().executedPlan().outputPartitioning()
+            .toString())
+    m = re.fullmatch(r"hashpartitioning\((\w+)#\d+, (\d+)\)", part)
+    return (m.group(1), int(m.group(2))) if m else part
+
+
+def _misplaced(df, key: str, n: int) -> int:
+    """Rows outside the partition ``HashPartitioning(key, n)`` assigns,
+    plus adjacent pairs out of key order within a partition."""
+    rows = (df.select(F.spark_partition_id().alias("p"),
+                      F.expr(f"pmod(hash({key}), {n})").alias("h"), key)
+            .collect())
+    return (sum(r["p"] != r["h"] for r in rows)
+            + sum(a["p"] == b["p"] and a[key] > b[key]
+                  for a, b in zip(rows, rows[1:])))
+
+
+def _plan(cat, shape: str) -> str:
+    mql, opts = READS[shape]
+    return (Engine(cat).query(mql, **opts)._jdf.queryExecution()
+            .executedPlan().toString())
+
+
+def _assert_laid_out(cat):
+    layouts = {name: _layout(getattr(cat, name)) for name in FILE_KEYS}
+    assert layouts == {name: (key, cat.partitions)
+                       for name, key in FILE_KEYS.items()}, layouts
+    for name, key in FILE_KEYS.items():
+        assert _misplaced(getattr(cat, name), key, cat.partitions) == 0, name
+    for shape in READS:
+        plan = _plan(cat, shape)
+        assert "Exchange" not in plan, f"{shape}: {plan}"
+
+
+@pytest.fixture(scope="module")
+def cat(spark):
+    return from_tpch(spark, SF_DIR)
+
+
+def test_fixture_tables_share_one_layout(cat):
+    """The three tables report hashpartitioning(<key>, n) with the
+    catalog's one n: 1 at this scale."""
+    assert cat.partitions == 1
+    for name, key in FILE_KEYS.items():
+        assert _layout(getattr(cat, name)) == (key, 1), name
+
+
+@pytest.mark.parametrize("shape", sorted(READS))
+def test_served_read_plans_have_no_exchange(cat, shape):
+    plan = _plan(cat, shape)
+    assert "Exchange" not in plan, plan
+
+
+@pytest.mark.parametrize("shape", sorted(READS))
+def test_served_read_is_one_job(spark, cat, shape):
+    """Through the client, as the server calls it: a count collects,
+    every other shape streams; either is one job of one stage."""
+    mql, opts = READS[shape]
+    client = MetaCatSparkClient(spark, catalog=cat)
+    if "summary" in opts:
+        def read():
+            return client.query(mql, **opts)
+    else:
+        def read():
+            return list(client.query_iter(mql, **opts))
+    try:
+        want = read()       # first use computes the resident tables
+        got = []
+        jobs = spark_jobs(spark, lambda: got.append(read()))
+    finally:
+        client._pool.shutdown(wait=True)
+    assert got[0] == want
+    assert jobs == [1], jobs
+
+
+@pytest.fixture(scope="module")
+def durable_root(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("layout") / "cat")
+
+
+@pytest.fixture(scope="module")
+def cycled(spark, cat, durable_root):
+    """The fixture catalog after one of each write: declare (into a
+    dataset, with parents), add, update, retire, remove, delete —
+    journaled. The reads above hold on it too."""
+    dml = DML(cat, store=DurableStore(spark, durable_root))
+    parent = sorted(r["id"] for r in cat.files.select("id").limit(5)
+                    .collect())[0]
+    dml.declare_files([{"id": f"lay{i}", "namespace": "dune",
+                        "name": f"lay{i}.dat", "parents": [parent],
+                        "metadata": {"core.run": 150 + i}}
+                       for i in range(4)], dataset=("test", "all"))
+    dml.add_files_to_dataset(["lay0", "lay1"], "dune", "urgent_2")
+    dml.update_file("lay1", size=7, children=["lay2"])
+    dml.retire_file("lay2")
+    dml.remove_files_from_dataset(["lay0"], "dune", "urgent_2")
+    dml.delete_file("lay3")
+    return cat
+
+
+def test_dml_cycle_keeps_layout(cycled):
+    """Every write keeps the three tables laid out (rows really sit
+    where the declaration says) and the reads exchange-free."""
+    _assert_laid_out(cycled)
+    got = {r["id"] for r in Engine(cycled).query(
+        "files from dune:urgent_2").select("id").collect()}
+    assert "lay1" in got and "lay0" not in got
+
+
+def test_restart_keeps_layout(spark, cycled, durable_root):
+    restored = from_tpch(spark, SF_DIR)
+    DurableStore(spark, durable_root).attach(restored)
+    _assert_laid_out(restored)
+    ids = {r["id"] for r in restored.files.where(
+        F.col("id").startswith("lay")).select("id").collect()}
+    assert ids == {"lay0", "lay1", "lay2"}
+
+
+def test_declare_shuffles_only_the_delta(spark):
+    """On a laid-out table of n > 1 partitions a declare places only
+    its own rows: the new version's lineage has one shuffle, whose map
+    side is the one-partition delta, and reads the previous version's
+    rows narrowly."""
+    c = from_materialized(spark, SF_DIR)
+    assert c.partitions > 1
+    dml = DML(c)
+    # the first write lays the bucketed-scan files table out once
+    dml.declare_files([{"id": "shuf0", "namespace": "dune",
+                        "name": "shuf0.dat"}])
+    c.files.count()
+    before = c.files._jdf.queryExecution().analyzed().rdd().id()
+    dml.declare_files([{"id": "shuf1", "namespace": "dune",
+                        "name": "shuf1.dat"}])
+    assert _layout(c.files) == ("id", c.partitions)
+    lineage = (c.files._jdf.queryExecution().analyzed().rdd()
+               .toDebugString())
+    narrow, _, shuffled = lineage.partition("ShuffledRowRDD")
+    assert f"[{before}]" in narrow and f"[{before}]" not in shuffled
+    assert "ShuffledRowRDD" not in shuffled
+    assert shuffled.splitlines()[1].lstrip().startswith("+-(1)"), lineage
+    assert _misplaced(c.files, "id", c.partitions) == 0

@@ -1,7 +1,14 @@
 #!/usr/bin/env python3
 """Regenerate docs/PLANS.md: formatted physical plans for the headline
 queries over the bucketed warehouse tables, with the properties each
-plan is expected to exhibit. Run: python tools/dump_plans.py"""
+plan is expected to exhibit. Run: python tools/dump_plans.py
+
+``python tools/dump_plans.py --served OUT_DIR TAG`` instead writes the
+executed plan of each served read class (the perfbench read_mix
+request shapes, built as the server builds them) over a ``from_tpch``
+catalog to ``OUT_DIR/<class>_<TAG>.txt``; run it in two checkouts to
+compare their plans (``SPARK_GRAFT_SF_DIR`` picks the testdata, as
+for the full dump)."""
 
 import os
 import sys
@@ -45,6 +52,51 @@ CASES = [
      "GlobalLimit with offset above a sort; the only inherently "
      "global operator in the language (same in the reference)."),
 ]
+
+
+# the read_mix request classes: (class, MQL, query options); "file" is
+# the client's point lookup, not an MQL query. {D}/{D2}/{D3} are
+# datasets, {fids} three file ids, {after} a page cursor.
+SERVED_CASES = [
+    ("file", None, {}),
+    ("fids", "fids {fids}", {}),
+    ("pred", "files from {D} where core.run > 100 limit 10", {}),
+    ("page", "files from {D}", {"after_id": "{after}", "page_size": 100}),
+    ("count", "files from {D} where core.run > 100", {"summary": "count"}),
+    ("parents", "parents(files from {D} where core.run in 100:140)", {}),
+    ("setop", "union(files from {D}, files from {D2}) - files from {D3}",
+     {}),
+]
+
+
+def served_plans(out_dir: str, tag: str) -> None:
+    from metacat_spark.catalog import from_tpch
+    from metacat_spark.client import _RECORD_COLUMNS
+
+    spark = get_spark("plan_dump")
+    cat = from_tpch(spark, SF_DIR)
+    eng = Engine(cat)
+    ids = [r["id"] for r in
+           eng.query("files from dune:urgent_0 ordered").collect()]
+    names = {"D": "dune:urgent_0", "D2": "dune:urgent_1",
+             "D3": "mc:flag_r", "fids": ", ".join(ids[1:4]),
+             "after": ids[len(ids) // 2]}
+    os.makedirs(out_dir, exist_ok=True)
+    for cls, mql, opts in SERVED_CASES:
+        if mql is None:
+            df = (cat.files.where(F.col("id") == ids[0])
+                  .select(*_RECORD_COLUMNS, "metadata"))
+        else:
+            opts = {k: v.format(**names) if isinstance(v, str) else v
+                    for k, v in opts.items()}
+            df = eng.query(mql.format(**names), **opts)
+        df.collect()        # the executed (final adaptive) plan
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        with open(os.path.join(out_dir, f"{cls}_{tag}.txt"), "w") as f:
+            f.write(plan.strip() + "\n")
+    print(f"wrote {len(SERVED_CASES)} plans to {out_dir}")
+    spark.stop()
 
 
 def main():
@@ -398,4 +450,7 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--served"]:
+        served_plans(*sys.argv[2:4])
+    else:
+        main()
