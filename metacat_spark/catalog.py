@@ -12,7 +12,11 @@ tables instead.
 
 from __future__ import annotations
 
+import collections
+import itertools
+import secrets
 import threading
+import weakref
 from contextlib import contextmanager
 from contextvars import ContextVar
 from dataclasses import dataclass, field, fields, replace
@@ -35,6 +39,11 @@ RAW_TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 # and sorted on it (``resident``).
 FILE_KEYS = {"files": "id", "files_datasets": "file_id",
              "parent_child": "child_id"}
+# In one partition a table's rows are hash-placed on every column, so
+# a one-partition table also declares the other file-id column its
+# joins meet on: parent_child's parent_id, for the parents and
+# children hops.
+_ALSO_AT_ONE = {"child_id": "parent_id"}
 
 
 @dataclass(frozen=True, eq=False)
@@ -72,6 +81,39 @@ class _Draft:
         return self.tables.get(name, getattr(self.base, name))
 
 
+# numbers every temp view this process binds, so no name is reused
+_VIEW_IDS = itertools.count()
+
+
+class _Views:
+    """Temp-view names for a catalog's tables, so that one ``spark.sql``
+    text can read them. A table is bound once: its view is named after
+    the DataFrame object (the catalog's token plus a process-wide
+    number, never reused), so a name always means the same table,
+    states that share a table share its view, and no request registers
+    a table again. When a bound DataFrame is collected its finalizer
+    only queues the name; the next bind drops the queued views."""
+
+    def __init__(self):
+        self.prefix = f"mc_{secrets.token_hex(4)}_"
+        self.names = weakref.WeakKeyDictionary()
+        self._dead = collections.deque()
+        self._lock = threading.Lock()
+
+    def bind(self, df: DataFrame) -> str:
+        """The quoted name of the temp view over ``df``."""
+        with self._lock:
+            while self._dead:
+                df.sparkSession.catalog.dropTempView(self._dead.popleft())
+            name = self.names.get(df)
+            if name is None:
+                name = f"{self.prefix}{next(_VIEW_IDS)}"
+                df.createTempView(name)
+                self.names[df] = name
+                weakref.finalize(df, self._dead.append, name)
+        return f"`{name}`"
+
+
 # the state each catalog's reads see in this context — a request's pin
 # or a writer's draft — keyed by id(catalog)
 _PINS: ContextVar[dict] = ContextVar("metacat_catalog_pins", default={})
@@ -88,7 +130,8 @@ class Catalog:
     while a writer publishes beside it. Writers run in ``write``
     blocks and replace tables with ``stage``; the outermost block
     publishes them as one new version. ``publish`` swaps in tables
-    directly (a durable attach, an ad-hoc replacement)."""
+    directly (a durable attach, an ad-hoc replacement). ``views``
+    names a temp view over each table the engine's SQL reads."""
     spark: SparkSession
     published: CatalogState
     file_meta: MetaSchema = field(default_factory=lambda: FILE_META)
@@ -102,6 +145,7 @@ class Catalog:
     # n: the partition count every laid-out file-keyed table has (see
     # ``resident``); a warehouse catalog's is its bucket count
     partitions: int = 1
+    views: _Views = field(default_factory=_Views)
     _lock: threading.RLock = field(default_factory=threading.RLock)
 
     def current(self) -> CatalogState:
@@ -350,14 +394,17 @@ def from_materialized(spark: SparkSession, sf_dir: str,
 
 def from_tpch(spark: SparkSession, sf_dir: str) -> Catalog:
     """Catalog over the raw testdata, its three derived tables resident
-    and laid out on their file-id keys (see ``resident``): the first
-    query computes them, later ones read the cached rows instead of
-    re-deriving them from parquet."""
+    and laid out on their file-id keys (see ``resident``): computed here,
+    so queries read the cached rows instead of re-deriving them from
+    parquet. They are computed eagerly because a lazy checkpoint is cut
+    from its lineage only by a job that collects it: a table only ever
+    streamed (``toLocalIterator``) would keep its derivation's shuffle
+    stage in every job that reads it."""
     raw = _read_raw(spark, sf_dir)
     derived = dict(zip(FILE_KEYS, _derived_tables(spark)))
     n = _partitions_for(derived["files"])
     return _fixture_catalog(
-        spark, raw, *(resident(df, FILE_KEYS[name], n)
+        spark, raw, *(resident(df, FILE_KEYS[name], n, eager=True)
                       for name, df in derived.items()), partitions=n)
 
 
@@ -377,14 +424,15 @@ def _partitions_for(files: DataFrame) -> int:
 
 
 def resident(df: DataFrame, key: Optional[str] = None, n: int = 1,
-             like: Optional[DataFrame] = None) -> DataFrame:
-    """Make ``df`` a lazy localCheckpoint: an RDD leaf computed by the
-    first query that touches it and cached after, so later queries
-    neither re-derive nor re-analyze its lineage. Every catalog version
-    a request reads is resident — the fixture catalog's derived tables,
-    each DML mutation's result (otherwise mutation history would pile
-    plan nodes onto every later query) and each table a durable restore
-    replays. The cost is executor memory for the rows (spilling to
+             like: Optional[DataFrame] = None,
+             eager: bool = False) -> DataFrame:
+    """Make ``df`` a localCheckpoint: an RDD leaf computed by the first
+    query that touches it (or now, if ``eager``) and cached after, so
+    later queries neither re-derive nor re-analyze its lineage. Every
+    catalog version a request reads is resident — the fixture catalog's
+    derived tables, each DML mutation's result (otherwise mutation
+    history would pile plan nodes onto every later query) and each
+    table a durable restore replays. The cost is executor memory for the rows (spilling to
     local disk under pressure).
 
     With ``key`` the table gets the warehouse's layout in memory: rows
@@ -400,7 +448,7 @@ def resident(df: DataFrame, key: Optional[str] = None, n: int = 1,
     replaces them."""
     if key is not None and _layout(like) != (key, n):
         df = _place(df, key, n)
-    checkpoint = df.localCheckpoint(eager=False)
+    checkpoint = df.localCheckpoint(eager=eager)
     return checkpoint if key is None else _declare(checkpoint, key, n)
 
 
@@ -451,7 +499,9 @@ def _jvm_class(spark: SparkSession, name: str):
 def _declare(checkpoint: DataFrame, key: str, n: int) -> DataFrame:
     """``checkpoint`` (a fresh localCheckpoint whose rows are laid out)
     declaring ``HashPartitioning(key, n)`` and ascending
-    ``key`` order on its LogicalRDD. Under AQE the checkpoint records
+    ``key`` order on its LogicalRDD; at n = 1 a table with a second
+    file-id column (``_ALSO_AT_ONE``) declares the collection of both
+    hash partitionings. Under AQE the checkpoint records
     no partitioning of its own (the adaptive plan declares none), and
     ``repartition(1, key)`` reports SinglePartition, which a join
     cannot reuse; so the layout is built here from the key alone,
@@ -470,12 +520,16 @@ def _declare(checkpoint: DataFrame, key: str, n: int) -> DataFrame:
 
     rel = checkpoint._jdf.queryExecution().analyzed()
     out = rel.output()
-    attr = next(a for a in (out.apply(i) for i in range(out.size()))
-                if a.name() == key)
-    partitioning = scala("catalyst.plans.physical.HashPartitioning")(
-        seq([attr]), n)
+    keys = [key] + ([_ALSO_AT_ONE[key]] if n == 1 and key in _ALSO_AT_ONE
+                    else [])
+    attrs = [next(a for a in (out.apply(i) for i in range(out.size()))
+                  if a.name() == k) for k in keys]
+    hashed = [scala("catalyst.plans.physical.HashPartitioning")(
+        seq([a]), n) for a in attrs]
+    partitioning = hashed[0] if len(hashed) == 1 else scala(
+        "catalyst.plans.physical.PartitioningCollection")(seq(hashed))
     order = scala("catalyst.expressions.SortOrder")(
-        attr, singleton("Ascending"), singleton("NullsFirst"), seq([]))
+        attrs[0], singleton("Ascending"), singleton("NullsFirst"), seq([]))
     args = rel.otherCopyArgs()
     laid_out = rel.copy(out, rel.rdd(), partitioning, seq([order]),
                         rel.isStreaming(), rel.stream(), args.apply(0),
@@ -494,6 +548,8 @@ def _layout(df: Optional[DataFrame]) -> Optional[tuple[str, int]]:
     if rel.getClass().getSimpleName() != "LogicalRDD":
         return None
     part = rel.outputPartitioning()
+    if part.getClass().getSimpleName() == "PartitioningCollection":
+        part = part.partitionings().apply(0)   # the layout key's
     if part.getClass().getSimpleName() != "HashPartitioning":
         return None
     return part.expressions().apply(0).name(), part.numPartitions()

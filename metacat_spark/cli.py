@@ -32,8 +32,9 @@ every DML mutation also lands in a parquet commit log that is
 replayed at startup — the reference's PostgreSQL persistence
 (durable.py; `admin compact` folds the log into snapshots).
 
-`-x/--explain` prints the MQL AST and the Spark physical plan instead
-of running (the reference prints its IRs, metacat_query.py:64-84).
+`-x/--explain` prints the MQL AST, the Spark SQL it compiles to and
+the Spark physical plan instead of running (the reference prints its
+IRs, metacat_query.py:64-84).
 """
 
 from __future__ import annotations

@@ -1,11 +1,20 @@
-"""The query engine: MQL text → PySpark DataFrame plan.
+"""The query engine: MQL text → one Spark SQL statement.
 
-Translation strategy (SURVEY.md §3.4): parse MQL with our parser, then
-build the DataFrame plan directly — Catalyst then performs everything
-the reference's hand-rolled optimizer did (predicate pushdown,
-conjunction merge, NOT elimination, union flattening, empty
-propagation, column pruning; mql10.py:127-475) plus what it never had
-(join reordering, AQE, whole-stage codegen).
+Translation strategy: parse MQL with our parser, then compile the whole
+query into one Spark SQL text over the pinned catalog state's tables
+and run it with a single ``spark.sql`` — the reference's "SQL fusion"
+(sql_converter.py:104-163), which hands PostgreSQL one statement.
+Building a DataFrame chain instead costs a py4j round trip per
+operator and per Column node, more than Catalyst then spends on the
+plan; the text costs a handful. Catalyst then performs everything the
+reference's hand-rolled optimizer did (predicate pushdown, conjunction
+merge, NOT elimination, union flattening, empty propagation, column
+pruning; mql10.py:127-475) plus what it never had (join reordering,
+AQE, whole-stage codegen).
+
+Each table is read through a temp view the catalog binds once per
+table object (``Catalog.views``); literals go into the text inline
+(``predicate.lit``).
 
 Semantics preserved from the reference:
 - file sets are distinct-by-file-id (dbobjects2.py:181-193); we use
@@ -31,20 +40,55 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .mql import parse
-from .mql.ast import (BasicFileQuery, ChildrenOf, DatasetQuery,
+from .mql.ast import (BasicFileQuery, ChildrenOf, Const, DatasetQuery,
                       DatasetSelector, FileList, FileQuery, FilterOp,
-                      JoinOp, LimitOp, MetaAnd, MinusOp, NamedQueryRef,
-                      OrderedOp, ParentsOf, QueryQuery, SkipOp, UnionOp,
-                      WhereOp)
-from .predicate import CompileError, PredicateCompiler
+                      JoinOp, LimitOp, MinusOp, NamedQueryRef, OrderedOp,
+                      ParentsOf, QueryQuery, SkipOp, UnionOp, WhereOp)
+from .predicate import PredicateCompiler, lit
 from .schema import (DATASET_ATTRIBUTES, FILE_ATTRIBUTES, QUERY_ATTRIBUTES)
 
 FILE_OUTPUT_COLUMNS = ["id", "namespace", "name", "size", "creator",
                        "created_timestamp", "retired"]
+_DATASET_COLUMNS = ["namespace", "name", "frozen", "monotonic", "creator",
+                    "description", "created_timestamp"]
+_QUERY_COLUMNS = ["namespace", "name", "source", "creator", "description"]
+_SAME_DATASET = "l.{0}namespace = r.namespace AND l.{0}name = r.name"
 
 
 class QueryError(Exception):
     pass
+
+
+def _from(rel: str) -> str:
+    """``rel`` (a bound view's name or a query) as a FROM item."""
+    return rel if rel.startswith("`") else f"({rel})"
+
+
+def _where(rel: str, conds) -> str:
+    """``rel``'s rows that meet every condition in ``conds`` (None
+    entries skipped)."""
+    conds = [c for c in conds if c]
+    out = f"SELECT * FROM {_from(rel)}"
+    return f"{out} WHERE {' AND '.join(conds)}" if conds else out
+
+
+def _semi(left: str, right: str, how: str = "SEMI",
+          on: str = "l.id = r.id") -> str:
+    """``left``'s rows with (SEMI) or without (ANTI) a match in
+    ``right``."""
+    return (f"SELECT l.* FROM {_from(left)} l LEFT {how} JOIN "
+            f"{_from(right)} r ON {on}")
+
+
+def _union(rels) -> str:
+    return " UNION ALL ".join(f"SELECT * FROM {_from(r)}" for r in rels)
+
+
+def _dedup(rel: str, keys: str) -> str:
+    """One row of ``rel`` per value of ``keys``, any one of them."""
+    return (f"SELECT * EXCEPT (_rn) FROM (SELECT *, row_number() OVER "
+            f"(PARTITION BY {keys} ORDER BY {keys}) AS _rn FROM "
+            f"{_from(rel)}) WHERE _rn = 1")
 
 
 class Engine:
@@ -87,81 +131,93 @@ class Engine:
         """
         with self.cat.pin():  # every table read from one state
             top = parse(text, default_namespace=default_namespace)
-            if summary and not isinstance(top, FileQuery):
-                # summaries are defined over FILE sets (the reference's
-                # data_handler summary surface); silently returning raw
-                # dataset rows made /data/query?summary=count serve a
-                # dataset record as "the count" (review r6)
-                raise QueryError("summary= applies to file queries only")
-            if isinstance(top, FileQuery):
-                df = self._translate_fq(top.tree, include_retired,
-                                        _named_stack=())
-                if summary:
-                    return self._summary(df, summary)
-                out = self._project_files(df, with_meta, with_provenance)
-                if after_id is not None or page_size is not None:
-                    if after_id is not None:
-                        out = out.where(F.col("id") > after_id)
-                    out = out.orderBy("id")
-                    if page_size is not None:
-                        out = out.limit(int(page_size))
-                return out
-            if isinstance(top, DatasetQuery):
-                df = self._translate_dataset_query(top)
-                cols = ["namespace", "name", "frozen", "monotonic", "creator",
-                        "description", "created_timestamp"]
-                if with_meta:
-                    cols.append("metadata")
-                return df.select(*cols)
-            if isinstance(top, QueryQuery):
-                df = self._translate_query_query(top)
-                cols = ["namespace", "name", "source", "creator",
-                        "description"]
-                if with_meta:
-                    cols.append("metadata")
-                return df.select(*cols)
-            raise QueryError(f"unsupported query {top!r}")
+            return self._plan(top, with_meta, with_provenance, summary,
+                              include_retired, after_id, page_size)[1]
 
-    def explain(self, text: str, **kw) -> str:
-        """MQL AST + Spark physical plan (parity with `metacat query -x`,
+    def explain(self, text: str, default_namespace: Optional[str] = None,
+                **kw) -> str:
+        """MQL AST, the compiled Spark SQL and the Spark physical plan
+        (parity with `metacat query -x`,
         metacat/ui/metacat_query.py:64-84)."""
-        top = parse(text, default_namespace=kw.get("default_namespace"))
-        df = self.query(text, **kw)
+        with self.cat.pin():
+            top = parse(text, default_namespace=default_namespace)
+            sql, df = self._plan(top, **kw)
         plan = df._jdf.queryExecution().explainString(
             df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"))
-        return f"-- MQL AST --\n{top}\n\n-- Spark plan --\n{plan}"
+        return (f"-- MQL AST --\n{top}\n\n-- Spark SQL --\n{sql}\n\n"
+                f"-- Spark plan --\n{plan}")
+
+    def _plan(self, top, with_meta: bool = False,
+              with_provenance: bool = False, summary: Optional[str] = None,
+              include_retired: bool = False, after_id: Optional[str] = None,
+              page_size: Optional[int] = None) -> tuple[str, DataFrame]:
+        """(SQL text, DataFrame) of a parsed query: one ``spark.sql`` of
+        the text, with a keys/key-values summary built on top."""
+        if summary and not isinstance(top, FileQuery):
+            # summaries are defined over FILE sets (the reference's
+            # data_handler summary surface); silently returning raw
+            # dataset rows made /data/query?summary=count serve a
+            # dataset record as "the count" (review r6)
+            raise QueryError("summary= applies to file queries only")
+        if isinstance(top, FileQuery):
+            sql = self._fq(top.tree, include_retired)
+            if summary == "count":
+                sql = (f"SELECT count(*) AS count, sum(size) AS total_size "
+                       f"FROM ({sql})")
+            elif summary:
+                return sql, self._summary(self.spark.sql(sql), summary)
+            else:
+                sql = self._project_files(sql, with_meta, with_provenance,
+                                          after_id, page_size)
+        elif isinstance(top, DatasetQuery):
+            cols = _DATASET_COLUMNS + (["metadata"] if with_meta else [])
+            rows = _dedup(self._datasets(top.selectors), "namespace, name")
+            sql = f"SELECT {', '.join(cols)} FROM ({rows})"
+        elif isinstance(top, QueryQuery):
+            cols = _QUERY_COLUMNS + (["metadata"] if with_meta else [])
+            rows = _where(self._table("queries_tbl"), [
+                top.pattern and self._selector(top.pattern, "namespace",
+                                               "name"),
+                top.where and self.query_pred.compile(top.where)])
+            sql = f"SELECT {', '.join(cols)} FROM ({rows})"
+        else:
+            raise QueryError(f"unsupported query {top!r}")
+        return sql, self.spark.sql(sql)
+
+    def _table(self, name: str) -> str:
+        """The view name of the pinned state's table ``name``."""
+        return self.cat.views.bind(getattr(self.cat, name))
 
     # ------------------------------------------------------- file queries
-    def _translate_fq(self, node, include_retired: bool,
-                      _named_stack: tuple) -> DataFrame:
-        tr = lambda n: self._translate_fq(n, include_retired, _named_stack)
+    def _fq(self, node, include_retired: bool, stack: tuple = ()) -> str:
+        """SQL of the file rows (every files column) ``node`` selects;
+        ``stack``: the named queries being inlined around it."""
+        fq = lambda n: self._fq(n, include_retired, stack)
+        files = self._table("files")
+        active = None if include_retired else "NOT retired"
 
         if isinstance(node, BasicFileQuery):
-            df = self.cat.files
-            if not include_retired:
-                df = df.where(~F.col("retired"))
-            if node.datasets:
-                df = self._apply_dataset_membership(df, node.datasets)
-            if node.where is not None:
-                df = df.where(self.file_pred.compile(node.where))
-            return df
+            rows = _where(files, [active, node.where and
+                                  self.file_pred.compile(node.where)])
+            return (_semi(rows, self._membership(node.datasets))
+                    if node.datasets else rows)
 
         if isinstance(node, FileList):
-            df = self.cat.files  # explicit lists do NOT filter retired
+            # explicit lists do NOT filter retired
             if node.kind == "fid":
-                return df.where(F.col("id").isin(list(node.items)))
-            cond = None
+                return _where(files, [
+                    f"id IN ({', '.join(lit(i) for i in node.items)})"])
             for ns, name in node.items:
                 if ns is None:
                     raise QueryError(f"no namespace for file {name!r}")
-                c = (F.col("namespace") == ns) & (F.col("name") == name)
-                cond = c if cond is None else (cond | c)
-            return df.where(cond)
+            return _where(files, ["(" + " OR ".join(
+                f"(namespace = {lit(ns)} AND name = {lit(name)})"
+                for ns, name in node.items) + ")"])
 
         if isinstance(node, NamedQueryRef):
             key = (node.namespace, node.name)
-            if key in _named_stack:
+            if key in stack:
                 raise QueryError(f"named query cycle: {key}")
             src = self.cat.named_query_source(node.namespace, node.name)
             if src is None:
@@ -170,11 +226,10 @@ class Engine:
             sub = parse(src, default_namespace=node.namespace)
             if not isinstance(sub, FileQuery):
                 raise QueryError("named query must be a file query")
-            return self._translate_fq(sub.tree, include_retired,
-                                      _named_stack + (key,))
+            return self._fq(sub.tree, include_retired, stack + (key,))
 
         if isinstance(node, WhereOp):
-            return tr(node.child).where(self.file_pred.compile(node.exp))
+            return _where(fq(node.child), [self.file_pred.compile(node.exp)])
 
         if isinstance(node, (UnionOp, JoinOp, MinusOp)):
             # id-set fast path: branches reduce to id sets WITHOUT
@@ -196,49 +251,29 @@ class Engine:
             # (DIVERGENCES §6); there we keep the multiplicity-exact
             # row-level path so dup copies flow like the oracle SQL.
             if self._all_bfq(node) and self._file_ids_unique():
-                out = self.cat.files
-                if not include_retired:
-                    out = out.where(~F.col("retired"))
-                return out.join(self._bfq_ids(node), "id", "left_semi")
+                return _semi(_where(files, [active]), self._ids(node))
             if isinstance(node, UnionOp):
-                dfs = [tr(ch) for ch in node.children]
-                return reduce(DataFrame.unionByName, dfs) \
-                    .dropDuplicates(["id"])
+                return _dedup(_union(fq(c) for c in node.children), "id")
             if isinstance(node, JoinOp):
-                dfs = [tr(ch) for ch in node.children]
-                out = dfs[0]
-                for other in dfs[1:]:
-                    out = out.join(other.select("id"), "id", "left_semi")
-                return out
-            left, right = tr(node.left), tr(node.right)
-            return left.join(right.select("id"), "id", "left_anti")
+                return reduce(_semi, [fq(c) for c in node.children])
+            return _semi(fq(node.left), fq(node.right), "ANTI")
 
-        if isinstance(node, ParentsOf):
-            child = tr(node.child)
-            pc = self.cat.parent_child
-            hits = pc.join(child.select(F.col("id").alias("child_id")),
-                           "child_id", "left_semi")
-            return self.cat.files.join(
-                hits.select(F.col("parent_id").alias("id")), "id",
-                "left_semi")
-
-        if isinstance(node, ChildrenOf):
-            parent = tr(node.child)
-            pc = self.cat.parent_child
-            hits = pc.join(parent.select(F.col("id").alias("parent_id")),
-                           "parent_id", "left_semi")
-            return self.cat.files.join(
-                hits.select(F.col("child_id").alias("id")), "id",
-                "left_semi")
+        if isinstance(node, (ParentsOf, ChildrenOf)):
+            near, far = (("child_id", "parent_id")
+                         if isinstance(node, ParentsOf)
+                         else ("parent_id", "child_id"))
+            hits = _semi(self._table("parent_child"), fq(node.child),
+                         on=f"l.{near} = r.id")
+            return _semi(files, f"SELECT {far} AS id FROM ({hits})")
 
         if isinstance(node, (SkipOp, LimitOp, OrderedOp)):
-            return self._apply_skip_limit(node, tr)
+            return self._skip_limit(node, fq)
 
         if isinstance(node, FilterOp):
             from .filters import run_filter
-            child_dfs = [tr(ch) for ch in node.children]
-            return run_filter(self, node.name, node.params, node.kwparams,
-                              child_dfs)
+            out = run_filter(self, node.name, node.params, node.kwparams,
+                             [self.spark.sql(fq(c)) for c in node.children])
+            return f"SELECT * FROM {self.cat.views.bind(out)}"
 
         raise QueryError(f"cannot translate {node!r}")
 
@@ -270,45 +305,37 @@ class Engine:
             return self._all_bfq(node.child)
         return isinstance(node, BasicFileQuery)
 
-    def _bfq_ids(self, node) -> DataFrame:
+    def _ids(self, node) -> str:
         """Set algebra over id sets only, never materializing file rows:
         membership-only BFQs read just the membership table; predicate
         BFQs an id+predicate-pruned files scan. The retired filter is
         NOT applied here — the enclosing final files scan applies it
-        once (exact for all-BFQ trees; see translate note). Duplicate
-        ids from overlapping selectors are tolerated without a dedup:
-        semi/anti joins preserve sets, and the final semi-join emits
-        each file row once."""
+        once (exact for all-BFQ trees; see ``_fq``). Duplicate ids from
+        overlapping selectors are tolerated without a dedup: semi/anti
+        joins preserve sets, and the final semi-join emits each file
+        row once."""
         if isinstance(node, UnionOp):
-            parts = [self._bfq_ids(ch) for ch in node.children]
-            return reduce(DataFrame.unionByName, parts)
+            return _union(self._ids(c) for c in node.children)
         if isinstance(node, JoinOp):
-            parts = [self._bfq_ids(ch) for ch in node.children]
-            out = parts[0]
-            for other in parts[1:]:
-                out = out.join(other, "id", "left_semi")
-            return out
+            return reduce(_semi, [self._ids(c) for c in node.children])
         if isinstance(node, MinusOp):
-            return self._bfq_ids(node.left).join(
-                self._bfq_ids(node.right), "id", "left_anti")
+            return _semi(self._ids(node.left), self._ids(node.right), "ANTI")
+        files = self._table("files")
         if isinstance(node, WhereOp):
-            return (self.cat.files
-                    .where(self.file_pred.compile(node.exp))
-                    .select("id")
-                    .join(self._bfq_ids(node.child), "id", "left_semi"))
+            return _semi(f"SELECT id FROM {files} WHERE "
+                         f"{self.file_pred.compile(node.exp)}",
+                         self._ids(node.child))
         # BasicFileQuery leaf
-        if node.where is not None:
-            ids = self.cat.files \
-                .where(self.file_pred.compile(node.where)).select("id")
-            if node.datasets:
-                ids = ids.join(self._membership_ids(node.datasets),
-                               "id", "left_semi")
-            return ids
-        if node.datasets:
-            return self._membership_ids(node.datasets)
-        return self.cat.files.select("id")
+        if node.where is None:
+            return (self._membership(node.datasets) if node.datasets
+                    else f"SELECT id FROM {files}")
+        ids = (f"SELECT id FROM {files} WHERE "
+               f"{self.file_pred.compile(node.where)}")
+        return _semi(ids, self._membership(node.datasets)) \
+            if node.datasets else ids
 
-    def _apply_skip_limit(self, node, tr) -> DataFrame:
+    @staticmethod
+    def _skip_limit(node, fq) -> str:
         """Fold a contiguous skip/limit/ordered chain with the reference's
         merge law (mql10.py:39-45): innermost-first, skip adds and eats
         into a pending limit; limit takes the min. skip ⇒ ordered."""
@@ -317,7 +344,6 @@ class Engine:
         while isinstance(cur, (SkipOp, LimitOp, OrderedOp)):
             chain.append(cur)
             cur = cur.child
-        df = tr(cur)
         skip, limit, ordered = 0, None, False
         for op in reversed(chain):  # innermost first
             if isinstance(op, SkipOp):
@@ -328,24 +354,55 @@ class Engine:
                 limit = op.n if limit is None else min(limit, op.n)
             else:
                 ordered = True
+        out = f"SELECT * FROM ({fq(cur)})"
         if limit is not None and limit <= 0:
-            return df.limit(0)
-        if skip > 0:
-            out = df.orderBy("id").offset(skip)
-            return out.limit(limit) if limit is not None else out
+            return f"{out} LIMIT 0"
+        if ordered or skip:
+            out += " ORDER BY id"
         if limit is not None:
-            return df.orderBy("id").limit(limit) if ordered else \
-                df.limit(limit)
-        return df.orderBy("id") if ordered else df
+            out += f" LIMIT {limit}"
+        return f"{out} OFFSET {skip}" if skip else out
+
+    def _project_files(self, rows: str, with_meta: bool,
+                       with_provenance: bool, after_id: Optional[str],
+                       page_size: Optional[int]) -> str:
+        # tolerate minimal sources (from_dataframes): project only the
+        # canonical columns the backing table actually has
+        have = self.cat.files.columns
+        cols = [c for c in FILE_OUTPUT_COLUMNS if c in have]
+        if with_meta and "metadata" in have:
+            cols.append("metadata")
+        out = f"SELECT {', '.join(cols)} FROM ({rows})"
+        if with_provenance:
+            out = self._provenance(out)
+        if after_id is None and page_size is None:
+            return out
+        out = _where(out, [after_id is not None and f"id > {lit(after_id)}"])
+        out += " ORDER BY id"
+        return out if page_size is None else f"{out} LIMIT {int(page_size)}"
+
+    def _provenance(self, rows: str) -> str:
+        pc = self._table("parent_child")
+        return (f"SELECT o.*, p.parents, c.children FROM ({rows}) o "
+                f"LEFT JOIN (SELECT child_id AS id, collect_list(parent_id) "
+                f"AS parents FROM {pc} GROUP BY child_id) p ON o.id = p.id "
+                f"LEFT JOIN (SELECT parent_id AS id, collect_list(child_id) "
+                f"AS children FROM {pc} GROUP BY parent_id) c ON o.id = c.id")
+
+    def with_provenance(self, files: DataFrame) -> DataFrame:
+        """``files`` plus each file's ``parents`` and ``children`` id
+        lists (null when it has none)."""
+        return self.spark.sql(self._provenance(
+            f"SELECT * FROM {self.cat.views.bind(files)}"))
 
     # -------------------------------------------------- dataset selection
-    def _selector_cond(self, sel: DatasetSelector, ns_col: str,
-                       name_col: str):
+    @staticmethod
+    def _selector(sel: DatasetSelector, ns_col: str, name_col: str) -> str:
         if sel.namespace is None:
             raise QueryError(f"no namespace for dataset {sel.name!r}")
-        ns_ok = F.col(ns_col) == sel.namespace
+        ns_ok = f"{ns_col} = {lit(sel.namespace)}"
         if sel.kind == "did":
-            return ns_ok & (F.col(name_col) == sel.name)
+            return f"({ns_ok} AND {name_col} = {lit(sel.name)})"
         if sel.kind == "pattern":
             # escape LIKE metacharacters FIRST: a literal '_' in the
             # glob (ubiquitous in dataset names) must not match any
@@ -354,107 +411,75 @@ class Engine:
             like = (sel.name.replace("\\", "\\\\")
                     .replace("%", "\\%").replace("_", "\\_")
                     .replace("*", "%").replace("?", "_"))
-            return ns_ok & F.col(name_col).like(like)
+            return f"({ns_ok} AND {name_col} LIKE {lit(like)})"
         if sel.kind == "regexp":
-            return ns_ok & F.col(name_col).rlike(sel.name)
+            return f"({ns_ok} AND {name_col} RLIKE {lit(sel.name)})"
         raise QueryError(f"bad selector kind {sel.kind}")
 
-    def _resolve_datasets(self, selectors) -> DataFrame:
-        """Selected datasets as a (namespace, name, <attrs>) DataFrame,
+    def _datasets(self, selectors) -> str:
+        """SQL of the selected datasets' rows (a dataset may repeat),
         expanding `with subsets [recursively]` via an iterative,
         cycle-safe closure (parity: dbobjects2.py:1505-1548)."""
-        ds = self.cat.datasets
+        ds = self._table("datasets")
         parts = []
         for sel in selectors:
-            seed = ds.where(self._selector_cond(sel, "namespace", "name"))
+            rows = _where(ds, [self._selector(sel, "namespace", "name")])
             if sel.with_subsets or sel.with_ancestors:
-                names = seed.select("namespace", "name")
-                closure = self._subset_closure(names, sel.recursively,
-                                               up=sel.with_ancestors)
-                seed = ds.join(closure, ["namespace", "name"], "left_semi")
+                closure = self._closure(
+                    f"SELECT namespace, name FROM ({rows})",
+                    sel.recursively, up=sel.with_ancestors)
+                rows = _semi(ds, closure, on=_SAME_DATASET.format(""))
             if sel.having is not None:
-                seed = seed.where(self.dataset_pred.compile(sel.having))
-            parts.append(seed)
-        out = reduce(DataFrame.unionByName, parts)
-        return out.dropDuplicates(["namespace", "name"])
+                rows = _where(rows, [self.dataset_pred.compile(sel.having)])
+            parts.append(rows)
+        return _union(parts)
 
-    def _subset_closure(self, seed: DataFrame, recursively: bool,
-                        up: bool = False) -> DataFrame:
-        """Dataset DAG closure. ``up=False`` walks parent→child
-        (``with subsets``, dbobjects2.py:1062-1086); ``up=True`` walks
-        child→parent (``ancestors``, dbobjects2.py:1094-1122) — the same
-        traversal with the edge roles swapped."""
-        edges = self.cat.datasets_parent_child
-        here, there = (("child", "parent") if up else ("parent", "child"))
-        out_sel = [F.col(f"{there}_namespace").alias("namespace"),
-                   F.col(f"{there}_name").alias("name")]
+    def _closure(self, seed: str, recursively: bool, up: bool) -> str:
+        """(namespace, name) of the seed datasets and their DAG
+        neighbours (a dataset may repeat). ``up=False`` walks
+        parent→child (``with subsets``, dbobjects2.py:1062-1086);
+        ``up=True`` walks child→parent (``ancestors``,
+        dbobjects2.py:1094-1122) — the same traversal with the edge
+        roles swapped."""
+        edges = self._table("datasets_parent_child")
+        here, there = ("child", "parent") if up else ("parent", "child")
 
-        def step(front: DataFrame) -> DataFrame:
-            return (edges.join(
-                front.withColumnRenamed("namespace", f"{here}_namespace")
-                     .withColumnRenamed("name", f"{here}_name"),
-                [f"{here}_namespace", f"{here}_name"], "left_semi")
-                .select(*out_sel))
+        def step(front: str) -> str:
+            hits = _semi(edges, front, on=_SAME_DATASET.format(f"{here}_"))
+            return (f"SELECT {there}_namespace AS namespace, {there}_name "
+                    f"AS name FROM ({hits})")
 
         if not recursively:
-            return seed.unionByName(step(seed)).dropDuplicates(
-                ["namespace", "name"])
+            return _union([seed, step(seed)])
         # transitive closure: frontier loop with visited-set cycle guard
-        acc = seed.dropDuplicates(["namespace", "name"]).localCheckpoint()
+        sql, view = self.spark.sql, self.cat.views.bind
+        acc = sql(f"SELECT DISTINCT * FROM ({seed})").localCheckpoint()
         frontier = acc
         while True:
-            nxt = (step(frontier)
-                   .dropDuplicates(["namespace", "name"])
-                   .join(acc, ["namespace", "name"], "left_anti")
-                   .localCheckpoint())
+            new = _semi(step(view(frontier)), view(acc), "ANTI",
+                        _SAME_DATASET.format(""))
+            nxt = sql(f"SELECT DISTINCT * FROM ({new})").localCheckpoint()
             if nxt.isEmpty():
-                return acc
-            acc = acc.unionByName(nxt).localCheckpoint()
+                return f"SELECT * FROM {view(acc)}"
+            acc = sql(_union([view(acc), view(nxt)])).localCheckpoint()
             frontier = nxt
 
-    def _membership_ids(self, selectors) -> DataFrame:
+    def _membership(self, selectors) -> str:
         """File ids selected by dataset membership — reads ONLY the
-        bucketed membership table (no files scan)."""
-        fd = self.cat.files_datasets
-        complex_sel = any(s.with_subsets or s.with_ancestors
-                          or s.having is not None
-                          for s in selectors)
-        if complex_sel:
-            ds = self._resolve_datasets(selectors).select(
-                F.col("namespace").alias("dataset_namespace"),
-                F.col("name").alias("dataset_name"))
-            fd = fd.join(F.broadcast(ds),
-                         ["dataset_namespace", "dataset_name"], "left_semi")
-        else:
-            cond = reduce(lambda a, b: a | b,
-                          [self._selector_cond(s, "dataset_namespace",
-                                               "dataset_name")
-                           for s in selectors])
-            fd = fd.where(cond)
-        return fd.select(F.col("file_id").alias("id"))
-
-    def _apply_dataset_membership(self, files_df: DataFrame,
-                                  selectors) -> DataFrame:
-        return files_df.join(self._membership_ids(selectors),
-                             "id", "left_semi")
-
-    # ----------------------------------------------------------- datasets
-    def _translate_dataset_query(self, q: DatasetQuery) -> DataFrame:
-        return self._resolve_datasets(q.selectors)
-
-    def _translate_query_query(self, q: QueryQuery) -> DataFrame:
-        df = self.cat.queries_tbl
-        if q.pattern is not None:
-            df = df.where(self._selector_cond(q.pattern, "namespace", "name"))
-        if q.where is not None:
-            df = df.where(self.query_pred.compile(q.where))
-        return df
+        bucketed membership table (no files scan); a resolved dataset
+        list is broadcast into it."""
+        fd = self._table("files_datasets")
+        if any(s.with_subsets or s.with_ancestors or s.having is not None
+               for s in selectors):
+            return (f"SELECT /*+ BROADCAST(r) */ l.file_id AS id FROM {fd} l "
+                    f"LEFT SEMI JOIN ({self._datasets(selectors)}) r ON "
+                    f"{_SAME_DATASET.format('dataset_')}")
+        cond = " OR ".join(self._selector(s, "dataset_namespace",
+                                          "dataset_name") for s in selectors)
+        return f"SELECT file_id AS id FROM {fd} WHERE {cond}"
 
     # ---------------------------------------------------------- summaries
     def _summary(self, df: DataFrame, kind: str) -> DataFrame:
-        if kind == "count":
-            return df.agg(F.count("*").alias("count"),
-                          F.sum("size").alias("total_size"))
         if kind == "keys":
             return (df.select(F.explode(F.json_object_keys("metadata"))
                               .alias("key"))
@@ -573,28 +598,6 @@ class Engine:
             parts.append(other)
         return reduce(DataFrame.unionByName, parts).distinct()
 
-    # --------------------------------------------------------- projection
-    def _project_files(self, df: DataFrame, with_meta: bool,
-                       with_provenance: bool) -> DataFrame:
-        # tolerate minimal sources (from_dataframes): project only the
-        # canonical columns the backing table actually has
-        cols = [c for c in FILE_OUTPUT_COLUMNS if c in df.columns]
-        if with_meta and "metadata" in df.columns:
-            cols.append("metadata")
-        out = df.select(*cols)
-        return self.with_provenance(out) if with_provenance else out
-
-    def with_provenance(self, files: DataFrame) -> DataFrame:
-        """``files`` plus each file's ``parents`` and ``children`` id
-        lists (null when it has none)."""
-        pc = self.cat.parent_child
-        parents = (pc.groupBy(F.col("child_id").alias("id"))
-                   .agg(F.collect_list("parent_id").alias("parents")))
-        children = (pc.groupBy(F.col("parent_id").alias("id"))
-                    .agg(F.collect_list("child_id").alias("children")))
-        return (files.join(parents, "id", "left")
-                .join(children, "id", "left"))
-
     # --------------------------------------------------- aggregation API
     # count over a COLUMN counts non-null values (SQL count(col));
     # the None-column case maps to count(*) at the call site
@@ -614,22 +617,19 @@ class Engine:
         the aggregation API and profile()."""
         if key in FILE_ATTRIBUTES:
             return F.col(key), False
-        col, mtype = self.file_pred._scalar_column(key)
+        sql, mtype = self.file_pred._scalar_column(key)
         if mtype.startswith("variant:"):
-            # variant mode: _scalar_column returns a lit(None)
-            # placeholder (only _typed() materializes the getter)
-            # — extract as string here, like the JSON fallback
-            vkey = mtype[len("variant:"):]
-            col = F.try_variant_get(
-                F.col(self.file_pred.variant_column),
-                f"$['{vkey}']", "string")
+            # variant mode: _scalar_column returns a NULL placeholder
+            # (only _typed() materializes the getter) — extract as
+            # string here, like the JSON fallback
+            sql = self.file_pred._typed(sql, mtype, Const("str", None))
             mtype = "json"
         if numeric and mtype == "json":
             # schema-on-read string -> numeric for sum/avg/median
             # (ANSI mode rejects implicit string arithmetic;
             # try_cast nulls non-numeric values instead)
-            return col.try_cast("double"), False
-        return col, mtype == "json"
+            return F.expr(f"try_cast({sql} AS DOUBLE)"), False
+        return F.expr(sql), mtype == "json"
 
     def profile(self, text: str, keys: list,
                 include_retired: bool = False,
@@ -753,4 +753,4 @@ class Engine:
         if not isinstance(top, FileQuery):
             raise QueryError("file_set() requires a file query")
         with self.cat.pin():
-            return self._translate_fq(top.tree, include_retired, ())
+            return self.spark.sql(self._fq(top.tree, include_retired))

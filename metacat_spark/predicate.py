@@ -1,4 +1,9 @@
-"""MQL metadata-expression → PySpark Column compiler.
+"""MQL metadata-expression → Spark SQL expression compiler.
+
+``PredicateCompiler.compile`` returns the text of one boolean SQL
+expression over a table's columns. The engine splices it into the one
+SQL statement it compiles per query; ``DataFrame.where`` accepts it
+as it is.
 
 Mirrors the semantics of the reference's twin predicate implementations
 (SQL: metacat/common/meta_dnf.py:100-304; Python:
@@ -6,10 +11,10 @@ metacat/mql/meta_evaluator.py:17-238), most importantly:
 
 - missing key ⇒ predicate is FALSE (meta_evaluator.py:112-117). Spark's
   three-valued NULL logic gives this for free: a comparison against a
-  NULL shredded column yields NULL, which ``filter`` drops — including
-  under negation (``~NULL`` is NULL).
+  NULL shredded column yields NULL, which a filter drops — including
+  under negation (``NOT NULL`` is NULL).
 - regex ops ``~ ~* !~ !~*`` use SEARCH semantics (re.search,
-  meta_evaluator.py:199) — Spark ``rlike`` already searches.
+  meta_evaluator.py:199) — Spark ``RLIKE`` already searches.
 - ``date(...)`` constants expand to 24-hour-interval logic
   (mql10.py:1052-1082,1129-1163).
 - ``array[all] CMP v`` ≡ ``!(array[any] INV-CMP v)`` (mql10.py:999-1027);
@@ -21,14 +26,16 @@ Typing: shredded keys compile to their typed columns (JVM codegen,
 min/max-skippable). Unshredded keys fall back to ``get_json_object``
 over the JSON metadata column with a cast driven by the literal's type
 (the reference types literals the same way, meta_dnf.py:110-122).
+
+Literals are written into the text (``lit``), typed as ``F.lit`` types
+them, and identifiers are backticked (``ident``); no value from a query
+can change the statement's shape.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Optional
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from .mql.ast import (ArrayAll, ArrayAny, ArrayLen, Cmp, Const, ConstIn,
                       InRange, InSet, JsonPathExists, MetaAnd, MetaAttr,
@@ -40,12 +47,40 @@ class CompileError(Exception):
     pass
 
 
-_SPARK_TYPES = {"int": "int", "float": "double", "str": "string",
-                "bool": "boolean", "timestamp": "timestamp"}
+def ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _lit(c: Const) -> Column:
-    return F.lit(c.value)
+def lit(v) -> str:
+    """``v`` as a SQL literal of the type ``F.lit(v)`` has. A string
+    holding a quote, a backslash, ``${`` (which session variable
+    substitution would expand) or a non-printable character is written
+    as its UTF-8 bytes in hex, cast back to STRING: the same value
+    under either ``spark.sql.parser.escapedStringLiterals`` mode, and
+    folded to a plain literal before pushdown."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return f"({v})" if v < 0 else str(v)
+    if isinstance(v, float):
+        if math.isnan(v) or math.isinf(v):
+            return f"CAST('{v}' AS DOUBLE)"     # 'nan', 'inf', '-inf'
+        return f"({v!r}D)" if v < 0 else f"{v!r}D"
+    s = str(v)
+    if "'" in s or "\\" in s or "${" in s or not s.isprintable():
+        return f"CAST(X'{s.encode().hex()}' AS STRING)"
+    return f"'{s}'"
+
+
+# serialized JSON text of an array or object value
+_STRUCTURED = lit(r"^\s*[\[\{]")
+
+
+def _path(key: str, tail: str = "") -> str:
+    return lit(f"$['{key}']{tail}")
 
 
 class PredicateCompiler:
@@ -68,145 +103,120 @@ class PredicateCompiler:
         self.variant_column = variant_column
 
     # ------------------------------------------------------------ helpers
-    def _scalar_column(self, key: str) -> tuple[Column, str]:
-        """Resolve a dotted key to (Column, mtype)."""
+    def _variant(self, path: str, vtype: str) -> str:
+        return (f"try_variant_get({ident(self.variant_column)}, {path}, "
+                f"'{vtype}')")
+
+    def _json(self, path: str) -> str:
+        return f"get_json_object({ident(self.json_column)}, {path})"
+
+    def _scalar_column(self, key: str) -> tuple[str, str]:
+        """Resolve a dotted key to (SQL expression, mtype)."""
         mk = self.meta.get(key)
         if mk is not None:
-            return F.col(mk.column), mk.mtype
+            return ident(mk.column), mk.mtype
         if self.variant_column is not None:
-            return F.lit(None), f"variant:{key}"
+            # a placeholder: only _typed() knows the type to extract
+            return "NULL", f"variant:{key}"
         if self.json_column is None:
             raise CompileError(f"unknown metadata key {key!r}")
         # schema-on-read fallback; untyped until use-site casts
-        return F.get_json_object(F.col(self.json_column), f"$['{key}']"), "json"
+        return self._json(_path(key)), "json"
 
-    def _attr_column(self, name: str) -> tuple[Column, str]:
+    def _attr_column(self, name: str) -> tuple[str, str]:
         if name not in self.attributes:
             raise CompileError(f"unknown attribute {name!r}")
-        return F.col(name), self.attributes[name]
+        return ident(name), self.attributes[name]
 
     _VARIANT_TYPES = {"int": "bigint", "float": "double",
                       "datetime": "double", "date": "double",
                       "bool": "boolean", "str": "string"}
 
-    def _typed(self, col: Column, coltype: str, const: Const) -> Column:
+    def _typed(self, col: str, coltype: str, const: Const) -> str:
         """Cast a json-fallback column per the literal's type."""
         if coltype.startswith("variant:"):
-            key = coltype[len("variant:"):]
-            vt = self._VARIANT_TYPES.get(const.kind, "string")
-            return F.try_variant_get(F.col(self.variant_column),
-                                     f"$['{key}']", vt)
+            return self._variant(_path(coltype[len("variant:"):]),
+                                 self._VARIANT_TYPES.get(const.kind,
+                                                         "string"))
         if coltype != "json":
             if coltype == "timestamp" and const.kind in ("datetime", "date",
                                                          "int", "float"):
                 # NTZ timestamps can't cast straight to double; go via
                 # TIMESTAMP (identity under the UTC session timezone)
-                return col.cast("timestamp").cast("double")  # epoch seconds
+                return f"CAST(CAST({col} AS TIMESTAMP) AS DOUBLE)"
             return col
-        kind = const.kind
         # try_cast: schema-on-read values are mixed-type by nature —
         # under Spark 4's default ANSI mode a plain cast of a
         # non-numeric string THROWS instead of excluding the row;
         # try_cast yields NULL like the row evaluator's TypeError →
         # None path (review r6)
-        if kind == "int" or kind == "float" or kind in ("datetime", "date"):
-            return col.try_cast("double")
-        if kind == "bool":
-            return col.try_cast("boolean")
+        if const.kind in ("int", "float", "datetime", "date"):
+            return f"try_cast({col} AS DOUBLE)"
+        if const.kind == "bool":
+            return f"try_cast({col} AS BOOLEAN)"
         return col
 
-    def _cmp(self, col: Column, op: str, const: Const) -> Column:
+    def _cmp(self, col: str, op: str, const: Const) -> str:
         if const.kind == "date":
-            lo, hi = F.lit(const.value), F.lit(const.value_end)
-            if op == "=":
-                return (col >= lo) & (col < hi)
-            if op == "!=":
-                return (col < lo) | (col >= hi)
-            if op == ">":
-                return col >= hi
-            if op == ">=":
-                return col >= lo
-            if op == "<":
-                return col < lo
-            if op == "<=":
-                return col < hi
-            raise CompileError(f"op {op!r} not valid for date()")
-        lit = _lit(const)
-        if op in ("=", "=="):
-            return col == lit
-        if op == "!=":
-            return col != lit
-        if op == "<":
-            return col < lit
-        if op == "<=":
-            return col <= lit
-        if op == ">":
-            return col > lit
-        if op == ">=":
-            return col >= lit
+            lo, hi = lit(const.value), lit(const.value_end)
+            date_ops = {"=": f"({col} >= {lo} AND {col} < {hi})",
+                        "!=": f"({col} < {lo} OR {col} >= {hi})",
+                        ">": f"({col} >= {hi})", ">=": f"({col} >= {lo})",
+                        "<": f"({col} < {lo})", "<=": f"({col} < {hi})"}
+            if op not in date_ops:
+                raise CompileError(f"op {op!r} not valid for date()")
+            return date_ops[op]
+        if op in ("=", "==", "!=", "<", "<=", ">", ">="):
+            return f"({col} {'=' if op == '==' else op} {lit(const.value)})"
         if op in ("~", "~*", "!~", "!~*"):
             pat = str(const.value)
             if op.endswith("*"):
                 pat = "(?i)" + pat
-            matched = col.rlike(pat)
+            matched = f"({col} RLIKE {lit(pat)})"
             # negated regex on a missing key must stay NULL → false
-            return ~matched if op.startswith("!") else matched
+            return f"(NOT {matched})" if op.startswith("!") else matched
         if op == "like":
             # SQL LIKE (%/_ wildcards) — reserved-but-unimplemented in
             # the reference (grammar/common.py CMPOP); full-match
             # semantics like PostgreSQL LIKE would have had
-            return col.like(str(const.value))
+            return f"({col} LIKE {lit(str(const.value))})"
         raise CompileError(f"unknown comparison op {op!r}")
 
-    def _values_lambda(self, mtype: str, col: Column):
-        """(element_iterable_column, element_type) for [any]/[all]."""
-        mk_elem = "str"
+    @staticmethod
+    def _values(col: str, mtype: str) -> str:
+        """The array of elements [any]/[all] iterate over."""
         if mtype.endswith("[]"):
-            return col, mtype[:-2]
+            return col
         if mtype.startswith("map<"):
-            return F.map_values(col), mtype[mtype.index(",") + 1:-1]
-        if mtype == "json" or mtype.startswith("variant"):
-            return col, mtype
+            return f"map_values({col})"
         raise CompileError(f"[any]/[all] over non-array type {mtype}")
 
-    def _json_array(self, key: str, const: Const) -> Column:
+    def _json_array(self, key: str, const: Const) -> str:
         """Unshredded array access with element type from the literal
         (per-use element typing, SURVEY §7.3)."""
         elem = {"int": "bigint", "float": "double", "bool": "boolean",
                 "datetime": "double", "date": "double"}.get(const.kind,
                                                             "string")
         if self.variant_column is not None:
-            return F.try_variant_get(F.col(self.variant_column),
-                                     f"$['{key}']", f"array<{elem}>")
-        raw = F.get_json_object(F.col(self.json_column), f"$['{key}']")
-        return F.from_json(raw, f"array<{elem}>")
+            return self._variant(_path(key), f"array<{elem}>")
+        return f"from_json({self._json(_path(key))}, 'array<{elem}>')"
 
     # ------------------------------------------------------------ compile
-    def compile(self, exp) -> Column:
-        if isinstance(exp, MetaOr):
-            out = self.compile(exp.children[0])
-            for ch in exp.children[1:]:
-                out = out | self.compile(ch)
-            return out
-        if isinstance(exp, MetaAnd):
-            out = self.compile(exp.children[0])
-            for ch in exp.children[1:]:
-                out = out & self.compile(ch)
-            return out
+    def compile(self, exp) -> str:
+        if isinstance(exp, (MetaOr, MetaAnd)):
+            op = " OR " if isinstance(exp, MetaOr) else " AND "
+            return "(" + op.join(self.compile(c) for c in exp.children) + ")"
         if isinstance(exp, MetaNot):
-            return ~self.compile(exp.child)
+            return f"(NOT {self.compile(exp.child)})"
         if isinstance(exp, Cmp):
             return self._compile_cmp(exp)
-        if isinstance(exp, InRange):
-            return self._compile_range(exp)
-        if isinstance(exp, InSet):
-            return self._compile_set(exp)
+        if isinstance(exp, (InRange, InSet)):
+            return self._compile_member(exp)
         if isinstance(exp, Present):
             col, mtype = self._scalar_column(exp.key)
             if mtype.startswith("variant:"):
-                col = F.try_variant_get(F.col(self.variant_column),
-                                        f"$['{exp.key}']", "variant")
-            return col.isNull() if exp.negated else col.isNotNull()
+                col = self._variant(_path(exp.key), "variant")
+            return f"({col} IS {'NULL' if exp.negated else 'NOT NULL'})"
         if isinstance(exp, ConstIn):
             return self._compile_const_in(exp)
         if isinstance(exp, JsonPathExists):
@@ -214,54 +224,41 @@ class PredicateCompiler:
                 # variant mode: probe the same path over the variant
                 # column (extraction as variant — any present value,
                 # whatever its type, is non-null)
-                return F.try_variant_get(F.col(self.variant_column),
-                                         exp.path, "variant").isNotNull()
+                return (f"({self._variant(lit(exp.path), 'variant')} "
+                        f"IS NOT NULL)")
             if self.json_column is None:
                 raise CompileError("no JSON column for exists()")
-            return F.get_json_object(F.col(self.json_column),
-                                     exp.path).isNotNull()
+            return f"({self._json(lit(exp.path))} IS NOT NULL)"
         raise CompileError(f"cannot compile {exp!r}")
 
-    # element-wise comparison builders for higher-order functions ---------
-    def _elem_cmp(self, op: str, const: Const, elem_type: str):
-        def fn(x):
-            xx = x.cast("double") if elem_type == "json" and const.kind in (
-                "int", "float", "datetime", "date") else x
-            return self._cmp(xx, op, const)
-        return fn
-
-    def _compile_cmp(self, exp: Cmp) -> Column:
-        s = exp.scalar
-        if isinstance(s, MetaAttr):
-            col, mtype = self._scalar_column(s.key)
-            return self._cmp(self._typed(col, mtype, exp.const), exp.op,
-                             exp.const)
-        if isinstance(s, ObjectAttr):
-            col, atype = self._attr_column(s.name)
-            return self._cmp(self._typed(col, atype, exp.const), exp.op,
-                             exp.const)
-        if isinstance(s, ArrayAny):
-            col, mtype = self._meta_array(s.key, exp.const)
-            vals, et = self._values_lambda(mtype, col)
-            return F.exists(vals, self._elem_cmp(exp.op, exp.const, et))
-        if isinstance(s, ArrayAll):
-            col, mtype = self._meta_array(s.key, exp.const)
-            vals, et = self._values_lambda(mtype, col)
-            return F.forall(vals, self._elem_cmp(exp.op, exp.const, et))
+    def _scalar(self, s, const: Const, test) -> str:
+        """``test`` (SQL of a value → SQL of a boolean) applied to the
+        scalar ``s``, typed by ``const``: once for a plain value, per
+        element (``exists``/``forall``) for ``[any]``/``[all]``."""
+        if isinstance(s, (MetaAttr, ObjectAttr)):
+            col, mtype = (self._scalar_column(s.key) if isinstance(
+                s, MetaAttr) else self._attr_column(s.name))
+            return test(self._typed(col, mtype, const))
+        if isinstance(s, (ArrayAny, ArrayAll)):
+            vals = self._values(*self._meta_array(s.key, const))
+            fn = "exists" if isinstance(s, ArrayAny) else "forall"
+            return f"{fn}({vals}, x -> {test('x')})"
         if isinstance(s, Subscript):
-            col = self._subscript_column(s, exp.const)
-            return self._cmp(col, exp.op, exp.const)
+            return test(self._subscript_column(s, const))
         if isinstance(s, ArrayLen):
-            col, mtype = self._meta_array(s.key, exp.const)
-            sz = F.when(col.isNull(), F.lit(None).cast("int")).otherwise(
-                F.size(col))
-            return self._cmp(sz, exp.op, exp.const)
+            col, _ = self._meta_array(s.key, const)
+            return test(f"CASE WHEN {col} IS NULL THEN CAST(NULL AS INT) "
+                        f"ELSE size({col}) END")
         raise CompileError(f"bad scalar {s!r}")
 
-    def _meta_array(self, key: str, const: Const) -> tuple[Column, str]:
+    def _compile_cmp(self, exp: Cmp) -> str:
+        return self._scalar(exp.scalar, exp.const,
+                            lambda c: self._cmp(c, exp.op, exp.const))
+
+    def _meta_array(self, key: str, const: Const) -> tuple[str, str]:
         mk = self.meta.get(key)
         if mk is not None:
-            return F.col(mk.column), mk.mtype
+            return ident(mk.column), mk.mtype
         if self.json_column is None and self.variant_column is None:
             raise CompileError(f"unknown metadata key {key!r}")
         return self._json_array(key, const), (
@@ -269,120 +266,54 @@ class PredicateCompiler:
             "double[]" if const.kind in ("float", "datetime", "date") else
             "boolean[]" if const.kind == "bool" else "str[]")
 
-    def _subscript_column(self, s: Subscript, const: Const) -> Column:
+    def _subscript_column(self, s: Subscript, const: Const) -> str:
         mk = self.meta.get(s.key)
         if mk is not None:
-            col = F.col(mk.column)
-            if isinstance(s.index, int):
+            idx = s.index
+            if isinstance(idx, int) and idx >= 0:
                 # MQL subscripts are 0-based python-style
                 # (meta_evaluator.py:91-98); element_at is 1-based
-                idx = s.index + 1 if s.index >= 0 else s.index
-                return F.try_element_at(col, F.lit(idx))
-            return F.try_element_at(col, F.lit(s.index))
-        if isinstance(s.index, int):
-            path = f"$['{s.key}'][{s.index}]"
-        else:
-            path = f"$['{s.key}'].{s.index}"
+                idx += 1
+            return f"try_element_at({ident(mk.column)}, {lit(idx)})"
+        tail = f"[{s.index}]" if isinstance(s.index, int) else f".{s.index}"
         if self.variant_column is not None:
-            vt = self._VARIANT_TYPES.get(const.kind, "string")
-            return F.try_variant_get(F.col(self.variant_column), path, vt)
+            return self._variant(_path(s.key, tail),
+                                 self._VARIANT_TYPES.get(const.kind,
+                                                         "string"))
         if self.json_column is None:
             raise CompileError(f"unknown metadata key {s.key!r}")
-        raw = F.get_json_object(F.col(self.json_column), path)
-        return self._typed(raw, "json", const)
+        return self._typed(self._json(_path(s.key, tail)), "json", const)
 
-    def _compile_range(self, exp: InRange) -> Column:
-        lo, hi = exp.lo, exp.hi
-        if (lo.kind == "date") != (hi.kind == "date"):
-            raise CompileError("range endpoints must both be date()")
-
-        def in_range(col: Column) -> Column:
-            ge = col >= F.lit(lo.value)
-            le = (col < F.lit(hi.value_end)) if hi.kind == "date" \
-                else (col <= F.lit(hi.value))
-            return ge & le
-
-        s = exp.scalar
-        if isinstance(s, (MetaAttr, ObjectAttr)):
-            if isinstance(s, MetaAttr):
-                col, mtype = self._scalar_column(s.key)
-            else:
-                col, mtype = self._attr_column(s.name)
-            e = in_range(self._typed(col, mtype, lo))
-        elif isinstance(s, ArrayAny):
-            col, mtype = self._meta_array(s.key, lo)
-            vals, et = self._values_lambda(mtype, col)
-            e = F.exists(vals, lambda x: in_range(
-                x.cast("double") if et == "json" else x))
-        elif isinstance(s, ArrayAll):
-            col, mtype = self._meta_array(s.key, lo)
-            vals, et = self._values_lambda(mtype, col)
-            e = F.forall(vals, lambda x: in_range(
-                x.cast("double") if et == "json" else x))
-        elif isinstance(s, Subscript):
-            e = in_range(self._subscript_column(s, lo))
-        elif isinstance(s, ArrayLen):
-            col, mtype = self._meta_array(s.key, lo)
-            sz = F.when(col.isNull(), F.lit(None).cast("int")).otherwise(
-                F.size(col))
-            e = in_range(sz)
+    def _compile_member(self, exp) -> str:
+        """``in lo:hi`` ranges and ``in (v, ...)`` value sets."""
+        if isinstance(exp, InRange):
+            lo, hi = exp.lo, exp.hi
+            if (lo.kind == "date") != (hi.kind == "date"):
+                raise CompileError("range endpoints must both be date()")
+            top = (f"< {lit(hi.value_end)}" if hi.kind == "date"
+                   else f"<= {lit(hi.value)}")
+            e = self._scalar(exp.scalar, lo, lambda c: (
+                f"({c} >= {lit(lo.value)} AND {c} {top})"))
         else:
-            raise CompileError(f"bad scalar {s!r}")
-        return ~e if exp.negated else e
+            if any(v.kind == "date" for v in exp.values):
+                raise CompileError("date() not supported in value sets")
+            values = ", ".join(lit(v.value) for v in exp.values)
+            e = self._scalar(exp.scalar, exp.values[0],
+                             lambda c: f"({c} IN ({values}))")
+        return f"(NOT {e})" if exp.negated else e
 
-    def _compile_set(self, exp: InSet) -> Column:
-        values = [v.value for v in exp.values]
-        if any(v.kind == "date" for v in exp.values):
-            raise CompileError("date() not supported in value sets")
-        s = exp.scalar
-        c0 = exp.values[0]
-
-        def member(col: Column) -> Column:
-            return col.isin(values)
-
-        if isinstance(s, (MetaAttr, ObjectAttr)):
-            if isinstance(s, MetaAttr):
-                col, mtype = self._scalar_column(s.key)
-            else:
-                col, mtype = self._attr_column(s.name)
-            e = member(self._typed(col, mtype, c0))
-        elif isinstance(s, ArrayAny):
-            col, mtype = self._meta_array(s.key, c0)
-            vals, et = self._values_lambda(mtype, col)
-            e = F.exists(vals, lambda x: member(
-                x.cast("double") if et == "json" else x))
-        elif isinstance(s, ArrayAll):
-            col, mtype = self._meta_array(s.key, c0)
-            vals, et = self._values_lambda(mtype, col)
-            e = F.forall(vals, lambda x: member(
-                x.cast("double") if et == "json" else x))
-        elif isinstance(s, Subscript):
-            e = member(self._subscript_column(s, c0))
-        elif isinstance(s, ArrayLen):
-            col, mtype = self._meta_array(s.key, c0)
-            sz = F.when(col.isNull(), F.lit(None).cast("int")).otherwise(
-                F.size(col))
-            e = member(sz)
-        else:
-            raise CompileError(f"bad scalar {s!r}")
-        return ~e if exp.negated else e
-
-    def _compile_const_in(self, exp: ConstIn) -> Column:
+    def _compile_const_in(self, exp: ConstIn) -> str:
         mk = self.meta.get(exp.key)
         const = exp.const
+        value = lit(const.value)
         if mk is None:
             if self.json_column is None and self.variant_column is None:
                 raise CompileError(f"unknown metadata key {exp.key!r}")
-            arr = self._json_array(exp.key, const)
-            e = F.array_contains(arr, F.lit(const.value))
+            e = f"array_contains({self._json_array(exp.key, const)}, {value})"
             if const.kind == "str":
-                if self.variant_column is not None:
-                    scalar = F.try_variant_get(
-                        F.col(self.variant_column), f"$['{exp.key}']",
-                        "string")
-                else:
-                    scalar = F.get_json_object(F.col(self.json_column),
-                                               f"$['{exp.key}']")
+                scalar = (self._variant(_path(exp.key), "string")
+                          if self.variant_column is not None
+                          else self._json(_path(exp.key)))
                 # substring semantics apply to SCALAR string values
                 # only: for array/object values get_json_object
                 # returns the serialized JSON text, and a bare rlike
@@ -390,33 +321,31 @@ class PredicateCompiler:
                 # merely appear in the serialization (review r6) —
                 # the row evaluator (and the reference, which probes
                 # scalar SQL text) say False there
-                is_scalar_text = ~scalar.rlike(r"^\s*[\[\{]")
-                e = e | (is_scalar_text & scalar.rlike(str(const.value)))
+                e = (f"({e} OR ((NOT ({scalar} RLIKE {_STRUCTURED}))"
+                     f" AND ({scalar} RLIKE {lit(str(const.value))})))")
             else:
                 # scalar equality for non-string consts: `5 in k` on
                 # a SCALAR value k=5 is True in the row evaluator and
                 # on shredded keys; the array coercion alone yielded
                 # NULL and silently dropped the row (review r6)
                 if self.variant_column is not None:
-                    vt = self._VARIANT_TYPES.get(const.kind, "string")
-                    scalar = F.try_variant_get(
-                        F.col(self.variant_column), f"$['{exp.key}']",
-                        vt)
+                    scalar = self._variant(_path(exp.key),
+                                           self._VARIANT_TYPES.get(
+                                               const.kind, "string"))
                 else:
-                    scalar = self._typed(
-                        F.get_json_object(F.col(self.json_column),
-                                          f"$['{exp.key}']"),
-                        "json", const)
-                e = e | (scalar == F.lit(const.value))
-            return ~e if exp.negated else e
-        col = F.col(mk.column)
-        if mk.is_array:
-            e = F.array_contains(col, F.lit(const.value))
-        elif mk.is_map:
-            e = F.array_contains(F.map_values(col), F.lit(const.value))
-        elif mk.mtype == "str" and const.kind == "str":
-            # scalar string: substring-search semantics (mql10.py:1094-1127)
-            e = col.rlike(str(const.value))
+                    scalar = self._typed(self._json(_path(exp.key)),
+                                         "json", const)
+                e = f"({e} OR ({scalar} = {value}))"
         else:
-            e = col == F.lit(const.value)
-        return ~e if exp.negated else e
+            col = ident(mk.column)
+            if mk.is_array:
+                e = f"array_contains({col}, {value})"
+            elif mk.is_map:
+                e = f"array_contains(map_values({col}), {value})"
+            elif mk.mtype == "str" and const.kind == "str":
+                # scalar string: substring-search semantics
+                # (mql10.py:1094-1127)
+                e = f"({col} RLIKE {lit(str(const.value))})"
+            else:
+                e = f"({col} = {value})"
+        return f"(NOT {e})" if exp.negated else e

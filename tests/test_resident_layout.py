@@ -1,9 +1,10 @@
 """Resident layout: the file-keyed resident tables (``files`` on id,
-``files_datasets`` on file_id, ``parent_child`` on child_id) are
-hash-partitioned and sorted on their key, declared on the checkpoint,
-so served membership, predicate+limit, page, count and set-algebra
-reads plan with no Exchange and run as one Spark job — on the fixture
-catalog, after DML writes and after a durable restart."""
+``files_datasets`` on file_id, ``parent_child`` on child_id, and at one
+partition on parent_id too) are hash-partitioned and sorted on their
+key, declared on the checkpoint, so served membership, predicate+limit,
+page, count, set-algebra and parents/children reads plan with no
+Exchange and run as one Spark job — on the fixture catalog, after DML
+writes and after a durable restart."""
 
 import re
 
@@ -30,15 +31,32 @@ READS = {
     "count": (f"files from {D} where core.run > 100", {"summary": "count"}),
     "setop": (f"union(files from {D}, files from {D2}) - files from {D3}",
               {}),
+    "parents": (f"parents(files from {D} where core.run in 100:300)", {}),
+    "children": (f"children(files from {D})", {}),
 }
 
 
 def _layout(df):
-    """(key, n) of the hash partitioning ``df``'s physical plan reports."""
+    """(key, n) of the hash partitioning ``df``'s physical plan reports,
+    or a tuple of them for a collection of hash partitionings."""
     part = (df._jdf.queryExecution().executedPlan().outputPartitioning()
             .toString())
-    m = re.fullmatch(r"hashpartitioning\((\w+)#\d+, (\d+)\)", part)
-    return (m.group(1), int(m.group(2))) if m else part
+    parts = part[1:-1].split(" or ") if part.startswith("(") else [part]
+    found = [re.fullmatch(r"hashpartitioning\((\w+)#\d+, (\d+)\)", p)
+             for p in parts]
+    if not all(found):
+        return part
+    layouts = tuple((m.group(1), int(m.group(2))) for m in found)
+    return layouts[0] if len(layouts) == 1 else layouts
+
+
+def _expected_layouts(n: int) -> dict:
+    """Each table on its key in n partitions; at n = 1 parent_child also
+    declares parent_id."""
+    want = {name: (key, n) for name, key in FILE_KEYS.items()}
+    if n == 1:
+        want["parent_child"] = (("child_id", 1), ("parent_id", 1))
+    return want
 
 
 def _misplaced(df, key: str, n: int) -> int:
@@ -60,8 +78,7 @@ def _plan(cat, shape: str) -> str:
 
 def _assert_laid_out(cat):
     layouts = {name: _layout(getattr(cat, name)) for name in FILE_KEYS}
-    assert layouts == {name: (key, cat.partitions)
-                       for name, key in FILE_KEYS.items()}, layouts
+    assert layouts == _expected_layouts(cat.partitions), layouts
     for name, key in FILE_KEYS.items():
         assert _misplaced(getattr(cat, name), key, cat.partitions) == 0, name
     for shape in READS:
@@ -76,10 +93,11 @@ def cat(spark):
 
 def test_fixture_tables_share_one_layout(cat):
     """The three tables report hashpartitioning(<key>, n) with the
-    catalog's one n: 1 at this scale."""
+    catalog's one n: 1 at this scale, where parent_child reports
+    parent_id as well."""
     assert cat.partitions == 1
-    for name, key in FILE_KEYS.items():
-        assert _layout(getattr(cat, name)) == (key, 1), name
+    for name, want in _expected_layouts(1).items():
+        assert _layout(getattr(cat, name)) == want, name
 
 
 @pytest.mark.parametrize("shape", sorted(READS))

@@ -108,6 +108,9 @@ def test_explain_endpoint(served):
                 query="files from dune:urgent_0 where core.run > 5",
                 explain="yes").read().decode()
     assert "MQL AST" in text and "Spark plan" in text
+    # the one SQL statement the query compiled to, between the two
+    sql = text.split("-- Spark SQL --\n", 1)[1].split("-- Spark plan --")[0]
+    assert sql.startswith("SELECT ") and "`m_core_run` > 5" in sql, text
     # the fixture catalog's files are resident: the predicate filters
     # the cached rows instead of pushing down into a parquet scan
     assert "Scan ExistingRDD" in text

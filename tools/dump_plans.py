@@ -4,11 +4,11 @@ queries over the bucketed warehouse tables, with the properties each
 plan is expected to exhibit. Run: python tools/dump_plans.py
 
 ``python tools/dump_plans.py --served OUT_DIR TAG`` instead writes the
-executed plan of each served read class (the perfbench read_mix
-request shapes, built as the server builds them) over a ``from_tpch``
-catalog to ``OUT_DIR/<class>_<TAG>.txt``; run it in two checkouts to
-compare their plans (``SPARK_GRAFT_SF_DIR`` picks the testdata, as
-for the full dump)."""
+Spark SQL each served read class compiles to (the perfbench read_mix
+request shapes, built as the server builds them) and its executed plan
+over a ``from_tpch`` catalog to ``OUT_DIR/<class>_<TAG>.txt``; run it
+in two checkouts to compare their plans (``SPARK_GRAFT_SF_DIR`` picks
+the testdata, as for the full dump)."""
 
 import os
 import sys
@@ -84,17 +84,22 @@ def served_plans(out_dir: str, tag: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
     for cls, mql, opts in SERVED_CASES:
         if mql is None:
+            sql = "(a point lookup on the files table, not an MQL query)"
             df = (cat.files.where(F.col("id") == ids[0])
                   .select(*_RECORD_COLUMNS, "metadata"))
         else:
             opts = {k: v.format(**names) if isinstance(v, str) else v
                     for k, v in opts.items()}
-            df = eng.query(mql.format(**names), **opts)
+            text = mql.format(**names)
+            sql = eng.explain(text, **opts).split("-- Spark SQL --\n")[1] \
+                .split("\n\n-- Spark plan --")[0]
+            df = eng.query(text, **opts)
         df.collect()        # the executed (final adaptive) plan
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
         with open(os.path.join(out_dir, f"{cls}_{tag}.txt"), "w") as f:
-            f.write(plan.strip() + "\n")
+            f.write(f"-- Spark SQL --\n{sql}\n\n-- Spark plan --\n"
+                    f"{plan.strip()}\n")
     print(f"wrote {len(SERVED_CASES)} plans to {out_dir}")
     spark.stop()
 
