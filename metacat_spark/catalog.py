@@ -39,11 +39,6 @@ RAW_TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 # and sorted on it (``resident``).
 FILE_KEYS = {"files": "id", "files_datasets": "file_id",
              "parent_child": "child_id"}
-# In one partition a table's rows are hash-placed on every column, so
-# a one-partition table also declares the other file-id column its
-# joins meet on: parent_child's parent_id, for the parents and
-# children hops.
-_ALSO_AT_ONE = {"child_id": "parent_id"}
 
 
 @dataclass(frozen=True, eq=False)
@@ -498,11 +493,11 @@ def _jvm_class(spark: SparkSession, name: str):
 
 def _declare(checkpoint: DataFrame, key: str, n: int) -> DataFrame:
     """``checkpoint`` (a fresh localCheckpoint whose rows are laid out)
-    declaring ``HashPartitioning(key, n)`` and ascending
-    ``key`` order on its LogicalRDD; at n = 1 a table with a second
-    file-id column (``_ALSO_AT_ONE``) declares the collection of both
-    hash partitionings. Under AQE the checkpoint records
-    no partitioning of its own (the adaptive plan declares none), and
+    declaring ``HashPartitioning(key, n)`` and ascending ``key`` order
+    on its LogicalRDD. One partition is hash-placed on every column, so
+    at n = 1 parent_child also declares ``parent_id``, for the parents
+    and children hops. Under AQE the checkpoint records no partitioning
+    of its own (the adaptive plan declares none), and
     ``repartition(1, key)`` reports SinglePartition, which a join
     cannot reuse; so the layout is built here from the key alone,
     without planning the input. The declared table drops the size
@@ -520,16 +515,19 @@ def _declare(checkpoint: DataFrame, key: str, n: int) -> DataFrame:
 
     rel = checkpoint._jdf.queryExecution().analyzed()
     out = rel.output()
-    keys = [key] + ([_ALSO_AT_ONE[key]] if n == 1 and key in _ALSO_AT_ONE
-                    else [])
-    attrs = [next(a for a in (out.apply(i) for i in range(out.size()))
-                  if a.name() == k) for k in keys]
-    hashed = [scala("catalyst.plans.physical.HashPartitioning")(
-        seq([a]), n) for a in attrs]
-    partitioning = hashed[0] if len(hashed) == 1 else scala(
-        "catalyst.plans.physical.PartitioningCollection")(seq(hashed))
+    def hashed(name: str):
+        attr = next(a for a in (out.apply(i) for i in range(out.size()))
+                    if a.name() == name)
+        return attr, scala("catalyst.plans.physical.HashPartitioning")(
+            seq([attr]), n)
+
+    attr, partitioning = hashed(key)
+    if n == 1 and key == "child_id":
+        partitioning = scala(
+            "catalyst.plans.physical.PartitioningCollection")(seq([
+                partitioning, hashed("parent_id")[1]]))
     order = scala("catalyst.expressions.SortOrder")(
-        attrs[0], singleton("Ascending"), singleton("NullsFirst"), seq([]))
+        attr, singleton("Ascending"), singleton("NullsFirst"), seq([]))
     args = rel.otherCopyArgs()
     laid_out = rel.copy(out, rel.rdd(), partitioning, seq([order]),
                         rel.isStreaming(), rel.stream(), args.apply(0),

@@ -32,6 +32,8 @@ Semantics preserved from the reference:
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
+from contextvars import ContextVar
 from functools import reduce
 from typing import Optional
 
@@ -53,6 +55,12 @@ _DATASET_COLUMNS = ["namespace", "name", "frozen", "monotonic", "creator",
                     "description", "created_timestamp"]
 _QUERY_COLUMNS = ["namespace", "name", "source", "creator", "description"]
 _SAME_DATASET = "l.{0}namespace = r.namespace AND l.{0}name = r.name"
+
+# the temporaries (recursive closures, filter outputs) that the query
+# being compiled in this context has bound. A collected DataFrame's
+# view is dropped at the next bind, this query's or another's, so they
+# are held until the query's text has been analysed.
+_TEMPS: ContextVar[list] = ContextVar("metacat_query_temps")
 
 
 class QueryError(Exception):
@@ -129,7 +137,7 @@ class Engine:
         for reference parity. Page through by passing the last row's
         id back as the next ``after_id``.
         """
-        with self.cat.pin():  # every table read from one state
+        with self._compiling():
             top = parse(text, default_namespace=default_namespace)
             return self._plan(top, with_meta, with_provenance, summary,
                               include_retired, after_id, page_size)[1]
@@ -139,7 +147,7 @@ class Engine:
         """MQL AST, the compiled Spark SQL and the Spark physical plan
         (parity with `metacat query -x`,
         metacat/ui/metacat_query.py:64-84)."""
-        with self.cat.pin():
+        with self._compiling():
             top = parse(text, default_namespace=default_namespace)
             sql, df = self._plan(top, **kw)
         plan = df._jdf.queryExecution().explainString(
@@ -185,9 +193,26 @@ class Engine:
             raise QueryError(f"unsupported query {top!r}")
         return sql, self.spark.sql(sql)
 
+    @contextmanager
+    def _compiling(self):
+        """Compile and analyse one query: every table read from one
+        pinned state, and its temporaries held until the block exits."""
+        token = _TEMPS.set([])
+        try:
+            with self.cat.pin():
+                yield
+        finally:
+            _TEMPS.reset(token)
+
     def _table(self, name: str) -> str:
         """The view name of the pinned state's table ``name``."""
         return self.cat.views.bind(getattr(self.cat, name))
+
+    def _temp(self, df: DataFrame) -> str:
+        """The view name of ``df``, a temporary of the query being
+        compiled."""
+        _TEMPS.get().append(df)
+        return self.cat.views.bind(df)
 
     # ------------------------------------------------------- file queries
     def _fq(self, node, include_retired: bool, stack: tuple = ()) -> str:
@@ -273,7 +298,7 @@ class Engine:
             from .filters import run_filter
             out = run_filter(self, node.name, node.params, node.kwparams,
                              [self.spark.sql(fq(c)) for c in node.children])
-            return f"SELECT * FROM {self.cat.views.bind(out)}"
+            return f"SELECT * FROM {self._temp(out)}"
 
         raise QueryError(f"cannot translate {node!r}")
 
@@ -392,8 +417,9 @@ class Engine:
     def with_provenance(self, files: DataFrame) -> DataFrame:
         """``files`` plus each file's ``parents`` and ``children`` id
         lists (null when it has none)."""
-        return self.spark.sql(self._provenance(
-            f"SELECT * FROM {self.cat.views.bind(files)}"))
+        with self.cat.pin():  # holds the parent_child it binds
+            return self.spark.sql(self._provenance(
+                f"SELECT * FROM {self.cat.views.bind(files)}"))
 
     # -------------------------------------------------- dataset selection
     @staticmethod
@@ -452,7 +478,7 @@ class Engine:
         if not recursively:
             return _union([seed, step(seed)])
         # transitive closure: frontier loop with visited-set cycle guard
-        sql, view = self.spark.sql, self.cat.views.bind
+        sql, view = self.spark.sql, self._temp
         acc = sql(f"SELECT DISTINCT * FROM ({seed})").localCheckpoint()
         frontier = acc
         while True:
@@ -752,5 +778,5 @@ class Engine:
         top = parse(text, default_namespace=default_namespace)
         if not isinstance(top, FileQuery):
             raise QueryError("file_set() requires a file query")
-        with self.cat.pin():
+        with self._compiling():
             return self.spark.sql(self._fq(top.tree, include_retired))

@@ -205,3 +205,56 @@ def test_concurrent_binds_name_each_table_once(spark):
     shown = {r["viewName"] for r in spark.sql("SHOW VIEWS").collect()
              if r["viewName"].startswith(views.prefix)}
     assert shown == {n.strip("`") for n in got[0]}
+
+
+def _keys(df) -> set:
+    """The file ids, else the (namespace, name) pairs, of ``df``'s rows."""
+    cols = ["id"] if "id" in df.columns else ["namespace", "name"]
+    return {tuple(r[c] for c in cols) for r in df.collect()}
+
+
+_CLOSURE = "files from test:all with subsets recursively"
+
+
+# each query binds a table after one of its temporaries (a recursive
+# closure, a filter output): the provenance join, a union's next
+# branch, a second recursive selector's edges table
+@pytest.mark.parametrize("mql, parts, opts", [
+    (_CLOSURE, [_CLOSURE], {"with_provenance": True}),
+    ("union(filter limit(3)(files from dune:urgent_0), "
+     "files from dune:urgent_1)",
+     ["filter limit(3)(files from dune:urgent_0)",
+      "files from dune:urgent_1"], {}),
+    ("datasets test:all with subsets recursively, dune:urgent_0 with subsets",
+     ["datasets test:all with subsets recursively",
+      "datasets dune:urgent_0 with subsets"], {}),
+    (f"union({_CLOSURE}, files from dune:urgent_0)",
+     [_CLOSURE, "files from dune:urgent_0"], {}),
+], ids=["provenance", "filter-in-union", "two-closures", "closure-in-union"])
+def test_temporaries_outlive_later_binds(spark, cat, mql, parts, opts):
+    eng = Engine(cat)
+    got = _keys(eng.query(mql, **opts))
+    assert got == set().union(*(_keys(eng.query(p)) for p in parts))
+
+
+def test_temporaries_survive_another_requests_bind(spark, cat, monkeypatch):
+    """Another request's bind can land between a query's compile and
+    its one spark.sql, after its temporaries' last Python references
+    are gone; the query still reads them."""
+    eng = Engine(cat)
+    want = _keys(eng.query(_CLOSURE))
+    sql = spark.sql
+
+    class BindFirst:
+        def sql(self, text):
+            gc.collect()
+            cat.views.bind(spark.range(1))   # drops the queued views
+            return sql(text)
+
+        def __getattr__(self, name):
+            return getattr(spark, name)
+
+    monkeypatch.setattr(eng, "spark", BindFirst())
+    assert _keys(eng.query(_CLOSURE)) == want
+    assert ("test", "all") in _keys(eng.query(
+        "datasets test:all with subsets recursively"))
