@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import collections
 import itertools
+import json
 import secrets
 import threading
 import weakref
@@ -60,7 +61,7 @@ class CatalogState:
     namespaces: DataFrame
     queries_tbl: DataFrame
     # reference parameter_categories table (schema.sql:162-176); DML
-    # loads validation rules from here. None = DEFAULT_CATEGORIES.
+    # validates against the rules here. None = DEFAULT_CATEGORIES.
     parameter_categories: Optional[DataFrame] = None
     ids_unique: Optional[bool] = None
 
@@ -241,6 +242,23 @@ def _meta_json_column(schema: MetaSchema) -> F.Column:
     ]))
 
 
+def with_requirements(datasets: DataFrame,
+                      requirements: Optional[dict] = None) -> DataFrame:
+    """``datasets`` with its ``file_metadata_requirements`` column: the
+    metadata every file joining the dataset must satisfy, as a JSON
+    string (null = none; dbobjects2.py:1577-1597). A table without the
+    column gets ``requirements`` (``{"namespace\\tname": dict}``, the
+    form older durable roots kept them in), else nulls."""
+    if "file_metadata_requirements" in datasets.columns:
+        return datasets
+    col = F.lit(None).cast("string")
+    if requirements:
+        col = F.create_map(*[F.lit(x) for k, v in requirements.items()
+                             for x in (k, json.dumps(v))])[
+            F.concat_ws("\t", "namespace", "name")]
+    return datasets.withColumn("file_metadata_requirements", col)
+
+
 def from_dataframes(spark: SparkSession, files: DataFrame,
                     files_datasets: DataFrame,
                     parent_child: Optional[DataFrame] = None,
@@ -261,21 +279,20 @@ def from_dataframes(spark: SparkSession, files: DataFrame,
         return local_rows(spark, [], T.StructType(
             [T.StructField(c, T.StringType()) for c in cols]))
 
+    if datasets is None:
+        datasets = files_datasets.select(
+            F.col("dataset_namespace").alias("namespace"),
+            F.col("dataset_name").alias("name")).distinct().withColumns({
+                "frozen": F.lit(False), "monotonic": F.lit(False),
+                "creator": F.lit(None).cast("string"),
+                "description": F.lit(None).cast("string"),
+                "created_timestamp": F.lit(None).cast("timestamp"),
+                "metadata": F.lit("{}")})
     return Catalog(spark, CatalogState(
         0, files, files_datasets,
         parent_child if parent_child is not None
         else _empty(["parent_id", "child_id"]),
-        datasets if datasets is not None
-        else files_datasets.select(
-            F.col("dataset_namespace").alias("namespace"),
-            F.col("dataset_name").alias("name")).distinct()
-            .withColumns({"frozen": F.lit(False),
-                          "monotonic": F.lit(False),
-                          "creator": F.lit(None).cast("string"),
-                          "description": F.lit(None).cast("string"),
-                          "created_timestamp":
-                              F.lit(None).cast("timestamp"),
-                          "metadata": F.lit("{}")}),
+        with_requirements(datasets),
         datasets_parent_child if datasets_parent_child is not None
         else _empty(["parent_namespace", "parent_name",
                      "child_namespace", "child_name"]),
@@ -648,6 +665,6 @@ def _fixture_catalog(spark: SparkSession, raw: dict, files: DataFrame,
     from .validation import CATEGORY_COLUMNS, category_rows
     param_cats = local_rows(spark, category_rows(), CATEGORY_COLUMNS)
     return Catalog(spark, CatalogState(
-        0, files, files_datasets, parent_child, datasets, ds_pc,
-        namespaces, queries_tbl, param_cats, ids_unique), raw=raw,
+        0, files, files_datasets, parent_child, with_requirements(datasets),
+        ds_pc, namespaces, queries_tbl, param_cats, ids_unique), raw=raw,
         partitions=partitions)

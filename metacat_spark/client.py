@@ -72,6 +72,38 @@ class MetaCatSparkClient:
         to DML internals; the reference pays the same double cost
         (query then add_files round-trips), and the DML path is not
         a hot path here."""
+        df = self._result(mql, with_metadata, with_provenance, summary,
+                          include_retired_files, namespace, save_as,
+                          add_to, after_id, page_size)
+        return [self._row_to_dict(r) for r in df.collect()]
+
+    def query_iter(self, mql: str, with_metadata: bool = False,
+                   with_provenance: bool = False,
+                   summary: Optional[str] = None,
+                   include_retired_files: bool = False,
+                   namespace: Optional[str] = None,
+                   save_as: Optional[str] = None,
+                   add_to: Optional[str] = None,
+                   after_id: Optional[str] = None,
+                   page_size: Optional[int] = None) -> Iterator[dict]:
+        """Streaming variant of query() with its keywords (json-seq
+        equivalent): lazy partition-wise iteration, no full
+        materialization on the driver. The plan is built on one pinned
+        catalog state, and the stream keeps reading that plan whatever
+        publishes later."""
+        df = self._result(mql, with_metadata, with_provenance, summary,
+                          include_retired_files, namespace, save_as,
+                          add_to, after_id, page_size)
+        for r in df.toLocalIterator():
+            yield self._row_to_dict(r)
+
+    def _result(self, mql: str, with_metadata: bool, with_provenance: bool,
+                summary: Optional[str], include_retired_files: bool,
+                namespace: Optional[str], save_as: Optional[str],
+                add_to: Optional[str], after_id: Optional[str],
+                page_size: Optional[int]):
+        """The result DataFrame of query()/query_iter(), planned on one
+        pinned catalog state, after the save_as/add_to sinks ran."""
         with self.catalog.pin():
             df = self.engine.query(mql, with_meta=with_metadata,
                                    with_provenance=with_provenance,
@@ -81,30 +113,7 @@ class MetaCatSparkClient:
                                    after_id=after_id, page_size=page_size)
             self._materialize(mql, save_as, add_to, include_retired_files,
                               namespace)
-        return [self._row_to_dict(r) for r in df.collect()]
-
-    def query_iter(self, mql: str, **kw) -> Iterator[dict]:
-        """Streaming variant (json-seq equivalent): lazy partition-wise
-        iteration, no full materialization on the driver.  Honors the
-        same summary/save_as/add_to keywords as query() — silently
-        dropping them would stream a full row dump where the caller
-        asked for a count, and lose materialization without a signal
-        (review r6). The plan is built on one pinned catalog state, and
-        the stream keeps reading that plan whatever publishes later."""
-        with self.catalog.pin():
-            df = self.engine.query(
-                mql, with_meta=kw.get("with_metadata", False),
-                with_provenance=kw.get("with_provenance", False),
-                summary=kw.get("summary"),
-                include_retired=kw.get("include_retired_files", False),
-                default_namespace=kw.get("namespace"),
-                after_id=kw.get("after_id"),
-                page_size=kw.get("page_size"))
-            self._materialize(mql, kw.get("save_as"), kw.get("add_to"),
-                              kw.get("include_retired_files", False),
-                              kw.get("namespace"))
-        for r in df.toLocalIterator():
-            yield self._row_to_dict(r)
+        return df
 
     def _materialize(self, mql: str, save_as: Optional[str],
                      add_to: Optional[str], include_retired: bool,

@@ -26,6 +26,7 @@ it did not add.
 from __future__ import annotations
 
 import json
+import weakref
 from datetime import datetime, timezone
 from typing import Optional
 
@@ -107,21 +108,26 @@ class AlreadyExists(DMLError):
     pass
 
 
-def _load_categories(catalog: Catalog) -> dict:
-    """Validation rules come from the catalog's parameter_categories
-    table (reference schema.sql:162-176), not a hard-coded dict —
-    a deployment declares its own categories as catalog state. The
-    table is tiny (one row per category); a driver collect is the
-    right plan."""
-    if catalog.parameter_categories is None:
+# parsed rules per parameter_categories table object; a table never
+# changes, so each is collected once however many writes read it
+_RULES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _rules(table: Optional[DataFrame]) -> dict:
+    """The validation rules of a parameter_categories table (reference
+    schema.sql:162-176), not a hard-coded dict — a deployment declares
+    its own categories as catalog state. The table is tiny (one row per
+    category); a driver collect is the right plan. None (a catalog
+    without the table) = DEFAULT_CATEGORIES."""
+    if table is None:
         return DEFAULT_CATEGORIES
-    out = {}
-    for r in catalog.parameter_categories.collect():
-        out[r["path"]] = {
-            "restricted": bool(r["restricted"]),
-            "definitions": json.loads(r["definitions"] or "{}"),
-        }
-    return out
+    rules = _RULES.get(table)
+    if rules is None:
+        rules = _RULES[table] = {
+            r["path"]: {"restricted": bool(r["restricted"]),
+                        "definitions": json.loads(r["definitions"] or "{}")}
+            for r in table.collect()}
+    return rules
 
 
 def _locked(fn):
@@ -171,26 +177,19 @@ def _locked(fn):
 
 
 class DML:
-    def __init__(self, catalog: Catalog, categories: Optional[dict] = None,
-                 store=None):
+    def __init__(self, catalog: Catalog, store=None):
         """``store``: a durable.DurableStore (or None for the default
         session-state mode). With a store, every mutation also appends
         its delta to the store's commit log — see durable.py for the
         persistence model and docs/DIVERGENCES.md for the contract.
         The store does NOT attach committed state to the catalog here;
         call store.attach(catalog) before constructing the DML when
-        restoring (client/CLI/server do)."""
+        restoring (client/CLI/server do). A DML holds no catalog state:
+        every rule a write enforces (validation categories, dataset
+        flags and requirements) is read from the state it drafts on."""
         self._store = store
         self._pending: list = []
         self.cat = catalog
-        self.categories = (_load_categories(catalog)
-                           if categories is None else categories)
-        # dataset-level metadata requirements
-        # (files must satisfy them to join — dbobjects2.py:1577-1597)
-        self.dataset_requirements: dict[tuple[str, str], dict] = {}
-        if store is not None:
-            self.dataset_requirements.update(
-                store.dataset_requirements())
 
     def _journal(self, kind: str, table: str, df: DataFrame) -> None:
         """Buffer one journal op (no-op without a store); flushed as a
@@ -204,7 +203,7 @@ class DML:
             return
         ops, self._pending = self._pending, []
         try:
-            self._store.commit(ops, dml_meta=self._dml_meta())
+            self._store.commit(ops)
         except BaseException as e:
             # re-buffer so a LATER successful mutation's flush carries
             # these ops — without this the session keeps the mutation
@@ -220,25 +219,24 @@ class DML:
                            "last commit")
             raise
 
-    def _dml_meta(self) -> dict:
-        return {"dataset_requirements": {
-            f"{ns}\t{name}": reqs for (ns, name), reqs
-            in self.dataset_requirements.items()}}
-
     def _dataset(self, ns: str, name: str) -> Optional[Row]:
-        """The dataset's (frozen, monotonic) flags; None if it does
-        not exist. One probe both checks existence and reads policy."""
+        """The dataset's (frozen, monotonic, file_metadata_requirements)
+        policy; None if it does not exist. One probe both checks
+        existence and reads policy."""
         return point_row(self.cat.datasets.where(
             (F.col("namespace") == ns) & (F.col("name") == name))
-            .select("frozen", "monotonic"))
+            .select("frozen", "monotonic", "file_metadata_requirements"))
 
-    def _check_writable(self, ns: str, name: str) -> None:
-        """Raise unless the dataset exists and is not frozen."""
+    def _check_writable(self, ns: str, name: str) -> Optional[dict]:
+        """Raise unless the dataset exists and is not frozen; return the
+        metadata requirements its files must satisfy (None if none)."""
         ds = self._dataset(ns, name)
         if ds is None:
             raise DMLError(f"dataset {ns}:{name} not found")
         if ds["frozen"]:
             raise DMLError(f"dataset {ns}:{name} is frozen")
+        reqs = ds["file_metadata_requirements"]
+        return json.loads(reqs) if reqs else None
 
     def _rows(self, rows: list, schema: T.StructType) -> DataFrame:
         """A request's rows as one single-partition local relation, so
@@ -279,10 +277,14 @@ class DML:
     # ------------------------------------------------------- validation
     def validate(self, metadata: dict,
                  extra_requirements: Optional[dict] = None) -> None:
+        """Check ``metadata`` against the parameter categories of the
+        state this call reads (a writer's draft, a request's pin, else
+        the published state), then against ``extra_requirements``."""
+        categories = _rules(self.cat.parameter_categories)
         errors = []
         for key in metadata:
             cat = category_of(key)
-            spec = self.categories.get(cat)
+            spec = categories.get(cat)
             if spec is None:
                 continue  # uncategorized keys are unrestricted
             errs = validate_metadata(spec["definitions"],
@@ -291,7 +293,7 @@ class DML:
             errors.extend(e for e in errs
                           if e[1] != "required parameter is missing")
         # category-level required keys
-        for cat, spec in self.categories.items():
+        for cat, spec in categories.items():
             for key, d in spec["definitions"].items():
                 if d.get("required") and any(
                         k.startswith(cat + ".") for k in metadata) \
@@ -321,12 +323,13 @@ class DML:
         if dup:
             raise AlreadyExists(f"file id(s) already declared: "
                                 f"{sorted(dup)[:5]}")
+        reqs = None
         if dataset is not None:
             # target-dataset checks BEFORE any mutation: declaring
             # into a missing/frozen dataset must fail atomically, not
             # after the file rows and edges were already appended
             # (review r6)
-            self._check_writable(*dataset)
+            reqs = self._check_writable(*dataset)
         # parent-id FK check BEFORE any mutation (review r8): the
         # old post-append check left the appended file rows in
         # session state when a parent was missing. Intra-batch
@@ -335,8 +338,6 @@ class DML:
                                for p in (r.get("parents") or [])}
                               - set(ids))
         self._check_fids_exist(out_of_batch, "parent")
-        reqs = (self.dataset_requirements.get(dataset)
-                if dataset else None)
         files = self.cat.files
         # the reference schema defaults created_timestamp to now()
         # (schema.sql files table): one driver timestamp per batch, so
@@ -402,8 +403,7 @@ class DML:
         if not _skip_exist_check:
             # dataset and file ids must exist (FK semantics,
             # schema.sql:96-104)
-            self._check_writable(ns, name)
-            reqs = self.dataset_requirements.get((ns, name))
+            reqs = self._check_writable(ns, name)
             found = {r["id"]: r for r in self.cat.files
                      .where(F.col("id").isin(want))
                      .select("id", *(["metadata"] if reqs else []))
@@ -442,7 +442,7 @@ class DML:
     @_locked
     def remove_files_from_dataset(self, file_ids: list[str], ns: str,
                                   name: str) -> None:
-        frozen, monotonic = self._dataset(ns, name) or (False, False)
+        frozen, monotonic, _ = self._dataset(ns, name) or (False,) * 3
         if frozen:
             raise DMLError(f"dataset {ns}:{name} is frozen")
         if monotonic:
@@ -757,13 +757,12 @@ class DML:
             monotonic=monotonic, creator=creator,
             description=description,
             created_timestamp=datetime.now(timezone.utc),
-            metadata=json.dumps(metadata or {}))))
-        self._journal("snapshot", "datasets", self.cat.datasets)
-        if file_meta_requirements:
+            metadata=json.dumps(metadata or {}),
             # enforced on add_files_to_dataset / declare-into-dataset
-            # (this-instance cache)
-            self.dataset_requirements[(ns, name)] = \
-                file_meta_requirements
+            file_metadata_requirements=(json.dumps(file_meta_requirements)
+                                        if file_meta_requirements
+                                        else None))))
+        self._journal("snapshot", "datasets", self.cat.datasets)
 
     @_locked
     def remove_dataset(self, ns: str, name: str) -> None:
@@ -774,7 +773,6 @@ class DML:
         hit = ((F.col("namespace") == ns) & (F.col("name") == name))
         if self._dataset(ns, name) is None:
             raise DMLError(f"dataset {ns}:{name} not found")
-        self.dataset_requirements.pop((ns, name), None)
         fd_before = self.cat.files_datasets
         dpc = self.cat.datasets_parent_child
         self._restage(
@@ -869,10 +867,6 @@ class DML:
             creator=creator)))
         self._journal("snapshot", "parameter_categories",
                       self.cat.parameter_categories)
-        self.categories[path] = {
-            "restricted": restricted,
-            "definitions": definitions or {},
-        }
 
     @_locked
     def create_namespace(self, name: str, owner: str = "admin") -> None:
@@ -905,7 +899,7 @@ class DML:
         """Append a query result's files to an existing dataset
         (data_handler.py:1368-1370) — distributed append, no driver
         loop."""
-        frozen, _ = self._dataset(ns, name) or (False, False)
+        frozen, _, _ = self._dataset(ns, name) or (False,) * 3
         if frozen:
             raise DMLError(f"dataset {ns}:{name} is frozen")
         return self._add_result(result, ns, name)

@@ -34,6 +34,14 @@ Two persistence strategies, chosen per table by its size class:
   per dataset/namespace/query/category, small by construction): each
   mutation rewrites the full table; O(table) is O(tiny).
 
+The log holds catalog tables and nothing else: the write rules DML
+enforces are table rows too — validation categories in
+``parameter_categories``, each dataset's frozen/monotonic flags and
+file metadata requirements in ``datasets``. (Roots written before the
+requirements became a ``datasets`` column kept them in the manifest's
+``dml_meta``; ``attach`` still reads that, and the next ``datasets``
+snapshot drops it.)
+
 Restore (``DurableStore.attach``) rebuilds each journaled table as::
 
     base  ANTI-JOIN  latest-journal-keys
@@ -72,6 +80,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .catalog import with_requirements
 
 # latest-wins journal key per journaled table (the reference's PKs,
 # schema.sql:45-104)
@@ -146,8 +156,7 @@ class DurableStore:
         self.at = at
         self._create_if_absent = create_if_absent
         self.manifest = self._read_current() or {
-            "commit": 0, "seq": 0,
-            "tables": {}, "dml_meta": {}}
+            "commit": 0, "seq": 0, "tables": {}}
         if at is not None and self.manifest["commit"] != at:
             raise ValueError(
                 f"no commit {at} at {self.root} (latest parseable "
@@ -379,8 +388,7 @@ class DurableStore:
         self.manifest = manifest
 
     # ----------------------------------------------------------- commit
-    def commit(self, ops: list[tuple[str, str, DataFrame]],
-               dml_meta: Optional[dict] = None) -> None:
+    def commit(self, ops: list[tuple[str, str, DataFrame]]) -> None:
         """Persist one mutation's journal: ``ops`` is an ordered list
         of ("upsert"|"delete"|"snapshot", table, DataFrame). Segments
         are written first (unreferenced until the manifest lands),
@@ -416,6 +424,10 @@ class DurableStore:
                     tables[table] = {"snapshot": rel, "segments": []}
                 else:
                     tables[table] = {"snapshot": rel}
+                if table == "datasets":
+                    # the snapshot carries the requirements column, so
+                    # an older root's copy of them is no longer read
+                    m.pop("dml_meta", None)
                 continue
             if table not in TABLE_KEYS:
                 raise ValueError(
@@ -428,8 +440,6 @@ class DurableStore:
                 table, {"snapshot": None, "segments": []})
             entry["segments"].append(
                 {"path": rel, "kind": kind, "seq": m["seq"]})
-        if dml_meta is not None:
-            m["dml_meta"] = dml_meta
         self._write_manifest(m)
 
     # ---------------------------------------------------------- restore
@@ -472,7 +482,9 @@ class DurableStore:
         reconstruction, snapshot tables are replaced outright, and each
         table so restored is made resident (the journaled ones laid out
         on their file-id keys again). The restored tables publish
-        as one catalog version numbered by the manifest's commit.
+        as one catalog version numbered by the manifest's commit. A
+        ``datasets`` snapshot without the requirements column (an
+        older root) gets it from the manifest's ``dml_meta``.
 
         Time-travel attaches preflight-check that every referenced
         data directory still exists: ``compact()`` deletes superseded
@@ -499,6 +511,12 @@ class DurableStore:
             else:
                 new = self.spark.read.parquet(
                     f"{self.root}/{entry['snapshot']}")
+            if table == "datasets":
+                # a root written before datasets carried the column
+                # kept the requirements in the manifest's dml_meta
+                new = with_requirements(new, (
+                    self.manifest.get("dml_meta") or {}).get(
+                        "dataset_requirements"))
             # resident: the journal window runs once, not per request
             tables[table] = catalog.resident(table, new)
         # a restored files table has ids_unique unknown: journal upserts
@@ -527,14 +545,6 @@ class DurableStore:
             })
         return out
 
-    def dataset_requirements(self) -> dict:
-        """The DML instance's dataset-level file_meta_requirements —
-        not derivable from any catalog table, so it rides in the
-        manifest (tiny: one dict per requiring dataset)."""
-        raw = (self.manifest.get("dml_meta") or {}).get(
-            "dataset_requirements", {})
-        return {tuple(k.split("\t", 1)): v for k, v in raw.items()}
-
     # --------------------------------------------------------- compact
     def compact(self, catalog) -> None:
         """Fold base+journal into fresh full snapshots and truncate the
@@ -559,7 +569,7 @@ class DurableStore:
                for t in self.manifest.get("tables") or {}]
         if not ops:
             return
-        self.commit(ops, dml_meta=self.manifest.get("dml_meta"))
+        self.commit(ops)
         # re-point the live catalog at the new snapshots BEFORE
         # deleting the old segment dirs — the pre-compact DataFrames
         # may still plan over them (localCheckpoint blocks are not

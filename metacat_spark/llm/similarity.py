@@ -11,8 +11,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -20,10 +18,8 @@ from .util import plan_size_bytes as _plan_size_bytes
 from .util import stream_parquet
 
 # source bytes per Arrow-stage task (see _prep): ~4 MB ≈ thousands of
-# vectors per task, far past the per-task Python overhead break-even;
-# env-tunable for cluster profiles where the fixed cost differs
-_VEC_TASK_BYTES = int(os.environ.get("SPARK_GRAFT_VEC_TASK_BYTES",
-                                     str(4 << 20)))
+# vectors per task, far past the per-task Python overhead break-even
+_VEC_TASK_BYTES = 4 << 20
 
 # ivf_pq_search fused-path budget (r16): total bytes of query rows
 # AFTER replication to every list (est × n_lists) that we are willing
@@ -32,8 +28,7 @@ _VEC_TASK_BYTES = int(os.environ.get("SPARK_GRAFT_VEC_TASK_BYTES",
 # (worker round-trip + Arrow setup, measured r15); at ~GB/s of
 # per-node shuffle throughput the replicated bytes win below roughly
 # this budget at ANY corpus size — the members side is untouched
-_IVFPQ_FUSE_BYTES = int(os.environ.get("SPARK_GRAFT_IVFPQ_FUSE_BYTES",
-                                       str(64 << 20)))
+_IVFPQ_FUSE_BYTES = 64 << 20
 
 
 def dot(a, b):

@@ -13,8 +13,7 @@ from pyspark.sql import DataFrame
 # 16 KB keeps a sub-MB corpus at the full defaultParallelism fan-out
 # (the r15-audited posture) while a trivially small table (a 10-asset
 # decode probe) stops paying 32 task round-trips (VERDICT r15 #5).
-_TEXT_TASK_BYTES = int(os.environ.get("SPARK_GRAFT_TEXT_TASK_BYTES",
-                                      str(16 << 10)))
+_TEXT_TASK_BYTES = 16 << 10
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:

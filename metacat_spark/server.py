@@ -112,14 +112,41 @@ def make_handler(client: MetaCatSparkClient,
             n = int(self.headers.get("Content-Length") or 0)
             self._route(body=self.rfile.read(n) if n else b"")
 
-        _MUTATING = {"/data/declare_files", "/data/update_file_meta",
-                     "/data/retire_file", "/data/create_dataset",
-                     "/data/add_files", "/data/remove_files",
-                     "/data/update_dataset", "/data/update_file",
-                     "/data/delete_file", "/data/move_files",
-                     "/data/remove_dataset", "/data/add_child_dataset",
-                     "/data/create_namespace",
-                     "/data/create_named_query"}
+        # path → (handler method, mutating). Every handler takes
+        # (params, body). A mutating route accepts only POST and runs
+        # unpinned; every other route reads one pinned state.
+        _ROUTES = {
+            "/data/query": ("_query", False),
+            "/data/file": ("_file", False),
+            "/data/files": ("_files_batch", False),
+            "/data/datasets": ("_datasets", False),
+            "/data/dataset": ("_dataset", False),
+            "/data/dataset_files": ("_dataset_files", False),
+            "/data/datasets_for_files": ("_datasets_for_files", False),
+            "/data/namespaces": ("_namespaces", False),
+            "/data/named_queries": ("_named_queries", False),
+            "/data/named_query": ("_named_query", False),
+            "/data/search_queries": ("_search_queries", False),
+            "/data/categories": ("_categories", False),
+            "/data/category": ("_category", False),
+            "/data/corpus": ("_corpus", False),
+            "/data/events": ("_events", False),
+            "/data/version": ("_version", False),
+            "/data/declare_files": ("_declare_files", True),
+            "/data/update_file_meta": ("_update_file_meta", True),
+            "/data/update_file": ("_update_file", True),
+            "/data/retire_file": ("_retire_file", True),
+            "/data/delete_file": ("_delete_file", True),
+            "/data/move_files": ("_move_files", True),
+            "/data/create_dataset": ("_create_dataset", True),
+            "/data/update_dataset": ("_update_dataset", True),
+            "/data/remove_dataset": ("_remove_dataset", True),
+            "/data/add_files": ("_add_files", True),
+            "/data/remove_files": ("_remove_files", True),
+            "/data/add_child_dataset": ("_add_child_dataset", True),
+            "/data/create_namespace": ("_create_namespace", True),
+            "/data/create_named_query": ("_create_named_query", True),
+        }
 
         def _route(self, body: bytes):
             """A read pins one catalog state for the whole request, so
@@ -128,83 +155,23 @@ def make_handler(client: MetaCatSparkClient,
             its reply reports a version that includes it."""
             url = urlparse(self.path)
             self._streaming = False
-            # safe-method discipline: a crawler/prefetcher following a
-            # GET link must never mutate the catalog (review r6)
-            if url.path in self._MUTATING and self.command != "POST":
-                return self._send(405, "text/plain",
-                                  f"{url.path} requires POST")
-            with (nullcontext() if url.path in self._MUTATING
-                  else client.catalog.pin()):
-                return self._dispatch(url, body)
-
-        def _dispatch(self, url, body: bytes):
-            params = parse_qs(url.query)
-            try:
-                if url.path == "/data/query":
-                    return self._query(params, body)
-                if url.path == "/data/file":
-                    return self._file(params)
-                if url.path == "/data/datasets":
-                    return self._datasets(params)
-                if url.path == "/data/dataset":
-                    return self._dataset(params)
-                if url.path == "/data/dataset_files":
-                    return self._dataset_files(params)
-                if url.path == "/data/datasets_for_files":
-                    return self._datasets_for_files(params)
-                if url.path == "/data/namespaces":
-                    return self._namespaces()
-                if url.path == "/data/declare_files":
-                    return self._declare_files(params, body)
-                if url.path == "/data/update_file_meta":
-                    return self._update_file_meta(params, body)
-                if url.path == "/data/retire_file":
-                    return self._retire_file(params)
-                if url.path == "/data/create_dataset":
-                    return self._create_dataset(params, body)
-                if url.path == "/data/add_files":
-                    return self._add_files(params, body)
-                if url.path == "/data/remove_files":
-                    return self._remove_files(params, body)
-                if url.path == "/data/update_dataset":
-                    return self._update_dataset(params, body)
-                if url.path == "/data/files":
-                    return self._files_batch(params, body)
-                if url.path == "/data/update_file":
-                    return self._update_file(params, body)
-                if url.path == "/data/delete_file":
-                    return self._delete_file(params)
-                if url.path == "/data/move_files":
-                    return self._move_files(params, body)
-                if url.path == "/data/remove_dataset":
-                    return self._remove_dataset(params)
-                if url.path == "/data/add_child_dataset":
-                    return self._add_child_dataset(params)
-                if url.path == "/data/create_namespace":
-                    return self._create_namespace(params)
-                if url.path == "/data/named_queries":
-                    return self._named_queries(params)
-                if url.path == "/data/named_query":
-                    return self._named_query(params)
-                if url.path == "/data/create_named_query":
-                    return self._create_named_query(params, body)
-                if url.path == "/data/search_queries":
-                    return self._search_queries(params, body)
-                if url.path == "/data/categories":
-                    return self._categories()
-                if url.path == "/data/category":
-                    return self._category(params)
-                if url.path == "/data/corpus":
-                    return self._corpus(params)
-                if url.path == "/data/events":
-                    return self._events(params)
-                if url.path == "/data/version":
-                    return self._send(200, "application/json",
-                                      json.dumps(
-                                          {"engine": "metacat_spark",
-                                           "api": "data/v1"}))
+            route = self._ROUTES.get(url.path)
+            if route is None:
                 return self._send(404, "text/plain",
                                   f"no such endpoint: {url.path}")
+            name, mutating = route
+            # safe-method discipline: a crawler/prefetcher following a
+            # GET link must never mutate the catalog (review r6)
+            if mutating and self.command != "POST":
+                return self._send(405, "text/plain",
+                                  f"{url.path} requires POST")
+            with nullcontext() if mutating else client.catalog.pin():
+                return self._dispatch(getattr(self, name),
+                                      parse_qs(url.query), body)
+
+        def _dispatch(self, handler, params: dict, body: bytes):
+            try:
+                return handler(params, body)
             except BrokenPipeError:
                 pass  # client hung up mid-stream
             except Exception as e:  # noqa: BLE001 — reference 400 contract
@@ -315,7 +282,7 @@ def make_handler(client: MetaCatSparkClient,
                 b"\x1e" + json.dumps(d, default=str).encode("utf-8")
                 + b"\n")
 
-        def _events(self, params: dict):
+        def _events(self, params: dict, body: bytes):
             """Event-stream analytics over HTTP, dispatched through
             the SHARED op registry (llm.registry — the same table the
             CLI `events` group uses, so the two surfaces cannot
@@ -346,7 +313,7 @@ def make_handler(client: MetaCatSparkClient,
                 r.asDict(recursive=True)
                 for r in out.toLocalIterator())
 
-        def _corpus(self, params: dict):
+        def _corpus(self, params: dict, body: bytes):
             """Training-corpus operators over HTTP, dispatched
             through the SHARED op registry (llm.registry — the same
             table the CLI `corpus` group uses, so the two surfaces
@@ -406,7 +373,7 @@ def make_handler(client: MetaCatSparkClient,
             self._stream_json_seq(
                 r.asDict(recursive=True) for r in out.toLocalIterator())
 
-        def _file(self, params: dict):
+        def _file(self, params: dict, body: bytes):
             rec = client.get_file(
                 fid=_one(params, "fid"), did=_one(params, "did"),
                 with_metadata=not _flag(params, "skip_meta"))
@@ -415,13 +382,13 @@ def make_handler(client: MetaCatSparkClient,
             self._send(200, "application/json",
                        json.dumps(rec, default=str))
 
-        def _datasets(self, params: dict):
+        def _datasets(self, params: dict, body: bytes):
             rows = client.list_datasets(
                 _one(params, "pattern") or "*:*")
             self._send(200, "application/json",
                        json.dumps(rows, default=str))
 
-        def _dataset(self, params: dict):
+        def _dataset(self, params: dict, body: bytes):
             """One dataset record + file count (data_handler.py
             dataset/dataset_count; exact_file_count=yes recounts)."""
             ds = _one(params, "dataset")
@@ -440,7 +407,7 @@ def make_handler(client: MetaCatSparkClient,
             self._send(200, "application/json",
                        json.dumps(rec, default=str))
 
-        def _dataset_files(self, params: dict):
+        def _dataset_files(self, params: dict, body: bytes):
             """Files of one dataset as a json-seq stream
             (data_handler.py dataset_files)."""
             ds = _one(params, "dataset")
@@ -456,7 +423,7 @@ def make_handler(client: MetaCatSparkClient,
                 after_id=_one(params, "after_id"),
                 page_size=int(page) if page else None))
 
-        def _datasets_for_files(self, params: dict):
+        def _datasets_for_files(self, params: dict, body: bytes):
             """Reverse membership lookup (data_handler.py:574):
             fids=a,b,c → {fid: [ns:name, ...]}. One pruned membership
             scan, never per-fid queries."""
@@ -503,7 +470,7 @@ def make_handler(client: MetaCatSparkClient,
             self._send(200, "application/json",
                        json.dumps({"updated": fid}))
 
-        def _retire_file(self, params: dict):
+        def _retire_file(self, params: dict, body: bytes):
             fid = _one(params, "fid")
             if not fid:
                 return self._send(400, "text/plain", "fid=… required")
@@ -582,7 +549,7 @@ def make_handler(client: MetaCatSparkClient,
             self._send(200, "application/json",
                        json.dumps({"updated": ds}))
 
-        def _namespaces(self):
+        def _namespaces(self, params: dict, body: bytes):
             rows = [r.asDict() for r in
                     client.catalog.namespaces.collect()]
             self._send(200, "application/json",
@@ -633,7 +600,7 @@ def make_handler(client: MetaCatSparkClient,
             self._send(200, "application/json",
                        json.dumps({"updated": fid}))
 
-        def _delete_file(self, params: dict):
+        def _delete_file(self, params: dict, body: bytes):
             """Hard delete by ?fid= or ?did=ns:name
             (data_handler.py:1010-1042); 404 when absent."""
             fid, did = _one(params, "fid"), _one(params, "did")
@@ -671,7 +638,7 @@ def make_handler(client: MetaCatSparkClient,
                        json.dumps({"moved": len(fids),
                                    "namespace": to_ns}))
 
-        def _remove_dataset(self, params: dict):
+        def _remove_dataset(self, params: dict, body: bytes):
             """POST ?dataset=ns:name — drop the dataset, its
             membership and subset edges (data_handler.py:549)."""
             ds = _one(params, "dataset")
@@ -683,7 +650,7 @@ def make_handler(client: MetaCatSparkClient,
             self._send(200, "application/json",
                        json.dumps({"removed": ds}))
 
-        def _add_child_dataset(self, params: dict):
+        def _add_child_dataset(self, params: dict, body: bytes):
             """POST ?parent=ns:name&child=ns:name — subset edge
             (data_handler.py:333 add_child_dataset)."""
             parent, child = _one(params, "parent"), _one(params, "child")
@@ -698,7 +665,7 @@ def make_handler(client: MetaCatSparkClient,
             self._send(200, "application/json",
                        json.dumps({"parent": parent, "child": child}))
 
-        def _create_namespace(self, params: dict):
+        def _create_namespace(self, params: dict, body: bytes):
             """POST ?name=...&owner=... (data_handler.py:119)."""
             name = _one(params, "name")
             if not name:
@@ -708,7 +675,7 @@ def make_handler(client: MetaCatSparkClient,
             self._send(200, "application/json",
                        json.dumps({"created": name}))
 
-        def _named_queries(self, params: dict):
+        def _named_queries(self, params: dict, body: bytes):
             """List named queries, optionally one namespace's
             (data_handler.py:1413-1418)."""
             from pyspark.sql import functions as F
@@ -722,7 +689,7 @@ def make_handler(client: MetaCatSparkClient,
             self._send(200, "application/json",
                        json.dumps(rows, default=str))
 
-        def _named_query(self, params: dict):
+        def _named_query(self, params: dict, body: bytes):
             """One named-query record by ?namespace=&name= or
             ?query=ns:name; 404 when absent
             (data_handler.py:1420-1426)."""
@@ -786,7 +753,7 @@ def make_handler(client: MetaCatSparkClient,
             self._stream_json_seq(client.query_iter(
                 mql, with_metadata=True))
 
-        def _categories(self):
+        def _categories(self, params: dict, body: bytes):
             """All parameter categories (data_handler.py:1463-1469)."""
             rows = ([r.asDict() for r in
                      client.catalog.parameter_categories.collect()]
@@ -798,7 +765,7 @@ def make_handler(client: MetaCatSparkClient,
             self._send(200, "application/json",
                        json.dumps(rows, default=str))
 
-        def _category(self, params: dict):
+        def _category(self, params: dict, body: bytes):
             """One category by ?path=; the reference returns JSON null
             for a miss (data_handler.py:1471-1481)."""
             from pyspark.sql import functions as F
@@ -816,6 +783,10 @@ def make_handler(client: MetaCatSparkClient,
                 d["definitions"] = json.loads(d["definitions"])
             self._send(200, "application/json",
                        json.dumps(d, default=str))
+
+        def _version(self, params: dict, body: bytes):
+            self._send(200, "application/json", json.dumps(
+                {"engine": "metacat_spark", "api": "data/v1"}))
 
         # ------------------------------------------------------ plumbing
         def _send(self, code: int, ctype: str, text: str):

@@ -48,13 +48,9 @@ def get_spark(app: str = "metacat_spark", cpus: int | None = None,
     # reader's eye. A constant partitionBy key cannot silence it:
     # Catalyst folds literal partition expressions out of the window
     # spec, so the partition list reaches WindowExec empty either way
-    # (measured r15). Suppress-and-document is the remaining option.
-    # ADVICE r15: the suppression is session-global, so ad-hoc user
-    # queries on the same session would also lose a genuine
-    # single-partition-window warning — SPARK_GRAFT_KEEP_WINDOW_WARN=1
-    # re-enables it (documented in docs/SCALING.md).
-    if os.environ.get("SPARK_GRAFT_KEEP_WINDOW_WARN") == "1":
-        return spark
+    # (measured r15). Suppress-and-document is the remaining option;
+    # the suppression is session-global, so ad-hoc queries on the same
+    # session lose the warning too.
     try:
         jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(

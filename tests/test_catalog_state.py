@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from metacat_spark.catalog import from_tpch
 from metacat_spark.client import MetaCatSparkClient
-from metacat_spark.dml import DML, DMLError
+from metacat_spark.dml import DML, DMLError, ValidationFailed
 from metacat_spark.durable import DurableStore
 from metacat_spark.server import start_server
 from tests.conftest import SF_DIR
@@ -89,6 +89,46 @@ def test_frozen_flag_is_read_from_the_catalog(spark):
     assert b.add_files_to_dataset(["sf-1"], "test", "shared_frozen") == 1
     with pytest.raises(DMLError, match="monotonic"):
         b.remove_files_from_dataset(["sf-1"], "test", "shared_frozen")
+
+
+def test_requirements_are_read_from_the_catalog(spark):
+    """Two DMLs on one catalog: a dataset's file metadata requirements
+    set through one are enforced through the other, on declare-into
+    and on add (the requirements are a column of ``datasets``)."""
+    cat = from_tpch(spark, SF_DIR)
+    a, b = DML(cat), DML(cat)
+    a.create_dataset("test", "shared_reqs", file_meta_requirements={
+        "core.run": {"type": "int", "required": True}})
+    with pytest.raises(ValidationFailed):
+        b.declare_files([{"id": "sr-bad", "namespace": "test",
+                          "name": "bad.dat"}],
+                        dataset=("test", "shared_reqs"))
+    b.declare_files([{"id": "sr-free", "namespace": "test",
+                      "name": "free.dat"}])
+    with pytest.raises(ValidationFailed):
+        b.add_files_to_dataset(["sr-free"], "test", "shared_reqs")
+    assert b.declare_files([{"id": "sr-ok", "namespace": "test",
+                             "name": "ok.dat", "metadata": {"core.run": 1}}],
+                           dataset=("test", "shared_reqs")) == 1
+    assert json.loads(cat.datasets.where(F.col("name") == "shared_reqs")
+                      .first()["file_metadata_requirements"]) \
+        == {"core.run": {"type": "int", "required": True}}
+
+
+def test_categories_are_read_from_the_catalog(spark):
+    """Two DMLs on one catalog: a parameter category created through
+    one validates writes through the other."""
+    cat = from_tpch(spark, SF_DIR)
+    a, b = DML(cat), DML(cat)
+    b.validate({"shared.k": "anything"})       # uncategorized: free
+    a.create_parameter_category("shared", definitions={
+        "shared.k": {"type": "int"}}, restricted=True)
+    with pytest.raises(ValidationFailed):
+        b.validate({"shared.k": "not an int"})
+    with pytest.raises(ValidationFailed):
+        b.declare_files([{"id": "sc-1", "namespace": "test",
+                          "name": "sc1.dat", "metadata": {"shared.x": 1}}])
+    b.validate({"shared.k": 3})
 
 
 def test_version_counts_published_mutations(spark, tmp_path):

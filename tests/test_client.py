@@ -33,6 +33,16 @@ def test_query_iter(client):
     assert len(got) == 7 and got == sorted(got)
 
 
+def test_query_iter_rejects_unknown_keywords(client):
+    """query_iter takes query()'s keywords, so a misspelt one raises
+    instead of being ignored."""
+    with pytest.raises(TypeError):
+        client.query_iter("files from dune:urgent_0", with_meta=True)
+    rows = list(client.query_iter("files from dune:urgent_0 limit 2",
+                                  with_metadata=True))
+    assert len(rows) == 2 and isinstance(rows[0]["metadata"], dict)
+
+
 def test_async_query(client):
     futs = [client.async_query(f"files from dune:urgent_{i} limit 3")
             for i in range(3)]

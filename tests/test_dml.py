@@ -528,9 +528,9 @@ def test_driver_rows_plan_as_local_relations(spark, tmp_path):
     journaled = []
     commit = store.commit
 
-    def recording_commit(ops, dml_meta=None):
+    def recording_commit(ops):
         journaled.extend(ops)
-        commit(ops, dml_meta=dml_meta)
+        commit(ops)
     store.commit = recording_commit
     dml = DML(cat, store=store)
     dml.declare_files([{"id": f"lr-{k}", "namespace": "test",

@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from metacat_spark.catalog import from_tpch
-from metacat_spark.dml import DML, DMLError
+from metacat_spark.dml import DML, DMLError, ValidationFailed
 from metacat_spark.durable import ALL_TABLES, DurableStore
 from metacat_spark.engine import Engine
 
@@ -74,7 +74,8 @@ def test_restart_finds_declared_files(spark, tmp_path):
     dml1 = DML(cat1, store=DurableStore(spark, root))
     dml1.create_dataset("dune", "durable_ds",
                         file_meta_requirements={
-                            "core.runs": {"type": "int[]"}})
+                            "core.runs": {"type": "int[]",
+                                          "required": True}})
     dml1.declare_files(
         [{"id": "dur-001", "namespace": "dune", "name": "d1.dat",
           "size": 100, "metadata": {"core.run": 1, "core.runs": [1]}},
@@ -115,8 +116,11 @@ def test_restart_finds_declared_files(spark, tmp_path):
     assert [r["id"] for r in
             eng.query("files selected by dune:dq").collect()] \
         == ["dur-001"]
-    assert dml2.dataset_requirements[("dune", "durable_ds")] \
-        == {"core.runs": {"type": "int[]"}}
+    with pytest.raises(ValidationFailed):
+        dml2.declare_files(
+            [{"id": "dur-003", "namespace": "dune", "name": "d3.dat",
+              "metadata": {"core.run": 3}}],   # no core.runs
+            dataset=("dune", "durable_ds"))
     assert cat2.namespaces.where(
         F.col("name") == "durable_ns").count() == 1
 
@@ -607,11 +611,14 @@ def test_compact_checkpoints_and_retires_manifests(spark, tmp_path):
                    "ck-2": True, "ck-3": True}
 
 
-def test_declared_created_timestamp_survives_restart(spark, tmp_path):
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file-uri"])
+def test_declared_created_timestamp_survives_restart(spark, tmp_path, uri):
     """A declared file's created_timestamp is taken once on the
     driver, so the restored file shows the value the live session
-    showed."""
-    root = str(tmp_path / "cat")
+    showed. The root is a plain path, or a ``file://`` URI, whose
+    manifests go through the Hadoop filesystem; the URI root is also
+    compacted."""
+    root = ("file://" if uri else "") + str(tmp_path / "cat")
     cat1 = from_tpch(spark, SF_DIR)
     dml1 = DML(cat1, store=DurableStore(spark, root))
     dml1.declare_files([{"id": f"ct-{k}", "namespace": "test",
@@ -624,8 +631,15 @@ def test_declared_created_timestamp_survives_restart(spark, tmp_path):
     live = stamps(cat1)
     assert len(live) == 3 and None not in live.values()
     assert len(set(live.values())) == 1     # one timestamp per batch
-    cat2, _, _ = _restart(spark, root)
+    cat2, _, store2 = _restart(spark, root)
     assert stamps(cat2) == live
+    if uri:
+        # compact re-attaches cat2 from the snapshots it writes
+        store2.compact(cat2)
+        assert store2._read_checkpoint() == store2.manifest["commit"]
+        assert [h["commit"] for h in store2.history()] \
+            == [store2.manifest["commit"]]
+        assert stamps(cat2) == live
 
 
 def test_declare_segments_are_one_file(spark, tmp_path):
@@ -657,3 +671,59 @@ def test_readding_a_member_journals_nothing(spark, tmp_path):
     at = store.manifest["commit"]
     assert dml.add_files_to_dataset([fid, fid], "dune", "urgent_3") == 0
     assert store.manifest["commit"] == at
+
+
+def test_requirements_survive_another_writers_commit(spark, tmp_path):
+    """Two DMLs on one catalog and one store: a dataset's requirements
+    set through one survive a later commit through the other and a
+    restart (they are a column of the ``datasets`` snapshot, and a
+    manifest carries no per-writer copy)."""
+    root = str(tmp_path / "cat")
+    cat = from_tpch(spark, SF_DIR)
+    store = DurableStore(spark, root)
+    a, b = DML(cat, store=store), DML(cat, store=store)
+    a.create_dataset("test", "kept_reqs", file_meta_requirements={
+        "core.run": {"type": "int", "required": True}})
+    b.declare_files([{"id": "kr-free", "namespace": "test",
+                      "name": "free.dat"}])
+    _, dml2, _ = _restart(spark, root)
+    with pytest.raises(ValidationFailed):
+        dml2.add_files_to_dataset(["kr-free"], "test", "kept_reqs")
+    assert "dml_meta" not in store.manifest
+
+
+def test_older_root_restores_requirements(spark, tmp_path):
+    """A root written before ``datasets`` had the requirements column
+    (its snapshot lacks the column; the manifest's ``dml_meta`` holds
+    them) restores with the requirements in the column and enforced,
+    also after a later commit that leaves ``datasets`` alone; the next
+    ``datasets`` snapshot writes the column and drops ``dml_meta``."""
+    root = str(tmp_path / "cat")
+    cat = from_tpch(spark, SF_DIR)
+    store = DurableStore(spark, root)
+    store.commit([("snapshot", "datasets", cat.datasets
+                   .drop("file_metadata_requirements")
+                   .where(F.col("name") == "urgent_2"))])
+    reqs = {"core.run": {"type": "int", "required": True}}
+    path = os.path.join(root, "_commits", "000000000001.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["dml_meta"] = {"dataset_requirements": {
+        "dune\turgent_2": reqs, "dune\tgone": reqs}}
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+
+    cat2, dml2, store2 = _restart(spark, root)
+    [row] = cat2.datasets.collect()
+    assert json.loads(row["file_metadata_requirements"]) == reqs
+    dml2.declare_files([{"id": "or-free", "namespace": "test",
+                         "name": "free.dat"}])
+    assert "dml_meta" in store2.manifest
+    cat3, dml3, store3 = _restart(spark, root)
+    with pytest.raises(ValidationFailed):
+        dml3.add_files_to_dataset(["or-free"], "dune", "urgent_2")
+    dml3.create_dataset("test", "after_upgrade")
+    assert "dml_meta" not in store3.manifest
+    _, dml4, _ = _restart(spark, root)
+    with pytest.raises(ValidationFailed):
+        dml4.add_files_to_dataset(["or-free"], "dune", "urgent_2")
