@@ -21,7 +21,7 @@ import weakref
 from contextlib import contextmanager
 from contextvars import ContextVar
 from dataclasses import dataclass, field, fields, replace
-from typing import Optional
+from typing import TYPE_CHECKING, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +29,9 @@ from pyspark.sql import types as T
 
 from . import fixtures as FX
 from .schema import DATASET_META, FILE_META, QUERY_META, MetaSchema
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 RAW_TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]
@@ -571,30 +574,35 @@ def _layout(df: Optional[DataFrame]) -> Optional[tuple[str, int]]:
 
 
 
-def local_rows(spark: SparkSession, rows: list,
-               schema: "T.StructType | list[str]") -> DataFrame:
-    """Rows held by the driver (a fixture's literal table, a request's
-    delta) as an Arrow-built LocalRelation: the rows travel inside the
-    plan, so a query over them alone runs no Spark job and no Python
-    worker re-pickles them, unlike ``createDataFrame(list)``'s RDD.
-    ``schema`` is a StructType (every field made nullable) or column
-    names whose types Arrow infers from the values. In a distributed
-    plan the relation splits into min(rows, cores) partitions."""
+def arrow_rows(rows: list,
+               schema: "T.StructType | list[str]") -> pa.Table:
+    """Rows held by the driver as one Arrow table. ``schema`` is a
+    StructType (every field made nullable, each typed as Spark's Arrow
+    conversion types it) or column names whose types Arrow infers from
+    the values."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, T.StructType):
-        schema = T.StructType([T.StructField(f.name, f.dataType)
-                               for f in schema.fields])
-        arrow = to_arrow_schema(schema)
-        table = pa.Table.from_arrays(
+        arrow = to_arrow_schema(T.StructType(
+            [T.StructField(f.name, f.dataType) for f in schema.fields]))
+        return pa.Table.from_arrays(
             [pa.array([r[i] for r in rows], type=f.type)
              for i, f in enumerate(arrow)], schema=arrow)
-    else:
-        table = pa.Table.from_arrays(
-            [pa.array([r[i] for r in rows]) for i in range(len(schema))],
-            names=list(schema))
-    return spark.createDataFrame(table, schema)
+    return pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows]) for i in range(len(schema))],
+        names=list(schema))
+
+
+def local_rows(spark: SparkSession, rows: list,
+               schema: "T.StructType | list[str]") -> DataFrame:
+    """Rows held by the driver (a fixture's literal table, a request's
+    delta) as an Arrow-built LocalRelation (``arrow_rows``): the rows
+    travel inside the plan, so a query over them alone runs no Spark
+    job and no Python worker re-pickles them, unlike
+    ``createDataFrame(list)``'s RDD. In a distributed plan the relation
+    splits into min(rows, cores) partitions."""
+    return spark.createDataFrame(arrow_rows(rows, schema))
 
 
 def _suffix(sf_dir: str) -> str:

@@ -16,9 +16,10 @@ durable.py for the log model and docs/DIVERGENCES.md §9 for the
 contract. Bulk declare is a single DataFrame union (the
 COPY-equivalent, dbobjects2.py:525-557), never a row-at-a-time loop.
 A request's own rows (declared files, membership and edge adds, new
-datasets) are built on the driver as one local relation and appended
-to the target table (``Catalog.append``); query results
-(``add_to``/``save_as``) stay distributed. Filters and patches of a
+datasets) are built on the driver as one Arrow table, appended to the
+target table as a local relation (``Catalog.append``) and journaled as
+that same table; query results (``add_to``/``save_as``) stay
+distributed. Filters and patches of a
 table keep its layout (``Catalog.resident``): no write moves the rows
 it did not add.
 """
@@ -28,15 +29,19 @@ from __future__ import annotations
 import json
 import weakref
 from datetime import datetime, timezone
-from typing import Optional
+from typing import TYPE_CHECKING, Optional
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .catalog import Catalog, append, local_rows
+from .catalog import Catalog, append, arrow_rows
+from .durable import QuerySized
 from .validation import (DEFAULT_CATEGORIES, category_of,
                          validate_metadata)
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 _EDGE_COLUMNS = ("parent_id", "child_id")
@@ -85,6 +90,15 @@ def _apply_meta_patch(df: DataFrame, meta_schema, hit, new_meta: dict
         out = out.withColumn(
             mk.column, F.when(hit, newv).otherwise(F.col(mk.column)))
     return out
+
+
+def _merged(stored: Optional[str], patch: dict, replace: bool) -> dict:
+    """The metadata after ``patch``: the patch itself in replace mode,
+    else the stored JSON dict updated with it — the reference's
+    ``meta.update(patch)`` (data_handler.py:1186), type-preserving."""
+    if replace:
+        return dict(patch)
+    return {**json.loads(stored or "{}"), **patch}
 
 
 def point_row(df: DataFrame) -> Optional[Row]:
@@ -191,11 +205,16 @@ class DML:
         self._pending: list = []
         self.cat = catalog
 
-    def _journal(self, kind: str, table: str, df: DataFrame) -> None:
+    def _journal(self, kind: str, table: str, rows) -> None:
         """Buffer one journal op (no-op without a store); flushed as a
-        single durable commit by the outermost @_locked exit."""
+        single durable commit by the outermost @_locked exit. ``rows``
+        is a payload ``DurableStore.commit`` takes: the request's Arrow
+        table, a DataFrame of the rows it names, or a ``QuerySized``
+        DataFrame. A DataFrame is not collected here: the commit does
+        that, so a failure re-buffers the op (``_flush``) and every
+        buffered op's mutation is applied."""
         if self._store is not None:
-            self._pending.append((kind, table, df))
+            self._pending.append((kind, table, rows))
 
     def _flush(self) -> None:
         """Commit the buffered journal ops as ONE durable commit."""
@@ -238,22 +257,27 @@ class DML:
         reqs = ds["file_metadata_requirements"]
         return json.loads(reqs) if reqs else None
 
-    def _rows(self, rows: list, schema: T.StructType) -> DataFrame:
-        """A request's rows as one single-partition local relation, so
-        its journal segment is one parquet file."""
-        return local_rows(self.cat.spark, rows, schema).coalesce(1)
+    def _local(self, rows: pa.Table) -> DataFrame:
+        """A request's rows as one single-partition local relation."""
+        return self.cat.spark.createDataFrame(rows).coalesce(1)
 
     def _row_like(self, table: DataFrame, **values) -> DataFrame:
         """One row shaped like ``table``; columns not given are null."""
-        return self._rows([tuple(values.get(c) for c in table.columns)],
-                          table.schema)
+        return self._local(arrow_rows(
+            [tuple(values.get(c) for c in table.columns)], table.schema))
 
-    def _append(self, name: str, delta: DataFrame) -> None:
-        """Add ``delta`` to journaled table ``name`` and journal it as
-        an upsert. Only declare_files appends to files, after enforcing
-        the PK, so the ids_unique invariant carries over."""
-        self.cat.stage(**{name: self.cat.append(name, delta)})
-        self._journal("upsert", name, delta)
+    def _append(self, name: str, rows: pa.Table,
+                delta: Optional[DataFrame] = None) -> None:
+        """Add a request's ``rows`` to journaled table ``name`` and
+        journal the same Arrow table as an upsert, so its commit runs no
+        Spark job. ``delta``: the rows to append, when the table has
+        columns ``rows`` lacks (a variant catalog's ``metadata_v``,
+        which the journal derives on replay). Only declare_files
+        appends to files, after enforcing the PK, so the ids_unique
+        invariant carries over."""
+        self.cat.stage(**{name: self.cat.append(
+            name, self._local(rows) if delta is None else delta)})
+        self._journal("upsert", name, rows)
 
     def _restage(self, **tables: DataFrame) -> None:
         """Stage filtered or patched versions of the current tables,
@@ -276,10 +300,14 @@ class DML:
 
     # ------------------------------------------------------- validation
     def validate(self, metadata: dict,
-                 extra_requirements: Optional[dict] = None) -> None:
+                 extra_requirements: Optional[dict] = None,
+                 merged: Optional[dict] = None) -> None:
         """Check ``metadata`` against the parameter categories of the
         state this call reads (a writer's draft, a request's pin, else
-        the published state), then against ``extra_requirements``."""
+        the published state), then against ``extra_requirements``.
+        ``merged``: the whole metadata ``metadata`` patches into; a
+        category the patch touches must have its required keys there."""
+        merged = metadata if merged is None else merged
         categories = _rules(self.cat.parameter_categories)
         errors = []
         for key in metadata:
@@ -297,7 +325,7 @@ class DML:
             for key, d in spec["definitions"].items():
                 if d.get("required") and any(
                         k.startswith(cat + ".") for k in metadata) \
-                        and key not in metadata:
+                        and key not in merged:
                     errors.append((key, "required parameter is missing"))
         if extra_requirements:
             errors.extend(validate_metadata(extra_requirements, False,
@@ -370,20 +398,22 @@ class DML:
                     v = float(v)
                 base[mk.column] = v
             prepared.append(tuple(base.get(c) for c in schema.names))
-        new = self._rows(prepared, schema)
+        new = arrow_rows(prepared, schema)
+        delta = None
         if "metadata_v" in files.columns:
             # variant-mode catalogs: keep the VariantType column in
-            # lockstep with the JSON
-            new = new.withColumn("metadata_v",
-                                 F.parse_json(F.col("metadata")))
-        self._append("files", new.select(*files.columns))
+            # lockstep with the JSON (the journal derives it on replay)
+            delta = (self._local(new)
+                     .withColumn("metadata_v", F.parse_json(F.col("metadata")))
+                     .select(*files.columns))
+        self._append("files", new, delta)
         # provenance edges declared inline (data_handler declare
         # accepts parents per file), FK-checked above
         edges = self._new_edges(self.cat.parent_child,
                                 [(p, r["id"]) for r in rows
                                  for p in (r.get("parents") or [])])
         if edges:
-            self._append("parent_child", self._rows(
+            self._append("parent_child", arrow_rows(
                 edges, self.cat.parent_child.select(*_EDGE_COLUMNS).schema))
         if dataset:
             self.add_files_to_dataset([r["id"] for r in rows], *dataset,
@@ -435,7 +465,7 @@ class DML:
             & F.col("file_id").isin(want)).select("file_id").collect()}
         add = [(fid, ns, name) for fid in want if fid not in members]
         if add:
-            self._append("files_datasets", self._rows(
+            self._append("files_datasets", arrow_rows(
                 add, fd.select(*_MEMBER_COLUMNS).schema))
         return len(add)
 
@@ -464,7 +494,7 @@ class DML:
             # table scan); non-member keys journal harmless no-ops.
             # Built only in durable mode — _journal's args evaluate
             # eagerly (review r8)
-            self._journal("delete", "files_datasets", self._rows(
+            self._journal("delete", "files_datasets", arrow_rows(
                 [(fid, ns, name) for fid in dict.fromkeys(file_ids)],
                 fd.select(*_MEMBER_COLUMNS).schema))
 
@@ -480,11 +510,13 @@ class DML:
         ``meta.update(patch)``) and type-preserving, unlike a
         map<string,string> round-trip which would stringify every value.
         A point update is inherently a single-row op; with id-bucketed
-        storage the lookup prunes to one bucket.
+        storage the lookup prunes to one bucket. Each patched value is
+        validated, and a category the patch touches must keep its
+        required keys in the merged metadata (a merge that leaves
+        ``core.run`` as stored is valid; a replace must carry it).
         """
         if mode not in ("update", "replace"):
             raise DMLError(f"bad mode {mode!r}")
-        self.validate(metadata)
         files = self.cat.files
         row = point_row(files.where(F.col("id") == file_id)
                         .select("metadata"))
@@ -492,19 +524,20 @@ class DML:
             # replace mode too: the reference 404s on an unknown fid —
             # a silent zero-row patch is not a success (review r6)
             raise DMLError(f"file {file_id!r} not found")
-        if mode == "replace":
-            new_meta = dict(metadata)
-        else:
-            new_meta = json.loads(row["metadata"] or "{}")
-            new_meta.update(metadata)
+        new_meta = _merged(row["metadata"], metadata, mode == "replace")
+        self.validate(metadata, merged=new_meta)
+        self._set_metadata(file_id, new_meta)
+
+    def _set_metadata(self, file_id: str, new_meta: dict) -> None:
+        """Patch file ``file_id``'s metadata to ``new_meta`` (already
+        validated) and journal the patched row."""
+        hit = F.col("id") == file_id
         self._restage(files=_apply_meta_patch(
-            files, self.cat.file_meta, F.col("id") == file_id,
-            new_meta))
+            self.cat.files, self.cat.file_meta, hit, new_meta))
         # journal the PATCHED row from the staged (checkpointed)
-        # DataFrame: the segment write is its first action, so memory
-        # and log see the same materialization
-        self._journal("upsert", "files",
-                      self.cat.files.where(F.col("id") == file_id))
+        # DataFrame: the commit's collect of it is the table's first
+        # action, so memory and log see the same materialization
+        self._journal("upsert", "files", self.cat.files.where(hit))
 
     def _check_fids_exist(self, fids: list[str], what: str) -> None:
         if not fids:
@@ -539,7 +572,7 @@ class DML:
              for o in other_ids])
         if edges:
             self._append("parent_child",
-                         self._rows(edges, pc.select(*_EDGE_COLUMNS).schema))
+                         arrow_rows(edges, pc.select(*_EDGE_COLUMNS).schema))
 
     @_locked
     def update_file(self, file_id: str,
@@ -552,21 +585,23 @@ class DML:
                     by: str = "admin") -> None:
         """Update file attributes (ui/metacat_file.py:524-618,
         data_handler.py update_file): size, checksums (merge, or
-        replace with ``replace=True``), metadata (delegated to
-        update_file_metadata), and provenance edges (add, or replace —
+        replace with ``replace=True``), metadata (merged or replaced
+        and validated as update_file_metadata does, from the same one
+        row read), and provenance edges (add, or replace —
         ``parents=[]`` with replace removes all). Point update: one
         bucketed-row patch; checksum merge is driver-side on the one
         target row, preserving the reference's dict-update semantics."""
         files = self.cat.files
         row = point_row(files.where(F.col("id") == file_id)
-                        .select("id", "checksums"))
+                        .select("checksums", "metadata"))
         if row is None:
             raise DMLError(f"file {file_id!r} not found")
         # ALL validations before ANY patch (review r8): a metadata
         # validation error or missing edge id after the size/checksum
         # patch had already applied would leave a partial mutation
         if metadata is not None:
-            self.validate(metadata)
+            new_meta = _merged(row["metadata"], metadata, replace)
+            self.validate(metadata, merged=new_meta)
         if parents is not None:
             self._check_fids_exist(parents, "parent")
         if children is not None:
@@ -601,8 +636,7 @@ class DML:
             self._restage(files=files)
             self._journal("upsert", "files", self.cat.files.where(hit))
         if metadata is not None:
-            self.update_file_metadata(
-                file_id, metadata, mode="replace" if replace else "update")
+            self._set_metadata(file_id, new_meta)
         if parents is not None:
             self._set_edges(file_id, parents, as_parents=True,
                             replace=replace)
@@ -669,7 +703,7 @@ class DML:
         if self._store is not None:
             # cascade deletes journal the affected KEYS, enumerated
             # distributed from the pre-delete tables (point lookups)
-            self._journal("delete", "files", self._rows(
+            self._journal("delete", "files", arrow_rows(
                 [(fid,)], files.select("id").schema))
             self._journal("delete", "files_datasets",
                           fd_before.where(F.col("file_id") == fid)
@@ -720,15 +754,8 @@ class DML:
         if metadata is not None:
             if mode not in ("update", "replace"):
                 raise DMLError(f"bad mode {mode!r}")
-            if mode == "replace":
-                new_meta = dict(metadata)
-            else:
-                # driver-side type-preserving merge (see
-                # update_file_metadata)
-                new_meta = json.loads(row["metadata"] or "{}")
-                new_meta.update(metadata)
-            ds = _apply_meta_patch(ds, self.cat.dataset_meta, hit,
-                                   new_meta)
+            ds = _apply_meta_patch(ds, self.cat.dataset_meta, hit, _merged(
+                row["metadata"], metadata, mode == "replace"))
         for colname, val in (("frozen", frozen), ("monotonic", monotonic),
                              ("description", description)):
             if val is not None:
@@ -788,11 +815,11 @@ class DML:
         self._journal("snapshot", "datasets", self.cat.datasets)
         self._journal("snapshot", "datasets_parent_child",
                       self.cat.datasets_parent_child)
-        self._journal("delete", "files_datasets",
-                      fd_before.where(
-                          (F.col("dataset_namespace") == ns)
-                          & (F.col("dataset_name") == name))
-                      .select(*_MEMBER_COLUMNS))
+        # a dataset's membership keys are as many as a query finds
+        self._journal("delete", "files_datasets", QuerySized(
+            fd_before.where((F.col("dataset_namespace") == ns)
+                            & (F.col("dataset_name") == name))
+            .select(*_MEMBER_COLUMNS)))
 
     @_locked
     def add_subset(self, parent_ns: str, parent_name: str,
@@ -920,5 +947,5 @@ class DML:
         add = add.localCheckpoint()
         n = add.count()
         self.cat.stage(files_datasets=self.cat.append("files_datasets", add))
-        self._journal("upsert", "files_datasets", add)
+        self._journal("upsert", "files_datasets", QuerySized(add))
         return n

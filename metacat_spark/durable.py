@@ -34,6 +34,16 @@ Two persistence strategies, chosen per table by its size class:
   per dataset/namespace/query/category, small by construction): each
   mutation rewrites the full table; O(table) is O(tiny).
 
+Who writes a segment depends on what sized it (``DurableStore.commit``).
+A request-sized segment — the rows a request built or names, or a
+small table's snapshot — is one Arrow table on the driver, written as
+one parquet file with ``pyarrow.parquet``: no Spark write job and no
+Hadoop commit protocol, so a write costs about as much as its rows, as
+the reference's row-level INSERT does. A ``QuerySized`` segment (a
+``compact()`` snapshot, a query result added to a dataset) keeps
+Spark's writer. Both produce the same directory of parquet files, and
+restores read either with Spark.
+
 The log holds catalog tables and nothing else: the write rules DML
 enforces are table rows too — validation categories in
 ``parameter_categories``, each dataset's frozen/monotonic flags and
@@ -74,6 +84,7 @@ import json
 import logging
 import os
 import uuid
+from dataclasses import dataclass
 from functools import reduce
 from typing import Optional
 
@@ -93,6 +104,20 @@ TABLE_KEYS = {
 SNAPSHOT_TABLES = ("datasets", "datasets_parent_child", "namespaces",
                    "queries_tbl", "parameter_categories")
 ALL_TABLES = tuple(TABLE_KEYS) + SNAPSHOT_TABLES
+# a variant-mode files table's VariantType twin of ``metadata``: not
+# stored in pyarrow-written segments, derived from ``metadata`` on replay
+VARIANT_COLUMN = "metadata_v"
+
+
+@dataclass(frozen=True)
+class QuerySized:
+    """A journal payload whose row count a query decides, not the
+    request: a ``compact()`` snapshot, a query result added to a dataset
+    (``add_to``/``save_as``), a removed dataset's membership keys.
+    Spark's parquet writer writes it from the executors, so no write is
+    bounded by driver memory. Every other payload is sized by the
+    request (see ``DurableStore.commit``)."""
+    df: DataFrame
 
 
 def _null_as(dtype) -> F.Column:
@@ -120,9 +145,13 @@ class CommitConflict(Exception):
 
 
 class DurableStore:
-    """One store per catalog root directory. Driver-side object; all
-    data I/O is Spark jobs (parquet read/write of segments), only the
-    tiny JSON manifests go through plain-file / Hadoop-FS I/O."""
+    """One store per catalog root directory. Driver-side object.
+    Restores read segments with Spark. A commit writes a request-sized
+    segment as one parquet file built on the driver with
+    ``pyarrow.parquet``, and a ``QuerySized`` one with Spark's writer
+    (``commit``); segment files, manifests and the checkpoint pointer
+    go through plain-file I/O under a local root, the Hadoop
+    filesystem under a URI root."""
 
     def __init__(self, spark: SparkSession, root: str,
                  at: Optional[int] = None,
@@ -228,19 +257,12 @@ class DurableStore:
         """Overwrite-in-place is fine here: the content is monotonic
         (compactions only move forward) and a torn/lost write only
         widens the retained window — never loses data."""
-        data = json.dumps({"commit": cid})
+        data = json.dumps({"commit": cid}).encode("utf-8")
         if self._uri:
-            fs, p = self._hadoop(self._checkpoint_path())
-            out = fs.create(p, True)
-            try:
-                out.write(bytearray(data.encode("utf-8")))
-            finally:
-                out.close()
+            self._put(self._checkpoint_path(), data)
         else:
-            os.makedirs(self._commits_dir(), exist_ok=True)
             tmp = self._checkpoint_path() + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                f.write(data)
+            self._put(tmp, data)
             os.replace(tmp, self._checkpoint_path())
 
     def _read_current(self) -> Optional[dict]:
@@ -353,21 +375,15 @@ class DurableStore:
             fs, p = self._hadoop(dest)
             if fs.exists(p):
                 raise CommitConflict(cid, self.root)
-            tmp_p = self.spark._jvm.org.apache.hadoop.fs.Path(
-                dest + f".tmp-{token}")
-            out = fs.create(tmp_p, True)
-            try:
-                out.write(bytearray(data.encode("utf-8")))
-            finally:
-                out.close()
+            tmp = dest + f".tmp-{token}"
+            self._put(tmp, data.encode("utf-8"))
+            tmp_p = self.spark._jvm.org.apache.hadoop.fs.Path(tmp)
             if not fs.rename(tmp_p, p):
                 fs.delete(tmp_p, False)
                 raise CommitConflict(cid, self.root)
         else:
-            os.makedirs(self._commits_dir(), exist_ok=True)
             tmp = dest + f".tmp-{token}"
-            with open(tmp, "w") as f:
-                f.write(data)
+            self._put(tmp, data.encode("utf-8"))
             try:
                 os.link(tmp, dest)   # atomic create-if-absent
             except FileExistsError:
@@ -388,12 +404,28 @@ class DurableStore:
         self.manifest = manifest
 
     # ----------------------------------------------------------- commit
-    def commit(self, ops: list[tuple[str, str, DataFrame]]) -> None:
+    def commit(self, ops: list[tuple]) -> None:
         """Persist one mutation's journal: ``ops`` is an ordered list
-        of ("upsert"|"delete"|"snapshot", table, DataFrame). Segments
-        are written first (unreferenced until the manifest lands),
-        then the manifest rename publishes them atomically-enough
-        (see module docstring for the crash contract)."""
+        of ("upsert"|"delete"|"snapshot", table, rows). Segments are
+        written first (unreferenced until the manifest lands), then the
+        manifest rename publishes them atomically-enough (see module
+        docstring for the crash contract).
+
+        ``rows`` is sized by the request or by a query, and that alone
+        picks the writer (``_write_segment``):
+
+        - a ``pyarrow.Table`` the request built on the driver (declared
+          files, membership and edge adds, delete keys it names) is
+          written as it is: no Spark job;
+        - a DataFrame of rows the request names (a point-patched file
+          row, a file's edges or memberships) or of a small table (a
+          snapshot of ``datasets``, ``namespaces``, ...) is collected
+          with ``toArrow()``: one Spark job;
+        - a ``QuerySized`` DataFrame goes through Spark's writer.
+
+        The first two become one parquet file written with
+        ``pyarrow.parquet``, through the same local or Hadoop I/O as
+        the manifests."""
         if not ops:
             return
         if self.at is not None:
@@ -413,12 +445,11 @@ class DurableStore:
         # uniquely-named segments end up unreferenced garbage.
         attempt = uuid.uuid4().hex[:8]
         tables = m.setdefault("tables", {})
-        for i, (kind, table, df) in enumerate(ops):
+        for i, (kind, table, rows) in enumerate(ops):
             m["seq"] += 1
             rel = f"{table}/c{cid:08d}-{i}-{attempt}-{kind}"
             if kind == "snapshot":
-                df.write.mode("overwrite") \
-                    .parquet(f"{self.root}/{rel}")
+                self._write_segment(rel, rows)
                 if table in TABLE_KEYS:
                     # a journaled table's snapshot resets its log
                     tables[table] = {"snapshot": rel, "segments": []}
@@ -433,14 +464,57 @@ class DurableStore:
                 raise ValueError(
                     f"{kind} journaling is only for {set(TABLE_KEYS)}; "
                     f"snapshot {table!r} instead")
-            keys = TABLE_KEYS[table]
-            out = df.select(*keys) if kind == "delete" else df
-            out.write.mode("overwrite").parquet(f"{self.root}/{rel}")
+            self._write_segment(rel, rows, TABLE_KEYS[table]
+                                if kind == "delete" else None)
             entry = tables.setdefault(
                 table, {"snapshot": None, "segments": []})
             entry["segments"].append(
                 {"path": rel, "kind": kind, "seq": m["seq"]})
         self._write_manifest(m)
+
+    def _write_segment(self, rel: str, rows,
+                       keys: Optional[list] = None) -> None:
+        """Write segment directory ``rel`` holding ``rows`` (only the
+        ``keys`` columns, if given; see ``commit`` for the writers). A
+        pyarrow-written segment is one file, without the variant column
+        (``_replay`` derives it)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        path = f"{self.root}/{rel}"
+        if isinstance(rows, QuerySized):
+            df = rows.df if keys is None else rows.df.select(*keys)
+            df.write.mode("overwrite").parquet(path)
+            return
+        frame = isinstance(rows, DataFrame)
+        cols = keys or [c for c in (rows.columns if frame
+                                    else rows.column_names)
+                        if c != VARIANT_COLUMN]
+        table = rows.select(*cols).toArrow() if frame else rows.select(cols)
+        buf = pa.BufferOutputStream()
+        # microsecond INT64 timestamps: Spark reads them as TimestampType
+        # (a NANOS column would read as a long under nanosAsLong). Spark
+        # reads the parquet types, so the footer skips the Arrow schema.
+        pq.write_table(table, buf, coerce_timestamps="us",
+                       store_schema=False)
+        self._put(f"{path}/part-00000.parquet", buf.getvalue().to_pybytes())
+
+    def _put(self, path: str, data: bytes) -> None:
+        """Create (or overwrite) file ``path`` holding ``data``: plain
+        file I/O under a local root, the Hadoop filesystem under a URI
+        root. Segments, manifests and the checkpoint pointer all go
+        through here."""
+        if self._uri:
+            fs, p = self._hadoop(path)
+            out = fs.create(p, True)
+            try:
+                out.write(bytearray(data))
+            finally:
+                out.close()
+        else:
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with open(path, "wb") as f:
+                f.write(data)
 
     # ---------------------------------------------------------- restore
     def _replay(self, base: DataFrame, table: str,
@@ -457,7 +531,13 @@ class DurableStore:
         for s in segs:
             df = self.spark.read.parquet(f"{self.root}/{s['path']}")
             for c in cols:
-                if c not in df.columns:       # delete segments: keys only
+                if c in df.columns:
+                    continue
+                if c == VARIANT_COLUMN and "metadata" in df.columns:
+                    # not stored since segments are written by pyarrow
+                    # (older roots' segments hold it, read as stored)
+                    df = df.withColumn(c, F.parse_json("metadata"))
+                else:                         # delete segments: keys only
                     df = df.withColumn(c, _null_as(base.schema[c].dataType))
             parts.append(df.select(*cols)
                          .withColumn("_op", F.lit(s["kind"]))
@@ -565,7 +645,7 @@ class DurableStore:
               [e["snapshot"]
                for e in (self.manifest.get("tables") or {}).values()
                if e.get("snapshot")]
-        ops = [("snapshot", t, getattr(catalog, t))
+        ops = [("snapshot", t, QuerySized(getattr(catalog, t)))
                for t in self.manifest.get("tables") or {}]
         if not ops:
             return

@@ -147,6 +147,35 @@ def test_update_metadata_modes(fresh):
     assert row["x"] is None  # replaced wholesale
 
 
+def test_update_validates_the_merged_metadata(fresh):
+    """A merge update that touches the core category without carrying
+    core.run is valid when the file already has it: the category's
+    required keys are judged on the merged metadata. Each patched value
+    is still checked, and a replace must carry core.run."""
+    import json as _json
+    eng, dml = fresh
+    dml.declare_files([{"id": "mv-1", "namespace": "test",
+                        "name": "mv1.dat", "metadata": {"core.run": 1}}])
+    dml.update_file_metadata("mv-1", {"core.data_type": "mc"})
+    dml.update_file("mv-1", size=5, metadata={"core.data_type": "data"})
+    row = dml.cat.files.where(F.col("id") == "mv-1").first()
+    assert _json.loads(row["metadata"]) == {"core.run": 1,
+                                            "core.data_type": "data"}
+    assert row["size"] == 5
+    for bad in (lambda: dml.update_file_metadata(
+                    "mv-1", {"core.data_type": "nope"}),
+                lambda: dml.update_file_metadata(
+                    "mv-1", {"core.data_type": "mc"}, mode="replace"),
+                lambda: dml.update_file(
+                    "mv-1", size=6, metadata={"core.data_type": "mc"},
+                    replace=True)):
+        with pytest.raises(ValidationFailed):
+            bad()
+    row = dml.cat.files.where(F.col("id") == "mv-1").first()
+    assert _json.loads(row["metadata"])["core.data_type"] == "data"
+    assert row["size"] == 5
+
+
 def test_update_reshreds_shredded_columns(fresh):
     """Regression (ADVICE r1, high): shredded columns must track metadata
     updates or predicate queries on the updated key return stale
@@ -519,9 +548,10 @@ def test_membership_add_is_one_probe_per_table(spark):
 
 
 def test_driver_rows_plan_as_local_relations(spark, tmp_path):
-    """The fixture's literal tables and the rows a declare or a
-    membership add journals are local relations, not RDDs of pickled
-    Python rows."""
+    """The fixture's literal tables are local relations, not RDDs of
+    pickled Python rows, and the rows a declare or a membership add
+    journals are the Arrow tables the request built on the driver."""
+    import pyarrow as pa
     from metacat_spark.durable import DurableStore
     cat = from_tpch(spark, SF_DIR)
     store = DurableStore(spark, str(tmp_path / "durable"))
@@ -540,9 +570,10 @@ def test_driver_rows_plan_as_local_relations(spark, tmp_path):
     tables = [getattr(cat, t) for t in (
         "datasets", "datasets_parent_child", "namespaces", "queries_tbl",
         "parameter_categories")]
-    deltas = [df for kind, _, df in journaled if kind == "upsert"]
+    deltas = [rows for kind, _, rows in journaled if kind == "upsert"]
     assert [t for _, t, _ in journaled] == \
         ["files", "files_datasets", "files_datasets"]
-    for df in tables + deltas:
+    assert all(isinstance(rows, pa.Table) for rows in deltas), deltas
+    for df in tables:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan

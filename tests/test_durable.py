@@ -644,20 +644,184 @@ def test_declared_created_timestamp_survives_restart(spark, tmp_path, uri):
 
 def test_declare_segments_are_one_file(spark, tmp_path):
     """A 20-file declare into a dataset journals its files and
-    membership rows as one parquet file per segment."""
+    membership rows as one parquet file per segment; so do a membership
+    add, a metadata update and a retire."""
     root = str(tmp_path / "cat")
     cat = from_tpch(spark, SF_DIR)
     store = DurableStore(spark, root)
-    DML(cat, store=store).declare_files(
+    dml = DML(cat, store=store)
+    dml.declare_files(
         [{"id": f"sg-{k:02d}", "namespace": "test", "name": f"sg{k}.dat",
           "metadata": {"core.run": k}} for k in range(20)],
         dataset=("dune", "urgent_2"))
+    dml.add_files_to_dataset(["sg-00", "sg-01"], "dune", "urgent_3")
+    dml.update_file_metadata("sg-02", {"core.run": 99})
+    dml.retire_file("sg-03")
     tables = store.manifest["tables"]
-    for table in ("files", "files_datasets"):
-        [seg] = tables[table]["segments"]
-        parts = [n for n in os.listdir(f"{root}/{seg['path']}")
-                 if n.endswith(".parquet")]
-        assert len(parts) == 1, (table, parts)
+    segs = {t: [s["path"] for s in tables[t]["segments"]]
+            for t in ("files", "files_datasets")}
+    assert [len(segs["files"]), len(segs["files_datasets"])] == [3, 2]
+    for table, paths in segs.items():
+        for path in paths:
+            parts = [n for n in os.listdir(f"{root}/{path}")
+                     if n.endswith(".parquet")]
+            assert len(parts) == 1, (table, path, parts)
+
+
+def test_request_sized_commits_run_at_most_one_job(spark, tmp_path,
+                                                   monkeypatch):
+    """A durable declare into a dataset, with parents, commits the
+    Arrow tables the request built: no Spark job inside
+    ``DurableStore.commit``. An update or a retire collects its
+    patched row in one job."""
+    from conftest import spark_jobs
+    cat = from_tpch(spark, SF_DIR)
+    dml = DML(cat, store=DurableStore(spark, str(tmp_path / "cat")))
+    commits = []
+    commit = DurableStore.commit
+    monkeypatch.setattr(DurableStore, "commit", lambda self, ops:
+                        commits.append(spark_jobs(
+                            spark, lambda: commit(self, ops))))
+    dml.declare_files(
+        [{"id": f"jb-{k}", "namespace": "test", "name": f"jb{k}.dat",
+          "metadata": {"core.run": k}, "parents": ["jb-0"] if k else []}
+         for k in range(3)], dataset=("dune", "urgent_2"))
+    dml.update_file_metadata("jb-1", {"core.run": 7})
+    dml.retire_file("jb-2")
+    assert len(commits) == 3
+    assert commits[0] == [], commits
+    assert len(commits[1]) <= 1 and len(commits[2]) <= 1, commits
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("point", ["first-segment", "all-segments",
+                                   "manifest-create"])
+def test_failed_commit_restarts_at_last_published(spark, tmp_path,
+                                                  monkeypatch, point):
+    """A commit that fails after its first segment, after all of them,
+    or at the manifest create publishes nothing: a fresh attach equals
+    the last published commit, the unreferenced segment directories are
+    never read (their parquet files truncated here), and the DML's
+    re-buffered ops land with its next successful mutation."""
+    root = str(tmp_path / "cat")
+    cat = from_tpch(spark, SF_DIR)
+    store = DurableStore(spark, root)
+    dml = DML(cat, store=store)
+    dml.declare_files([{"id": "cf-0", "namespace": "test",
+                        "name": "cf0.dat", "metadata": {"core.run": 0}}])
+    published, at = _state(cat), store.manifest["commit"]
+
+    def crash(*args, **kwargs):
+        raise _Crash(point)
+    if point == "first-segment":
+        written = []
+        write = DurableStore._write_segment
+
+        def write_one(self, *args, **kwargs):
+            if written:
+                crash()
+            written.append(write(self, *args, **kwargs))
+        monkeypatch.setattr(DurableStore, "_write_segment", write_one)
+    elif point == "all-segments":
+        monkeypatch.setattr(DurableStore, "_write_manifest", crash)
+    else:
+        monkeypatch.setattr(os, "link", crash)
+    with pytest.raises(_Crash):
+        dml.declare_files([{"id": "cf-1", "namespace": "test",
+                            "name": "cf1.dat", "parents": ["cf-0"],
+                            "metadata": {"core.run": 1}}],
+                          dataset=("dune", "urgent_2"))
+    monkeypatch.undo()
+    assert store.manifest["commit"] == at and dml._pending
+
+    referenced = {s["path"] for e in store.manifest["tables"].values()
+                  for s in e.get("segments") or []}
+    orphans = [os.path.join(d, n) for d, _, names in os.walk(root)
+               for n in names if n.endswith(".parquet")
+               and os.path.relpath(d, root) not in referenced]
+    assert len(orphans) == (1 if point == "first-segment" else 3)
+    for path in orphans:
+        with open(path, "r+b") as f:
+            f.truncate(os.path.getsize(path) // 2)
+    assert _state(_restart(spark, root)[0]) == published
+
+    dml.retire_file("cf-0")
+    assert store.manifest["commit"] == at + 1 and not dml._pending
+    assert _state(_restart(spark, root)[0]) == _state(cat)
+
+
+def _typed(df):
+    """``df``'s schema and rows, timestamps as UTC epoch microseconds."""
+    from pyspark.sql import types as T
+    micros = df.select(*[
+        F.unix_micros(c.name).alias(c.name)
+        if isinstance(c.dataType, T.TimestampType) else F.col(c.name)
+        for c in df.schema.fields])
+    return df.schema, sorted(
+        json.dumps(r.asDict(recursive=True), sort_keys=True)
+        for r in micros.collect())
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file-uri"])
+def test_restore_keeps_types_across_both_writers(spark, tmp_path, uri):
+    """A root holding a ``compact()`` snapshot from Spark's writer (INT96
+    timestamps), then pyarrow segments of every journal kind (a declare
+    with a checksums map, parents and no metadata; a membership add; a
+    metadata update; retire and unretire timestamps; an edge replace;
+    delete keys) and a removed dataset's keys from Spark's writer,
+    restores each table equal to the live one in schema and rows,
+    timestamps compared at microseconds in UTC."""
+    import pyarrow.parquet as pq
+    path = str(tmp_path / "cat")
+    root = ("file://" if uri else "") + path
+    cat1 = from_tpch(spark, SF_DIR)
+    store = DurableStore(spark, root)
+    dml = DML(cat1, store=store)
+    dml.create_dataset("test", "ty_ds")
+    dml.declare_files([{"id": f"ty-{k}", "namespace": "test",
+                        "name": f"ty{k}.dat", "metadata": {"core.run": k}}
+                       for k in range(3)])
+    dml.retire_file("ty-0")
+    store.compact(cat1)
+    snap = store.manifest["tables"]["files"]["snapshot"]
+    [part] = [n for n in os.listdir(f"{path}/{snap}")
+              if n.endswith(".parquet")]
+    written = pq.ParquetFile(f"{path}/{snap}/{part}").schema
+    assert written.column(written.names.index("retired_timestamp")) \
+        .physical_type == "INT96"
+
+    dml.declare_files(
+        [{"id": "ty-3", "namespace": "test", "name": "ty3.dat", "size": 9,
+          "checksums": {"adler32": "0a0b0c0d", "md5": 12},
+          "parents": ["ty-1", "ty-2"],
+          "metadata": {"core.run": 3, "core.runs": [3, 4],
+                       "core.x": 1.5}},
+         {"id": "ty-4", "namespace": "test", "name": "ty4.dat"}],
+        dataset=("test", "ty_ds"))
+    dml.add_files_to_dataset(["ty-1"], "test", "ty_ds")
+    dml.update_file_metadata("ty-3", {"core.data_type": "mc"})
+    dml.retire_file("ty-4")
+    dml.retire_file("ty-0", unretire=True)
+    dml.update_file("ty-3", parents=["ty-0"], replace=True)
+    dml.remove_files_from_dataset(["ty-1"], "test", "ty_ds")
+    dml.delete_file("ty-2")
+    # Spark's writer again: a removed dataset's membership keys
+    dml.create_dataset("test", "ty_gone")
+    dml.add_files_to_dataset(["ty-1", "ty-3"], "test", "ty_gone")
+    dml.remove_dataset("test", "ty_gone")
+    seg = store.manifest["tables"]["files"]["segments"][0]["path"]
+    [part] = [n for n in os.listdir(f"{path}/{seg}")
+              if n.endswith(".parquet")]
+    written = pq.ParquetFile(f"{path}/{seg}/{part}").schema
+    assert written.column(written.names.index("created_timestamp")) \
+        .physical_type == "INT64"
+
+    cat2, _, _ = _restart(spark, root)
+    for t in ALL_TABLES:
+        assert _typed(getattr(cat2, t)) == _typed(getattr(cat1, t)), t
 
 
 def test_readding_a_member_journals_nothing(spark, tmp_path):
