@@ -206,24 +206,26 @@ class Catalog:
             version = cur.version + 1 if version is None else version
             self.published = replace(cur, version=version, **changes)
 
-    def resident(self, name: str, df: DataFrame,
-                 derived: bool = False) -> DataFrame:
+    def resident(self, name: str, df: DataFrame, derived: bool = False,
+                 eager: bool = False) -> DataFrame:
         """``df`` made resident as table ``name``: a file-keyed table
         laid out on its key in ``partitions`` partitions (see
-        ``resident``). ``derived``: ``df`` is a filter or patch of the
-        table ``name`` reads now, so its rows keep that table's layout
-        and are not moved again."""
+        ``resident``). ``derived``: ``df`` is a filter of the table
+        ``name`` reads now, so its rows keep that table's layout and
+        are not moved again."""
         key = FILE_KEYS.get(name)
         if key is None:
-            return resident(df)
+            return resident(df, eager=eager)
         return resident(df, key, self.partitions,
-                        getattr(self, name) if derived else None)
+                        getattr(self, name) if derived else None, eager)
 
-    def append(self, name: str, delta: DataFrame) -> DataFrame:
-        """Table ``name`` plus ``delta``'s rows, resident (see
-        ``append``)."""
+    def append(self, name: str, delta: DataFrame,
+               drop: Optional[F.Column] = None,
+               eager: bool = False) -> DataFrame:
+        """Table ``name`` without its ``drop`` rows, plus ``delta``'s
+        rows, resident (see ``append``)."""
         return append(getattr(self, name), delta, FILE_KEYS.get(name),
-                      self.partitions)
+                      self.partitions, drop, eager)
 
     def named_query_source(self, namespace: str, name: str) -> Optional[str]:
         rows = (self.queries_tbl
@@ -468,26 +470,36 @@ def resident(df: DataFrame, key: Optional[str] = None, n: int = 1,
 
 
 def append(table: DataFrame, delta: DataFrame, key: Optional[str] = None,
-           n: int = 1) -> DataFrame:
+           n: int = 1, drop: Optional[F.Column] = None,
+           eager: bool = False) -> DataFrame:
     """``table`` plus ``delta``'s rows, resident; with ``key``, laid out
     on it in ``n`` partitions (see ``resident``), else at ``table``'s
-    partition count. A plain union adds the delta's partitions to every
-    later version, and each extra partition is one more task per scan
-    and one more job per ``toLocalIterator`` read. A laid-out table is
-    not shuffled again: only the delta is placed, partition by
-    partition beside the table's rows, and each partition re-sorted."""
+    partition count. ``drop``: the rows of ``table`` that ``delta``
+    replaces, filtered out before the union (a point write's old
+    rows). A plain union adds the delta's partitions to every later
+    version, and each extra partition is one more task per scan and
+    one more job per ``toLocalIterator`` read. A laid-out table is not
+    shuffled again: only the delta is placed, partition by partition
+    beside the table's rows, and each partition re-sorted."""
+    # null-safe: a filter that implies a non-null key (``NOT id = x``)
+    # makes the key non-nullable in the base's output, and Spark then
+    # unions the two inputs' partitions end to end, not pairwise
+    base = (table if drop is None
+            else table.where(~F.coalesce(drop, F.lit(False))))
     if key is None:
         n = table.rdd.getNumPartitions()
-        return resident(table.unionByName(delta).coalesce(max(1, n)))
+        return resident(base.unionByName(delta).coalesce(max(1, n)),
+                        eager=eager)
     if _layout(table) != (key, n) or (n > 1 and not _sql_conf(
             table.sparkSession, "UNION_OUTPUT_PARTITIONING")):
-        return resident(table.unionByName(delta), key, n)
+        return resident(base.unionByName(delta), key, n, eager=eager)
     if n == 1:
-        both = table.unionByName(delta).coalesce(1)
+        both = base.unionByName(delta).coalesce(1)
     else:
         # co-partitioned union inputs union partition by partition
-        both = table.unionByName(delta.repartition(n, key))
-    return resident(both.sortWithinPartitions(key), key, n, like=table)
+        both = base.unionByName(delta.repartition(n, key))
+    return resident(both.sortWithinPartitions(key), key, n, like=table,
+                    eager=eager)
 
 
 def _place(df: DataFrame, key: str, n: int) -> DataFrame:

@@ -19,9 +19,13 @@ A request's own rows (declared files, membership and edge adds, new
 datasets) are built on the driver as one Arrow table, appended to the
 target table as a local relation (``Catalog.append``) and journaled as
 that same table; query results (``add_to``/``save_as``) stay
-distributed. Filters and patches of a
-table keep its layout (``Catalog.resident``): no write moves the rows
-it did not add.
+distributed. A point write (update, retire, move, ``update_file``,
+``update_dataset``) is the reference's row-level UPDATE: it reads its
+target rows once, patches them on the driver and appends them in
+place of the old ones (``append``'s ``drop``), so its one Spark job
+besides the read computes the new table version and its commit runs
+none. Filters of a table keep its layout (``Catalog.resident``): no
+write moves the rows it did not add.
 """
 
 from __future__ import annotations
@@ -36,7 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .catalog import Catalog, append, arrow_rows
-from .durable import QuerySized
+from .durable import VARIANT_COLUMN, QuerySized
+from .schema import MetaSchema
 from .validation import (DEFAULT_CATEGORIES, category_of,
                          validate_metadata)
 
@@ -52,44 +57,37 @@ class DMLError(Exception):
     pass
 
 
-def _apply_meta_patch(df: DataFrame, meta_schema, hit, new_meta: dict
-                      ) -> DataFrame:
-    """Rewrite the JSON metadata column AND every shredded column for the
-    rows matching ``hit`` so the two representations never diverge (the
-    predicate compiler resolves shredded keys first, so a stale shredded
-    column would make queries on an updated key return wrong results).
+def _shred(schema: MetaSchema, meta: dict) -> dict:
+    """The metadata columns of a row holding ``meta``: the JSON and
+    every shredded column (the predicate compiler reads shredded keys
+    first, so a stale one would answer wrong). An absent key is null,
+    and an int in a float column a float. A key whose column a table
+    lacks lives in the JSON only."""
+    cols = {schema.json_column: json.dumps(meta)}
+    for mk in schema.by_key.values():
+        v = meta.get(mk.key)
+        if v is not None and mk.mtype == "float" and isinstance(v, int):
+            v = float(v)
+        cols[mk.column] = v
+    return cols
 
-    Shredded keys absent from ``new_meta`` are nulled — the patch dict is
-    the full post-update metadata, so absence means the key is gone.
-    """
-    out = df.withColumn(
-        meta_schema.json_column,
-        F.when(hit, F.lit(json.dumps(new_meta)))
-         .otherwise(F.col(meta_schema.json_column)))
-    if "metadata_v" in df.columns:
-        # variant-mode twin of the shredded sync below: a stale
-        # VariantType column would serve old values to every
-        # try_variant_get predicate after a mutation (review r6)
-        out = out.withColumn(
-            "metadata_v",
-            F.when(hit, F.parse_json(F.lit(json.dumps(new_meta))))
-             .otherwise(F.col("metadata_v")))
-    for mk in meta_schema.by_key.values():
-        if mk.column not in df.columns:
-            continue
-        dtype = df.schema[mk.column].dataType
-        v = new_meta.get(mk.key)
-        if v is None:
-            newv = F.lit(None).cast(dtype)
-        elif isinstance(v, (list, dict)):
-            # array/map shredded columns: go through from_json so nested
-            # element types land exactly as the column type demands
-            newv = F.from_json(F.lit(json.dumps(v)), dtype)
-        else:
-            newv = F.lit(v).cast(dtype)
-        out = out.withColumn(
-            mk.column, F.when(hit, newv).otherwise(F.col(mk.column)))
-    return out
+
+def _arrow(table: DataFrame, rows: list) -> pa.Table:
+    """Row dicts as an Arrow table of ``table``'s columns (a variant
+    catalog's ``metadata_v`` left out); a column a row lacks is null."""
+    schema = T.StructType([f for f in table.schema.fields
+                           if f.name != VARIANT_COLUMN])
+    return arrow_rows([tuple(r.get(c) for c in schema.names)
+                       for r in rows], schema)
+
+
+def _read(table: DataFrame, hit) -> list:
+    """``table``'s rows matching ``hit`` as dicts, in one Spark job:
+    every column but a variant catalog's ``metadata_v`` (``_arrow``
+    writes the rows back)."""
+    return (table.where(hit)
+            .select(*[c for c in table.columns if c != VARIANT_COLUMN])
+            .toArrow().to_pylist())
 
 
 def _merged(stored: Optional[str], patch: dict, replace: bool) -> dict:
@@ -263,26 +261,37 @@ class DML:
 
     def _row_like(self, table: DataFrame, **values) -> DataFrame:
         """One row shaped like ``table``; columns not given are null."""
-        return self._local(arrow_rows(
-            [tuple(values.get(c) for c in table.columns)], table.schema))
+        return self._local(_arrow(table, [values]))
 
     def _append(self, name: str, rows: pa.Table,
-                delta: Optional[DataFrame] = None) -> None:
+                drop: Optional[F.Column] = None) -> None:
         """Add a request's ``rows`` to journaled table ``name`` and
         journal the same Arrow table as an upsert, so its commit runs no
-        Spark job. ``delta``: the rows to append, when the table has
-        columns ``rows`` lacks (a variant catalog's ``metadata_v``,
-        which the journal derives on replay). Only declare_files
-        appends to files, after enforcing the PK, so the ids_unique
-        invariant carries over."""
+        Spark job. ``drop``: the table's rows that ``rows`` replace (a
+        point write); the new version is then computed now, the one job
+        the write runs besides reading its rows. A variant catalog's
+        files get ``metadata_v`` from ``metadata`` here, as the journal
+        does on replay. Only declare_files adds file ids, after
+        enforcing the PK, so the ids_unique invariant carries over."""
+        delta = self._local(rows)
+        if name == "files" and VARIANT_COLUMN in self.cat.files.columns:
+            delta = (delta.withColumn(VARIANT_COLUMN,
+                                      F.parse_json(F.col("metadata")))
+                     .select(*self.cat.files.columns))
         self.cat.stage(**{name: self.cat.append(
-            name, self._local(rows) if delta is None else delta)})
+            name, delta, drop=drop, eager=drop is not None)})
         self._journal("upsert", name, rows)
 
+    def _put_files(self, rows: list) -> None:
+        """Put patched file ``rows`` (dicts, as ``_read`` gives them) in
+        place of the files with their ids."""
+        self._append("files", _arrow(self.cat.files, rows),
+                     drop=F.col("id").isin([r["id"] for r in rows]))
+
     def _restage(self, **tables: DataFrame) -> None:
-        """Stage filtered or patched versions of the current tables,
-        resident; a laid-out file-keyed table keeps its layout without
-        moving a row (``Catalog.resident``)."""
+        """Stage filtered versions of the current tables, resident; a
+        laid-out file-keyed table keeps its layout without moving a row
+        (``Catalog.resident``)."""
         self.cat.stage(**{name: self.cat.resident(name, df, derived=True)
                           for name, df in tables.items()})
 
@@ -373,40 +382,20 @@ class DML:
         # construction; NULL would drop every newly declared file from
         # created_timestamp predicates
         now = datetime.now(timezone.utc)
-        schema = T.StructType([f for f in files.schema.fields
-                               if f.name != "metadata_v"])
         prepared = []
         for r in rows:
             meta = r.get("metadata", {})
             self.validate(meta, reqs)
-            base = dict(
+            prepared.append(dict(
                 id=r["id"], namespace=r["namespace"], name=r["name"],
                 size=int(r.get("size", 0)),
                 creator=r.get("creator", "unknown"),
-                created_timestamp=now,
-                metadata=json.dumps(meta), retired=False,
+                created_timestamp=now, retired=False,
                 checksums=({k: str(v) for k, v
                             in r["checksums"].items()}
-                           if r.get("checksums") else None))
-            # shred the hot keys at ingest (the engine's predicates are
-            # shredded-first; JSON is the fallback for cold keys); a
-            # key whose column the files table lacks stays in the JSON
-            for mk in self.cat.file_meta.by_key.values():
-                v = meta.get(mk.key)
-                if v is not None and mk.mtype == "float" \
-                        and isinstance(v, int):
-                    v = float(v)
-                base[mk.column] = v
-            prepared.append(tuple(base.get(c) for c in schema.names))
-        new = arrow_rows(prepared, schema)
-        delta = None
-        if "metadata_v" in files.columns:
-            # variant-mode catalogs: keep the VariantType column in
-            # lockstep with the JSON (the journal derives it on replay)
-            delta = (self._local(new)
-                     .withColumn("metadata_v", F.parse_json(F.col("metadata")))
-                     .select(*files.columns))
-        self._append("files", new, delta)
+                           if r.get("checksums") else None),
+                **_shred(self.cat.file_meta, meta)))
+        self._append("files", _arrow(files, prepared))
         # provenance edges declared inline (data_handler declare
         # accepts parents per file), FK-checked above
         edges = self._new_edges(self.cat.parent_child,
@@ -517,27 +506,20 @@ class DML:
         """
         if mode not in ("update", "replace"):
             raise DMLError(f"bad mode {mode!r}")
-        files = self.cat.files
-        row = point_row(files.where(F.col("id") == file_id)
-                        .select("metadata"))
-        if row is None:
-            # replace mode too: the reference 404s on an unknown fid —
-            # a silent zero-row patch is not a success (review r6)
-            raise DMLError(f"file {file_id!r} not found")
+        row = self._file_row(file_id)
         new_meta = _merged(row["metadata"], metadata, mode == "replace")
         self.validate(metadata, merged=new_meta)
-        self._set_metadata(file_id, new_meta)
+        row.update(_shred(self.cat.file_meta, new_meta))
+        self._put_files([row])
 
-    def _set_metadata(self, file_id: str, new_meta: dict) -> None:
-        """Patch file ``file_id``'s metadata to ``new_meta`` (already
-        validated) and journal the patched row."""
-        hit = F.col("id") == file_id
-        self._restage(files=_apply_meta_patch(
-            self.cat.files, self.cat.file_meta, hit, new_meta))
-        # journal the PATCHED row from the staged (checkpointed)
-        # DataFrame: the commit's collect of it is the table's first
-        # action, so memory and log see the same materialization
-        self._journal("upsert", "files", self.cat.files.where(hit))
+    def _file_row(self, file_id: str) -> dict:
+        """File ``file_id``'s row (see ``_read``); DMLError if absent
+        (the reference 404s on an unknown fid, in replace mode too — a
+        silent zero-row patch is not a success, review r6)."""
+        rows = _read(self.cat.files, F.col("id") == file_id)
+        if not rows:
+            raise DMLError(f"file {file_id!r} not found")
+        return rows[0]
 
     def _check_fids_exist(self, fids: list[str], what: str) -> None:
         if not fids:
@@ -590,12 +572,9 @@ class DML:
         row read), and provenance edges (add, or replace —
         ``parents=[]`` with replace removes all). Point update: one
         bucketed-row patch; checksum merge is driver-side on the one
-        target row, preserving the reference's dict-update semantics."""
-        files = self.cat.files
-        row = point_row(files.where(F.col("id") == file_id)
-                        .select("checksums", "metadata"))
-        if row is None:
-            raise DMLError(f"file {file_id!r} not found")
+        target row, preserving the reference's dict-update semantics.
+        The file's row is read once and written once."""
+        row = self._file_row(file_id)
         # ALL validations before ANY patch (review r8): a metadata
         # validation error or missing edge id after the size/checksum
         # patch had already applied would leave a partial mutation
@@ -606,37 +585,19 @@ class DML:
             self._check_fids_exist(parents, "parent")
         if children is not None:
             self._check_fids_exist(children, "child")
-        hit = F.col("id") == file_id
-        changed = False
         if size is not None:
-            files = files.withColumn(
-                "size", F.when(hit, F.lit(int(size)).cast("long"))
-                         .otherwise(F.col("size")))
-            changed = True
+            row["size"] = int(size)
         if checksums is not None:
             merged = {} if replace else dict(row["checksums"] or {})
             merged.update({k: str(v) for k, v in checksums.items()})
-            if merged:
-                lit_map = F.create_map(*[F.lit(x) for kv in merged.items()
-                                         for x in kv])
-            else:
-                lit_map = F.lit(None).cast("map<string,string>")
-            files = files.withColumn(
-                "checksums", F.when(hit, lit_map)
-                              .otherwise(F.col("checksums")))
-            changed = True
-        if changed:
-            files = (files.withColumn(
-                        "updated_by", F.when(hit, F.lit(by))
-                                       .otherwise(F.col("updated_by")))
-                     .withColumn(
-                        "updated_timestamp",
-                        F.when(hit, F.current_timestamp())
-                         .otherwise(F.col("updated_timestamp"))))
-            self._restage(files=files)
-            self._journal("upsert", "files", self.cat.files.where(hit))
+            row["checksums"] = merged or None
+        if size is not None or checksums is not None:
+            row.update(updated_by=by,
+                       updated_timestamp=datetime.now(timezone.utc))
         if metadata is not None:
-            self._set_metadata(file_id, new_meta)
+            row.update(_shred(self.cat.file_meta, new_meta))
+        if any(v is not None for v in (size, checksums, metadata)):
+            self._put_files([row])
         if parents is not None:
             self._set_edges(file_id, parents, as_parents=True,
                             replace=replace)
@@ -651,25 +612,12 @@ class DML:
         data_handler.py:1084-1140). ``unretire=True`` is the
         reference's `metacat file retire -u` (clears the flag and the
         retire audit columns)."""
-        files = self.cat.files
-        hit = F.col("id") == file_id
-        if point_row(files.where(hit).select("id")) is None:
-            raise DMLError(f"file {file_id!r} not found")
-        retired_by = (F.lit(None).cast("string") if unretire
-                      else F.lit(by))
-        retired_ts = (F.lit(None).cast("timestamp") if unretire
-                      else F.current_timestamp())
-        self._restage(files=(
-            files.withColumn("retired",
-                             F.when(hit, F.lit(not unretire))
-                              .otherwise(F.col("retired")))
-                 .withColumn("retired_by",
-                             F.when(hit, retired_by)
-                              .otherwise(F.col("retired_by")))
-                 .withColumn("retired_timestamp",
-                             F.when(hit, retired_ts)
-                              .otherwise(F.col("retired_timestamp")))))
-        self._journal("upsert", "files", self.cat.files.where(hit))
+        row = self._file_row(file_id)
+        row.update(retired=not unretire,
+                   retired_by=None if unretire else by,
+                   retired_timestamp=(None if unretire
+                                      else datetime.now(timezone.utc)))
+        self._put_files([row])
 
     @_locked
     def delete_file(self, fid: Optional[str] = None,
@@ -720,20 +668,18 @@ class DML:
         """Move files across namespaces (dbobjects2.py:706-736): the
         namespace column changes; the file id (and thus provenance and
         membership, which key on id) is untouched."""
-        self._check_fids_exist(file_ids, "move")
-        files = self.cat.files
-        hit = F.col("id").isin(file_ids)
-        self._restage(files=(
-            files.withColumn("namespace",
-                             F.when(hit, F.lit(to_namespace))
-                              .otherwise(F.col("namespace")))
-                 .withColumn("updated_by",
-                             F.when(hit, F.lit(by))
-                              .otherwise(F.col("updated_by")))
-                 .withColumn("updated_timestamp",
-                             F.when(hit, F.current_timestamp())
-                              .otherwise(F.col("updated_timestamp")))))
-        self._journal("upsert", "files", self.cat.files.where(hit))
+        want = list(dict.fromkeys(file_ids))
+        if not want:
+            return
+        rows = _read(self.cat.files, F.col("id").isin(want))
+        missing = sorted(set(want) - {r["id"] for r in rows})
+        if missing:
+            raise DMLError(f"move file id(s) not found: {missing[:5]}")
+        now = datetime.now(timezone.utc)
+        for r in rows:
+            r.update(namespace=to_namespace, updated_by=by,
+                     updated_timestamp=now)
+        self._put_files(rows)
 
     @_locked
     def update_dataset(self, ns: str, name: str,
@@ -746,23 +692,24 @@ class DML:
         (webapi.py:429-472) and flag toggles."""
         ds = self.cat.datasets
         hit = (F.col("namespace") == ns) & (F.col("name") == name)
-        row = point_row(ds.where(hit).select("metadata"))
-        if row is None:
+        rows = _read(ds, hit)
+        if not rows:
             # flag/metadata updates on a missing dataset must 404, not
             # no-op (review r6)
             raise DMLError(f"dataset {ns}:{name} not found")
-        if metadata is not None:
-            if mode not in ("update", "replace"):
-                raise DMLError(f"bad mode {mode!r}")
-            ds = _apply_meta_patch(ds, self.cat.dataset_meta, hit, _merged(
-                row["metadata"], metadata, mode == "replace"))
-        for colname, val in (("frozen", frozen), ("monotonic", monotonic),
-                             ("description", description)):
-            if val is not None:
-                ds = ds.withColumn(colname,
-                                   F.when(hit, F.lit(val))
-                                    .otherwise(F.col(colname)))
-        self._restage(datasets=ds)
+        if metadata is not None and mode not in ("update", "replace"):
+            raise DMLError(f"bad mode {mode!r}")
+        for r in rows:
+            if metadata is not None:
+                r.update(_shred(self.cat.dataset_meta, _merged(
+                    r["metadata"], metadata, mode == "replace")))
+            for colname, val in (("frozen", frozen),
+                                 ("monotonic", monotonic),
+                                 ("description", description)):
+                if val is not None:
+                    r[colname] = val
+        self.cat.stage(datasets=append(ds, self._local(_arrow(ds, rows)),
+                                       drop=hit))
         self._journal("snapshot", "datasets", self.cat.datasets)
 
     @_locked

@@ -60,10 +60,11 @@ Restore (``DurableStore.attach``) rebuilds each journaled table as::
 where "latest" is one ``row_number`` window over the journal ordered
 by commit sequence (latest op per key wins) — ONE window over the
 journal (small relative to the catalog between compactions) and one
-anti join against the base, run once: the restored table is resident
-and laid out on its file-id key (``Catalog.resident``), like every
-table a mutation produces, so requests read the cached result rather
-than re-running the window.
+anti join against the base, run once, in ``attach``: the restored
+table is resident, computed and laid out on its file-id key
+(``Catalog.resident``), so requests read the cached result rather
+than re-running the window. Segments are read with the schema their
+writer used, so restoring runs no job per segment.
 ``compact()`` folds base+journal into a fresh snapshot
 and truncates the log, bounding both restore cost and the
 merge-on-read overlay.
@@ -415,12 +416,12 @@ class DurableStore:
         picks the writer (``_write_segment``):
 
         - a ``pyarrow.Table`` the request built on the driver (declared
-          files, membership and edge adds, delete keys it names) is
-          written as it is: no Spark job;
-        - a DataFrame of rows the request names (a point-patched file
-          row, a file's edges or memberships) or of a small table (a
-          snapshot of ``datasets``, ``namespaces``, ...) is collected
-          with ``toArrow()``: one Spark job;
+          files, patched file rows, membership and edge adds, delete
+          keys it names) is written as it is: no Spark job;
+        - a DataFrame of rows the request names (a file's edges or
+          memberships, as delete keys) or of a small table (a snapshot
+          of ``datasets``, ``namespaces``, ...) is collected with
+          ``toArrow()``: one Spark job;
         - a ``QuerySized`` DataFrame goes through Spark's writer.
 
         The first two become one parquet file written with
@@ -519,6 +520,12 @@ class DurableStore:
     # ---------------------------------------------------------- restore
     def _replay(self, base: DataFrame, table: str,
                 entry: dict) -> DataFrame:
+        """``base`` (or the entry's snapshot) with the entry's journal
+        segments applied. Each segment is read with the schema its
+        writer used — the base's columns for upserts, the keys for
+        deletes — so no read runs a job to infer it, and a column an
+        older segment lacks reads as null. ``metadata_v`` is derived
+        from ``metadata``, never read (older segments stored it)."""
         keys = TABLE_KEYS[table]
         if entry.get("snapshot"):
             base = self.spark.read.parquet(
@@ -527,15 +534,22 @@ class DurableStore:
         if not segs:
             return base
         cols = base.columns
+        # an upsert holds its timestamps as TimestampType: the Arrow
+        # delta a write appends widens a TIMESTAMP_NTZ column to it
+        upsert = T.StructType([
+            T.StructField(f.name, T.TimestampType())
+            if isinstance(f.dataType, T.TimestampNTZType) else f
+            for f in base.schema.fields if f.name != VARIANT_COLUMN])
+        delete = T.StructType([base.schema[k] for k in keys])
         parts = []
         for s in segs:
-            df = self.spark.read.parquet(f"{self.root}/{s['path']}")
+            df = (self.spark.read
+                  .schema(upsert if s["kind"] == "upsert" else delete)
+                  .parquet(f"{self.root}/{s['path']}"))
             for c in cols:
                 if c in df.columns:
                     continue
-                if c == VARIANT_COLUMN and "metadata" in df.columns:
-                    # not stored since segments are written by pyarrow
-                    # (older roots' segments hold it, read as stored)
+                if c == VARIANT_COLUMN and s["kind"] == "upsert":
                     df = df.withColumn(c, F.parse_json("metadata"))
                 else:                         # delete segments: keys only
                     df = df.withColumn(c, _null_as(base.schema[c].dataType))
@@ -560,11 +574,11 @@ class DurableStore:
         """Overlay the committed state onto a freshly built catalog
         (fixtures/warehouse base): journaled tables get base+journal
         reconstruction, snapshot tables are replaced outright, and each
-        table so restored is made resident (the journaled ones laid out
-        on their file-id keys again). The restored tables publish
-        as one catalog version numbered by the manifest's commit. A
-        ``datasets`` snapshot without the requirements column (an
-        older root) gets it from the manifest's ``dml_meta``.
+        table so restored is made resident and computed (the journaled
+        ones laid out on their file-id keys again). The restored tables
+        publish as one catalog version numbered by the manifest's
+        commit. A ``datasets`` snapshot without the requirements column
+        (an older root) gets it from the manifest's ``dml_meta``.
 
         Time-travel attaches preflight-check that every referenced
         data directory still exists: ``compact()`` deletes superseded
@@ -597,8 +611,9 @@ class DurableStore:
                 new = with_requirements(new, (
                     self.manifest.get("dml_meta") or {}).get(
                         "dataset_requirements"))
-            # resident: the journal window runs once, not per request
-            tables[table] = catalog.resident(table, new)
+            # resident and computed now: the journal window runs once,
+            # here, and no streamed read keeps its lineage
+            tables[table] = catalog.resident(table, new, eager=True)
         # a restored files table has ids_unique unknown: journal upserts
         # can't be proven duplicate-free here, so the engine's
         # set-algebra fast path re-probes on first use

@@ -93,9 +93,9 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
-def spark_jobs(spark, fn) -> list:
-    """Run ``fn`` in a fresh job group; the stage count of each Spark
-    job it ran, in order (one stage per job = no Exchange)."""
+def _job_stage_ids(spark, fn) -> tuple:
+    """Run ``fn`` in a fresh job group; the status tracker and the
+    stage ids of each Spark job ``fn`` ran, in order."""
     import uuid
     sc = spark.sparkContext
     group = uuid.uuid4().hex
@@ -105,8 +105,22 @@ def spark_jobs(spark, fn) -> list:
     finally:
         sc.setJobGroup(None, None)
     tracker = sc.statusTracker()
-    return [len(tracker.getJobInfo(j).stageIds)
-            for j in sorted(tracker.getJobIdsForGroup(group))]
+    return tracker, [list(tracker.getJobInfo(j).stageIds)
+                     for j in sorted(tracker.getJobIdsForGroup(group))]
+
+
+def spark_jobs(spark, fn) -> list:
+    """Run ``fn`` in a fresh job group; the stage count of each Spark
+    job it ran, in order (one stage per job = no Exchange)."""
+    return [len(stages) for stages in _job_stage_ids(spark, fn)[1]]
+
+
+def spark_job_stages(spark, fn) -> list:
+    """Run ``fn`` in a fresh job group; for each Spark job it ran, in
+    order, the task count of each of its stages by stage id."""
+    tracker, jobs = _job_stage_ids(spark, fn)
+    return [{s: tracker.getStageInfo(s).numTasks for s in stages}
+            for stages in jobs]
 
 
 @pytest.fixture(scope="session")

@@ -2,6 +2,8 @@
 retire, membership with frozen/monotonic enforcement, save_as/add_to
 sinks (SURVEY.md §2.10)."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -311,6 +313,87 @@ def test_move_files(fresh):
     ids = {r["id"] for r in eng2.query("files from dune:urgent_2")
            .collect()}
     assert fid in ids
+
+
+def test_point_writes_run_two_jobs(spark, fresh):
+    """An update, a retire, an update_file and a move each read their
+    rows in one Spark job and compute the new files table in one more,
+    so no reader pays for it; a durable commit adds none (it writes the
+    patched Arrow rows)."""
+    from conftest import spark_jobs
+    _, dml = fresh
+    dml.declare_files([{"id": "pj-0", "namespace": "dune",
+                        "name": "pj0.dat", "metadata": {"core.run": 1}}])
+    writes = {
+        "update": lambda: dml.update_file_metadata("pj-0", {"core.run": 2}),
+        "retire": lambda: dml.retire_file("pj-0"),
+        "update_file": lambda: dml.update_file(
+            "pj-0", size=5, checksums={"adler32": "01"},
+            metadata={"core.x": 1.5}),
+        "move": lambda: dml.move_files(["pj-0"], "test"),
+    }
+    jobs, computed = {}, {}
+    for kind, write in writes.items():
+        jobs[kind] = len(spark_jobs(spark, write))
+        computed[kind] = (dml.cat.files._jdf.queryExecution().analyzed()
+                          .rdd().isCheckpointed())
+    assert jobs == dict.fromkeys(writes, 2), jobs
+    assert all(computed.values()), computed
+    row = dml.cat.files.where(F.col("id") == "pj-0").first()
+    assert (row["namespace"], row["size"], row["retired"],
+            row["m_core_run"], row["m_core_x"]) == ("test", 5, True, 2, 1.5)
+
+
+def _variant_catalog(cat):
+    """``cat`` served the way a variant warehouse serves files: one
+    VariantType ``metadata_v`` column and no shredded columns."""
+    from metacat_spark.schema import MetaSchema
+    shredded = [mk.column for mk in cat.file_meta.by_key.values()]
+    cat.publish(files=cat.files.drop(*shredded).withColumn(
+        "metadata_v", F.parse_json("metadata")))
+    cat.file_meta = MetaSchema([])
+    cat.file_variant_column = "metadata_v"
+    return cat
+
+
+@pytest.mark.parametrize("variant", [False, True],
+                         ids=["shredded", "variant"])
+def test_replace_update_shreds_as_declare(spark, variant):
+    """A file declared with metadata M and one declared with other
+    metadata and then replace-updated to M hold the same JSON and the
+    same value in every shredded (or variant) column: keys the replace
+    drops are null."""
+    cat = from_tpch(spark, SF_DIR)
+    if variant:
+        cat = _variant_catalog(cat)
+    dml = DML(cat)
+    meta = {"core.run": 5, "core.x": 2.5, "core.runs": [5, 6],
+            "detector.modules": ["a", "b"], "beam.status": "on",
+            "data.trigger_bits": {"muon": 1}, "core.cold": "kept"}
+    dml.declare_files([
+        {"id": "sh-m", "namespace": "dune", "name": "shm.dat",
+         "metadata": meta},
+        {"id": "sh-u", "namespace": "dune", "name": "shu.dat",
+         "metadata": {"core.run": 1, "core.version": "1.0",
+                      "core.good": True, "data.sequence": [1, 2]}}])
+    dml.update_file_metadata("sh-u", meta, mode="replace")
+    cols = ["metadata"] + [c for c in cat.files.columns
+                           if c.startswith("m_")]
+    if variant:
+        cols.append(F.col("metadata_v").cast("string").alias("v"))
+    rows = {r["id"]: r.asDict(recursive=True) for r in cat.files
+            .where(F.col("id").isin("sh-m", "sh-u"))
+            .select("id", *cols).collect()}
+    declared, updated = rows.pop("sh-m"), rows.pop("sh-u")
+    assert json.loads(updated.pop("metadata")) == meta
+    assert json.loads(declared.pop("metadata")) == meta
+    if variant:
+        assert json.loads(updated.pop("v")) == json.loads(declared.pop("v"))
+    else:
+        assert updated["m_core_version"] is None
+        assert updated["m_core_x"] == 2.5
+    assert {k: v for k, v in updated.items() if k != "id"} \
+        == {k: v for k, v in declared.items() if k != "id"}
 
 
 def test_update_dataset(fresh):

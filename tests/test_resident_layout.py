@@ -11,7 +11,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR, spark_jobs
+from conftest import SF_DIR, spark_job_stages, spark_jobs
 
 from metacat_spark.catalog import from_materialized, from_tpch
 from metacat_spark.client import MetaCatSparkClient
@@ -171,21 +171,43 @@ def test_restart_keeps_layout(spark, cycled, durable_root):
     assert ids == {"lay0", "lay1", "lay2"}
 
 
-def test_declare_shuffles_only_the_delta(spark):
+def test_replay_reads_segments_without_a_job(spark, cycled, durable_root):
+    """Journal segments are read with the schema their writer used, so
+    planning the replay of the cycled root (several segments per
+    table) runs no Spark job: the jobs a restore runs do not grow with
+    the log."""
+    store = DurableStore(spark, durable_root)
+    tables = store.manifest["tables"]
+    assert sorted(len(e["segments"]) for e in tables.values())[0] > 1
+    jobs = spark_jobs(spark, lambda: [
+        store._replay(getattr(cycled, name), name, entry)
+        for name, entry in tables.items()])
+    assert jobs == [], jobs
+
+
+@pytest.fixture(scope="module")
+def wide(spark):
+    """A warehouse catalog of n > 1 partitions whose files table the
+    first write has laid out (it places the bucketed scan's rows
+    once)."""
+    c = from_materialized(spark, SF_DIR)
+    assert c.partitions > 1
+    DML(c).declare_files([{"id": "shuf0", "namespace": "dune",
+                           "name": "shuf0.dat",
+                           "metadata": {"core.run": 1}}])
+    c.files.count()
+    return c
+
+
+def test_declare_shuffles_only_the_delta(wide):
     """On a laid-out table of n > 1 partitions a declare places only
     its own rows: the new version's lineage has one shuffle, whose map
     side is the one-partition delta, and reads the previous version's
     rows narrowly."""
-    c = from_materialized(spark, SF_DIR)
-    assert c.partitions > 1
-    dml = DML(c)
-    # the first write lays the bucketed-scan files table out once
-    dml.declare_files([{"id": "shuf0", "namespace": "dune",
-                        "name": "shuf0.dat"}])
-    c.files.count()
+    c = wide
     before = c.files._jdf.queryExecution().analyzed().rdd().id()
-    dml.declare_files([{"id": "shuf1", "namespace": "dune",
-                        "name": "shuf1.dat"}])
+    DML(c).declare_files([{"id": "shuf1", "namespace": "dune",
+                           "name": "shuf1.dat"}])
     assert _layout(c.files) == ("id", c.partitions)
     lineage = (c.files._jdf.queryExecution().analyzed().rdd()
                .toDebugString())
@@ -194,3 +216,27 @@ def test_declare_shuffles_only_the_delta(spark):
     assert "ShuffledRowRDD" not in shuffled
     assert shuffled.splitlines()[1].lstrip().startswith("+-(1)"), lineage
     assert _misplaced(c.files, "id", c.partitions) == 0
+
+
+@pytest.mark.parametrize("write", ["update", "retire"])
+def test_point_write_shuffles_only_the_delta(spark, wide, write):
+    """At n > 1 an update or a retire reads its row in one job and
+    computes the new version with one shuffle, whose map side is the
+    one-row delta; the rows stay laid out."""
+    c, dml = wide, DML(wide)
+    n = c.partitions
+    if write == "update":
+        jobs = spark_job_stages(spark, lambda: dml.update_file_metadata(
+            "shuf0", {"core.run": 2}))
+    else:
+        jobs = spark_job_stages(spark, lambda: dml.retire_file("shuf0"))
+    # the probe; then one shuffle, whose map side is the delta's one
+    # partition (adaptive execution runs it as a job of its own first)
+    # and whose reduce side is the n partitions
+    probe, *map_side, final = jobs
+    assert len(probe) == 1 and sorted(final.values()) == [1, n], jobs
+    assert all(list(j.values()) == [1] for j in map_side), jobs
+    assert _layout(c.files) == ("id", n)
+    assert _misplaced(c.files, "id", n) == 0
+    [row] = c.files.where(F.col("id") == "shuf0").collect()
+    assert row["retired"] if write == "retire" else row["m_core_run"] == 2
