@@ -23,8 +23,9 @@ Semantics preserved from the reference:
   (dbobjects2.py:260-262); explicit file lists do NOT filter retired
   (dbobjects2.py:305-345)
 - skip/limit merge law + `skip ⇒ ordered` (mql10.py:39-45,244-346,768-786)
-- dataset `with subsets recursively` is a cycle-guarded iterative
-  closure (dbobjects2.py:1060-1088,1505-1548)
+- dataset `with subsets`/`with ancestors` [recursively] is a
+  cycle-guarded breadth-first closure, walked on the driver and
+  inlined as an IN list (dbobjects2.py:1060-1122,1505-1548)
 - named queries are inlined at translate time with cycle detection
   (mql10.py:907-923)
 """
@@ -54,12 +55,11 @@ FILE_OUTPUT_COLUMNS = ["id", "namespace", "name", "size", "creator",
 _DATASET_COLUMNS = ["namespace", "name", "frozen", "monotonic", "creator",
                     "description", "created_timestamp"]
 _QUERY_COLUMNS = ["namespace", "name", "source", "creator", "description"]
-_SAME_DATASET = "l.{0}namespace = r.namespace AND l.{0}name = r.name"
 
-# the temporaries (recursive closures, filter outputs) that the query
-# being compiled in this context has bound. A collected DataFrame's
-# view is dropped at the next bind, this query's or another's, so they
-# are held until the query's text has been analysed.
+# the temporaries (filter outputs) that the query being compiled in
+# this context has bound. A collected DataFrame's view is dropped at
+# the next bind, this query's or another's, so they are held until the
+# query's text has been analysed.
 _TEMPS: ContextVar[list] = ContextVar("metacat_query_temps")
 
 
@@ -196,7 +196,8 @@ class Engine:
     @contextmanager
     def _compiling(self):
         """Compile and analyse one query: every table read from one
-        pinned state, and its temporaries held until the block exits."""
+        pinned state, and its temporaries (filter outputs) held until
+        the block exits."""
         token = _TEMPS.set([])
         try:
             with self.cat.pin():
@@ -443,52 +444,52 @@ class Engine:
         raise QueryError(f"bad selector kind {sel.kind}")
 
     def _datasets(self, selectors) -> str:
-        """SQL of the selected datasets' rows (a dataset may repeat),
-        expanding `with subsets [recursively]` via an iterative,
-        cycle-safe closure (parity: dbobjects2.py:1505-1548)."""
+        """SQL of the selected datasets' rows (a dataset may repeat);
+        `with subsets`/`with ancestors` [recursively] select the DAG
+        closure of the selector's datasets (``_closure``; parity:
+        dbobjects2.py:1505-1548)."""
         ds = self._table("datasets")
         parts = []
         for sel in selectors:
-            rows = _where(ds, [self._selector(sel, "namespace", "name")])
+            cond = self._selector(sel, "namespace", "name")
             if sel.with_subsets or sel.with_ancestors:
-                closure = self._closure(
-                    f"SELECT namespace, name FROM ({rows})",
-                    sel.recursively, up=sel.with_ancestors)
-                rows = _semi(ds, closure, on=_SAME_DATASET.format(""))
+                cond = self._closure(_where(ds, [cond]), sel.recursively,
+                                     up=sel.with_ancestors)
+            rows = _where(ds, [cond])
             if sel.having is not None:
                 rows = _where(rows, [self.dataset_pred.compile(sel.having)])
             parts.append(rows)
         return _union(parts)
 
     def _closure(self, seed: str, recursively: bool, up: bool) -> str:
-        """(namespace, name) of the seed datasets and their DAG
-        neighbours (a dataset may repeat). ``up=False`` walks
-        parent→child (``with subsets``, dbobjects2.py:1062-1086);
-        ``up=True`` walks child→parent (``ancestors``,
-        dbobjects2.py:1094-1122) — the same traversal with the edge
-        roles swapped."""
-        edges = self._table("datasets_parent_child")
+        """A condition on ``datasets`` that holds for the ``seed``
+        rows' datasets and their DAG neighbours: one step away, or any
+        number when ``recursively``. ``up=False`` walks parent→child
+        (``with subsets``, dbobjects2.py:1062-1086); ``up=True`` walks
+        child→parent (``with ancestors``, dbobjects2.py:1094-1122) —
+        the same walk with the edge roles swapped. It is a breadth-
+        first walk on the driver, cycle-guarded by its visited set,
+        over the pinned state's ``datasets_parent_child``: a snapshot
+        table, small by construction, that every snapshot commit
+        already collects whole."""
         here, there = ("child", "parent") if up else ("parent", "child")
-
-        def step(front: str) -> str:
-            hits = _semi(edges, front, on=_SAME_DATASET.format(f"{here}_"))
-            return (f"SELECT {there}_namespace AS namespace, {there}_name "
-                    f"AS name FROM ({hits})")
-
-        if not recursively:
-            return _union([seed, step(seed)])
-        # transitive closure: frontier loop with visited-set cycle guard
-        sql, view = self.spark.sql, self._temp
-        acc = sql(f"SELECT DISTINCT * FROM ({seed})").localCheckpoint()
-        frontier = acc
-        while True:
-            new = _semi(step(view(frontier)), view(acc), "ANTI",
-                        _SAME_DATASET.format(""))
-            nxt = sql(f"SELECT DISTINCT * FROM ({new})").localCheckpoint()
-            if nxt.isEmpty():
-                return f"SELECT * FROM {view(acc)}"
-            acc = sql(_union([view(acc), view(nxt)])).localCheckpoint()
-            frontier = nxt
+        near = {}
+        for edge in self.cat.datasets_parent_child.select(
+                f"{here}_namespace", f"{here}_name",
+                f"{there}_namespace", f"{there}_name").collect():
+            near.setdefault(tuple(edge[:2]), []).append(tuple(edge[2:]))
+        seen = {tuple(r) for r in self.spark.sql(
+            f"SELECT namespace, name FROM ({seed})").collect()}
+        front = seen
+        while front:
+            front = {n for f in front for n in near.get(f, ())} - seen
+            seen |= front
+            if not recursively:
+                break
+        if not seen:
+            return "false"
+        return "(namespace, name) IN ({})".format(", ".join(
+            f"({lit(ns)}, {lit(name)})" for ns, name in sorted(seen)))
 
     def _membership(self, selectors) -> str:
         """File ids selected by dataset membership — reads ONLY the
@@ -499,7 +500,8 @@ class Engine:
                for s in selectors):
             return (f"SELECT /*+ BROADCAST(r) */ l.file_id AS id FROM {fd} l "
                     f"LEFT SEMI JOIN ({self._datasets(selectors)}) r ON "
-                    f"{_SAME_DATASET.format('dataset_')}")
+                    "l.dataset_namespace = r.namespace AND "
+                    "l.dataset_name = r.name")
         cond = " OR ".join(self._selector(s, "dataset_namespace",
                                           "dataset_name") for s in selectors)
         return f"SELECT file_id AS id FROM {fd} WHERE {cond}"

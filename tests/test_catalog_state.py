@@ -14,6 +14,7 @@ from metacat_spark.catalog import from_tpch
 from metacat_spark.client import MetaCatSparkClient
 from metacat_spark.dml import DML, DMLError, ValidationFailed
 from metacat_spark.durable import DurableStore
+from metacat_spark.engine import Engine
 from metacat_spark.server import start_server
 from tests.conftest import SF_DIR
 
@@ -186,3 +187,19 @@ def test_pinned_reads_ignore_later_publishes(spark):
     assert cat.version == 1
     assert before.count() == 0
     assert cat.files.where(F.col("id") == "pin-1").count() == 1
+    # a closure is walked while the query compiles: a reader pinned
+    # before a subset edge is added gets the old closure, also from a
+    # plan it runs after the edge is published
+    eng, mql = Engine(cat), "datasets test:all with subsets recursively"
+    dml.create_dataset("test", "pin_sub")
+
+    def names(df):
+        return sorted((r["namespace"], r["name"]) for r in df.collect())
+
+    old = names(eng.query(mql))
+    with cat.pin():
+        dml.add_subset("test", "all", "test", "pin_sub")
+        assert names(eng.query(mql)) == old
+        plan = eng.query(mql)
+    assert names(plan) == old
+    assert names(eng.query(mql)) == sorted(old + [("test", "pin_sub")])

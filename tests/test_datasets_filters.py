@@ -5,7 +5,11 @@ import zlib
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import ids_of
+from conftest import SF_DIR, ids_of, spark_jobs
+
+from metacat_spark.catalog import from_tpch
+from metacat_spark.dml import DML
+from metacat_spark.engine import Engine
 
 
 def ds_names(df):
@@ -56,6 +60,38 @@ def test_dataset_with_subsets_recursively_cycle_guard(engine):
                    ("dune", "urgent_0"), ("dune", "urgent_1"),
                    ("mc", "flag_a"), ("mc", "flag_n"), ("mc", "flag_r"),
                    ("test", "all")]
+
+
+_RECURSIVE = ["datasets test:all with subsets recursively",
+              "files from test:all with subsets recursively",
+              "files from mc:flag_n with subsets recursively",
+              "datasets dune:urgent_0 with ancestors recursively"]
+
+
+def test_closures_compile_without_jobs(spark, engine):
+    """Over the fixture's local tables a closure is walked on the
+    driver: compiling it runs no Spark job."""
+    for mql in _RECURSIVE:
+        assert spark_jobs(spark, lambda: engine.query(mql)) == [], mql
+
+
+def test_closure_cost_does_not_grow_with_depth(spark):
+    """A chain of 20 datasets closed into a cycle, written by DML, so
+    ``datasets`` and its edges are checkpoints: either direction
+    reaches all 20 from anywhere, and compiles in at most 2 jobs (one
+    collect each for the seeds and the edges), not one per level."""
+    cat = from_tpch(spark, SF_DIR)
+    eng, dml = Engine(cat), DML(cat)
+    chain = [f"chain_{i}" for i in range(20)]
+    for name in chain:
+        dml.create_dataset("test", name)
+    for parent, child in zip(chain, chain[1:] + chain[:1]):
+        dml.add_subset("test", parent, "test", child)
+    for mql in ("datasets test:chain_0 with subsets recursively",
+                "datasets test:chain_10 with ancestors recursively"):
+        assert ds_names(eng.query(mql)) == sorted(
+            ("test", n) for n in chain), mql
+        assert len(spark_jobs(spark, lambda: eng.query(mql))) <= 2, mql
 
 
 def test_files_from_dataset_with_subsets(engine):

@@ -47,6 +47,12 @@ def _state(cat):
     return out
 
 
+def _closure(cat, mql):
+    """The (namespace, name) pairs the dataset query ``mql`` selects."""
+    return sorted((r["namespace"], r["name"])
+                  for r in Engine(cat).query(mql).collect())
+
+
 def test_restored_journal_is_resident(spark, tmp_path):
     """A restart replays the journal window once, in attach: the
     restored files table is a computed resident leaf, so no request
@@ -178,12 +184,18 @@ def test_restart_edge_replace_and_dataset_flags(spark, tmp_path):
     dml1.create_dataset("dune", "gone_ds")
     dml1.create_dataset("dune", "frozen_ds")
     dml1.add_subset("dune", "frozen_ds", "dune", "gone_ds")
+    dml1.add_subset("dune", "frozen_ds", "test", "all")
     dml1.update_dataset("dune", "frozen_ds", frozen=True)
     dml1.remove_dataset("dune", "gone_ds")
     want = _state(cat1)
+    closures = ("datasets dune:frozen_ds with subsets recursively",
+                "datasets dune:low_0 with ancestors recursively")
+    want_closures = [_closure(cat1, mql) for mql in closures]
 
     cat2, dml2, _ = _restart(spark, root)
     assert _state(cat2) == want
+    assert [_closure(cat2, mql) for mql in closures] == want_closures
+    assert ("dune", "low_1") in want_closures[0]
     parents = [r["parent_id"] for r in cat2.parent_child.where(
         F.col("child_id") == "pe-2").collect()]
     assert parents == ["pe-1"]

@@ -6,6 +6,7 @@ import gc
 import json
 import re
 import threading
+from contextlib import contextmanager
 from dataclasses import fields
 
 import pytest
@@ -71,15 +72,37 @@ def _mql_str(value: str) -> str:
 @pytest.fixture(scope="module")
 def hostile(spark):
     """A catalog whose file ids, file names, dataset names and string
-    metadata values are the HOSTILE strings."""
+    metadata values are the HOSTILE strings; each dataset is the
+    subset of the one before it, and the first of the last (a cycle)."""
     rows = [(f"{i}:{v}", "hns", v, i, False, json.dumps({"t.k": v}))
             for i, v in enumerate(HOSTILE)]
     files = local_rows(spark, rows, ["id", "namespace", "name", "size",
                                      "retired", "metadata"])
     fd = local_rows(spark, [(r[0], "hns", r[2]) for r in rows],
                     ["file_id", "dataset_namespace", "dataset_name"])
+    dpc = local_rows(spark, [("hns", p, "hns", c) for p, c in
+                             zip(HOSTILE, HOSTILE[1:] + HOSTILE[:1])],
+                     ["parent_namespace", "parent_name",
+                      "child_namespace", "child_name"])
     return Engine(from_dataframes(spark, files, fd,
+                                  datasets_parent_child=dpc,
                                   file_meta=MetaSchema([])))
+
+
+@contextmanager
+def _parser_mode(spark, escaped: str):
+    """Run the block under ``spark.sql.parser.escapedStringLiterals`` =
+    ``escaped``, with a session variable ``x`` that ``${x}`` would
+    expand to."""
+    conf = spark.conf
+    before = conf.get("spark.sql.parser.escapedStringLiterals")
+    conf.set("spark.sql.parser.escapedStringLiterals", escaped)
+    conf.set("x", "substituted")
+    try:
+        yield
+    finally:
+        conf.set("spark.sql.parser.escapedStringLiterals", before)
+        conf.unset("x")
 
 
 @pytest.mark.parametrize("escaped", ["false", "true"])
@@ -87,11 +110,7 @@ def test_literals_round_trip(spark, hostile, escaped):
     """Every hostile value selects exactly its own file and comes back
     unchanged, under both string-literal parser modes and with a
     session variable ``x`` that ``${x}`` would expand to."""
-    conf = spark.conf
-    before = conf.get("spark.sql.parser.escapedStringLiterals")
-    conf.set("spark.sql.parser.escapedStringLiterals", escaped)
-    conf.set("x", "substituted")
-    try:
+    with _parser_mode(spark, escaped):
         for i, v in enumerate(HOSTILE):
             fid, s = f"{i}:{v}", _mql_str(v)
             for mql in (f"files hns:{s}", f"fids {_mql_str(fid)}",
@@ -101,9 +120,21 @@ def test_literals_round_trip(spark, hostile, escaped):
                 rows = hostile.query(mql, with_meta=True).collect()
                 assert [(r["id"], r["name"], json.loads(r["metadata"]))
                         for r in rows] == [(fid, v, {"t.k": v})], mql
-    finally:
-        conf.set("spark.sql.parser.escapedStringLiterals", before)
-        conf.unset("x")
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_closures_carry_hostile_names(spark, hostile, escaped):
+    """A closure's datasets go into the query text as literals: around
+    the cycle of hostile names, both directions reach every dataset
+    under both string-literal parser modes."""
+    with _parser_mode(spark, escaped):
+        down = hostile.query(
+            f"datasets hns:{_mql_str(HOSTILE[0])} with subsets recursively")
+        up = hostile.query(f"files from hns:{_mql_str(HOSTILE[5])} "
+                           "with ancestors recursively")
+        assert sorted(r["name"] for r in down.collect()) == sorted(HOSTILE)
+        assert sorted(r["id"] for r in up.collect()) == sorted(
+            f"{i}:{v}" for i, v in enumerate(HOSTILE))
 
 
 def _bound_views(spark, cat) -> set:
@@ -214,35 +245,37 @@ def _keys(df) -> set:
 
 
 _CLOSURE = "files from test:all with subsets recursively"
+_FILTER = "filter limit(3)(files from dune:urgent_0)"
 
 
-# each query binds a table after one of its temporaries (a recursive
-# closure, a filter output): the provenance join, a union's next
-# branch, a second recursive selector's edges table
+# each query binds a table after a filter output, its temporary: the
+# provenance join, a union's next branch, a second filter's output.
+# The closure cases bind no temporary since closures are walked on the
+# driver; they stay as plain parity checks.
 @pytest.mark.parametrize("mql, parts, opts", [
+    (_FILTER, [_FILTER], {"with_provenance": True}),
+    (f"union({_FILTER}, filter limit(2)(files from dune:urgent_1))",
+     [_FILTER, "filter limit(2)(files from dune:urgent_1)"], {}),
+    (f"union({_FILTER}, {_CLOSURE})", [_FILTER, _CLOSURE], {}),
     (_CLOSURE, [_CLOSURE], {"with_provenance": True}),
-    ("union(filter limit(3)(files from dune:urgent_0), "
-     "files from dune:urgent_1)",
-     ["filter limit(3)(files from dune:urgent_0)",
-      "files from dune:urgent_1"], {}),
+    (f"union({_FILTER}, files from dune:urgent_1)",
+     [_FILTER, "files from dune:urgent_1"], {}),
     ("datasets test:all with subsets recursively, dune:urgent_0 with subsets",
      ["datasets test:all with subsets recursively",
       "datasets dune:urgent_0 with subsets"], {}),
     (f"union({_CLOSURE}, files from dune:urgent_0)",
      [_CLOSURE, "files from dune:urgent_0"], {}),
-], ids=["provenance", "filter-in-union", "two-closures", "closure-in-union"])
+], ids=["filter-provenance", "two-filters", "filter-then-closure",
+        "provenance", "filter-in-union", "two-closures", "closure-in-union"])
 def test_temporaries_outlive_later_binds(spark, cat, mql, parts, opts):
     eng = Engine(cat)
     got = _keys(eng.query(mql, **opts))
     assert got == set().union(*(_keys(eng.query(p)) for p in parts))
 
 
-def test_temporaries_survive_another_requests_bind(spark, cat, monkeypatch):
-    """Another request's bind can land between a query's compile and
-    its one spark.sql, after its temporaries' last Python references
-    are gone; the query still reads them."""
-    eng = Engine(cat)
-    want = _keys(eng.query(_CLOSURE))
+def _bind_before_each_sql(spark, cat, eng, monkeypatch):
+    """Make every ``spark.sql`` of ``eng`` first collect garbage and
+    bind a table, as another request's bind would."""
     sql = spark.sql
 
     class BindFirst:
@@ -255,6 +288,25 @@ def test_temporaries_survive_another_requests_bind(spark, cat, monkeypatch):
             return getattr(spark, name)
 
     monkeypatch.setattr(eng, "spark", BindFirst())
+
+
+def test_temporaries_survive_another_requests_bind(spark, cat, monkeypatch):
+    """Another request's bind can land between a query's compile and
+    its one spark.sql, after its temporaries' last Python references
+    are gone; the query still reads them."""
+    eng = Engine(cat)
+    want = _keys(eng.query(_CLOSURE))
+    _bind_before_each_sql(spark, cat, eng, monkeypatch)
     assert _keys(eng.query(_CLOSURE)) == want
     assert ("test", "all") in _keys(eng.query(
         "datasets test:all with subsets recursively"))
+
+
+def test_filter_outputs_survive_another_requests_bind(spark, cat,
+                                                      monkeypatch):
+    """A filter output, bound as a temporary, is still read when
+    another request's bind lands before the query's spark.sql."""
+    eng = Engine(cat)
+    want = _keys(eng.query(_FILTER))
+    _bind_before_each_sql(spark, cat, eng, monkeypatch)
+    assert _keys(eng.query(_FILTER)) == want
