@@ -208,23 +208,20 @@ class Catalog:
 
     def resident(self, name: str, df: DataFrame, derived: bool = False,
                  eager: bool = False) -> DataFrame:
-        """``df`` made resident as table ``name``: a file-keyed table
-        laid out on its key in ``partitions`` partitions (see
-        ``resident``). ``derived``: ``df`` is a filter of the table
-        ``name`` reads now, so its rows keep that table's layout and
-        are not moved again."""
-        key = FILE_KEYS.get(name)
-        if key is None:
-            return resident(df, eager=eager)
-        return resident(df, key, self.partitions,
+        """``df`` made resident as file-keyed table ``name``, laid out
+        on its key in ``partitions`` partitions (see ``resident``).
+        ``derived``: ``df`` is a filter of the table ``name`` reads
+        now, so its rows keep that table's layout and are not moved
+        again."""
+        return resident(df, FILE_KEYS[name], self.partitions,
                         getattr(self, name) if derived else None, eager)
 
     def append(self, name: str, delta: DataFrame,
                drop: Optional[F.Column] = None,
                eager: bool = False) -> DataFrame:
-        """Table ``name`` without its ``drop`` rows, plus ``delta``'s
-        rows, resident (see ``append``)."""
-        return append(getattr(self, name), delta, FILE_KEYS.get(name),
+        """File-keyed table ``name`` without its ``drop`` rows, plus
+        ``delta``'s rows, resident (see ``append``)."""
+        return append(getattr(self, name), delta, FILE_KEYS[name],
                       self.partitions, drop, eager)
 
     def named_query_source(self, namespace: str, name: str) -> Optional[str]:
@@ -440,19 +437,21 @@ def _partitions_for(files: DataFrame) -> int:
                       _sql_conf(spark, "SHUFFLE_PARTITIONS")))
 
 
-def resident(df: DataFrame, key: Optional[str] = None, n: int = 1,
+def resident(df: DataFrame, key: str, n: int = 1,
              like: Optional[DataFrame] = None,
              eager: bool = False) -> DataFrame:
-    """Make ``df`` a localCheckpoint: an RDD leaf computed by the first
-    query that touches it (or now, if ``eager``) and cached after, so
-    later queries neither re-derive nor re-analyze its lineage. Every
-    catalog version a request reads is resident — the fixture catalog's
-    derived tables, each DML mutation's result (otherwise mutation
-    history would pile plan nodes onto every later query) and each
-    table a durable restore replays. The cost is executor memory for the rows (spilling to
-    local disk under pressure).
+    """Make file-keyed table ``df`` a localCheckpoint: an RDD leaf
+    computed by the first query that touches it (or now, if ``eager``)
+    and cached after, so later queries neither re-derive nor re-analyze
+    its lineage. Every version of a file-keyed table a request reads is
+    resident — the fixture catalog's derived tables, each DML mutation's
+    result (otherwise mutation history would pile plan nodes onto every
+    later query) and each table a durable restore replays. The cost is
+    executor memory for the rows (spilling to local disk under
+    pressure). The small tables are never checkpointed: every version
+    of one is a local relation built on the driver.
 
-    With ``key`` the table gets the warehouse's layout in memory: rows
+    The table gets the warehouse's layout in memory: rows
     hash-partitioned on ``key`` into ``n`` partitions (Spark's Murmur3,
     as ``repartition`` and ``bucketBy`` place them) and sorted by it
     within each. The checkpoint declares that layout, so joins on the
@@ -463,33 +462,25 @@ def resident(df: DataFrame, key: Optional[str] = None, n: int = 1,
     the same way, the rows are not moved again. Warehouse tables stay
     plain scans, to keep their bucketing and pushdown, until a mutation
     replaces them."""
-    if key is not None and _layout(like) != (key, n):
+    if _layout(like) != (key, n):
         df = _place(df, key, n)
-    checkpoint = df.localCheckpoint(eager=eager)
-    return checkpoint if key is None else _declare(checkpoint, key, n)
+    return _declare(df.localCheckpoint(eager=eager), key, n)
 
 
-def append(table: DataFrame, delta: DataFrame, key: Optional[str] = None,
-           n: int = 1, drop: Optional[F.Column] = None,
+def append(table: DataFrame, delta: DataFrame, key: str, n: int = 1,
+           drop: Optional[F.Column] = None,
            eager: bool = False) -> DataFrame:
-    """``table`` plus ``delta``'s rows, resident; with ``key``, laid out
-    on it in ``n`` partitions (see ``resident``), else at ``table``'s
-    partition count. ``drop``: the rows of ``table`` that ``delta``
-    replaces, filtered out before the union (a point write's old
-    rows). A plain union adds the delta's partitions to every later
-    version, and each extra partition is one more task per scan and
-    one more job per ``toLocalIterator`` read. A laid-out table is not
-    shuffled again: only the delta is placed, partition by partition
-    beside the table's rows, and each partition re-sorted."""
+    """``table`` plus ``delta``'s rows, resident and laid out on ``key``
+    in ``n`` partitions (see ``resident``). ``drop``: the rows of
+    ``table`` that ``delta`` replaces, filtered out before the union (a
+    point write's old rows). A laid-out table is not shuffled again:
+    only the delta is placed, partition by partition beside the table's
+    rows, and each partition re-sorted."""
     # null-safe: a filter that implies a non-null key (``NOT id = x``)
     # makes the key non-nullable in the base's output, and Spark then
     # unions the two inputs' partitions end to end, not pairwise
     base = (table if drop is None
             else table.where(~F.coalesce(drop, F.lit(False))))
-    if key is None:
-        n = table.rdd.getNumPartitions()
-        return resident(base.unionByName(delta).coalesce(max(1, n)),
-                        eager=eager)
     if _layout(table) != (key, n) or (n > 1 and not _sql_conf(
             table.sparkSession, "UNION_OUTPUT_PARTITIONING")):
         return resident(base.unionByName(delta), key, n, eager=eager)

@@ -15,17 +15,26 @@ survive a restart like the reference's PostgreSQL rows do — see
 durable.py for the log model and docs/DIVERGENCES.md §9 for the
 contract. Bulk declare is a single DataFrame union (the
 COPY-equivalent, dbobjects2.py:525-557), never a row-at-a-time loop.
-A request's own rows (declared files, membership and edge adds, new
-datasets) are built on the driver as one Arrow table, appended to the
-target table as a local relation (``Catalog.append``) and journaled as
-that same table; query results (``add_to``/``save_as``) stay
-distributed. A point write (update, retire, move, ``update_file``,
-``update_dataset``) is the reference's row-level UPDATE: it reads its
-target rows once, patches them on the driver and appends them in
-place of the old ones (``append``'s ``drop``), so its one Spark job
-besides the read computes the new table version and its commit runs
-none. Filters of a table keep its layout (``Catalog.resident``): no
-write moves the rows it did not add.
+
+The file-keyed tables (``files``, ``files_datasets``,
+``parent_child``) are resident on the executors. A request's own rows
+(declared files, membership and edge adds) are built on the driver as
+one Arrow table, appended to the target table as a local relation
+(``Catalog.append``) and journaled as that same table; query results
+(``add_to``/``save_as``) stay distributed. A point write (update,
+retire, move, ``update_file``) is the reference's row-level UPDATE: it
+reads its target rows once, patches them on the driver and appends
+them in place of the old ones (``append``'s ``drop``), so its one
+Spark job besides the read computes the new table version and its
+commit runs none. Filters of a table keep its layout
+(``Catalog.resident``): no write moves the rows it did not add.
+
+The small tables (datasets, their subset edges, namespaces, named
+queries, parameter categories) are held on the driver: every version
+of one is a local relation. A write to one collects the rows
+(``_rows``), changes them in Python and stages and journals the new
+rows as one Arrow table (``_snapshot``), so neither the write, its
+commit nor a later read of the table runs a Spark job.
 """
 
 from __future__ import annotations
@@ -39,7 +48,7 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .catalog import Catalog, append, arrow_rows
+from .catalog import Catalog, arrow_rows
 from .durable import VARIANT_COLUMN, QuerySized
 from .schema import MetaSchema
 from .validation import (DEFAULT_CATEGORIES, category_of,
@@ -259,9 +268,30 @@ class DML:
         """A request's rows as one single-partition local relation."""
         return self.cat.spark.createDataFrame(rows).coalesce(1)
 
-    def _row_like(self, table: DataFrame, **values) -> DataFrame:
-        """One row shaped like ``table``; columns not given are null."""
-        return self._local(_arrow(table, [values]))
+    def _rows(self, name: str) -> list:
+        """Small table ``name``'s rows as dicts, collected on the driver
+        (no Spark job over a local relation). ``collect`` gives a
+        ``TimestampType`` value as a naive local-time datetime, which
+        ``arrow_rows`` would read as UTC, so each is made UTC-aware;
+        ``TimestampNTZType`` values are wall-clock times and stay naive."""
+        table = getattr(self.cat, name)
+        stamps = [f.name for f in table.schema.fields
+                  if isinstance(f.dataType, T.TimestampType)]
+        rows = [r.asDict() for r in table.collect()]
+        for r in rows:
+            for c in stamps:
+                if r[c] is not None:
+                    r[c] = r[c].astimezone(timezone.utc)
+        return rows
+
+    def _snapshot(self, name: str, rows: list) -> None:
+        """Replace small table ``name`` with ``rows`` (dicts): staged as
+        a local relation built on the driver and journaled as the same
+        Arrow table, so neither the write nor its commit runs a Spark
+        job and every later read of the table runs none either."""
+        table = _arrow(getattr(self.cat, name), rows)
+        self.cat.stage(**{name: self.cat.spark.createDataFrame(table)})
+        self._journal("snapshot", name, table)
 
     def _append(self, name: str, rows: pa.Table,
                 drop: Optional[F.Column] = None) -> None:
@@ -289,9 +319,9 @@ class DML:
                      drop=F.col("id").isin([r["id"] for r in rows]))
 
     def _restage(self, **tables: DataFrame) -> None:
-        """Stage filtered versions of the current tables, resident; a
-        laid-out file-keyed table keeps its layout without moving a row
-        (``Catalog.resident``)."""
+        """Stage filtered versions of the current file-keyed tables,
+        resident; a laid-out table keeps its layout without moving a
+        row (``Catalog.resident``)."""
         self.cat.stage(**{name: self.cat.resident(name, df, derived=True)
                           for name, df in tables.items()})
 
@@ -690,16 +720,15 @@ class DML:
                        description: Optional[str] = None) -> None:
         """Dataset updates incl. metadata update/replace modes
         (webapi.py:429-472) and flag toggles."""
-        ds = self.cat.datasets
-        hit = (F.col("namespace") == ns) & (F.col("name") == name)
-        rows = _read(ds, hit)
-        if not rows:
+        rows = self._rows("datasets")
+        hit = [r for r in rows if (r["namespace"], r["name"]) == (ns, name)]
+        if not hit:
             # flag/metadata updates on a missing dataset must 404, not
             # no-op (review r6)
             raise DMLError(f"dataset {ns}:{name} not found")
         if metadata is not None and mode not in ("update", "replace"):
             raise DMLError(f"bad mode {mode!r}")
-        for r in rows:
+        for r in hit:
             if metadata is not None:
                 r.update(_shred(self.cat.dataset_meta, _merged(
                     r["metadata"], metadata, mode == "replace")))
@@ -708,9 +737,7 @@ class DML:
                                  ("description", description)):
                 if val is not None:
                     r[colname] = val
-        self.cat.stage(datasets=append(ds, self._local(_arrow(ds, rows)),
-                                       drop=hit))
-        self._journal("snapshot", "datasets", self.cat.datasets)
+        self._snapshot("datasets", rows)
 
     @_locked
     def create_dataset(self, ns: str, name: str, description: str = "",
@@ -722,21 +749,26 @@ class DML:
         """Create an empty dataset (webapi.py:380-427; the reference's
         `metacat dataset create`). PK (namespace, name) — duplicates
         are an error, not an upsert."""
-        if self._dataset(ns, name) is not None:
-            raise AlreadyExists(f"dataset {ns}:{name} already exists")
         # dataset metadata is uncategorized (dotless keys in the
         # reference fixture) — file-category validation doesn't apply
-        self.cat.stage(datasets=append(self.cat.datasets, self._row_like(
-            self.cat.datasets, namespace=ns, name=name, frozen=frozen,
-            monotonic=monotonic, creator=creator,
-            description=description,
-            created_timestamp=datetime.now(timezone.utc),
-            metadata=json.dumps(metadata or {}),
+        self._new_dataset(ns, name, dict(
+            frozen=frozen, monotonic=monotonic, creator=creator,
+            description=description, metadata=json.dumps(metadata or {}),
             # enforced on add_files_to_dataset / declare-into-dataset
             file_metadata_requirements=(json.dumps(file_meta_requirements)
                                         if file_meta_requirements
-                                        else None))))
-        self._journal("snapshot", "datasets", self.cat.datasets)
+                                        else None)))
+
+    def _new_dataset(self, ns: str, name: str, row: dict) -> None:
+        """Add dataset ``ns:name`` with the columns in ``row``, created
+        now; AlreadyExists if the catalog has it (the (namespace, name)
+        PK)."""
+        rows = self._rows("datasets")
+        if any((r["namespace"], r["name"]) == (ns, name) for r in rows):
+            raise AlreadyExists(f"dataset {ns}:{name} already exists")
+        self._snapshot("datasets", rows + [dict(
+            row, namespace=ns, name=name,
+            created_timestamp=datetime.now(timezone.utc))])
 
     @_locked
     def remove_dataset(self, ns: str, name: str) -> None:
@@ -744,29 +776,22 @@ class DML:
         (data_handler.py 'remove dataset'; FK cascade equivalent). The
         files themselves are untouched — a dataset is a named set, not
         an owner."""
-        hit = ((F.col("namespace") == ns) & (F.col("name") == name))
-        if self._dataset(ns, name) is None:
+        rows = self._rows("datasets")
+        keep = [r for r in rows if (r["namespace"], r["name"]) != (ns, name)]
+        if len(keep) == len(rows):
             raise DMLError(f"dataset {ns}:{name} not found")
+        self._snapshot("datasets", keep)
+        self._snapshot("datasets_parent_child", [
+            e for e in self._rows("datasets_parent_child")
+            if (ns, name) not in ((e["parent_namespace"], e["parent_name"]),
+                                  (e["child_namespace"], e["child_name"]))])
         fd_before = self.cat.files_datasets
-        dpc = self.cat.datasets_parent_child
-        self._restage(
-            datasets=self.cat.datasets.where(~hit),
-            files_datasets=fd_before.where(~(
-                (F.col("dataset_namespace") == ns)
-                & (F.col("dataset_name") == name))),
-            datasets_parent_child=dpc.where(~(
-                ((F.col("parent_namespace") == ns)
-                 & (F.col("parent_name") == name))
-                | ((F.col("child_namespace") == ns)
-                   & (F.col("child_name") == name)))))
-        self._journal("snapshot", "datasets", self.cat.datasets)
-        self._journal("snapshot", "datasets_parent_child",
-                      self.cat.datasets_parent_child)
+        member = ((F.col("dataset_namespace") == ns)
+                  & (F.col("dataset_name") == name))
+        self._restage(files_datasets=fd_before.where(~member))
         # a dataset's membership keys are as many as a query finds
         self._journal("delete", "files_datasets", QuerySized(
-            fd_before.where((F.col("dataset_namespace") == ns)
-                            & (F.col("dataset_name") == name))
-            .select(*_MEMBER_COLUMNS)))
+            fd_before.where(member).select(*_MEMBER_COLUMNS)))
 
     @_locked
     def add_subset(self, parent_ns: str, parent_name: str,
@@ -778,18 +803,11 @@ class DML:
                          (child_ns, child_name)):
             if self._dataset(ns, name) is None:
                 raise DMLError(f"dataset {ns}:{name} not found")
-        dpc = self.cat.datasets_parent_child
         edge = dict(parent_namespace=parent_ns, parent_name=parent_name,
                     child_namespace=child_ns, child_name=child_name)
-        hit = ((F.col("parent_namespace") == parent_ns)
-               & (F.col("parent_name") == parent_name)
-               & (F.col("child_namespace") == child_ns)
-               & (F.col("child_name") == child_name))
-        if point_row(dpc.where(hit)) is None:
-            self.cat.stage(datasets_parent_child=append(
-                dpc, self._row_like(dpc, **edge)))
-            self._journal("snapshot", "datasets_parent_child",
-                          self.cat.datasets_parent_child)
+        edges = self._rows("datasets_parent_child")
+        if not any(all(e[c] == v for c, v in edge.items()) for e in edges):
+            self._snapshot("datasets_parent_child", edges + [edge])
 
     @_locked
     def create_named_query(self, ns: str, name: str, source: str,
@@ -803,19 +821,13 @@ class DML:
         (the reference handler's ?update=yes,
         data_handler.py:1425-1460); without it a duplicate is a PK
         error."""
-        qt = self.cat.queries_tbl
-        if point_row(qt.where((F.col("namespace") == ns)
-                              & (F.col("name") == name))
-                     .select("name")) is not None:
-            if not update:
-                raise AlreadyExists(f"named query {ns}:{name} "
-                                    f"already exists")
-            qt = qt.where(~((F.col("namespace") == ns)
-                            & (F.col("name") == name)))
-        self.cat.stage(queries_tbl=append(qt, self._row_like(
-            qt, namespace=ns, name=name, source=source, creator=creator,
-            description=description)))
-        self._journal("snapshot", "queries_tbl", self.cat.queries_tbl)
+        rows = self._rows("queries_tbl")
+        keep = [r for r in rows if (r["namespace"], r["name"]) != (ns, name)]
+        if len(keep) < len(rows) and not update:
+            raise AlreadyExists(f"named query {ns}:{name} already exists")
+        self._snapshot("queries_tbl", keep + [dict(
+            namespace=ns, name=name, source=source, creator=creator,
+            description=description)])
 
     @_locked
     def create_parameter_category(self, path: str,
@@ -828,28 +840,24 @@ class DML:
         schema.sql:162-176; `metacat category` CLI family). Validation
         for subsequent declares/updates picks up the new rules
         immediately."""
-        pc = self.cat.parameter_categories
-        if pc is None:
+        if self.cat.parameter_categories is None:
             raise DMLError("catalog has no parameter_categories table")
-        if point_row(pc.where(F.col("path") == path)
-                     .select("path")) is not None:
+        rows = self._rows("parameter_categories")
+        if any(r["path"] == path for r in rows):
             raise AlreadyExists(f"category {path!r} already exists")
-        self.cat.stage(parameter_categories=append(pc, self._row_like(
-            pc, path=path, restricted=restricted,
+        self._snapshot("parameter_categories", rows + [dict(
+            path=path, restricted=restricted,
             definitions=json.dumps(definitions or {}),
             owner_user=owner_user, description=description,
-            creator=creator)))
-        self._journal("snapshot", "parameter_categories",
-                      self.cat.parameter_categories)
+            creator=creator)])
 
     @_locked
     def create_namespace(self, name: str, owner: str = "admin") -> None:
-        if point_row(self.cat.namespaces.where(F.col("name") == name)
-                     .select("name")) is not None:
+        rows = self._rows("namespaces")
+        if any(r["name"] == name for r in rows):
             raise DMLError(f"namespace {name!r} already exists")
-        self.cat.stage(namespaces=append(self.cat.namespaces, self._row_like(
-            self.cat.namespaces, name=name, owner_user=owner)))
-        self._journal("snapshot", "namespaces", self.cat.namespaces)
+        self._snapshot("namespaces",
+                       rows + [dict(name=name, owner_user=owner)])
 
     # ------------------------------------------------------------- sinks
     @_locked
@@ -857,14 +865,9 @@ class DML:
                 frozen: bool = False, monotonic: bool = False) -> int:
         """Materialize a query result as a NEW dataset
         (data_handler.py:1306-1337)."""
-        if self._dataset(ns, name) is not None:
-            raise DMLError(f"dataset {ns}:{name} already exists")
-        self.cat.stage(datasets=append(self.cat.datasets, self._row_like(
-            self.cat.datasets, namespace=ns, name=name, frozen=frozen,
-            monotonic=monotonic, creator="engine",
-            description=f"saved query result {ns}:{name}",
-            created_timestamp=datetime.now(timezone.utc), metadata="{}")))
-        self._journal("snapshot", "datasets", self.cat.datasets)
+        self._new_dataset(ns, name, dict(
+            frozen=frozen, monotonic=monotonic, creator="engine",
+            description=f"saved query result {ns}:{name}", metadata="{}"))
         # a frozen save_as still receives its own files
         return self._add_result(result, ns, name)
 

@@ -32,7 +32,10 @@ Two persistence strategies, chosen per table by its size class:
 - **Snapshot tables** (``datasets``, ``datasets_parent_child``,
   ``namespaces``, ``queries_tbl``, ``parameter_categories`` — one row
   per dataset/namespace/query/category, small by construction): each
-  mutation rewrites the full table; O(table) is O(tiny).
+  mutation rewrites the full table; O(table) is O(tiny). The catalog
+  holds every version of one on the driver, as a local relation: DML
+  builds the new rows there and journals that same Arrow table as the
+  snapshot, and ``attach`` collects a restored snapshot into one.
 
 Who writes a segment depends on what sized it (``DurableStore.commit``).
 A request-sized segment — the rows a request built or names, or a
@@ -238,18 +241,8 @@ class DurableStore:
         of the local branch's OSError — review r9)."""
         from py4j.protocol import Py4JJavaError
         try:
-            if self._uri:
-                fs, p = self._hadoop(self._checkpoint_path())
-                stream = fs.open(p)
-                try:
-                    raw = self.spark._jvm.org.apache.commons.io \
-                        .IOUtils.toString(stream, "UTF-8")
-                finally:
-                    stream.close()
-            else:
-                with open(self._checkpoint_path()) as f:
-                    raw = f.read()
-            return int(json.loads(raw)["commit"])
+            return int(json.loads(self._get(self._checkpoint_path()))
+                       ["commit"])
         except (FileNotFoundError, ValueError, KeyError, OSError,
                 Py4JJavaError):
             return 0
@@ -293,20 +286,9 @@ class DurableStore:
         because of EACCES must not be indistinguishable from a real
         torn manifest (ADVICE r8)."""
         from py4j.protocol import Py4JJavaError
-        path = f"{self._commits_dir()}/{cid:012d}.json"
         try:
-            if self._uri:
-                fs, p = self._hadoop(path)
-                stream = fs.open(p)
-                try:
-                    raw = self.spark._jvm.org.apache.commons.io \
-                        .IOUtils.toString(stream, "UTF-8")
-                finally:
-                    stream.close()
-            else:
-                with open(path) as f:
-                    raw = f.read()
-            return json.loads(raw)
+            return json.loads(self._get(
+                f"{self._commits_dir()}/{cid:012d}.json"))
         except (FileNotFoundError, ValueError):
             return None
         except (OSError, Py4JJavaError) as e:
@@ -417,11 +399,11 @@ class DurableStore:
 
         - a ``pyarrow.Table`` the request built on the driver (declared
           files, patched file rows, membership and edge adds, delete
-          keys it names) is written as it is: no Spark job;
+          keys it names, a small table's snapshot) is written as it is:
+          no Spark job;
         - a DataFrame of rows the request names (a file's edges or
-          memberships, as delete keys) or of a small table (a snapshot
-          of ``datasets``, ``namespaces``, ...) is collected with
-          ``toArrow()``: one Spark job;
+          memberships, as delete keys) is collected with ``toArrow()``:
+          one Spark job;
         - a ``QuerySized`` DataFrame goes through Spark's writer.
 
         The first two become one parquet file written with
@@ -517,6 +499,21 @@ class DurableStore:
             with open(path, "wb") as f:
                 f.write(data)
 
+    def _get(self, path: str) -> str:
+        """The text of file ``path``, read as ``_put`` writes it: plain
+        file I/O under a local root, the Hadoop filesystem under a URI
+        root. Manifests and the checkpoint pointer are read here."""
+        if self._uri:
+            fs, p = self._hadoop(path)
+            stream = fs.open(p)
+            try:
+                return self.spark._jvm.org.apache.commons.io \
+                    .IOUtils.toString(stream, "UTF-8")
+            finally:
+                stream.close()
+        with open(path) as f:
+            return f.read()
+
     # ---------------------------------------------------------- restore
     def _replay(self, base: DataFrame, table: str,
                 entry: dict) -> DataFrame:
@@ -573,9 +570,9 @@ class DurableStore:
     def attach(self, catalog) -> None:
         """Overlay the committed state onto a freshly built catalog
         (fixtures/warehouse base): journaled tables get base+journal
-        reconstruction, snapshot tables are replaced outright, and each
-        table so restored is made resident and computed (the journaled
-        ones laid out on their file-id keys again). The restored tables
+        reconstruction and are made resident and computed, laid out on
+        their file-id keys again; snapshot tables are replaced outright
+        by a local relation of their rows, collected here. The restored tables
         publish as one catalog version numbered by the manifest's
         commit. A ``datasets`` snapshot without the requirements column
         (an older root) gets it from the manifest's ``dml_meta``.
@@ -611,9 +608,13 @@ class DurableStore:
                 new = with_requirements(new, (
                     self.manifest.get("dml_meta") or {}).get(
                         "dataset_requirements"))
-            # resident and computed now: the journal window runs once,
-            # here, and no streamed read keeps its lineage
-            tables[table] = catalog.resident(table, new, eager=True)
+            if table in TABLE_KEYS:
+                # resident and computed now: the journal window runs
+                # once, here, and no streamed read keeps its lineage
+                tables[table] = catalog.resident(table, new, eager=True)
+            else:
+                # a small table is held on the driver, as DML writes it
+                tables[table] = self.spark.createDataFrame(new.toArrow())
         # a restored files table has ids_unique unknown: journal upserts
         # can't be proven duplicate-free here, so the engine's
         # set-algebra fast path re-probes on first use

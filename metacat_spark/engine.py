@@ -470,8 +470,9 @@ class Engine:
         the same walk with the edge roles swapped. It is a breadth-
         first walk on the driver, cycle-guarded by its visited set,
         over the pinned state's ``datasets_parent_child``: a snapshot
-        table, small by construction, that every snapshot commit
-        already collects whole."""
+        table, small by construction, whose every version is a local
+        relation held on the driver, so collecting it and the seed
+        datasets runs no Spark job."""
         here, there = ("child", "parent") if up else ("parent", "child")
         near = {}
         for edge in self.cat.datasets_parent_child.select(

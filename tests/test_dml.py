@@ -660,3 +660,47 @@ def test_driver_rows_plan_as_local_relations(spark, tmp_path):
     for df in tables:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_small_table_writes_run_no_jobs(spark, fresh):
+    """Every version of a small table is a local relation built on the
+    driver, so each write to one runs no Spark job, its durable commit
+    included, also on the tables an earlier write made (the second
+    round). Removing a dataset runs at most the one job of its
+    membership rows, a declare into a DML-made dataset runs only its
+    two probes of the file-keyed tables, and a closure over DML-written
+    edges compiles in none."""
+    from conftest import spark_jobs
+    eng, dml = fresh
+    for r in range(2):
+        writes = {
+            "create_dataset": lambda: dml.create_dataset("test", f"jb{r}"),
+            "update_dataset": lambda: dml.update_dataset(
+                "test", f"jb{r}", metadata={"data.type": "mc"},
+                description="updated"),
+            "add_subset": lambda: dml.add_subset("test", "all",
+                                                 "test", f"jb{r}"),
+            "create_namespace": lambda: dml.create_namespace(f"jb{r}"),
+            "create_named_query": lambda: dml.create_named_query(
+                "test", f"jb{r}", "files from test:all"),
+            "update_named_query": lambda: dml.create_named_query(
+                "test", f"jb{r}", f"files from test:jb{r}", update=True),
+            "create_parameter_category": lambda:
+                dml.create_parameter_category(f"jb{r}"),
+        }
+        jobs = {kind: spark_jobs(spark, write)
+                for kind, write in writes.items()}
+        assert jobs == dict.fromkeys(writes, []), (r, jobs)
+    assert dml.cat.named_query_source("test", "jb1") == "files from test:jb1"
+    declare = spark_jobs(spark, lambda: dml.declare_files(
+        [{"id": "jb-0", "namespace": "test", "name": "jb0.dat",
+          "metadata": {"core.run": 1}}], dataset=("test", "jb1")))
+    assert len(declare) == 2, declare
+    mql = "datasets test:all with subsets recursively"
+    assert {("test", "jb0"), ("test", "jb1")} <= {
+        (r["namespace"], r["name"]) for r in eng.query(mql).collect()}
+    assert spark_jobs(spark, lambda: eng.query(mql)) == []
+    assert len(spark_jobs(spark, lambda: dml.remove_dataset(
+        "test", "jb0"))) <= 1
+    assert ("test", "jb0") not in {
+        (r["namespace"], r["name"]) for r in eng.query(mql).collect()}

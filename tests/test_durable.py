@@ -11,6 +11,7 @@ must answer queries identically to the mutated session it replaces.
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -655,6 +656,44 @@ def test_declared_created_timestamp_survives_restart(spark, tmp_path, uri):
         assert [h["commit"] for h in store2.history()] \
             == [store2.manifest["commit"]]
         assert stamps(cat2) == live
+
+
+@pytest.fixture
+def non_utc_driver(monkeypatch):
+    """The driver process in a zone six hours off UTC (five in summer)
+    for one test; its own zone is back after."""
+    monkeypatch.setenv("TZ", "America/Chicago")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_dataset_timestamps_survive_a_non_utc_driver(spark, tmp_path,
+                                                      non_utc_driver):
+    """A small-table write collects the table on the driver, where a
+    timestamp comes back in the process's local zone: no dataset's
+    created_timestamp moves when the table is written, updated or
+    restored, and a new dataset's is the time it was created."""
+    root = str(tmp_path / "cat")
+    cat1 = from_tpch(spark, SF_DIR)
+    dml1 = DML(cat1, store=DurableStore(spark, root))
+
+    def stamps(cat):
+        return {(r[0], r[1]): r[2] for r in cat.datasets.select(
+            "namespace", "name", F.unix_micros("created_timestamp"))
+            .collect()}
+    before = stamps(cat1)
+    start = time.time_ns() // 1000
+    dml1.create_dataset("test", "tz_0")
+    created = stamps(cat1)
+    assert start <= created.pop(("test", "tz_0")) <= time.time_ns() // 1000
+    assert created == before
+    dml1.update_dataset("test", "tz_0", description="moved?")
+    dml1.update_dataset("dune", "urgent_0", metadata={"data.type": "mc"})
+    after = stamps(cat1)
+    assert after == {**before, ("test", "tz_0"): after[("test", "tz_0")]}
+    assert stamps(_restart(spark, root)[0]) == after
 
 
 def test_declare_segments_are_one_file(spark, tmp_path):
