@@ -412,8 +412,9 @@ def from_tpch(spark: SparkSession, sf_dir: str) -> Catalog:
     so queries read the cached rows instead of re-deriving them from
     parquet. They are computed eagerly because a lazy checkpoint is cut
     from its lineage only by a job that collects it: a table only ever
-    streamed (``toLocalIterator``) would keep its derivation's shuffle
-    stage in every job that reads it."""
+    streamed partition-wise (``toLocalIterator``, which an unbounded
+    read of an n > 1 catalog still uses) would keep its derivation's
+    shuffle stage in every job that reads it."""
     raw = _read_raw(spark, sf_dir)
     derived = dict(zip(FILE_KEYS, _derived_tables(spark)))
     n = _partitions_for(derived["files"])

@@ -15,11 +15,14 @@ import json
 from concurrent.futures import Future, ThreadPoolExecutor
 from typing import Iterator, Optional
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import Catalog, from_tpch
-from .dml import DML, point_row
+from .dml import DML
 from .engine import FILE_OUTPUT_COLUMNS, Engine
+from .mql import parse
+from .mql.ast import FileList, FileQuery, LimitOp, OrderedOp, SkipOp
 
 # a full file record: the query projection's columns plus checksums
 _RECORD_COLUMNS = FILE_OUTPUT_COLUMNS + ["checksums"]
@@ -75,7 +78,7 @@ class MetaCatSparkClient:
         df = self._result(mql, with_metadata, with_provenance, summary,
                           include_retired_files, namespace, save_as,
                           add_to, after_id, page_size)
-        return [self._row_to_dict(r) for r in df.collect()]
+        return list(_records(df))
 
     def query_iter(self, mql: str, with_metadata: bool = False,
                    with_provenance: bool = False,
@@ -87,15 +90,33 @@ class MetaCatSparkClient:
                    after_id: Optional[str] = None,
                    page_size: Optional[int] = None) -> Iterator[dict]:
         """Streaming variant of query() with its keywords (json-seq
-        equivalent): lazy partition-wise iteration, no full
-        materialization on the driver. The plan is built on one pinned
-        catalog state, and the stream keeps reading that plan whatever
-        publishes later."""
+        equivalent). A bounded result (see ``_bounded``) is fetched in
+        one Arrow collect and yielded a record batch at a time; an
+        unbounded one over n > 1 partitions streams partition-wise, so
+        the driver never holds it whole. The plan is built on one
+        pinned catalog state, and the stream keeps reading that plan
+        whatever publishes later."""
         df = self._result(mql, with_metadata, with_provenance, summary,
                           include_retired_files, namespace, save_as,
                           add_to, after_id, page_size)
-        for r in df.toLocalIterator():
-            yield self._row_to_dict(r)
+        yield from _records(df, self._bounded(mql, namespace, page_size))
+
+    def _bounded(self, mql: str, namespace: Optional[str],
+                 page_size: Optional[int]) -> bool:
+        """Whether a query_iter result may be fetched whole: at one
+        partition the whole ``files`` table fits one advisory
+        partition, so any result over it does; otherwise the query
+        must carry a page size, a limit or explicit file ids. Decided
+        from what the driver knows, never from the Spark plan."""
+        if self.catalog.partitions == 1 or page_size is not None:
+            return True
+        top = parse(mql, default_namespace=namespace)
+        node = top.tree if isinstance(top, FileQuery) else None
+        while isinstance(node, (SkipOp, LimitOp, OrderedOp)):
+            if isinstance(node, LimitOp):
+                return True
+            node = node.child
+        return isinstance(node, FileList)
 
     def _result(self, mql: str, with_metadata: bool, with_provenance: bool,
                 summary: Optional[str], include_retired_files: bool,
@@ -133,8 +154,9 @@ class MetaCatSparkClient:
         """Write the result as RFC 7464 json-seq (RS + JSON + LF per
         record) — the reference server's streaming wire format
         (rfc7464.py, data_handler.py json-seq responses). Backed by
-        query_iter: partition-at-a-time on the driver, never the full
-        result. Returns the record count."""
+        query_iter: a bounded result is framed a record batch at a
+        time from one Arrow fetch, an unbounded one partition at a
+        time. Returns the record count."""
         n = 0
         for d in self.query_iter(mql, **kw):
             fp.write("\x1e" + json.dumps(d, default=str) + "\n")
@@ -166,8 +188,8 @@ class MetaCatSparkClient:
                  with_metadata: bool = True) -> Optional[dict]:
         """Full file record (webapi get_file, data_handler.py file
         GET): direct bucketed-table lookup — one pruned bucket and one
-        Spark job, not an MQL query — returning every attribute incl.
-        checksums."""
+        Spark job (an Arrow fetch), not an MQL query — returning every
+        attribute incl. checksums."""
         from pyspark.sql import functions as F
         files = self.catalog.files
         if fid is not None:
@@ -178,8 +200,7 @@ class MetaCatSparkClient:
         else:
             raise ValueError("need fid or did")
         cols = _RECORD_COLUMNS + (["metadata"] if with_metadata else [])
-        row = point_row(files.where(hit).select(*cols))
-        return None if row is None else self._row_to_dict(row)
+        return next(_records(files.where(hit).select(*cols)), None)
 
     def get_files(self, specs: list[dict], with_metadata: bool = True,
                   with_provenance: bool = False) -> list[dict]:
@@ -203,7 +224,7 @@ class MetaCatSparkClient:
             out = self.catalog.files.where(hit).select(*cols)
             if with_provenance:
                 out = self.engine.with_provenance(out)
-        return [self._row_to_dict(r) for r in out.collect()]
+        return list(_records(out))
 
     def list_datasets(self, pattern: str = "*:*") -> list[dict]:
         ns, pat = self._split_did(pattern, "pattern")
@@ -239,13 +260,45 @@ class MetaCatSparkClient:
                 f"{what} must be 'namespace:name', got {value!r}")
         return ns, name
 
-    @staticmethod
-    def _row_to_dict(row) -> dict:
-        d = row.asDict(recursive=True)
-        meta = d.get("metadata")
-        if isinstance(meta, str):
-            try:
-                d["metadata"] = json.loads(meta)
-            except (ValueError, TypeError):
-                pass
-        return d
+
+def _records(df: DataFrame, bounded: bool = True) -> Iterator[dict]:
+    """``df``'s rows as plain dicts (the records json-seq frames), each
+    ``metadata`` JSON text parsed. A bounded result is fetched in one
+    Arrow collect and converted one record batch at a time; an
+    unbounded one streams through ``toLocalIterator``, one partition
+    at a time. Both give the records a ``Row`` gives: Arrow's UTC-aware
+    ``TimestampType`` values become naive local times, and its
+    key-value lists (map columns) dicts in the order the table stores
+    the keys (a ``Row`` lists them in the JVM's hash order: the same
+    JSON object). Only top-level columns are converted; no served
+    result nests a timestamp or a map."""
+    if not bounded:
+        for r in df.toLocalIterator():
+            yield _parsed(r.asDict(recursive=True))
+        return
+    table = df.toArrow()
+    fix = {f.name: _local if pa.types.is_timestamp(f.type) else dict
+           for f in table.schema
+           if pa.types.is_map(f.type)
+           or pa.types.is_timestamp(f.type) and f.type.tz}
+    for batch in table.to_batches():
+        for d in batch.to_pylist():
+            for name, conv in fix.items():
+                if d[name] is not None:
+                    d[name] = conv(d[name])
+            yield _parsed(d)
+
+
+def _local(ts):
+    """A UTC-aware timestamp as the naive local time a ``Row`` holds."""
+    return ts.astimezone().replace(tzinfo=None)
+
+
+def _parsed(d: dict) -> dict:
+    meta = d.get("metadata")
+    if isinstance(meta, str):
+        try:
+            d["metadata"] = json.loads(meta)
+        except ValueError:
+            pass
+    return d

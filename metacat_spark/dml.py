@@ -751,24 +751,26 @@ class DML:
         are an error, not an upsert."""
         # dataset metadata is uncategorized (dotless keys in the
         # reference fixture) — file-category validation doesn't apply
-        self._new_dataset(ns, name, dict(
+        self._new_dataset(ns, name, metadata or {}, dict(
             frozen=frozen, monotonic=monotonic, creator=creator,
-            description=description, metadata=json.dumps(metadata or {}),
+            description=description,
             # enforced on add_files_to_dataset / declare-into-dataset
             file_metadata_requirements=(json.dumps(file_meta_requirements)
                                         if file_meta_requirements
                                         else None)))
 
-    def _new_dataset(self, ns: str, name: str, row: dict) -> None:
-        """Add dataset ``ns:name`` with the columns in ``row``, created
+    def _new_dataset(self, ns: str, name: str, metadata: dict,
+                     row: dict) -> None:
+        """Add dataset ``ns:name`` with the columns in ``row`` and
+        ``metadata`` shredded as ``update_dataset`` shreds it, created
         now; AlreadyExists if the catalog has it (the (namespace, name)
         PK)."""
         rows = self._rows("datasets")
         if any((r["namespace"], r["name"]) == (ns, name) for r in rows):
             raise AlreadyExists(f"dataset {ns}:{name} already exists")
         self._snapshot("datasets", rows + [dict(
-            row, namespace=ns, name=name,
-            created_timestamp=datetime.now(timezone.utc))])
+            row, **_shred(self.cat.dataset_meta, metadata), namespace=ns,
+            name=name, created_timestamp=datetime.now(timezone.utc))])
 
     @_locked
     def remove_dataset(self, ns: str, name: str) -> None:
@@ -865,9 +867,9 @@ class DML:
                 frozen: bool = False, monotonic: bool = False) -> int:
         """Materialize a query result as a NEW dataset
         (data_handler.py:1306-1337)."""
-        self._new_dataset(ns, name, dict(
+        self._new_dataset(ns, name, {}, dict(
             frozen=frozen, monotonic=monotonic, creator="engine",
-            description=f"saved query result {ns}:{name}", metadata="{}"))
+            description=f"saved query result {ns}:{name}"))
         # a frozen save_as still receives its own files
         return self._add_result(result, ns, name)
 

@@ -9,8 +9,12 @@ Endpoint shape mirrors the reference:
   ``summary=count|keys|key-values``, ``save_as``/``add_to``.
   File/dataset results stream as RFC 7464 json-seq
   (``application/json-seq``), one record per RS+JSON+LF frame, fed by
-  ``toLocalIterator`` so the driver holds one partition at a time —
-  the Spark analogue of the reference's psycopg2 cursor streaming.
+  ``client.query_iter``. A bounded result (one-partition catalog,
+  ``limit``, ``page_size`` or explicit ids) arrives in one Arrow fetch
+  and is framed a record batch at a time; an unbounded one over
+  n > 1 partitions streams through ``toLocalIterator``, so the driver
+  holds one partition at a time — the Spark analogue of the
+  reference's psycopg2 cursor streaming.
   ``summary=count`` and ``summary=keys`` return plain JSON like the
   reference does.
 - ``GET /data/file?fid=...`` / ``?did=ns:name`` — single file record
@@ -245,9 +249,10 @@ def make_handler(client: MetaCatSparkClient,
                 return self._send(200, "application/json",
                                   json.dumps(rows, default=str))
 
-            # streaming path: one json-seq frame per record as
-            # partitions arrive on the driver; after_id/page_size
-            # expose the id-cursor pagination (no global sort)
+            # streaming path: one json-seq frame per record, from one
+            # Arrow fetch or partition by partition (query_iter);
+            # after_id/page_size expose the id-cursor pagination (no
+            # global sort)
             page = _one(params, "page_size")
             self._stream_json_seq(client.query_iter(
                 mql, with_metadata=kw["with_metadata"],

@@ -1,5 +1,6 @@
 import os
 import sys
+import time
 import warnings
 
 import duckdb
@@ -127,6 +128,17 @@ def spark_job_stages(spark, fn) -> list:
 def spark():
     s = get_spark("metacat_spark_tests", cpus=8)
     yield s
+
+
+@pytest.fixture
+def non_utc_driver(monkeypatch):
+    """The driver process in a zone six hours off UTC (five in summer)
+    for one test; its own zone is back after."""
+    monkeypatch.setenv("TZ", "America/Chicago")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
 
 
 @pytest.fixture(scope="session")

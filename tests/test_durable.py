@@ -658,15 +658,20 @@ def test_declared_created_timestamp_survives_restart(spark, tmp_path, uri):
         assert stamps(cat2) == live
 
 
-@pytest.fixture
-def non_utc_driver(monkeypatch):
-    """The driver process in a zone six hours off UTC (five in summer)
-    for one test; its own zone is back after."""
-    monkeypatch.setenv("TZ", "America/Chicago")
-    time.tzset()
-    yield
-    monkeypatch.undo()
-    time.tzset()
+def test_created_dataset_metadata_is_queryable(spark, tmp_path):
+    """A dataset's metadata is shredded when the dataset is created,
+    not only when it is updated: predicates on shredded keys find it
+    right after the create and after a restart."""
+    root = str(tmp_path / "cat")
+    cat1 = from_tpch(spark, SF_DIR)
+    dml1 = DML(cat1, store=DurableStore(spark, root))
+    dml1.create_dataset("test", "md_mc", metadata={"data.type": "mc",
+                                                   "math.pi": 3})
+    dml1.create_dataset("test", "md_none")
+    for cat in (cat1, _restart(spark, root)[0]):
+        assert [r["name"] for r in Engine(cat).query(
+            'datasets matching test:md_* having data.type = "mc" '
+            'and math.pi = 3.0').collect()] == ["md_mc"]
 
 
 def test_dataset_timestamps_survive_a_non_utc_driver(spark, tmp_path,

@@ -6,6 +6,7 @@ page, count, set-algebra and parents/children reads plan with no
 Exchange and run as one Spark job — on the fixture catalog, after DML
 writes and after a durable restart."""
 
+import dataclasses
 import re
 
 import pytest
@@ -128,6 +129,61 @@ def test_served_read_is_one_job(spark, cat, shape):
     assert jobs == [1], jobs
 
 
+def _fetches(monkeypatch, spark) -> list:
+    """The DataFrame fetches (``toArrow``, ``toLocalIterator``) run
+    from now on in this test, by name, in order."""
+    cls = type(spark.range(1))
+    calls = []
+    for name in ("toArrow", "toLocalIterator"):
+        def counted(self, *a, _name=name, _real=getattr(cls, name), **k):
+            calls.append(_name)
+            return _real(self, *a, **k)
+        monkeypatch.setattr(cls, name, counted)
+    return calls
+
+
+def _streamed(cat, shape: str) -> tuple:
+    """(mql, options) of a streamed read shape: one of READS, or
+    ``fids``, three of the catalog's file ids."""
+    if shape != "fids":
+        return READS[shape]
+    ids = [r["id"] for r in cat.files.select("id").limit(3).collect()]
+    return "fids " + ", ".join(ids), {}
+
+
+@pytest.mark.parametrize("shape", sorted(
+    [s for s, (_, opts) in READS.items() if "summary" not in opts]
+    + ["fids"]))
+def test_bounded_stream_is_one_arrow_fetch(spark, cat, monkeypatch, shape):
+    """At one partition every streamed read is bounded: its records
+    come from one Arrow fetch in one Spark job, never from
+    toLocalIterator."""
+    mql, opts = _streamed(cat, shape)
+    client = MetaCatSparkClient(spark, catalog=cat)
+    want = list(client.query_iter(mql, **opts))
+    calls = _fetches(monkeypatch, spark)
+    got = []
+    jobs = spark_jobs(spark, lambda: got.extend(client.query_iter(
+        mql, **opts)))
+    assert got == want and calls == ["toArrow"] and jobs == [1], (
+        calls, jobs)
+
+
+def test_bounded_fetch_cuts_a_declares_lazy_checkpoint(spark, cat):
+    """A declare leaves the new files table a lazy local checkpoint;
+    the first bounded read of it computes the checkpoint and cuts its
+    lineage, as a collect does and a partition-wise stream does not.
+    The declare goes to a second catalog over ``cat``'s state."""
+    c = dataclasses.replace(cat)
+    DML(c).declare_files([{"id": "ckp0", "namespace": "dune",
+                           "name": "ckp0.dat"}])
+    rdd = c.files._jdf.queryExecution().analyzed().rdd()
+    assert not rdd.isCheckpointed()
+    client = MetaCatSparkClient(spark, catalog=c)
+    assert [r["id"] for r in client.query_iter("fids ckp0")] == ["ckp0"]
+    assert rdd.isCheckpointed()
+
+
 @pytest.fixture(scope="module")
 def durable_root(tmp_path_factory):
     return str(tmp_path_factory.mktemp("layout") / "cat")
@@ -240,3 +296,26 @@ def test_point_write_shuffles_only_the_delta(spark, wide, write):
     assert _misplaced(c.files, "id", n) == 0
     [row] = c.files.where(F.col("id") == "shuf0").collect()
     assert row["retired"] if write == "retire" else row["m_core_run"] == 2
+
+
+@pytest.mark.parametrize("shape, fetch", [
+    ("membership", "toLocalIterator"), ("pred", "toArrow"),
+    ("page", "toArrow"), ("fids", "toArrow")])
+def test_wide_streams_only_unbounded_reads(spark, wide, monkeypatch,
+                                           shape, fetch):
+    """At n > 1 partitions an unbounded read still streams one
+    partition at a time; a read with a limit, a page size or explicit
+    ids is fetched once. Its job count is the plan's: a limit merges
+    per-partition top rows through a shuffle, whose map stage adaptive
+    execution runs as a job of its own."""
+    mql, opts = _streamed(wide, shape)
+    client = MetaCatSparkClient(spark, catalog=wide)
+    want = Engine(wide).query(mql, **opts).collect()
+    calls = _fetches(monkeypatch, spark)
+    got = []
+    jobs = spark_jobs(spark, lambda: got.extend(client.query_iter(
+        mql, **opts)))
+    assert sorted(r["id"] for r in got) == sorted(r["id"] for r in want)
+    assert calls == [fetch], calls
+    if fetch == "toArrow":
+        assert len(jobs) == (1 if shape == "fids" else 2), jobs
