@@ -412,8 +412,8 @@ def from_tpch(spark: SparkSession, sf_dir: str) -> Catalog:
     so queries read the cached rows instead of re-deriving them from
     parquet. They are computed eagerly because a lazy checkpoint is cut
     from its lineage only by a job that collects it: a table only ever
-    streamed partition-wise (``toLocalIterator``, which an unbounded
-    read of an n > 1 catalog still uses) would keep its derivation's
+    streamed partition-wise (``toLocalIterator``, which every served
+    read of an n > 1 catalog uses) would keep its derivation's
     shuffle stage in every job that reads it."""
     raw = _read_raw(spark, sf_dir)
     derived = dict(zip(FILE_KEYS, _derived_tables(spark)))

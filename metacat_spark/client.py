@@ -21,8 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from .catalog import Catalog, from_tpch
 from .dml import DML
 from .engine import FILE_OUTPUT_COLUMNS, Engine
-from .mql import parse
-from .mql.ast import FileList, FileQuery, LimitOp, OrderedOp, SkipOp
 
 # a full file record: the query projection's columns plus checksums
 _RECORD_COLUMNS = FILE_OUTPUT_COLUMNS + ["checksums"]
@@ -74,11 +72,17 @@ class MetaCatSparkClient:
         couple the query projection (summary/meta/pagination shapes)
         to DML internals; the reference pays the same double cost
         (query then add_files round-trips), and the DML path is not
-        a hot path here."""
+        a hot path here.
+
+        The rows arrive in one collect: the served callers read one
+        row (a count summary, a dataset record) or a driver-held table,
+        where an Arrow fetch's fixed cost outweighs the conversion it
+        saves and, over a local relation, submits a Spark job that a
+        collect does not."""
         df = self._result(mql, with_metadata, with_provenance, summary,
                           include_retired_files, namespace, save_as,
                           add_to, after_id, page_size)
-        return list(_records(df))
+        return list(_records(df, "collect"))
 
     def query_iter(self, mql: str, with_metadata: bool = False,
                    with_provenance: bool = False,
@@ -90,33 +94,18 @@ class MetaCatSparkClient:
                    after_id: Optional[str] = None,
                    page_size: Optional[int] = None) -> Iterator[dict]:
         """Streaming variant of query() with its keywords (json-seq
-        equivalent). A bounded result (see ``_bounded``) is fetched in
-        one Arrow collect and yielded a record batch at a time; an
-        unbounded one over n > 1 partitions streams partition-wise, so
-        the driver never holds it whole. The plan is built on one
-        pinned catalog state, and the stream keeps reading that plan
-        whatever publishes later."""
+        equivalent). On a catalog of one partition the whole ``files``
+        table fits one advisory partition, so any result over it is
+        fetched in one Arrow collect and yielded a record batch at a
+        time; over n > 1 partitions the result streams partition-wise,
+        so the driver never holds more than one partition of it. The
+        plan is built on one pinned catalog state, and the stream
+        keeps reading that plan whatever publishes later."""
         df = self._result(mql, with_metadata, with_provenance, summary,
                           include_retired_files, namespace, save_as,
                           add_to, after_id, page_size)
-        yield from _records(df, self._bounded(mql, namespace, page_size))
-
-    def _bounded(self, mql: str, namespace: Optional[str],
-                 page_size: Optional[int]) -> bool:
-        """Whether a query_iter result may be fetched whole: at one
-        partition the whole ``files`` table fits one advisory
-        partition, so any result over it does; otherwise the query
-        must carry a page size, a limit or explicit file ids. Decided
-        from what the driver knows, never from the Spark plan."""
-        if self.catalog.partitions == 1 or page_size is not None:
-            return True
-        top = parse(mql, default_namespace=namespace)
-        node = top.tree if isinstance(top, FileQuery) else None
-        while isinstance(node, (SkipOp, LimitOp, OrderedOp)):
-            if isinstance(node, LimitOp):
-                return True
-            node = node.child
-        return isinstance(node, FileList)
+        yield from _records(
+            df, "arrow" if self.catalog.partitions == 1 else "stream")
 
     def _result(self, mql: str, with_metadata: bool, with_provenance: bool,
                 summary: Optional[str], include_retired_files: bool,
@@ -154,9 +143,9 @@ class MetaCatSparkClient:
         """Write the result as RFC 7464 json-seq (RS + JSON + LF per
         record) — the reference server's streaming wire format
         (rfc7464.py, data_handler.py json-seq responses). Backed by
-        query_iter: a bounded result is framed a record batch at a
-        time from one Arrow fetch, an unbounded one partition at a
-        time. Returns the record count."""
+        query_iter: at one partition the result is framed a record
+        batch at a time from one Arrow fetch, over n > 1 partitions
+        one partition at a time. Returns the record count."""
         n = 0
         for d in self.query_iter(mql, **kw):
             fp.write("\x1e" + json.dumps(d, default=str) + "\n")
@@ -188,7 +177,8 @@ class MetaCatSparkClient:
                  with_metadata: bool = True) -> Optional[dict]:
         """Full file record (webapi get_file, data_handler.py file
         GET): direct bucketed-table lookup — one pruned bucket and one
-        Spark job (an Arrow fetch), not an MQL query — returning every
+        Spark job (a collect: an Arrow fetch's fixed cost outweighs
+        the conversion of one row), not an MQL query — returning every
         attribute incl. checksums."""
         from pyspark.sql import functions as F
         files = self.catalog.files
@@ -200,7 +190,8 @@ class MetaCatSparkClient:
         else:
             raise ValueError("need fid or did")
         cols = _RECORD_COLUMNS + (["metadata"] if with_metadata else [])
-        return next(_records(files.where(hit).select(*cols)), None)
+        return next(_records(files.where(hit).select(*cols), "collect"),
+                    None)
 
     def get_files(self, specs: list[dict], with_metadata: bool = True,
                   with_provenance: bool = False) -> list[dict]:
@@ -224,7 +215,7 @@ class MetaCatSparkClient:
             out = self.catalog.files.where(hit).select(*cols)
             if with_provenance:
                 out = self.engine.with_provenance(out)
-        return list(_records(out))
+        return list(_records(out, "arrow"))
 
     def list_datasets(self, pattern: str = "*:*") -> list[dict]:
         ns, pat = self._split_did(pattern, "pattern")
@@ -261,19 +252,20 @@ class MetaCatSparkClient:
         return ns, name
 
 
-def _records(df: DataFrame, bounded: bool = True) -> Iterator[dict]:
+def _records(df: DataFrame, fetch: str) -> Iterator[dict]:
     """``df``'s rows as plain dicts (the records json-seq frames), each
-    ``metadata`` JSON text parsed. A bounded result is fetched in one
-    Arrow collect and converted one record batch at a time; an
-    unbounded one streams through ``toLocalIterator``, one partition
-    at a time. Both give the records a ``Row`` gives: Arrow's UTC-aware
-    ``TimestampType`` values become naive local times, and its
-    key-value lists (map columns) dicts in the order the table stores
-    the keys (a ``Row`` lists them in the JVM's hash order: the same
-    JSON object). Only top-level columns are converted; no served
-    result nests a timestamp or a map."""
-    if not bounded:
-        for r in df.toLocalIterator():
+    ``metadata`` JSON text parsed. ``fetch`` is how the rows reach the
+    driver: ``"arrow"``, one Arrow collect converted one record batch
+    at a time; ``"collect"``, one collect of ``Row``s; ``"stream"``,
+    ``toLocalIterator``, one partition at a time. All give the records
+    a ``Row`` gives: Arrow's UTC-aware ``TimestampType`` values become
+    naive local times, and its key-value lists (map columns) dicts in
+    the order the table stores the keys (a ``Row`` lists them in the
+    JVM's hash order: the same JSON object). Only top-level columns
+    are converted; no served result nests a timestamp or a map."""
+    if fetch != "arrow":
+        rows = df.collect() if fetch == "collect" else df.toLocalIterator()
+        for r in rows:
             yield _parsed(r.asDict(recursive=True))
         return
     table = df.toArrow()

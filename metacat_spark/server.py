@@ -9,11 +9,10 @@ Endpoint shape mirrors the reference:
   ``summary=count|keys|key-values``, ``save_as``/``add_to``.
   File/dataset results stream as RFC 7464 json-seq
   (``application/json-seq``), one record per RS+JSON+LF frame, fed by
-  ``client.query_iter``. A bounded result (one-partition catalog,
-  ``limit``, ``page_size`` or explicit ids) arrives in one Arrow fetch
-  and is framed a record batch at a time; an unbounded one over
-  n > 1 partitions streams through ``toLocalIterator``, so the driver
-  holds one partition at a time — the Spark analogue of the
+  ``client.query_iter``. On a catalog of one partition a result
+  arrives in one Arrow fetch and is framed a record batch at a time;
+  over n > 1 partitions it streams through ``toLocalIterator``, so the
+  driver holds one partition at a time — the Spark analogue of the
   reference's psycopg2 cursor streaming.
   ``summary=count`` and ``summary=keys`` return plain JSON like the
   reference does.

@@ -169,6 +169,21 @@ def test_bounded_stream_is_one_arrow_fetch(spark, cat, monkeypatch, shape):
         calls, jobs)
 
 
+def test_query_collects_a_local_result_without_a_job(spark, cat,
+                                                     monkeypatch):
+    """``query`` collects its rows. Named queries are a driver-held
+    table, so Spark answers a read of them on the driver: no Spark job
+    and neither an Arrow fetch nor a stream."""
+    client = MetaCatSparkClient(spark, catalog=cat)
+    calls = _fetches(monkeypatch, spark)
+    got = []
+    jobs = spark_jobs(spark, lambda: got.extend(client.query(
+        "queries matching dune:*", with_metadata=True)))
+    assert sorted(r["name"] for r in got) == ["favorite_x", "recent"], got
+    assert isinstance(got[0]["metadata"], dict), got
+    assert calls == [] and jobs == [], (calls, jobs)
+
+
 def test_bounded_fetch_cuts_a_declares_lazy_checkpoint(spark, cat):
     """A declare leaves the new files table a lazy local checkpoint;
     the first bounded read of it computes the checkpoint and cuts its
@@ -298,24 +313,16 @@ def test_point_write_shuffles_only_the_delta(spark, wide, write):
     assert row["retired"] if write == "retire" else row["m_core_run"] == 2
 
 
-@pytest.mark.parametrize("shape, fetch", [
-    ("membership", "toLocalIterator"), ("pred", "toArrow"),
-    ("page", "toArrow"), ("fids", "toArrow")])
-def test_wide_streams_only_unbounded_reads(spark, wide, monkeypatch,
-                                           shape, fetch):
-    """At n > 1 partitions an unbounded read still streams one
-    partition at a time; a read with a limit, a page size or explicit
-    ids is fetched once. Its job count is the plan's: a limit merges
-    per-partition top rows through a shuffle, whose map stage adaptive
-    execution runs as a job of its own."""
-    mql, opts = _streamed(wide, shape)
+@pytest.mark.parametrize("mql, opts", [
+    READS["membership"],
+    (f"files from {D}", {"page_size": 10 ** 8})])
+def test_wide_streams_every_read(spark, wide, monkeypatch, mql, opts):
+    """At n > 1 partitions a read streams one partition at a time,
+    whatever page size it asks for: the driver never holds more than
+    one partition of it."""
     client = MetaCatSparkClient(spark, catalog=wide)
     want = Engine(wide).query(mql, **opts).collect()
     calls = _fetches(monkeypatch, spark)
-    got = []
-    jobs = spark_jobs(spark, lambda: got.extend(client.query_iter(
-        mql, **opts)))
+    got = list(client.query_iter(mql, **opts))
     assert sorted(r["id"] for r in got) == sorted(r["id"] for r in want)
-    assert calls == [fetch], calls
-    if fetch == "toArrow":
-        assert len(jobs) == (1 if shape == "fids" else 2), jobs
+    assert calls == ["toLocalIterator"], calls

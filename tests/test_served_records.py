@@ -1,7 +1,8 @@
-"""Served records: ``query``, ``query_iter``, ``get_file`` and
-``get_files`` fetch a bounded result in one Arrow collect and frame the
-json-seq bytes the per-Row conversion framed, for every read class,
-before and after writes, with the driver in a zone off UTC."""
+"""Served records: ``query_iter`` (on a catalog of one partition) and
+``get_files`` fetch their result in one Arrow collect, ``query`` and
+``get_file`` collect Rows, and every read class frames the json-seq
+bytes the per-Row conversion framed, before and after writes, with the
+driver in a zone off UTC."""
 
 import dataclasses
 import json
