@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from .catalog import Catalog, from_tpch
 from .dml import DML
 from .engine import FILE_OUTPUT_COLUMNS, Engine
+from .mql import parse
+from .mql.ast import FileQuery
 
 # a full file record: the query projection's columns plus checksums
 _RECORD_COLUMNS = FILE_OUTPUT_COLUMNS + ["checksums"]
@@ -79,9 +81,9 @@ class MetaCatSparkClient:
         where an Arrow fetch's fixed cost outweighs the conversion it
         saves and, over a local relation, submits a Spark job that a
         collect does not."""
-        df = self._result(mql, with_metadata, with_provenance, summary,
-                          include_retired_files, namespace, save_as,
-                          add_to, after_id, page_size)
+        _, df = self._result(mql, with_metadata, with_provenance, summary,
+                             include_retired_files, namespace, save_as,
+                             add_to, after_id, page_size)
         return list(_records(df, "collect"))
 
     def query_iter(self, mql: str, with_metadata: bool = False,
@@ -94,36 +96,40 @@ class MetaCatSparkClient:
                    after_id: Optional[str] = None,
                    page_size: Optional[int] = None) -> Iterator[dict]:
         """Streaming variant of query() with its keywords (json-seq
-        equivalent). On a catalog of one partition the whole ``files``
-        table fits one advisory partition, so any result over it is
-        fetched in one Arrow collect and yielded a record batch at a
-        time; over n > 1 partitions the result streams partition-wise,
-        so the driver never holds more than one partition of it. The
-        plan is built on one pinned catalog state, and the stream
-        keeps reading that plan whatever publishes later."""
-        df = self._result(mql, with_metadata, with_provenance, summary,
-                          include_retired_files, namespace, save_as,
-                          add_to, after_id, page_size)
-        yield from _records(
-            df, "arrow" if self.catalog.partitions == 1 else "stream")
+        equivalent). A dataset or named-query result, a plan over the
+        driver-held tables and small by construction, is collected: no
+        Spark job. On a catalog of one partition the whole ``files``
+        table fits one advisory partition, so a file result is fetched
+        in one Arrow collect and yielded a record batch at a time; over
+        n > 1 partitions it streams partition-wise, so the driver never
+        holds more than one partition of it. The plan is built on one
+        pinned catalog state, and the stream keeps reading that plan
+        whatever publishes later."""
+        kind, df = self._result(mql, with_metadata, with_provenance,
+                                summary, include_retired_files, namespace,
+                                save_as, add_to, after_id, page_size)
+        yield from _records(df, "collect" if kind is not FileQuery
+                            else "arrow" if self.catalog.partitions == 1
+                            else "stream")
 
     def _result(self, mql: str, with_metadata: bool, with_provenance: bool,
                 summary: Optional[str], include_retired_files: bool,
                 namespace: Optional[str], save_as: Optional[str],
                 add_to: Optional[str], after_id: Optional[str],
                 page_size: Optional[int]):
-        """The result DataFrame of query()/query_iter(), planned on one
-        pinned catalog state, after the save_as/add_to sinks ran."""
+        """(class of the parsed query, result DataFrame) of query()/
+        query_iter(), planned on one pinned catalog state, after the
+        save_as/add_to sinks ran."""
+        top = parse(mql, default_namespace=namespace)
         with self.catalog.pin():
-            df = self.engine.query(mql, with_meta=with_metadata,
+            df = self.engine.query(top, with_meta=with_metadata,
                                    with_provenance=with_provenance,
                                    summary=summary,
                                    include_retired=include_retired_files,
-                                   default_namespace=namespace,
                                    after_id=after_id, page_size=page_size)
             self._materialize(mql, save_as, add_to, include_retired_files,
                               namespace)
-        return df
+        return type(top), df
 
     def _materialize(self, mql: str, save_as: Optional[str],
                      add_to: Optional[str], include_retired: bool,
@@ -143,9 +149,10 @@ class MetaCatSparkClient:
         """Write the result as RFC 7464 json-seq (RS + JSON + LF per
         record) — the reference server's streaming wire format
         (rfc7464.py, data_handler.py json-seq responses). Backed by
-        query_iter: at one partition the result is framed a record
-        batch at a time from one Arrow fetch, over n > 1 partitions
-        one partition at a time. Returns the record count."""
+        query_iter: a dataset or named-query result is collected; at
+        one partition a file result is framed a record batch at a time
+        from one Arrow fetch, over n > 1 partitions one partition at a
+        time. Returns the record count."""
         n = 0
         for d in self.query_iter(mql, **kw):
             fp.write("\x1e" + json.dumps(d, default=str) + "\n")
@@ -218,6 +225,9 @@ class MetaCatSparkClient:
         return list(_records(out, "arrow"))
 
     def list_datasets(self, pattern: str = "*:*") -> list[dict]:
+        """The datasets whose namespace and name match the globs of
+        ``pattern`` ("ns:name", ``*``/``?`` wildcards); every dataset
+        by default."""
         ns, pat = self._split_did(pattern, "pattern")
         return self.query(f"datasets matching {ns}:{pat}")
 

@@ -23,9 +23,9 @@ Semantics preserved from the reference:
   (dbobjects2.py:260-262); explicit file lists do NOT filter retired
   (dbobjects2.py:305-345)
 - skip/limit merge law + `skip ⇒ ordered` (mql10.py:39-45,244-346,768-786)
-- dataset `with subsets`/`with ancestors` [recursively] is a
-  cycle-guarded breadth-first closure, walked on the driver and
-  inlined as an IN list (dbobjects2.py:1060-1122,1505-1548)
+- a dataset query is one OR filter on the key (namespace, name); `with
+  subsets`/`with ancestors` [recursively] is a cycle-guarded closure
+  walked on the driver (dbobjects2.py:1060-1122,1505-1575)
 - named queries are inlined at translate time with cycle detection
   (mql10.py:907-923)
 """
@@ -92,6 +92,22 @@ def _union(rels) -> str:
     return " UNION ALL ".join(f"SELECT * FROM {_from(r)}" for r in rels)
 
 
+def _in(cols: str, keys) -> str:
+    """``cols`` is one of the value tuples ``keys`` (false if none)."""
+    rows = ", ".join(f"({', '.join(map(lit, k))})" for k in sorted(keys))
+    return f"({cols}) IN ({rows})" if keys else "false"
+
+
+def _glob(col: str, pattern: str) -> str:
+    """``col`` matches the ``*``/``?`` glob ``pattern`` (``=`` without
+    either), LIKE's own ``_``/``%`` literal."""
+    if "*" not in pattern and "?" not in pattern:
+        return f"{col} = {lit(pattern)}"
+    like = (pattern.replace("\\", "\\\\").replace("%", "\\%")
+            .replace("_", "\\_").replace("*", "%").replace("?", "_"))
+    return f"{col} LIKE {lit(like)}"
+
+
 def _dedup(rel: str, keys: str) -> str:
     """One row of ``rel`` per value of ``keys``, any one of them."""
     return (f"SELECT * EXCEPT (_rn) FROM (SELECT *, row_number() OVER "
@@ -118,13 +134,13 @@ class Engine:
                                             QUERY_ATTRIBUTES, "metadata")
 
     # ------------------------------------------------------------- public
-    def query(self, text: str, with_meta: bool = False,
+    def query(self, text, with_meta: bool = False,
               with_provenance: bool = False, summary: Optional[str] = None,
               include_retired: bool = False,
               default_namespace: Optional[str] = None,
               after_id: Optional[str] = None,
               page_size: Optional[int] = None) -> DataFrame:
-        """Run an MQL query; returns a lazy DataFrame.
+        """Run an MQL query (text or parsed); returns a lazy DataFrame.
 
         Mirrors the REST /data/query option surface
         (webserver/data_handler.py:1266-1297).
@@ -138,7 +154,8 @@ class Engine:
         id back as the next ``after_id``.
         """
         with self._compiling():
-            top = parse(text, default_namespace=default_namespace)
+            top = (parse(text, default_namespace=default_namespace)
+                   if isinstance(text, str) else text)
             return self._plan(top, with_meta, with_provenance, summary,
                               include_retired, after_id, page_size)[1]
 
@@ -180,8 +197,8 @@ class Engine:
                                           after_id, page_size)
         elif isinstance(top, DatasetQuery):
             cols = _DATASET_COLUMNS + (["metadata"] if with_meta else [])
-            rows = _dedup(self._datasets(top.selectors), "namespace, name")
-            sql = f"SELECT {', '.join(cols)} FROM ({rows})"
+            sql = (f"SELECT {', '.join(cols)} FROM "
+                   f"({self._datasets(top.selectors)})")
         elif isinstance(top, QueryQuery):
             cols = _QUERY_COLUMNS + (["metadata"] if with_meta else [])
             rows = _where(self._table("queries_tbl"), [
@@ -427,84 +444,66 @@ class Engine:
     def _selector(sel: DatasetSelector, ns_col: str, name_col: str) -> str:
         if sel.namespace is None:
             raise QueryError(f"no namespace for dataset {sel.name!r}")
-        ns_ok = f"{ns_col} = {lit(sel.namespace)}"
-        if sel.kind == "did":
-            return f"({ns_ok} AND {name_col} = {lit(sel.name)})"
         if sel.kind == "pattern":
-            # escape LIKE metacharacters FIRST: a literal '_' in the
-            # glob (ubiquitous in dataset names) must not match any
-            # character (review r6 — 'urgent_*' wrongly matched
-            # 'urgentX0')
-            like = (sel.name.replace("\\", "\\\\")
-                    .replace("%", "\\%").replace("_", "\\_")
-                    .replace("*", "%").replace("?", "_"))
-            return f"({ns_ok} AND {name_col} LIKE {lit(like)})"
-        if sel.kind == "regexp":
-            return f"({ns_ok} AND {name_col} RLIKE {lit(sel.name)})"
-        raise QueryError(f"bad selector kind {sel.kind}")
+            return (f"({_glob(ns_col, sel.namespace)} AND "
+                    f"{_glob(name_col, sel.name)})")
+        op = "RLIKE" if sel.kind == "regexp" else "="
+        return (f"({ns_col} = {lit(sel.namespace)} AND "
+                f"{name_col} {op} {lit(sel.name)})")
 
     def _datasets(self, selectors) -> str:
-        """SQL of the selected datasets' rows (a dataset may repeat);
-        `with subsets`/`with ancestors` [recursively] select the DAG
-        closure of the selector's datasets (``_closure``; parity:
-        dbobjects2.py:1505-1548)."""
-        ds = self._table("datasets")
-        parts = []
+        """SQL of the selected datasets' rows, each once: (namespace,
+        name) is the key, so the selectors combine as one OR filter of a
+        term each: its condition or ``_closure``, AND its `having`."""
+        terms = []
         for sel in selectors:
             cond = self._selector(sel, "namespace", "name")
             if sel.with_subsets or sel.with_ancestors:
-                cond = self._closure(_where(ds, [cond]), sel.recursively,
+                cond = self._closure(cond, sel.recursively,
                                      up=sel.with_ancestors)
-            rows = _where(ds, [cond])
             if sel.having is not None:
-                rows = _where(rows, [self.dataset_pred.compile(sel.having)])
-            parts.append(rows)
-        return _union(parts)
+                cond = f"({cond} AND {self.dataset_pred.compile(sel.having)})"
+            terms.append(cond)
+        return _where(self._table("datasets"), [" OR ".join(terms)])
 
-    def _closure(self, seed: str, recursively: bool, up: bool) -> str:
-        """A condition on ``datasets`` that holds for the ``seed``
-        rows' datasets and their DAG neighbours: one step away, or any
-        number when ``recursively``. ``up=False`` walks parent→child
-        (``with subsets``, dbobjects2.py:1062-1086); ``up=True`` walks
-        child→parent (``with ancestors``, dbobjects2.py:1094-1122) —
-        the same walk with the edge roles swapped. It is a breadth-
-        first walk on the driver, cycle-guarded by its visited set,
-        over the pinned state's ``datasets_parent_child``: a snapshot
-        table, small by construction, whose every version is a local
-        relation held on the driver, so collecting it and the seed
-        datasets runs no Spark job."""
+    def _keys(self, rel: str) -> set:
+        """The (namespace, name) pairs of ``rel``, a selection of the
+        driver-held ``datasets``: collecting it runs no Spark job."""
+        return {tuple(r) for r in self.spark.sql(
+            f"SELECT namespace, name FROM {_from(rel)}").collect()}
+
+    def _closure(self, cond: str, recursively: bool, up: bool) -> str:
+        """An IN condition on ``datasets``: the datasets meeting ``cond``
+        and their DAG neighbours (one step, or any number when
+        ``recursively``), children for `with subsets` and parents when
+        ``up`` (dbobjects2.py:1062-1122). A breadth-first walk, cycle-
+        guarded, over the driver-held ``datasets_parent_child``: no job."""
         here, there = ("child", "parent") if up else ("parent", "child")
         near = {}
         for edge in self.cat.datasets_parent_child.select(
                 f"{here}_namespace", f"{here}_name",
                 f"{there}_namespace", f"{there}_name").collect():
             near.setdefault(tuple(edge[:2]), []).append(tuple(edge[2:]))
-        seen = {tuple(r) for r in self.spark.sql(
-            f"SELECT namespace, name FROM ({seed})").collect()}
-        front = seen
+        seen = front = self._keys(_where(self._table("datasets"), [cond]))
         while front:
             front = {n for f in front for n in near.get(f, ())} - seen
             seen |= front
             if not recursively:
                 break
-        if not seen:
-            return "false"
-        return "(namespace, name) IN ({})".format(", ".join(
-            f"({lit(ns)}, {lit(name)})" for ns, name in sorted(seen)))
+        return _in("namespace, name", seen)
 
     def _membership(self, selectors) -> str:
         """File ids selected by dataset membership — reads ONLY the
-        bucketed membership table (no files scan); a resolved dataset
-        list is broadcast into it."""
+        bucketed membership table (no files scan). A `with subsets`/
+        `with ancestors` or `having` selection is resolved on the
+        driver into an IN list of its dataset keys."""
         fd = self._table("files_datasets")
+        key = ("dataset_namespace", "dataset_name")
         if any(s.with_subsets or s.with_ancestors or s.having is not None
                for s in selectors):
-            return (f"SELECT /*+ BROADCAST(r) */ l.file_id AS id FROM {fd} l "
-                    f"LEFT SEMI JOIN ({self._datasets(selectors)}) r ON "
-                    "l.dataset_namespace = r.namespace AND "
-                    "l.dataset_name = r.name")
-        cond = " OR ".join(self._selector(s, "dataset_namespace",
-                                          "dataset_name") for s in selectors)
+            cond = _in(", ".join(key), self._keys(self._datasets(selectors)))
+        else:
+            cond = " OR ".join(self._selector(s, *key) for s in selectors)
         return f"SELECT file_id AS id FROM {fd} WHERE {cond}"
 
     # ---------------------------------------------------------- summaries

@@ -9,16 +9,18 @@ Endpoint shape mirrors the reference:
   ``summary=count|keys|key-values``, ``save_as``/``add_to``.
   File/dataset results stream as RFC 7464 json-seq
   (``application/json-seq``), one record per RS+JSON+LF frame, fed by
-  ``client.query_iter``. On a catalog of one partition a result
-  arrives in one Arrow fetch and is framed a record batch at a time;
-  over n > 1 partitions it streams through ``toLocalIterator``, so the
-  driver holds one partition at a time — the Spark analogue of the
-  reference's psycopg2 cursor streaming.
+  ``client.query_iter``. A dataset or named-query result is
+  collected on the driver, which holds those tables. On a catalog of
+  one partition a file result arrives in one Arrow fetch and is framed
+  a record batch at a time; over n > 1 partitions it streams through
+  ``toLocalIterator``, so the driver holds one partition at a time —
+  the Spark analogue of the reference's psycopg2 cursor streaming.
   ``summary=count`` and ``summary=keys`` return plain JSON like the
   reference does.
 - ``GET /data/file?fid=...`` / ``?did=ns:name`` — single file record
   (data_handler.py file GET).
-- ``GET /data/datasets?pattern=ns:glob`` — dataset list.
+- ``GET /data/datasets?pattern=ns_glob:name_glob`` — dataset list;
+  every dataset without a pattern.
 - MQL/user errors → 400 with ``ExceptionName: message`` text, like
   the reference's error contract.
 
@@ -248,8 +250,9 @@ def make_handler(client: MetaCatSparkClient,
                 return self._send(200, "application/json",
                                   json.dumps(rows, default=str))
 
-            # streaming path: one json-seq frame per record, from one
-            # Arrow fetch or partition by partition (query_iter);
+            # streaming path: one json-seq frame per record, from a
+            # collect, one Arrow fetch or partition by partition
+            # (query_iter);
             # after_id/page_size expose the id-cursor pagination (no
             # global sort)
             page = _one(params, "page_size")

@@ -80,13 +80,27 @@ def test_membership_join_stays_shuffle_free_after_a_write(spark):
     assert "Exchange hashpartitioning" not in plan, plan
 
 
-def test_dataset_selector_broadcast(mat_engine):
-    """The resolved dataset list (tiny) must broadcast into the
-    membership filter, never shuffle the big side."""
-    df = mat_engine.query(
-        "files from test:all with subsets recursively")
-    plan = plan_of(df)
-    assert "BroadcastExchange" in plan
+def test_dataset_selection_is_resolved_on_the_driver(mat_engine):
+    """A dataset query plans as a scan of the driver-held rows: no
+    Window (a dedup), no Exchange, no broadcast. A resolved selection
+    filters the membership scan as a literal IN list, so the files
+    read joins once and never shuffles the big side."""
+    for mql in ("datasets test:all with subsets recursively",
+                'datasets matching dune:* having data.type = "mc", '
+                'dune:urgent_0'):
+        plan = mat_engine.explain(mql).split("-- Spark plan --")[1]
+        for op in ("Window", "Exchange", "BroadcastExchange"):
+            assert op not in plan, (mql, plan)
+    plan = plan_of(mat_engine.query(
+        "files from test:all with subsets recursively"))
+    closure = ",".join(f"[{k}]" for k in (
+        "dune,high_0", "dune,high_1", "dune,low_0", "dune,low_1",
+        "dune,urgent_0", "dune,urgent_1", "mc,flag_a", "mc,flag_n",
+        "mc,flag_r", "test,all"))
+    assert f"IN ({closure})" in plan, plan
+    tree = plan.split("\n\n")[0]
+    assert tree.count("Join") == 1, tree
+    assert "hashpartitioning" not in plan, plan
 
 
 def test_ids_unique_invariant_carried_not_probed(spark, mat_engine):

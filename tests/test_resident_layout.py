@@ -169,19 +169,29 @@ def test_bounded_stream_is_one_arrow_fetch(spark, cat, monkeypatch, shape):
         calls, jobs)
 
 
-def test_query_collects_a_local_result_without_a_job(spark, cat,
-                                                     monkeypatch):
-    """``query`` collects its rows. Named queries are a driver-held
-    table, so Spark answers a read of them on the driver: no Spark job
-    and neither an Arrow fetch nor a stream."""
+def _assert_collected_without_a_job(spark, cat, monkeypatch):
+    """Dataset and named-query results, read through ``query`` and
+    ``query_iter``, are collected: a plan over driver-held tables,
+    which Spark answers on the driver with no job and neither an Arrow
+    fetch nor a stream."""
     client = MetaCatSparkClient(spark, catalog=cat)
     calls = _fetches(monkeypatch, spark)
-    got = []
-    jobs = spark_jobs(spark, lambda: got.extend(client.query(
-        "queries matching dune:*", with_metadata=True)))
-    assert sorted(r["name"] for r in got) == ["favorite_x", "recent"], got
-    assert isinstance(got[0]["metadata"], dict), got
-    assert calls == [] and jobs == [], (calls, jobs)
+    for read in (client.query, client.query_iter):
+        for mql, want in (("queries matching dune:*",
+                           ["favorite_x", "recent"]),
+                          ("datasets matching dune:urgent_*",
+                           [f"urgent_{i}" for i in range(4)])):
+            got = []
+            jobs = spark_jobs(spark, lambda: got.extend(read(
+                mql, with_metadata=True)))
+            assert sorted(r["name"] for r in got) == want, got
+            assert isinstance(got[0]["metadata"], dict), got
+            assert calls == [] and jobs == [], (mql, calls, jobs)
+
+
+def test_query_collects_a_local_result_without_a_job(spark, cat,
+                                                     monkeypatch):
+    _assert_collected_without_a_job(spark, cat, monkeypatch)
 
 
 def test_bounded_fetch_cuts_a_declares_lazy_checkpoint(spark, cat):
@@ -326,3 +336,9 @@ def test_wide_streams_every_read(spark, wide, monkeypatch, mql, opts):
     got = list(client.query_iter(mql, **opts))
     assert sorted(r["id"] for r in got) == sorted(r["id"] for r in want)
     assert calls == ["toLocalIterator"], calls
+
+
+def test_wide_collects_a_local_result_without_a_job(spark, wide,
+                                                    monkeypatch):
+    """At n > 1 partitions too, only file results stream."""
+    _assert_collected_without_a_job(spark, wide, monkeypatch)

@@ -154,6 +154,10 @@ def test_datasets_endpoint(served):
     rows = json.loads(_get(base, "/data/datasets",
                            pattern="dune:urgent_*").read())
     assert {r["name"] for r in rows} >= {"urgent_0", "urgent_1"}
+    # with no pattern, every dataset of every namespace
+    rows = json.loads(_get(base, "/data/datasets").read())
+    assert len(rows) == 24
+    assert {r["namespace"] for r in rows} == {"dune", "mc", "test"}
 
 
 def test_concurrent_requests(served):
